@@ -27,7 +27,7 @@ object Bm25 {
   val B  = 0.75
   // 1 - b = 0.25 folded as a literal so both engines see the same constant.
 
-  /** Scalar contribution in micros (used by the WAND scorer + tests).
+  /** Scalar contribution in micros (used by the batched scorer + tests).
     * Mirrors contribCol / OracleSql.contribExpr exactly. */
   def contribMicro(idf: Double, tf: Long, dl: Long, avgdl: Double): Long =
     math.floor(1e6 * (idf * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))) + 0.5).toLong
@@ -42,10 +42,4 @@ object Bm25 {
       * tf * lit(2.2)
       / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * dl / lit(avgdl)))) + lit(0.5))
       .cast("long")
-
-  /** Upper bound (micros) of any contribution in a block with headers
-    * (max_tf, min_dl): tfNorm is ↑ in tf and ↓ in dl, floor(·+0.5) is
-    * monotone, so this dominates every posting in the block. */
-  def blockUpperMicro(idf: Double, maxTf: Int, minDl: Int, avgdl: Double): Long =
-    contribMicro(idf, maxTf.toLong, minDl.toLong, avgdl)
 }

@@ -13,9 +13,9 @@ import scala.collection.mutable.ArrayBuffer
   *
   * The first docId is absolute, so blocks concatenate freely across
   * segment merges (SURVEY.md §7.6 item 5 — no seam re-anchoring needed).
-  * Headers (max_doc, n, max_tf, min_dl) live in [[Block]]; max_doc powers
-  * docId skipping, (max_tf, min_dl) powers score upper bounds
-  * ([[Bm25.blockUpperMicro]]) — the analog of the reference's per-cluster
+  * Headers (max_doc, n, max_tf, min_dl) live in [[Block]]; max_doc
+  * places a block without decoding it, (max_tf, min_dl) bound every
+  * contribution in it — the analog of the reference's per-cluster
   * pruning bound (TopWId, `src/index_ivfpq.cpp:199-237`).
   */
 object Codec {

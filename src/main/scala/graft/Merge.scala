@@ -60,7 +60,7 @@ object Merge {
     * strictly increasing); interleaved inputs must use [[mergeIndexes]].
     * Result is posting-identical (not block-boundary-identical) to a
     * fresh build — block cuts reflect merge history, as in any
-    * log-structured engine; WAND never assumes full blocks. */
+    * log-structured engine; no reader assumes full blocks. */
   def concatSegments(rows: Iterator[PostingRow]): Iterator[PostingRow] =
     new Iterator[PostingRow] {
       private val it = rows.buffered

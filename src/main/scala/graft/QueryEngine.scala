@@ -16,15 +16,15 @@ import org.apache.spark.sql.functions._
   *  Phase 2 (one Spark job for the WHOLE query batch, like `TopKId`'s
   *  single OMP pass): scan only candidate partitions/terms (Parquet
   *  partition pruning on part_id + row-group skipping on the term-sorted
-  *  files), fan each posting row out to the queries that use its term,
-  *  group per query, run block-max [[Wand]], collect nq·k hit rows.
+  *  files), bring each docId-range bucket's rows together, score every
+  *  query of the batch per bucket with the shared-contribution
+  *  [[QueryEngine.BucketTaat]] scorer, collect nq·k hit rows.
   *
-  * Scale note: queries are independent groups ⇒ the batch parallelizes
-  * across executors; per-group memory is the compressed lists of ONE
-  * query (blocks decode lazily inside WAND). For head-heavy queries at
-  * extreme scale the bucket sub-lists allow splitting a query into
-  * docId-range sub-groups merged via [[TopK.mergeTopK]] — same structure
-  * as the reference's per-cluster fan-out.
+  * Scale note: one scorer serves every layout. A term-partitioned scan is
+  * re-bucketed into docId ranges first ([[QueryEngine.rebucketByRange]]),
+  * so per-task memory is bounded by the range width, never by a head
+  * term's full posting set — the same shape as the reference's
+  * per-cluster fan-out.
   */
 object QueryEngine {
 
@@ -32,9 +32,15 @@ object QueryEngine {
     * `num_searched_cluster/vector` reduction counters printed per batch,
     * `src/index_ivfpq.cpp:257-294` — SURVEY.md §2.4 A4). */
   final class EffortAccs(spark: SparkSession) extends Serializable {
+    /** (query, bucket) scorer calls — one per [[BucketTaat.score]] call;
+      * buckets skipped by the block-max bound are not counted. */
     val wandCalls = spark.sparkContext.longAccumulator("wand_calls")
     val blocksTotal = spark.sparkContext.longAccumulator("blocks_total")
     val blocksDecoded = spark.sparkContext.longAccumulator("blocks_decoded")
+    /** Slots the scorer touched after chunk-skip / TA-walk pruning,
+      * summed over calls: a dense call counts the non-empty slots of the
+      * chunks it scanned (or the TA walk's survivors), a sparse or
+      * single-list call its lists' postings. */
     val docsScored = spark.sparkContext.longAccumulator("docs_scored")
     // Wall-time split of the batched scorer (task-summed nanos; the
     // SURVEY §7.5 codegen-Expression question needs the DECODE share of
@@ -46,12 +52,6 @@ object QueryEngine {
     val mergeNanos = spark.sparkContext.longAccumulator("merge_nanos")
     // (query, bucket) evaluations skipped by the block-max bound carry
     val bucketsSkipped = spark.sparkContext.longAccumulator("buckets_skipped")
-    def sink(e: Wand.Effort): Unit = {
-      wandCalls.add(1L)
-      blocksTotal.add(e.blocksTotal)
-      blocksDecoded.add(e.blocksDecoded)
-      docsScored.add(e.docsScored)
-    }
     override def toString: String =
       s"wand_calls=${wandCalls.value} blocks_total=${blocksTotal.value} " +
         s"blocks_decoded=${blocksDecoded.value} docs_scored=${docsScored.value} " +
@@ -78,13 +78,7 @@ object QueryEngine {
       // ([[Attrs.rangeTermMatches]]): same virtual-list mask as
       // filterTerms, the requested lists selected by value range instead
       // of an explicit IN set
-      filterRange: Option[(String, Double, Double)] = None,
-      // df per QUERY term (what plan() was given): the head-heavy guard
-      // sizes each query's candidate posting mass from this driver-side
-      // instead of launching a per-batch aggregation job over `postings`
-      // (which re-executes an unpersisted pipeline). Empty in hand-built
-      // plans — [[run]] then falls back to the sizing job.
-      termDf: Map[String, Long] = Map.empty) {
+      filterRange: Option[(String, Double, Double)] = None) {
 
     /** Any attribute filter in force? (empty-IN batches are answered
       * upstream — [[runOnHandle]] returns empty before planning). */
@@ -121,8 +115,7 @@ object QueryEngine {
       .flatMap { case (qid, ts) => ts.filter(termDf.contains).map(t => (t, qid)) }
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).sorted }
     val qts = live.map { case (qid, ts) => qid -> ts.filter(termDf.contains) }.toMap
-    Plan(k, cs.avgdl, idf, t2q, qts, conjunctive = conjunctive,
-      termDf = terms.map(t => t -> termDf(t)).toMap)
+    Plan(k, cs.avgdl, idf, t2q, qts, conjunctive = conjunctive)
   }
 
   /** Carried per-query top-k under the frozen (score DESC, doc_id ASC)
@@ -177,10 +170,9 @@ object QueryEngine {
     * integer micro-contributions ONCE (every query using the term reuses
     * them — the whole-batch analog of the reference's per-query DTable);
     * then each query scores its lists into its carried [[QueryHeap]].
-    * Exhaustive within the bucket ⇒ exactly the integer-micro scores of
-    * the oracle; preferable to per-query WAND when nq is large and terms
-    * are head-heavy (no cursor machinery, no per-query re-decode,
-    * branch-free inner loops).
+    * Exact within the bucket ⇒ exactly the integer-micro scores of the
+    * oracle (no cursor machinery, no per-query re-decode, branch-free
+    * inner loops).
     *
     * Three accumulation shapes, picked per (query, bucket) — all exact,
     * differing only in constant factors (the round-4 phase profile put
@@ -314,6 +306,11 @@ object QueryEngine {
     @inline private def allowed(ix: Int): Boolean = maskStamp(ix) == curMask
 
     /** termLists: per term of this bucket, (docIdx within bucket, contribMicro).
+      * Contract: every bucket decodes FRESH arrays. The dense-column and
+      * sorted-list caches are keyed by the idxs array's IDENTITY and live
+      * until the next [[beginBucket]], so two terms sharing one idxs
+      * array, or an array refilled in place within a bucket, would be
+      * scored from the first term's cached column.
       * Scores every posting of `queryTerms` present in this bucket into
       * `heap` (doc ids globalized with `base`). Returns touched-doc count.
       *
@@ -737,80 +734,22 @@ object QueryEngine {
     }
   }
 
-  /** Per-task materialization cap for the per-query grouping below: a
-    * query's group buffers ALL posting rows of its terms in one task, so a
-    * head-heavy batch must not take that path (round-3 VERDICT: a query
-    * containing "the" at 100× scale OOMs one executor). Batches whose
-    * worst query exceeds this many candidate postings re-route through
-    * [[rebucketByRange]] + [[runDocPartitioned]] — rank-identical (both
-    * paths are fuzz-proven against the oracle), bounded per task. */
-  val MaxGroupPostings: Long = 1L << 20
-
   /** Run the batch over a postings Dataset (in-memory or disk-backed).
     * Emits (query_id, rank, doc_id, score_micro), ordered.
     *
-    * Guard (the reference's `TopKId` never concentrates one query's
-    * candidates in one thread, `src/index_ivfpq.cpp:239-295`): one tiny
-    * vocab-of-the-batch agg sizes each query's candidate posting mass; if
-    * any query exceeds `maxGroupPostings`, the batch is served through the
-    * docId-range re-bucket + shared-contribution TAAT path instead, where
-    * per-task memory is bounded by the range width — the same fallback
-    * [[runOnHandle]] uses when partition pruning is abandoned. */
+    * The rows are re-bucketed into docId ranges and scored by
+    * [[runDocPartitioned]], so per-task memory is bounded by the range
+    * width — the reference's `TopKId` never concentrates one query's
+    * candidates in one thread (`src/index_ivfpq.cpp:239-295`).
+    * Attr-filtered callers must have unioned the virtual filter lists
+    * into `postings` ([[runOnHandle]] does). */
   def run(spark: SparkSession, postings: Dataset[PostingRow], plan: Plan,
-          effort: Option[EffortAccs] = None,
-          maxGroupPostings: Long = MaxGroupPostings): DataFrame = {
-    import spark.implicits._
-    val terms = plan.termToQueries.keys.toSeq
-    val filtered = restrictToPlan(postings, terms, plan)
-    // conjunctive and attr-filtered batches always take the doc-partitioned
-    // TAAT path: AND evaluation is a per-doc intersection, which the bucket
-    // scorer does natively (per-doc matched-list count), and the attr mask
-    // is a per-bucket structure only that scorer holds; the per-query WAND
-    // grouping below has neither mode. (Filtered callers must have unioned
-    // the virtual filter lists into `postings` — [[runOnHandle]] does.)
-    // Checked BEFORE the termN sizing job — that aggregation re-evaluates
-    // the (possibly unpersisted) postings pipeline, and its result would
-    // be unused here.
-    def rerouted(): DataFrame = {
-      val width = if (plan.bucketWidth > 0) plan.bucketWidth
-                  else 4096L // in-memory postings carry no geometry; any positive width is rank-safe
-      runDocPartitioned(spark,
-        rebucketByRange(filtered, width, Codec.BlockSize),
-        plan.copy(bucketWidth = width), effort, preFiltered = true)
-    }
-    if (plan.conjunctive || plan.filterActive) return rerouted()
-    // Guard sizing: a term's total posting count IS its df, which the plan
-    // already carries from the stats table — driver-side arithmetic, no
-    // extra job (the aggregation re-evaluated the possibly-unpersisted
-    // postings pipeline once per batch, doubling the in-memory contract
-    // queries). When `postings` is a pruned SUBSET, df is a safe upper
-    // bound: the guard may reroute early, never under-size. Hand-built
-    // plans without termDf keep the sizing job.
-    val termN: Map[String, Long] =
-      if (plan.termDf.nonEmpty) plan.termDf
-      else filtered.groupBy($"term").agg(sum($"n").as("tot"))
-        .as[(String, Long)].collect().toMap
-    val worstQuery = plan.queryTermSets.values
-      .map(_.iterator.map(termN.getOrElse(_, 0L)).sum)
-      .maxOption.getOrElse(0L)
-    if (worstQuery > maxGroupPostings) return rerouted()
-    val bc = spark.sparkContext.broadcast(plan)
-    val hits = filtered
-      .flatMap { row =>
-        val p = bc.value
-        p.termToQueries.getOrElse(row.term, Nil).map(qid => (qid, row))
-      }
-      .groupByKey(_._1)
-      .flatMapGroups { (qid: Int, it: Iterator[(Int, PostingRow)]) =>
-        val p = bc.value
-        val lists = it.map(_._2).toSeq.groupBy(_.term)
-          .map { case (t, rows) => t -> (p.termIdf(t), rows) }
-        Wand.topk(qid, lists, p.avgdl, p.k,
-          effortOut = e => effort.foreach(_.sink(e)))
-      }
-    hits.toDF()
-      .select($"query_id", $"rank", $"doc_id", $"score_micro")
-      .orderBy($"query_id", $"rank")
+          effort: Option[EffortAccs] = None): DataFrame = {
+    val width = if (plan.bucketWidth > 0) plan.bucketWidth
+                else 4096L // in-memory postings carry no geometry; any positive width is rank-safe
+    val filtered = restrictToPlan(postings, plan.termToQueries.keys.toSeq, plan)
+    runDocPartitioned(spark, rebucketByRange(filtered, width, Codec.BlockSize),
+      plan.copy(bucketWidth = width), effort, preFiltered = true)
   }
 
   /** Candidate (term, bucket) pairs for partition pruning (phase-1
@@ -864,10 +803,8 @@ object QueryEngine {
 
   /** Re-bucket posting rows into docId-range buckets (bucket = doc_id /
     * width) so the doc-partitioned batched scorer can serve a TERM-
-    * partitioned index. Purpose (round-1 VERDICT): a head-heavy batch on
-    * the term-partitioned layout used to concentrate a head term's FULL
-    * posting set into one per-query group; after re-bucketing, no task
-    * ever materializes more than `width` postings per term.
+    * partitioned index: after re-bucketing, no task ever materializes
+    * more than `width` postings per term, even for a head term.
     *
     * Cost is bounded: salted head-term rows are ALREADY range-confined
     * (pass through, no decode — the common bulk); only rare-term rows
@@ -876,69 +813,75 @@ object QueryEngine {
   def rebucketByRange(rows: Dataset[PostingRow], width: Long,
                       blockSize: Int): Dataset[PostingRow] = {
     import rows.sparkSession.implicits._
-    rows.flatMap { r =>
-      val lo = (r.min_doc / width).toInt
-      val hi = (r.blocks.last.max_doc / width).toInt
-      if (lo == hi) {
-        if (r.bucket == lo) Iterator.single(r)
-        else Iterator.single(r.copy(bucket = lo))
-      } else {
-        // Only range-STRADDLING rows decode here — normally unsalted
-        // (bucket 0) rows, whose n is the term's df. The build's salting
-        // decision is a SAMPLED df estimate, and term placement can
-        // correlate with doc_id (ADVICE round 2: a term living only in
-        // docs outside the 1/headSampleInv sample reads df=0 and stays
-        // unsalted at ANY true df) — so this path must not assume n is
-        // small. It streams: decode ONE block at a time (blocks are
-        // docId-sorted) and emit each completed docId-range slice as soon
-        // as the stream crosses its boundary. Peak memory is
-        // O(blockSize + postings of one range) — bounded by max(blockSize,
-        // width) — instead of three O(n) arrays, and the output rows are
-        // consumed lazily by the shuffle writer (flatMap iterator).
-        val blockIt = r.blocks.iterator
-        val pendD = new scala.collection.mutable.ArrayBuffer[Long]
-        val pendT = new scala.collection.mutable.ArrayBuffer[Int]
-        val pendL = new scala.collection.mutable.ArrayBuffer[Int]
-        var curBucket = -1L
-        def flushPending(): PostingRow = {
-          val ds = pendD.toArray; val tfs = pendT.toArray; val dls = pendL.toArray
-          pendD.clear(); pendT.clear(); pendL.clear()
-          var cf = 0L; var i = 0
-          while (i < tfs.length) { cf += tfs(i); i += 1 }
-          PostingRow(r.part_id, r.term, (ds(0) / width).toInt, ds.length.toLong,
-            cf, ds(0), Codec.encodeBlocks(ds, tfs, dls, blockSize))
-        }
-        new Iterator[PostingRow] {
-          private val queue = scala.collection.mutable.Queue.empty[PostingRow]
-          private def fill(): Unit = {
-            while (queue.isEmpty && blockIt.hasNext) {
-              val (d, t, l) = Codec.decodeBlock(blockIt.next())
-              var i = 0
-              while (i < d.length) {
-                val b = d(i) / width
-                if (pendD.nonEmpty && b != curBucket) queue += flushPending()
-                curBucket = b
-                pendD += d(i); pendT += t(i); pendL += l(i)
-                i += 1
-              }
+    rows.flatMap(rebucketRow(_, width, blockSize))
+  }
+
+  /** One row of [[rebucketByRange]]: the row itself when it lies in one
+    * docId range, else its per-range slices. */
+  def rebucketRow(r: PostingRow, width: Long, blockSize: Int): Iterator[PostingRow] = {
+    val lo = (r.min_doc / width).toInt
+    val hi = (r.blocks.last.max_doc / width).toInt
+    if (lo == hi) {
+      if (r.bucket == lo) Iterator.single(r)
+      else Iterator.single(r.copy(bucket = lo))
+    } else {
+      // Only range-STRADDLING rows decode here — normally unsalted
+      // (bucket 0) rows, whose n is the term's df. The build's salting
+      // decision is a SAMPLED df estimate, and term placement can
+      // correlate with doc_id (ADVICE round 2: a term living only in
+      // docs outside the 1/headSampleInv sample reads df=0 and stays
+      // unsalted at ANY true df) — so this path must not assume n is
+      // small. It streams: decode ONE block at a time (blocks are
+      // docId-sorted) and emit each completed docId-range slice as soon
+      // as the stream crosses its boundary. Peak memory is
+      // O(blockSize + postings of one range) — bounded by max(blockSize,
+      // width) — instead of three O(n) arrays, and the output rows are
+      // consumed lazily by the shuffle writer (flatMap iterator).
+      val blockIt = r.blocks.iterator
+      val pendD = new scala.collection.mutable.ArrayBuffer[Long]
+      val pendT = new scala.collection.mutable.ArrayBuffer[Int]
+      val pendL = new scala.collection.mutable.ArrayBuffer[Int]
+      var curBucket = -1L
+      def flushPending(): PostingRow = {
+        val ds = pendD.toArray; val tfs = pendT.toArray; val dls = pendL.toArray
+        pendD.clear(); pendT.clear(); pendL.clear()
+        var cf = 0L; var i = 0
+        while (i < tfs.length) { cf += tfs(i); i += 1 }
+        PostingRow(r.part_id, r.term, (ds(0) / width).toInt, ds.length.toLong,
+          cf, ds(0), Codec.encodeBlocks(ds, tfs, dls, blockSize))
+      }
+      new Iterator[PostingRow] {
+        private val queue = scala.collection.mutable.Queue.empty[PostingRow]
+        private def fill(): Unit = {
+          while (queue.isEmpty && blockIt.hasNext) {
+            val (d, t, l) = Codec.decodeBlock(blockIt.next())
+            var i = 0
+            while (i < d.length) {
+              val b = d(i) / width
+              if (pendD.nonEmpty && b != curBucket) queue += flushPending()
+              curBucket = b
+              pendD += d(i); pendT += t(i); pendL += l(i)
+              i += 1
             }
-            if (queue.isEmpty && !blockIt.hasNext && pendD.nonEmpty)
-              queue += flushPending()
           }
-          override def hasNext: Boolean = { fill(); queue.nonEmpty }
-          override def next(): PostingRow = { fill(); queue.dequeue() }
+          if (queue.isEmpty && !blockIt.hasNext && pendD.nonEmpty)
+            queue += flushPending()
         }
+        override def hasNext: Boolean = { fill(); queue.nonEmpty }
+        override def next(): PostingRow = { fill(); queue.dequeue() }
       }
     }
   }
 
-  /** Batched query over a DOC-partitioned serving index: each task holds
-    * ALL terms of its docId ranges, so it evaluates EVERY query of the
-    * batch against its partition once (zero posting duplication — unlike
-    * the per-query grouping above, which ships each head-term row to every
-    * query using it). Per-(query, bucket) block-max WAND produces bounded
-    * partial heaps; heaps merge associatively per query (the treeReduce
-    * shape: `reduceGroups(mergeTopK)` over O(parts · nq · k) tiny rows).
+  /** The engine's one scorer: a batch over docId-range bucketed postings
+    * (a doc-partitioned index, or term-partitioned rows after
+    * [[rebucketByRange]]). Each task holds ALL batch terms of its docId
+    * ranges, so it evaluates EVERY query of the batch against its
+    * partition once (zero posting duplication). Per (query, bucket) the
+    * shared-contribution [[BucketTaat]] scorer, with its block-max bucket
+    * skip, chunk-max skip and TA walk, produces bounded partial heaps;
+    * heaps merge associatively per query (the treeReduce shape:
+    * `reduceGroups(mergeTopK)` over O(parts · nq · k) tiny rows).
     * Rank-identity: per-bucket doc sets are disjoint, and top-k of a
     * disjoint union = top-k of per-part top-k's under the frozen total
     * order. */
@@ -952,7 +895,7 @@ object QueryEngine {
     val width = plan.bucketWidth.toInt
     require(width > 0, "doc-partitioned plan needs bucketWidth from meta")
     // preFiltered: caller already restricted to the batch's terms (the
-    // head-heavy rebucket path) — don't plan a second semi-join stage.
+    // rebucket paths) — don't plan a second semi-join stage.
     // An attr-filtered batch also keeps its virtual filter lists.
     val filtered = if (preFiltered) postings
                    else restrictToPlan(postings, terms, plan)
@@ -966,135 +909,8 @@ object QueryEngine {
       // scoring work. Spread buckets across the cluster; the shuffle moves
       // only the pruned, compressed lists.
       filtered.repartition($"bucket")
-    val partials: Dataset[(Int, Seq[TopK.Cand])] = spread
-      .mapPartitions { it =>
-        val p = bc.value
-        val w = p.bucketWidth.toInt
-        // bucket -> term -> rows (one row per (term,bucket) normally;
-        // merged inputs may contribute several)
-        val byBucket = scala.collection.mutable.Map
-          .empty[Int, scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[PostingRow]]]
-        it.foreach { r =>
-          byBucket.getOrElseUpdate(r.bucket, scala.collection.mutable.Map.empty)
-            .getOrElseUpdate(r.term, scala.collection.mutable.ArrayBuffer.empty) += r
-        }
-        val taat = new BucketTaat(w, p.k)
-        val prof = effort.isDefined
-        // Per-task running top-k per query: the threshold CARRIES across
-        // this task's buckets, enabling the block-max skip below (phase
-        // profiling at 8M docs: TAAT accumulation was 96% of query task
-        // time; decode+contrib ~3%). Rank-identity is exact: a bucket is
-        // skipped only when its score upper bound is STRICTLY below the
-        // query's current k-th score, i.e. when every insert from it
-        // would provably no-op under the frozen (score DESC, doc_id ASC)
-        // order — the reference's block-max pruning argument
-        // (`src/index_ivf.cpp:220-234` partial_sort + threshold).
-        val heaps = scala.collection.mutable.HashMap.empty[Int, QueryHeap]
-        var decodeNs = 0L; var contribNs = 0L; var scoreNs = 0L
-        // ASCENDING bucket order: results are order-independent (the
-        // merged top-k set is unique under the frozen total order), but
-        // ascending docId ranges make the tight θ floor
-        // ([[QueryHeap.tightFloorFor]]) true for every bucket after each
-        // query's heap first fills — the earliest (lowest-docId) ties win
-        // immediately and every later bucket's ties are provably
-        // rejectable with one compare. Also makes task execution
-        // deterministic (HashMap order was arbitrary).
-        byBucket.toSeq.sortBy(_._1).foreach { case (bucket, termRows) =>
-          val base = bucket.toLong * w
-          taat.beginBucket() // recycle the previous bucket's dense columns
-          // Attribute filter: fold this bucket's virtual filter lists
-          // ([[Attrs]] rows riding the same posting stream) into the
-          // scorer's stamp-cleared allowed-offset mask — OR across the
-          // predicate's values. A filtered plan with NO filter row here
-          // means no doc of this bucket matches the predicate: skip the
-          // bucket outright.
-          val masked = p.filterActive
-          var anyAllowed = !masked
-          if (masked) {
-            taat.beginMask()
-            termRows.foreach { case (t, rows) =>
-              if (p.isRequestedFilter(t))
-                rows.foreach(_.blocks.foreach { b =>
-                  val (ds, _, _) = Codec.decodeBlock(b)
-                  var i = 0
-                  while (i < ds.length) {
-                    taat.allow((ds(i) - base).toInt)
-                    i += 1
-                  }
-                  anyAllowed ||= ds.length > 0
-                })
-            }
-          }
-          if (anyAllowed) {
-          // decode each term's postings ONCE; precompute micro-contribs
-          // (and the term's max contrib = its block-max bound) ONCE,
-          // shared by every query using the term
-          var bucketBlocks = 0L
-          val maxC = scala.collection.mutable.HashMap.empty[String, Long]
-          val termLists: Map[String, (Array[Int], Array[Long])] =
-            termRows.iterator.filter(e => !Attrs.isFilterTerm(e._1))
-              .map { case (t, rows) =>
-              val idf = p.termIdf(t)
-              val n = rows.iterator.map(_.n).sum.toInt
-              val idxs = new Array[Int](n)
-              val cs = new Array[Long](n)
-              var o = 0
-              var mx = 0L
-              rows.sortBy(_.min_doc).foreach { r =>
-                bucketBlocks += r.blocks.size
-                r.blocks.foreach { b =>
-                  val t0 = if (prof) System.nanoTime() else 0L
-                  val (ds, tfs, dls) = Codec.decodeBlock(b)
-                  val t1 = if (prof) System.nanoTime() else 0L
-                  var i = 0
-                  while (i < ds.length) {
-                    idxs(o) = (ds(i) - base).toInt
-                    val c = Bm25.contribMicro(idf, tfs(i).toLong, dls(i).toLong, p.avgdl)
-                    cs(o) = c
-                    if (c > mx) mx = c
-                    o += 1; i += 1
-                  }
-                  if (prof) { decodeNs += t1 - t0; contribNs += System.nanoTime() - t1 }
-                }
-              }
-              maxC(t) = mx
-              t -> (idxs, cs)
-            }.toMap
-          val queriesHere = termRows.keysIterator
-            .flatMap(t => p.termToQueries.getOrElse(t, Nil)).toSet
-          // blocksTotal = naive per-query decode cost; blocksDecoded = the
-          // actual once-per-bucket decodes — the ratio is the sharing win
-          effort.foreach { a =>
-            a.blocksTotal.add(bucketBlocks * queriesHere.size)
-            a.blocksDecoded.add(bucketBlocks)
-          }
-          queriesHere.foreach { qid =>
-            val heap = heaps.getOrElseUpdate(qid, new QueryHeap(p.k))
-            var bound = 0L
-            p.queryTermSets(qid).foreach(t => bound += maxC.getOrElse(t, 0L))
-            if (heap.n == p.k && bound < heap.kth) {
-              effort.foreach(_.bucketsSkipped.add(1L)) // provably fruitless
-            } else {
-              val t0 = if (prof) System.nanoTime() else 0L
-              val req = if (p.conjunctive) p.queryTermSets(qid).size else 0
-              val nTouched =
-                taat.score(p.queryTermSets(qid), termLists, base, heap, req, masked)
-              effort.foreach { a =>
-                scoreNs += System.nanoTime() - t0
-                a.wandCalls.add(1L); a.docsScored.add(nTouched.toLong)
-              }
-            }
-          }
-          } // anyAllowed
-        }
-        effort.foreach { a =>
-          a.decodeNanos.add(decodeNs); a.contribNanos.add(contribNs)
-          a.scoreNanos.add(scoreNs)
-        }
-        // one bounded partial per (task, query) — fewer merge rows than
-        // the per-bucket emission this replaces
-        heaps.iterator.map { case (qid, h) => (qid, h.toCands) }
-      }
+    val partials: Dataset[(Int, Seq[TopK.Cand])] =
+      spread.mapPartitions(it => scorePartition(bc.value, it, effort))
     // Final merge. The partials are BOUNDED: one row per (task, query),
     // each ≤ k cands — at most shufflePartitions·nq·k candidate rows.
     // When that fits comfortably on the driver, merge there: the
@@ -1140,14 +956,144 @@ object QueryEngine {
       .orderBy($"query_id", $"rank")
   }
 
+  /** The per-partition body of [[runDocPartitioned]]: score every query
+    * of `p` over one partition's rows (all rows of a bucket must sit in
+    * the same partition) and return one bounded partial top-k per query
+    * the partition touches. */
+  def scorePartition(p: Plan, it: Iterator[PostingRow],
+                     effort: Option[EffortAccs]): Iterator[(Int, Seq[TopK.Cand])] = {
+    val w = p.bucketWidth.toInt
+    // bucket -> term -> rows (one row per (term,bucket) normally;
+    // merged inputs may contribute several)
+    val byBucket = scala.collection.mutable.Map
+      .empty[Int, scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[PostingRow]]]
+    it.foreach { r =>
+      byBucket.getOrElseUpdate(r.bucket, scala.collection.mutable.Map.empty)
+        .getOrElseUpdate(r.term, scala.collection.mutable.ArrayBuffer.empty) += r
+    }
+    val taat = new BucketTaat(w, p.k)
+    val prof = effort.isDefined
+    // Per-task running top-k per query: the threshold CARRIES across
+    // this task's buckets, enabling the block-max skip below (phase
+    // profiling at 8M docs: TAAT accumulation was 96% of query task
+    // time; decode+contrib ~3%). Rank-identity is exact: a bucket is
+    // skipped only when its score upper bound is STRICTLY below the
+    // query's current k-th score, i.e. when every insert from it
+    // would provably no-op under the frozen (score DESC, doc_id ASC)
+    // order — the reference's block-max pruning argument
+    // (`src/index_ivf.cpp:220-234` partial_sort + threshold).
+    val heaps = scala.collection.mutable.HashMap.empty[Int, QueryHeap]
+    var decodeNs = 0L; var contribNs = 0L; var scoreNs = 0L
+    // ASCENDING bucket order: results are order-independent (the
+    // merged top-k set is unique under the frozen total order), but
+    // ascending docId ranges make the tight θ floor
+    // ([[QueryHeap.tightFloorFor]]) true for every bucket after each
+    // query's heap first fills — the earliest (lowest-docId) ties win
+    // immediately and every later bucket's ties are provably
+    // rejectable with one compare. Also makes task execution
+    // deterministic (HashMap order was arbitrary).
+    byBucket.toSeq.sortBy(_._1).foreach { case (bucket, termRows) =>
+      val base = bucket.toLong * w
+      taat.beginBucket() // recycle the previous bucket's dense columns
+      // Attribute filter: fold this bucket's virtual filter lists
+      // ([[Attrs]] rows riding the same posting stream) into the
+      // scorer's stamp-cleared allowed-offset mask — OR across the
+      // predicate's values. A filtered plan with NO filter row here
+      // means no doc of this bucket matches the predicate: skip the
+      // bucket outright.
+      val masked = p.filterActive
+      var anyAllowed = !masked
+      if (masked) {
+        taat.beginMask()
+        termRows.foreach { case (t, rows) =>
+          if (p.isRequestedFilter(t))
+            rows.foreach(_.blocks.foreach { b =>
+              val (ds, _, _) = Codec.decodeBlock(b)
+              var i = 0
+              while (i < ds.length) {
+                taat.allow((ds(i) - base).toInt)
+                i += 1
+              }
+              anyAllowed ||= ds.length > 0
+            })
+        }
+      }
+      if (anyAllowed) {
+      // decode each term's postings ONCE; precompute micro-contribs
+      // (and the term's max contrib = its block-max bound) ONCE,
+      // shared by every query using the term
+      var bucketBlocks = 0L
+      val maxC = scala.collection.mutable.HashMap.empty[String, Long]
+      val termLists: Map[String, (Array[Int], Array[Long])] =
+        termRows.iterator.filter(e => !Attrs.isFilterTerm(e._1))
+          .map { case (t, rows) =>
+          val idf = p.termIdf(t)
+          val n = rows.iterator.map(_.n).sum.toInt
+          val idxs = new Array[Int](n)
+          val cs = new Array[Long](n)
+          var o = 0
+          var mx = 0L
+          rows.sortBy(_.min_doc).foreach { r =>
+            bucketBlocks += r.blocks.size
+            r.blocks.foreach { b =>
+              val t0 = if (prof) System.nanoTime() else 0L
+              val (ds, tfs, dls) = Codec.decodeBlock(b)
+              val t1 = if (prof) System.nanoTime() else 0L
+              var i = 0
+              while (i < ds.length) {
+                idxs(o) = (ds(i) - base).toInt
+                val c = Bm25.contribMicro(idf, tfs(i).toLong, dls(i).toLong, p.avgdl)
+                cs(o) = c
+                if (c > mx) mx = c
+                o += 1; i += 1
+              }
+              if (prof) { decodeNs += t1 - t0; contribNs += System.nanoTime() - t1 }
+            }
+          }
+          maxC(t) = mx
+          t -> (idxs, cs)
+        }.toMap
+      val queriesHere = termRows.keysIterator
+        .flatMap(t => p.termToQueries.getOrElse(t, Nil)).toSet
+      // blocksTotal = naive per-query decode cost; blocksDecoded = the
+      // actual once-per-bucket decodes — the ratio is the sharing win
+      effort.foreach { a =>
+        a.blocksTotal.add(bucketBlocks * queriesHere.size)
+        a.blocksDecoded.add(bucketBlocks)
+      }
+      queriesHere.foreach { qid =>
+        val heap = heaps.getOrElseUpdate(qid, new QueryHeap(p.k))
+        var bound = 0L
+        p.queryTermSets(qid).foreach(t => bound += maxC.getOrElse(t, 0L))
+        if (heap.n == p.k && bound < heap.kth) {
+          effort.foreach(_.bucketsSkipped.add(1L)) // provably fruitless
+        } else {
+          val t0 = if (prof) System.nanoTime() else 0L
+          val req = if (p.conjunctive) p.queryTermSets(qid).size else 0
+          val nTouched =
+            taat.score(p.queryTermSets(qid), termLists, base, heap, req, masked)
+          effort.foreach { a =>
+            scoreNs += System.nanoTime() - t0
+            a.wandCalls.add(1L); a.docsScored.add(nTouched.toLong)
+          }
+        }
+      }
+      } // anyAllowed
+    }
+    effort.foreach { a =>
+      a.decodeNanos.add(decodeNs); a.contribNanos.add(contribNs)
+      a.scoreNanos.add(scoreNs)
+    }
+    // one bounded partial per (task, query) — fewer merge rows than
+    // the per-bucket emission this replaces
+    heaps.iterator.map { case (qid, h) => (qid, h.toCands) }
+  }
+
   /** Driver-merge ceiling for the batched scorer's final stage: the
     * collect is O(tasks·nq·k) bounded rows (~50 MB at the cap), NOT a
     * distributed-work collect. */
   val DriverMergeMaxCands: Long = 1L << 20
 
-  /** End-to-end: query a disk index. Doc-partitioned indexes use the
-    * batched zero-duplication path; term-partitioned ones the pruned
-    * per-query path. */
   /** An OPENED index — the reference's LoadIndex analog
     * (`src/index_ivfpq.cpp:326-348`): meta is read once, and the
     * segments/stats scans are ANALYZED once (parquet file listing +
@@ -1213,6 +1159,9 @@ object QueryEngine {
       served._1, attrsCached = served._2)
   }
 
+  /** End-to-end: query a disk index once. Both layouts serve through the
+    * batched scorer ([[runOnHandle]]); term-partitioned ones first prune
+    * partitions and re-bucket the rows into docId ranges. */
   def runOnIndex(spark: SparkSession, dir: String,
                  queries: Seq[(Int, Seq[String])] = QuerySet.queryTerms,
                  k: Int = QuerySet.K,
@@ -1283,44 +1232,30 @@ object QueryEngine {
       case (_, Some((a, lo, hi))) => Attrs.rangeFilterRows(spark, h.dir, a, lo, hi)
       case _ => throw new IllegalStateException("fRows without a filter")
     }
-    if (meta.doc_partitioned)
-      h.served match {
-        case Some(cached) if !filterOn || h.attrsCached =>
-          // filtered batches may use the cache only if it carries the
-          // attr sidecar (openIndex folds it in when present at open
-          // time) — otherwise their buckets would all look filter-empty
-          runDocPartitioned(spark, cached, p, effort, bucketLocal = true)
-        case _ =>
-          val base = if (!filterOn) h.segments else h.segments.union(fRows())
-          runDocPartitioned(spark, base, p, effort)
-      }
-    else if (filterOn) {
-      // term-partitioned + attr filter: the mask is a doc-range structure,
-      // so serve through the re-bucketed TAAT path with the filter lists
-      // riding the same shuffle (they are already range-bucketed; the
-      // rebucket passes them through untouched).
-      val pruned = whereTerms(h.segments, termDf.keys.toSeq)
-      runDocPartitioned(spark,
-        rebucketByRange(pruned, meta.bucket_width, meta.block_size)
-          .union(fRows()),
-        p, effort, preFiltered = true)
-    } else {
-      prunedPartIds(spark, meta, termMaxBucket, queries) match {
-        // few candidate pairs → exact partition pruning + per-query WAND
-        // (the rare-term fast path: reads 1..few partitions)
-        case Some(partIds) =>
-          run(spark, h.segments.where($"part_id".isin(partIds: _*)), p, effort)
-        // head-heavy batch: pruning is ineffective AND the per-query
-        // grouping would pull a head term's whole posting set into one
-        // task. Re-bucket the (term-filtered) rows into docId ranges and
-        // serve through the zero-duplication batched TAAT scorer — the
-        // same plan shape the doc-partitioned layout gets natively.
-        case None =>
-          val pruned = whereTerms(h.segments, termDf.keys.toSeq)
-          runDocPartitioned(spark,
-            rebucketByRange(pruned, meta.bucket_width, meta.block_size),
-            p, effort, preFiltered = true)
-      }
+    // Pick the posting source; every batch then ends in ONE scorer call.
+    // Cached: the serving layout is already bucket-co-located (filtered
+    // batches may use it only if it carries the attr sidecar — openIndex
+    // folds it in when present at open time — otherwise their buckets
+    // would all look filter-empty). Doc-partitioned segments carry the
+    // batch's terms plus the filter rows. Term-partitioned segments are
+    // narrowed to the candidate partitions when pruning applies (the
+    // rare-term fast path reads 1..few), restricted to the batch's terms
+    // and re-bucketed into docId ranges; the filter rows are already
+    // range-bucketed and ride the same shuffle.
+    val (source, preFiltered, bucketLocal) = h.served match {
+      case Some(cached) if !filterOn || h.attrsCached => (cached, false, true)
+      case _ if meta.doc_partitioned =>
+        (if (!filterOn) h.segments else h.segments.union(fRows()), false, false)
+      case _ =>
+        val scanned = prunedPartIds(spark, meta, termMaxBucket, queries) match {
+          case Some(partIds) => h.segments.where($"part_id".isin(partIds: _*))
+          case None => h.segments
+        }
+        val rebucketed = rebucketByRange(
+          whereTerms(scanned, p.termToQueries.keys.toSeq),
+          meta.bucket_width, meta.block_size)
+        (if (!filterOn) rebucketed else rebucketed.union(fRows()), true, false)
     }
+    runDocPartitioned(spark, source, p, effort, preFiltered, bucketLocal)
   }
 }

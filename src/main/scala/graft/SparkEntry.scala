@@ -170,7 +170,7 @@ object SparkEntry {
     // --- serving path (S9/S12 lifecycle: persist → derive → open → query):
     // the full disk shape the bench measures — term-partitioned build,
     // serving layout DERIVED from it (rebucket transform, no second
-    // tokenize), batched doc-partitioned WAND — under the same oracle as
+    // tokenize), batched doc-partitioned TAAT — under the same oracle as
     // the in-memory path (rank-identity is layout-independent) ----------
     "q_topk_serving" -> ((s, dir) => {
       val root = scratchDir("serve-idx-")

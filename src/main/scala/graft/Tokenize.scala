@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   *
   * Definition: lowercase, split on runs of non-(letter|digit), drop empties.
   * Expressed once as a Column (codegen'd, no UDF) and once as plain Scala
-  * (for the WAND scorer / unit tests); [[OracleSql]] carries the DuckDB
+  * (for query parsing / unit tests); [[OracleSql]] carries the DuckDB
   * mirror (`regexp_split_to_array(lower(text), '[^\pL\pN]+')`).
   */
 object Tokenize {

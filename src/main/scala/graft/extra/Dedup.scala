@@ -193,9 +193,15 @@ object Dedup {
     import spark.implicits._
     val rdd = pairs.queryExecution.toRdd.mapPartitions { it =>
       it.flatMap { r =>
-        val cos = Ann.cosScala(r.getArray(2).toFloatArray, r.getArray(3).toFloatArray)
-        if (cos >= threshold) Iterator.single((r.getLong(0), r.getLong(1), cos))
-        else Iterator.empty
+        // a null or ragged pair has no cosine (the Catalyst zip_with
+        // form yields null and the threshold drops it): skip it
+        if (r.isNullAt(2) || r.isNullAt(3) ||
+            r.getArray(2).numElements() != r.getArray(3).numElements()) Iterator.empty
+        else {
+          val cos = Ann.cosScala(r.getArray(2).toFloatArray, r.getArray(3).toFloatArray)
+          if (cos >= threshold) Iterator.single((r.getLong(0), r.getLong(1), cos))
+          else Iterator.empty
+        }
       }
     }
     spark.createDataset(rdd)

@@ -18,9 +18,9 @@ package graft
 /** One compressed block of up to `blockSize` postings (analog of a PQ code
   * block per cluster, `src/index_ivfpq.cpp:111-117`). Self-contained:
   * `bytes` is a VByte stream of (docId₀, then gaps) interleaved with
-  * (tf, dl) per posting — see [[Codec]]. Header fields power block-max
-  * WAND skipping: an upper bound of any BM25 contribution inside the block
-  * is `bm25TfNorm(max_tf, min_dl)` (monotone ↑ in tf, ↓ in dl), valid under
+  * (tf, dl) per posting — see [[Codec]]. Header fields bound the block:
+  * an upper bound of any BM25 contribution inside it is
+  * `bm25TfNorm(max_tf, min_dl)` (monotone ↑ in tf, ↓ in dl), valid under
   * ANY global (N, avgdl, df) — so blocks survive segment merges unchanged.
   */
 final case class Block(

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** BM25 formula vs hand-computed values + monotonicity of the block
-  * upper bound (the WAND-soundness precondition). */
+  * header bound (contribMicro at the header's (max_tf, min_dl)). */
 class Bm25Spec extends AnyFunSuite {
 
   test("idf matches hand computation") {
@@ -26,7 +26,7 @@ class Bm25Spec extends AnyFunSuite {
     for (_ <- 1 to 2000) {
       val tfs = Array.fill(16)(1 + rnd.nextInt(20))
       val dls = Array.fill(16)(1 + rnd.nextInt(200))
-      val ub = Bm25.blockUpperMicro(idf, tfs.max, dls.min, avgdl)
+      val ub = Bm25.contribMicro(idf, tfs.max.toLong, dls.min.toLong, avgdl)
       for (i <- 0 until 16)
         assert(Bm25.contribMicro(idf, tfs(i).toLong, dls(i).toLong, avgdl) <= ub)
     }

@@ -146,10 +146,10 @@ class EngineSpec extends AnyFunSuite {
     } finally { p.unpersist(); () }
   }
 
-  test("in-memory run: head-heavy batch re-routes to bounded TAAT, rank-identical") {
+  test("in-memory run: head-heavy batch through the batched scorer == oracle") {
     import spark.implicits._
-    // every doc contains the head term — the per-query grouping would pull
-    // its FULL posting set (all salted buckets) into one task's memory
+    // every doc contains the head term: its salted buckets re-bucket into
+    // docId ranges, so no task holds its full posting set
     val docs = (0L until 512L).map { d =>
       val extra = if (d % 97 == 3) " rare" else ""
       (d, s"the w$d$extra")
@@ -161,18 +161,9 @@ class EngineSpec extends AnyFunSuite {
       val queries = Seq((1, Seq("the")), (2, Seq("the", "rare")), (3, Seq("rare")))
       val termDf = ts.select($"term", $"df").as[(String, Long)].collect().toMap
       val plan = QueryEngine.plan(cs, termDf, queries)
-      val oracle = rows(Oracle.topk(spark, docs, queries = queries))
-      // guard OFF (cap above the corpus): the per-query WAND grouping
-      val grouped = rows(QueryEngine.run(spark, p, plan, maxGroupPostings = 1L << 20))
-      // guard ON (cap of 1 posting): every query re-routes through the
-      // re-bucketed TAAT path — per-task rows bounded by the range width
-      val rerouted = rows(QueryEngine.run(spark, p, plan, maxGroupPostings = 1L))
-      assert(grouped == oracle)
-      assert(rerouted == oracle, "re-routed head-heavy path != oracle")
-      // the default cap really would fire for this shape at scale: the
-      // head term's candidate mass is its full df
-      val headMass = termDf("the")
-      assert(headMass == 512L)
+      assert(termDf("the") == 512L)
+      assert(rows(QueryEngine.run(spark, p, plan)) ==
+        rows(Oracle.topk(spark, docs, queries = queries)))
     } finally { p.unpersist(); () }
   }
 

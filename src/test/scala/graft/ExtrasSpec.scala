@@ -79,6 +79,19 @@ class ExtrasSpec extends AnyFunSuite {
     assert(rounds <= bound, s"$rounds rounds > pointer-doubling bound $bound")
   }
 
+  test("embedding dedup: null and ragged embeddings are skipped, not scored") {
+    import spark.implicits._
+    val e = Seq(
+      (1L, Some(Seq(1f, 0f, 0f))),
+      (2L, Some(Seq(1f, 0f, 0f))), // exact dup of 1
+      (3L, None),                  // null embedding
+      (4L, Some(Seq(1f, 0f))),     // ragged: a min-length cosine would be 1.0
+      (5L, Some(Seq(0f, 1f, 0f)))  // orthogonal to 1 and 2
+    ).toDF("vec_id", "embedding")
+    val got = Dedup.embeddingDup(e).as[(Long, Long, Long)].collect().toSeq
+    assert(got == Seq((1L, 2L, 1000000L)))
+  }
+
   test("simhash: identical docs identical hash; near-dup low hamming; unrelated high") {
     import spark.implicits._
     val df = Seq(

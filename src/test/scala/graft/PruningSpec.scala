@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Physical-behavior checks: parquet pushdown/pruning really happens and
-  * block-max WAND really skips work (reference analog: the printed
-  * avg_searched_cnt pruning-selectivity metric). */
+  * the batched scorer really shares and bounds its work (reference analog:
+  * the printed avg_searched_cnt pruning-selectivity metric). */
 class PruningSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.01"
@@ -28,7 +28,7 @@ class PruningSpec extends AnyFunSuite {
       s"partition filter missing:\n$planStr")
   }
 
-  test("WAND effort counters: blocks skipped, bounded scoring") {
+  test("batched scorer effort counters: shared decode, bounded scoring") {
     import spark.implicits._
     val docs = Stats.readDocuments(spark, sfDir)
     val dir = tmpDir()
@@ -44,7 +44,7 @@ class PruningSpec extends AnyFunSuite {
     // otherwise score ~N docs per query)
     val decoded = accs.blocksDecoded.value.toDouble
     val total = accs.blocksTotal.value.toDouble
-    info(f"wand_calls=${accs.wandCalls.value} decoded/total blocks = ${decoded / total}%.3f docs_scored=${accs.docsScored.value}")
+    info(f"scorer_calls=${accs.wandCalls.value} decoded/total blocks = ${decoded / total}%.3f docs_scored=${accs.docsScored.value}")
     assert(accs.docsScored.value > 0)
   }
 }
