@@ -117,18 +117,14 @@ object Attrs {
     commitSidecarMeta(spark, dir, attrCols)
   }
 
-  /** Stamp the sidecar's commit marker (format version + attr list). Used
-    * by [[writeAttrs]] and by the merge, which writes merged rows itself. */
+  /** Stamp the sidecar's commit marker (format version + attr list),
+    * atomically ([[IndexBuild.commitJson]]). Used by [[writeAttrs]] and by
+    * the merge, which writes merged rows itself. */
   def commitSidecarMeta(spark: SparkSession, dir: String,
-                        attrCols: Seq[String]): Unit = {
-    val json = s"""{"format":$FormatVersion,"attrs":[""" +
-      attrCols.map(a => "\"" + a.replace("\"", "\\\"") + "\"").mkString(",") + "]}"
-    val p = new org.apache.hadoop.fs.Path(sidecarMetaPath(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+                        attrCols: Seq[String]): Unit =
+    IndexBuild.commitJson(spark, sidecarMetaPath(dir),
+      s"""{"format":$FormatVersion,"attrs":[""" +
+        attrCols.map(a => "\"" + a.replace("\"", "\\\"") + "\"").mkString(",") + "]}")
 
   /** Attr columns recorded in a committed sidecar's marker; requires the
     * marker's format version to be the current one (stale sidecars fail
@@ -137,11 +133,7 @@ object Attrs {
     require(hasAttrs(spark, dir),
       s"no committed attribute sidecar at ${attrsDir(dir)} — write one with " +
         "Attrs.writeAttrs before querying with a filter")
-    val p = new org.apache.hadoop.fs.Path(sidecarMetaPath(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val bytes = try in.readAllBytes() finally in.close()
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+    val n = IndexBuild.readJson(spark, sidecarMetaPath(dir))
     val fmt = if (n.has("format")) n.get("format").asInt else -1
     require(fmt == FormatVersion,
       s"attribute sidecar at ${attrsDir(dir)} has format $fmt, this build " +
@@ -210,8 +202,6 @@ object Attrs {
                 Codec.encodeBlocks(ds, tfs, dls, blockSize))
             }
           }
-    val hp = new org.apache.hadoop.fs.Path(attrsDir(outDir))
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
     merged
       .repartition(col("bucket"))
       .sortWithinPartitions(col("term"), col("bucket"))

@@ -697,106 +697,17 @@ object IndexBuild {
       }
   }
 
-  /** Scalars + head set of the single fused pre-pass (see
-    * [[corpusScanWithHeads]]). */
-  final case class CorpusScan(n_docs: Long, max_doc_id: Long,
-                              min_doc_id: Long, heads: Set[String])
-
-  /** ONE fused pre-pass over the corpus: per-task (count, max_doc,
-    * min_doc) scalars AND sampled head-term dfs (`doc_id % headSampleInv
-    * == 0` docs, doc-distinct term counts), merged by one vocab-sized
-    * map-side-combined aggregation. Replaces the two separate jobs
-    * (corpus-scalars agg + Catalyst explode/distinct head sample) the
-    * build used to run before its main pass — each cost a fixed
-    * job-overhead share that at 16 cores was pure scaling loss, and the
-    * Catalyst sample pass allocated a token-array per doc (3.2 s of GC
-    * task-time at c16). Tokenization is the same dual-path (ASCII bytes /
-    * lowered String) scanner as the fused build pass, so head-set parity
-    * with the Catalyst mirror rides the existing tokenizer-parity specs. */
-  def corpusScanWithHeads(spark: SparkSession, docs: DataFrame,
-                          cfg: Config): CorpusScan = {
-    import spark.implicits._
-    val inv = math.max(cfg.headSampleInv, 1)
-    val needHeads = !cfg.docPartitioned
-    // doc-partitioned layouts never salt ⇒ scan doc_id only (text pruned).
-    // When sampling (inv > 1), text is masked to the sampled docs AT THE
-    // PROJECTION: the pre-pass otherwise copies every doc's text bytes
-    // into its output UnsafeRows (for a generated/joined corpus that is
-    // the full text volume through the memory controller) only to skip
-    // 1−1/inv of them at the tokenizer — the when() pushes the skip into
-    // codegen so non-sampled rows carry null instead of copied bytes.
-    // cast: same getLong-vs-Encoder rationale as [[partialPostingsFromDocs]]
-    val did = $"doc_id".cast("long").as("doc_id")
-    val pruned =
-      if (!needHeads) docs.select(did)
-      else if (inv > 1)
-        docs.select(did,
-          when($"doc_id" % inv === 0, $"text").as("text"))
-      else docs.select(did, $"text")
-    val partials = pruned.queryExecution.toRdd.mapPartitions { it =>
-      val map = new DfMap()
-      var nDocs = 0L
-      var maxD = Long.MinValue
-      var minD = Long.MaxValue
-      val sinkU = new Tokenize.Utf8TokenSink {
-        var doc = 0L
-        def token(u: org.apache.spark.unsafe.types.UTF8String,
-                  start: Int, end: Int, hash: Int): Unit =
-          map.bumpUtf8(u, start, end, hash, doc)
-      }
-      val sinkS = new Tokenize.TokenSink {
-        var doc = 0L
-        def token(lower: String, start: Int, end: Int, hash: Int): Unit =
-          map.bump(lower, start, end, hash, doc)
-      }
-      it.foreach { row =>
-        require(!row.isNullAt(0), "null doc_id") // getLong on null reads 0 silently
-        val d = row.getLong(0)
-        nDocs += 1
-        if (d > maxD) maxD = d
-        if (d < minD) minD = d
-        if (needHeads && d % inv == 0 && !row.isNullAt(1)) {
-          val u = row.getUTF8String(1)
-          if (Tokenize.countTokensUtf8Ascii(u) >= 0) {
-            sinkU.doc = d
-            Tokenize.scanTokensUtf8(u, sinkU)
-          } else {
-            sinkS.doc = d
-            Tokenize.scanTokens(u.toString.toLowerCase, sinkS)
-          }
-        }
-      }
-      // sentinel row (null term) carries this task's corpus scalars
-      map.entries ++ Iterator((null: String, nDocs, maxD, minD))
-    }
-    val agg = spark.createDataset(partials)
-      .toDF("term", "df", "maxd", "mind")
-      .groupBy($"term")
-      .agg(sum($"df").as("df"), max($"maxd").as("maxd"), min($"mind").as("mind"))
-      .where($"term".isNull || $"df" * inv > cfg.headDf)
-      .collect()
-    var nDocs = 0L; var maxD = Long.MinValue; var minD = Long.MaxValue
-    val heads = Set.newBuilder[String]
-    agg.foreach { r =>
-      if (r.isNullAt(0)) { nDocs = r.getLong(1); maxD = r.getLong(2); minD = r.getLong(3) }
-      else heads += r.getString(0)
-    }
-    CorpusScan(nDocs, maxD, minD, heads.result())
-  }
-
-  /** Heads-only sampled scan, with the doc sample pushed INTO the
-    * Catalyst plan: `where(doc_id % inv === 0)` evaluates inside
-    * whole-stage codegen over the scan/generator, so the 1−1/inv
-    * non-sampled rows never cross the RDD boundary at all. The fused
-    * [[corpusScanWithHeads]] had to iterate EVERY row because it also
-    * carried the corpus scalars; [[writeIndex]] now gets those from a
-    * concurrent columnar agg that overlaps the main posting pass, which
-    * leaves this — 1/inv of the tokenize work — as the build's only
-    * serial pre-pass. Selection parity with both the old in-loop
-    * `d % inv == 0` and the Catalyst `pmod` mirror: on the selected set
+  /** Head-term scan on the deterministic doc sample `doc_id % inv == 0`,
+    * with the sample pushed INTO the Catalyst plan: `where(doc_id % inv
+    * === 0)` evaluates inside whole-stage codegen over the scan/generator,
+    * so the 1−1/inv non-sampled rows never cross the RDD boundary at all.
+    * The corpus scalars come from a separate columnar agg that
+    * [[writeIndex]] overlaps with the main posting pass, which leaves this
+    * — 1/inv of the tokenize work — as the build's only serial pre-pass.
+    * Selection parity with the Catalyst `pmod` mirror: on the selected set
     * (remainder zero) signed rem and pmod agree for any sign of doc_id.
-    * Null doc_ids still fail loudly (here on sampled rows; the main
-    * fused pass guards every row). */
+    * Null doc_ids still fail loudly (here on sampled rows; the main fused
+    * pass guards every row). */
   def headsSampled(spark: SparkSession, docs: DataFrame, cfg: Config): Set[String] = {
     import spark.implicits._
     val inv = math.max(cfg.headSampleInv, 1)
@@ -868,61 +779,144 @@ object IndexBuild {
   def manifestDir(dir: String) = s"$dir/manifest"
   def metricsDir(dir: String)  = s"$dir/metrics"
 
-  /** Full build to disk. With resume=true, partitions already present in
+  // ---- The one index-dir commit path ------------------------------------
+  // Every index writer — writeIndex, deriveDocPartitioned, both Merges and
+  // StreamIngest.compact — follows the same order:
+  //
+  //   validate inputs → clearIndexDir (unless resuming) → commitSegments
+  //   (segments, then stats/terms ∥ manifest) → sidecars → meta LAST
+  //
+  // readMeta refuses a dir without meta, so a writer killed at any step
+  // leaves a dir that fails to open, never one that opens and serves a
+  // mixture of old and new content.
+
+  private def hadoopPath(spark: SparkSession, p: String) = {
+    val hp = new org.apache.hadoop.fs.Path(p)
+    (hp, hp.getFileSystem(spark.sparkContext.hadoopConfiguration))
+  }
+
+  /** Delete an index dir's content so a writer replaces it WHOLE: dynamic
+    * partition overwrite replaces only the part_ids present in the new
+    * data, so a previous index with another corpus or partition count
+    * would otherwise leave stale segment partitions the fresh stats/meta
+    * know nothing about (silent over-serving). Sidecars go too: they were
+    * bucketed with the OLD corpus and geometry — left behind, openIndex
+    * would fold stale filter lists into the new index (wrong filtered
+    * candidates, or out-of-range mask offsets if bucket_width changed),
+    * and a stale positions sidecar would answer phrase queries about the
+    * old corpus. Meta goes FIRST, so a clear killed mid-way already fails
+    * to open. `metrics/` stays: it is append-only build history. */
+  private[graft] def clearIndexDir(spark: SparkSession, dir: String): Unit =
+    Seq(s"$dir/stats/meta", segmentsDir(dir), manifestDir(dir), s"$dir/stats",
+        Attrs.attrsDir(dir), Positional.positionsDir(dir))
+      .foreach { p => val (hp, fs) = hadoopPath(spark, p); fs.delete(hp, true) }
+
+  /** A writer must not clear one of its own inputs: compares fully
+    * qualified Hadoop paths, so `dir`, `dir/` and `file:dir` all match. */
+  private[graft] def requireNotInput(spark: SparkSession, inputs: Seq[String], outDir: String): Unit = {
+    def q(d: String) = { val (hp, fs) = hadoopPath(spark, d); fs.makeQualified(hp) }
+    require(!inputs.map(q).contains(q(outDir)),
+      s"output dir $outDir is one of the inputs $inputs — writing it would " +
+        "clear the input first")
+  }
+
+  private def gcMs: Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).sum
+  }
+
+  /** Phase timer: one stderr line per phase under `SPARK_GRAFT_LOG`. */
+  private def phase[T](name: String)(body: => T): T = {
+    val t = System.nanoTime(); val g = gcMs
+    val r = body
+    if (sys.env.contains("SPARK_GRAFT_LOG"))
+      System.err.println(f"[build-phase] $name ${(System.nanoTime() - t) / 1e9}%.2fs gc=${gcMs - g}ms")
+    r
+  }
+
+  /** The segments commit shared by every index writer: write `postings`
+    * under `dir/segments`, then derive stats/terms and the manifest from
+    * the just-written segments. Returns n_tokens = Σ cf over every
+    * partition on disk. The caller writes meta LAST.
+    *
+    * The segments write uses dynamic partition overwrite (a per-write
+    * option, so the caller's session conf is untouched): only the
+    * part_ids present in `postings` are replaced, which is what lets a
+    * resume keep its `done` partitions and clean partial files a killed
+    * run left in the others.
+    *
+    * Stats derive from the COMPLETE index on disk (resumed partitions
+    * too): df = Σ n, cf = Σ cf per term — exact, no block decode.
+    * max_bucket records the ACTUAL salting (max docId bucket per term):
+    * query routing prunes from it instead of re-deriving head-ness from
+    * df, so a sampled head estimate that disagrees with exact df can never
+    * strand postings in unread buckets.
+    *
+    * Both aggregations read the written segments, not a persisted copy of
+    * the pipeline output: neither touches the `blocks` column, so parquet
+    * column pruning feeds them a few small columns, whereas persist()
+    * would materialize every column (blocks are the bulk of the index)
+    * during the hot write pass. They are independent vocab-sized jobs and
+    * run concurrently, halving a tail that is mostly fixed job overhead.
+    * Manifest rows are appended only for the part_ids not in `done` (those
+    * keep their rows) — the per-partition commit point of a resume. */
+  private[graft] def commitSegments(spark: SparkSession, postings: Dataset[PostingRow],
+                                    dir: String, done: Set[Int] = Set.empty): Long = {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    phase("segments-write") {
+      postings.write
+        .mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_id")
+        .parquet(segmentsDir(dir))
+    }
+    val written = spark.read.schema(segmentSchema).parquet(segmentsDir(dir))
+    val fStats = Future {
+      phase("stats") {
+        termStatsFromPostings(written)
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/stats/terms")
+      }
+    }
+    val nTokens = phase("manifest") {
+      val all = written.groupBy($"part_id")
+        .agg(count(lit(1)).as("n_lists"), sum($"n").as("n_postings"),
+          sum($"cf").as("cf_sum"))
+        .collect().toSeq
+      val fresh = all.filterNot(r => done.contains(r.getInt(0)))
+      if (fresh.nonEmpty)
+        fresh.map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+          .toDF("part_id", "n_lists", "n_postings")
+          .coalesce(1)
+          .write.mode(SaveMode.Append).parquet(manifestDir(dir))
+      all.map(_.getLong(3)).sum
+    }
+    Await.result(fStats, Duration.Inf)
+    nTokens
+  }
+
+  /** Full build to disk: clear → [[commitSegments]] → meta LAST. With
+    * resume=true the dir is NOT cleared: partitions already present in
     * the manifest are skipped and only the gap is rebuilt (reference
     * analog: LoadFromBook's idempotent selective load,
-    * `src/index_ivfpq.cpp:122-159`); dynamic partition overwrite cleans
-    * any partial files a killed run left in unfinished partitions.
-    *
-    * With resume=false onto a NON-empty dir, the old segments/manifest/
-    * stats are deleted first: dynamic partition overwrite replaces only
-    * part_ids present in the NEW data, so a previous build with a
-    * different corpus or partition count would otherwise leave stale
-    * segment partitions the fresh stats/meta know nothing about (silent
-    * over-serving). Meta goes first, so a rebuild killed mid-way leaves a
-    * dir that FAILS to open (readMeta refuses), never one that opens and
-    * serves a mixture. */
+    * `src/index_ivfpq.cpp:122-159`). Without resume, a build onto an
+    * existing index dir replaces it whole ([[clearIndexDir]]). */
   def writeIndex(spark: SparkSession, docs: DataFrame, dir: String,
                  cfg: Config = Config(), resume: Boolean = false): Meta = {
     import spark.implicits._
     val t0 = System.nanoTime()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if (!resume)
-      // Sidecars too: they were bucketed with the OLD build's corpus and
-      // geometry — left behind, openIndex would fold stale filter lists
-      // into the new index (wrong filtered candidates, or out-of-range
-      // mask offsets if bucket_width changed), and a stale positions
-      // sidecar would answer phrase queries about the old corpus.
-      Seq(s"$dir/stats/meta", segmentsDir(dir), manifestDir(dir), s"$dir/stats",
-          Attrs.attrsDir(dir), Positional.positionsDir(dir))
-        .foreach { p =>
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-        }
-
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    def phase[T](name: String)(body: => T): T = {
-      val t = System.nanoTime(); val g = gcMs
-      val r = body
-      if (sys.env.contains("SPARK_GRAFT_LOG"))
-        System.err.println(f"[build-phase] $name ${(System.nanoTime() - t) / 1e9}%.2fs gc=${gcMs - g}ms")
-      r
-    }
+    if (!resume) clearIndexDir(spark, dir)
     // ONE full tokenize pass over the corpus (the fused partials job),
     // preceded only by the sampled heads scan (1/inv of the tokenize
     // work, rows filtered in codegen — [[headsSampled]]). The corpus
     // scalars (n_docs, min/max doc_id) are a CONCURRENT columnar agg
     // launched here and awaited only at meta time: nothing before the
     // meta write reads them, so the agg overlaps the main posting pass
-    // instead of running as a serial pre-pass (the round-4 fused scan
-    // charged a full-corpus row iteration to every build — pure Amdahl
-    // loss at the high pin; for doc-partitioned builds, which need no
-    // heads, the serial pre-pass is now gone entirely). Everything else
-    // is vocab-sized aggs over the built segments, overlapped below.
+    // instead of running as a serial pre-pass (for doc-partitioned
+    // builds, which need no heads, there is no serial pre-pass at all).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -946,62 +940,7 @@ object IndexBuild {
     val partials0 = partialPostingsFromDocs(spark, docs, heads, cfg)
     val partials = if (done.isEmpty) partials0
                    else partials0.where(!$"part_id".isin(done.toSeq: _*))
-    val postings = shuffleMerge(partials, cfg)
-    phase("segments-write") {
-      postings.write
-        .mode(SaveMode.Overwrite) // dynamic mode: only touched part_ids replaced
-        .partitionBy("part_id")
-        .parquet(segmentsDir(dir))
-    }
-    // Stats derive from the COMPLETE index (covers resumed partitions
-    // too): df = Σ n, cf = Σ tf per term — exact, no block decode, no
-    // second tokenize pass. max_bucket records the ACTUAL salting the
-    // build applied (max docId bucket per term): query routing prunes
-    // from it instead of re-deriving head-ness from df, so a sampled
-    // head estimate that disagrees with exact df can never strand
-    // postings in unread buckets.
-    //
-    // Both aggregations read the JUST-WRITTEN segments, not a persisted
-    // copy of the pipeline output: neither touches the `blocks` binary
-    // column, so parquet column pruning feeds them a few small columns
-    // of ~vocab-sized rows — whereas persist() materialized EVERY column
-    // (blocks are the bulk of the index) into executor memory during the
-    // hot write pass just to serve these two tails. Dropping the cache
-    // removes that copy from the timed path; the parquet re-read is
-    // page-cache-resident and block-pruned. It also unifies the fresh
-    // and resumed stats paths (both describe everything on disk).
-    //
-    // The stats and manifest aggregations are INDEPENDENT vocab-sized
-    // jobs — run concurrently (the scheduler interleaves their tasks),
-    // halving a tail latency that is mostly fixed job overhead and thus
-    // pure scaling loss at high core counts. Ordering contract kept:
-    // manifest (the per-partition commit point) is awaited before it is
-    // written, and meta — the open-gate — is still written after both.
-    val statsSrc = spark.read.schema(segmentSchema).parquet(segmentsDir(dir))
-    val fStats = Future {
-      phase("stats") {
-        termStatsFromPostings(statsSrc)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/stats/terms")
-      }
-    }
-    // Manifest rows for the partitions THIS run built (done parts keep
-    // their existing rows), appended LAST (atomic per-partition commit
-    // point). n_tokens = Σ cf over ALL partitions — P driver-side rows,
-    // no extra job.
-    val nTokens = phase("manifest") {
-      val all = statsSrc.groupBy($"part_id")
-        .agg(count(lit(1)).as("n_lists"), sum($"n").as("n_postings"),
-          sum($"cf").as("cf_sum"))
-        .collect().toSeq
-      val fresh = all.filterNot(r => done.contains(r.getInt(0)))
-      if (fresh.nonEmpty)
-        fresh.map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-          .toDF("part_id", "n_lists", "n_postings")
-          .coalesce(1)
-          .write.mode(SaveMode.Append).parquet(manifestDir(dir))
-      all.map(_.getLong(3)).sum
-    }
-    Await.result(fStats, Duration.Inf)
+    val nTokens = commitSegments(spark, shuffleMerge(partials, cfg), dir, done)
     // scalars long since done (launched before the main pass); the empty-
     // corpus refusal moves here with them — still strictly before the
     // meta write, so a failed build still cannot open.
@@ -1026,22 +965,15 @@ object IndexBuild {
     meta
   }
 
-  /** Meta/metrics are Iceberg-style table metadata: tiny scalar records
-    * written as JSON files straight through the FileSystem (real Iceberg
-    * writes its `metadata.json` the same way) rather than 1-row parquet
-    * Spark jobs — each such job cost ~0.15 s of fixed driver time per
-    * build, pure scaling loss at high core counts (round-4 phase
-    * profile). The commit stays atomic: write to a pid-tagged temp path,
-    * then rename over the target (the parquet committer's own shape). */
-  def writeMetaFile(spark: SparkSession, path: String, meta: Meta): Unit = {
-    val json =
-      s"""{"n_docs":${meta.n_docs},"n_tokens":${meta.n_tokens},""" +
-      s""""max_doc_id":${meta.max_doc_id},"min_doc_id":${meta.min_doc_id},""" +
-      s""""num_partitions":${meta.num_partitions},"bucket_width":${meta.bucket_width},""" +
-      s""""head_df":${meta.head_df},"block_size":${meta.block_size},""" +
-      s""""doc_partitioned":${meta.doc_partitioned},"codec":${meta.codec}}"""
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Commit a tiny JSON record (index meta, sidecar markers) atomically:
+    * write a pid-tagged temp file, then rename it over the target (the
+    * parquet committer's own shape; real Iceberg commits its
+    * `metadata.json` the same way). A kill leaves either the old record,
+    * no record, or the new one — never a half-written file. Meta/markers
+    * are plain FileSystem writes rather than 1-row parquet Spark jobs:
+    * each such job cost ~0.15 s of fixed driver time per build. */
+  private[graft] def commitJson(spark: SparkSession, path: String, json: String): Unit = {
+    val (p, fs) = hadoopPath(spark, path)
     val tmp = new org.apache.hadoop.fs.Path(
       path + ".tmp-" + ProcessHandle.current().pid())
     val out = fs.create(tmp, true)
@@ -1049,15 +981,30 @@ object IndexBuild {
     finally out.close()
     fs.delete(p, true)
     if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"meta commit rename $tmp -> $p failed")
+      throw new java.io.IOException(s"JSON commit rename $tmp -> $p failed")
   }
+
+  /** Read a record written by [[commitJson]]. */
+  private[graft] def readJson(spark: SparkSession, path: String): com.fasterxml.jackson.databind.JsonNode = {
+    val (p, fs) = hadoopPath(spark, path)
+    val in = fs.open(p)
+    val bytes = try in.readAllBytes() finally in.close()
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+  }
+
+  def writeMetaFile(spark: SparkSession, path: String, meta: Meta): Unit =
+    commitJson(spark, path,
+      s"""{"n_docs":${meta.n_docs},"n_tokens":${meta.n_tokens},""" +
+      s""""max_doc_id":${meta.max_doc_id},"min_doc_id":${meta.min_doc_id},""" +
+      s""""num_partitions":${meta.num_partitions},"bucket_width":${meta.bucket_width},""" +
+      s""""head_df":${meta.head_df},"block_size":${meta.block_size},""" +
+      s""""doc_partitioned":${meta.doc_partitioned},"codec":${meta.codec}}""")
 
   /** One JSON line per build under the metrics dir (observability table;
     * append-only, name-unique per process+timestamp). */
   def appendMetricsFile(spark: SparkSession, dir: String, json: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(
+    val (p, fs) = hadoopPath(spark,
       s"$dir/build-${ProcessHandle.current().pid()}-${System.nanoTime()}.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try out.write((json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -1065,11 +1012,7 @@ object IndexBuild {
 
   def readMeta(spark: SparkSession, dir: String): Meta = {
     try {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/stats/meta")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(p)
-      val bytes = try in.readAllBytes() finally in.close()
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+      val n = readJson(spark, s"$dir/stats/meta")
       Meta(n.get("n_docs").asLong, n.get("n_tokens").asLong,
         n.get("max_doc_id").asLong, n.get("min_doc_id").asLong,
         n.get("num_partitions").asInt, n.get("bucket_width").asLong,
@@ -1114,42 +1057,34 @@ object IndexBuild {
     * direct doc-partitioned build puts it, with the same deterministic
     * [[Codec.encodeBlocks]] over the same sorted postings, so the derived
     * index is posting-identical to a direct build (spec-asserted), at the
-    * cost of one segments pass instead of a corpus tokenize. */
+    * cost of one segments pass instead of a corpus tokenize.
+    *
+    * Commit order is every writer's: validate → [[clearIndexDir]] →
+    * [[commitSegments]] → meta LAST. Deriving onto an existing index dir
+    * replaces it whole, sidecars included (re-attach attrs with
+    * [[Attrs.writeAttrs]]); `outDir` must not be `srcDir`. */
   def deriveDocPartitioned(spark: SparkSession, srcDir: String,
                            outDir: String): Meta = {
     import spark.implicits._
     val srcMeta = readMeta(spark, srcDir)
     require(!srcMeta.doc_partitioned,
       s"$srcDir is already doc-partitioned — nothing to derive")
+    requireNotInput(spark, Seq(srcDir), outDir)
     val p = srcMeta.num_partitions
-    Seq(s"$outDir/stats/meta", segmentsDir(outDir), manifestDir(outDir),
-      s"$outDir/stats", Attrs.attrsDir(outDir)).foreach { s =>
-      val hp = new org.apache.hadoop.fs.Path(s)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-    }
+    clearIndexDir(spark, outDir)
     val derived = QueryEngine.rebucketByRange(readSegments(spark, srcDir),
         srcMeta.bucket_width, srcMeta.block_size)
       .map(r => r.copy(part_id = r.bucket % p))
       .repartition(p, $"part_id")
       .sortWithinPartitions($"term", $"bucket", $"min_doc")
-    derived.write.mode(SaveMode.Overwrite).partitionBy("part_id")
-      .parquet(segmentsDir(outDir))
-    // stats/manifest from the just-written segments (block-pruned parquet
-    // read), not a persisted copy — same reasoning as writeIndex
-    val written = spark.read.schema(segmentSchema).parquet(segmentsDir(outDir))
-    termStatsFromPostings(written)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/stats/terms")
-    written.groupBy($"part_id")
-      .agg(count(lit(1)).as("n_lists"), sum($"n").as("n_postings"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(manifestDir(outDir))
+    commitSegments(spark, derived, outDir)
     val meta = srcMeta.copy(doc_partitioned = true)
     writeMetaFile(spark, s"$outDir/stats/meta", meta)
     meta
   }
 
   private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val (p, fs) = hadoopPath(spark, path)
+    fs.exists(p)
   }
 }

@@ -209,31 +209,16 @@ object Positional {
   }
 
   private def writeMetaJson(spark: SparkSession, posDir: String,
-                            width: Long, numPartitions: Int): Unit = {
-    val json = s"""{"format":$FormatVersion,"width":$width,""" +
-      s""""num_partitions":$numPartitions}"""
-    val p = new org.apache.hadoop.fs.Path(metaPath(posDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(
-      metaPath(posDir) + ".tmp-" + ProcessHandle.current().pid())
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(p, true)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"positions meta commit rename failed: $tmp -> $p")
-  }
+                            width: Long, numPartitions: Int): Unit =
+    IndexBuild.commitJson(spark, metaPath(posDir),
+      s"""{"format":$FormatVersion,"width":$width,"num_partitions":$numPartitions}""")
 
   def readMeta(spark: SparkSession, posDir: String): PosMeta = {
     require(hasPositions(spark, posDir),
       s"no committed positions sidecar at $posDir — a write killed before " +
         "its meta-last commit leaves no meta; rebuild with Positional.write " +
         "or Positional.writeBuild")
-    val p = new org.apache.hadoop.fs.Path(metaPath(posDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val bytes = try in.readAllBytes() finally in.close()
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+    val n = IndexBuild.readJson(spark, metaPath(posDir))
     val m = PosMeta(n.get("format").asInt, n.get("width").asLong,
       n.get("num_partitions").asInt)
     require(m.format == FormatVersion,
@@ -249,14 +234,15 @@ object Positional {
                          posDir: String, width: Long, numPartitions: Int,
                          done: Set[Int]): Unit = {
     import spark.implicits._
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     merged
       .withColumn("part_id", pmod(col("bucket"), lit(numPartitions)).cast("int"))
       .repartition(numPartitions, col("part_id"))
       // term-sorted files ⇒ tight row-group min/max stats: a phrase
       // query's `term isin` prunes row groups instead of scanning all
       .sortWithinPartitions(col("term"), col("bucket"), col("min_doc"))
-      .write.mode(SaveMode.Overwrite).partitionBy("part_id")
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic") // resume: only rebuilt part_ids
+      .partitionBy("part_id")
       .parquet(segmentsDir(posDir))
     val written = spark.read.schema(segSchema).parquet(segmentsDir(posDir))
     val all = written.groupBy($"part_id")

@@ -16,11 +16,6 @@ object Stats {
   def tokens(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(Tokenize.tokensCol(col("text"))).as("term"))
 
-  /** Per-doc length table (doc_id, dl). Docs with zero tokens get no row;
-    * they still count in n_docs / avgdl via [[corpus]]. */
-  def docLens(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), size(Tokenize.tokensCol(col("text"))).cast("long").as("dl"))
-
   /** Term-frequency rows (doc_id, term, tf, dl) — the engine's "encoded
     * vectors". NO shuffle: a document is a single row, so its term
     * counts are a per-task computation over the token array (the naive

@@ -176,6 +176,14 @@ object Ann {
       // remaining assignment/update jobs are just skipped (a contract
       // query at test scale used to pay 8 Spark jobs for a clustering
       // that converges in 2-3).
+      // Determinism beyond local mode: "pure function" needs every
+      // iteration's aggregate to come out bit-identical whatever order
+      // the shuffle merges partial sums in. A double sum only guarantees
+      // that in local mode (fixed fetch order); off it, two runs of one
+      // iteration could differ in low bits and this exit would fire (or
+      // not) by luck. The update above therefore sums in exact DECIMAL
+      // (associative) and the assignment is a per-row function, so the
+      // exit holds on a cluster too — keep it that way if either changes.
       converged = java.util.Arrays.deepEquals(
         next.asInstanceOf[Array[AnyRef]], centroids.asInstanceOf[Array[AnyRef]])
       centroids = next

@@ -60,9 +60,6 @@ final case class CorpusStats(n_docs: Long, n_tokens: Long, max_doc_id: Long) {
   def avgdl: Double = n_tokens.toDouble / n_docs
 }
 
-/** Per-term statistics: document frequency + collection frequency. */
-final case class TermStats(term: String, df: Long, cf: Long)
-
 /** A query of the fixed reference query set. */
 final case class Query(query_id: Int, qtext: String)
 
@@ -70,7 +67,3 @@ final case class Query(query_id: Int, qtext: String)
   * integer micro-impact quantization makes the ranking key an
   * order-independent integer sum (rank-identical across engines). */
 final case class Hit(query_id: Int, rank: Int, doc_id: Long, score_micro: Long)
-
-/** Per-partition build lineage row (manifest; analog of the reference's
-  * `posting_lists_lens` manifest, `src/index_ivfpq.cpp:505-513`). */
-final case class ManifestRow(part_id: Int, n_lists: Long, n_postings: Long)

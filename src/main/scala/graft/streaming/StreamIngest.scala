@@ -257,21 +257,33 @@ object StreamIngest {
   /** Fold the current log units into one serving index (zero-decode
     * concat; disjoint intervals are validated driver-side by the merge).
     * With tiering on, this folds ~T·log_T(K) segments, not K batches.
-    * With a single unit the index is already in final form — it copies
-    * directly, so callers always get a complete index at `outDir`. */
+    * With a single unit the index is already in final form and is copied
+    * file by file. Either way `outDir` is replaced whole and committed
+    * like every index writer: clear, content, then meta LAST — the copy
+    * skips the unit's `stats/meta` and rewrites it at the end, so a copy
+    * killed mid-way leaves a dir that fails to open. */
   def compact(spark: SparkSession, workDir: String, outDir: String): IndexBuild.Meta = {
     val dirs = currentUnits(spark, workDir).map(_.dir)
     require(dirs.nonEmpty, "no committed batches to compact")
     if (dirs.size == 1) {
-      // single unit: the "merge" is a filesystem copy of the one index.
-      // The destination must NOT pre-exist: Hadoop's FileUtil.copy nests
-      // the source UNDER an existing directory instead of copying onto it.
+      IndexBuild.requireNotInput(spark, dirs, outDir)
+      IndexBuild.clearIndexDir(spark, outDir)
+      // file by file: FileUtil.copy of a directory onto an existing one
+      // nests it (clearIndexDir keeps `metrics/`), and meta must come last
       val f = fs(spark)
-      val dst = new org.apache.hadoop.fs.Path(outDir)
-      f.delete(dst, true)
-      org.apache.hadoop.fs.FileUtil.copy(f, new org.apache.hadoop.fs.Path(dirs.head),
-        f, dst, false, true, spark.sparkContext.hadoopConfiguration)
-      IndexBuild.readMeta(spark, outDir)
+      val src = f.makeQualified(new org.apache.hadoop.fs.Path(dirs.head))
+      val files = f.listFiles(src, true)
+      while (files.hasNext) {
+        val file = files.next().getPath
+        val rel = src.toUri.relativize(file.toUri).getPath
+        if (rel != "stats/meta")
+          org.apache.hadoop.fs.FileUtil.copy(f, file, f,
+            new org.apache.hadoop.fs.Path(outDir, rel), false, true,
+            spark.sparkContext.hadoopConfiguration)
+      }
+      val meta = IndexBuild.readMeta(spark, dirs.head)
+      IndexBuild.writeMetaFile(spark, s"$outDir/stats/meta", meta)
+      meta
     } else Merge.concatMergeIndexes(spark, dirs, outDir)
   }
 }

@@ -146,35 +146,110 @@ class DiskIndexSpec extends AnyFunSuite {
     assert(got == oracle)
   }
 
-  test("rebuild (resume=false) onto a non-empty dir leaves NO stale partitions") {
+  // ---- every index writer replaces an existing index dir whole ---------
+  // Corpus A (P=32, with attrs + positions sidecars) pre-populates the
+  // target; each writer then writes corpus B (P=8) onto it. Dynamic
+  // partition overwrite alone would leave A's part_ids >= 8, its manifest
+  // rows and its sidecars behind.
+  private val cfgA = IndexBuild.Config(numPartitions = 32, bucketWidth = 16, headDf = 20)
+  private val cfgB = IndexBuild.Config(numPartitions = 8, bucketWidth = 16, headDf = 20)
+
+  private def corpus(word: String, n: Long) = {
     import spark.implicits._
-    // corpus A with P=32 writes part_ids corpus B's P=8 build never
-    // touches — dynamic partition overwrite alone would leave them behind
-    val corpusA = (0L until 200L).map(d => (d, s"alpha a$d stale"))
-      .toDF("doc_id", "text")
-    val corpusB = (0L until 50L).map(d => (d, s"beta b$d fresh"))
-      .toDF("doc_id", "text")
-    val cfgA = IndexBuild.Config(numPartitions = 32, bucketWidth = 16, headDf = 20)
-    val cfgB = IndexBuild.Config(numPartitions = 8, bucketWidth = 16, headDf = 20)
-    val shared = tmpDir(); val fresh = tmpDir()
-    IndexBuild.writeIndex(spark, corpusA, shared, cfgA)
-    IndexBuild.writeIndex(spark, corpusB, shared, cfgB) // rebuild, no resume
-    IndexBuild.writeIndex(spark, corpusB, fresh, cfgB)
-    def decoded(d: String) = IndexBuild.readSegments(spark, d)
-      .flatMap(Codec.decodeAll _).as[Posting]
-      .collect().toSeq.sortBy(p => (p.term, p.doc_id))
-    assert(decoded(shared) == decoded(fresh))
-    // no segment dir beyond P=8 survives, and no corpus-A term serves
-    val parts = new java.io.File(IndexBuild.segmentsDir(shared)).listFiles()
-      .filter(_.getName.startsWith("part_id=")).map(_.getName.stripPrefix("part_id=").toInt)
-    assert(parts.forall(_ < 8))
-    assert(!decoded(shared).exists(_.term == "alpha"))
-    val q = Seq((1, Seq("beta")), (2, Seq("alpha")))
-    val got = QueryEngine.runOnIndex(spark, shared, q)
-      .as[(Int, Int, Long, Long)].collect().toSeq
-    val want = QueryEngine.runOnIndex(spark, fresh, q)
-      .as[(Int, Int, Long, Long)].collect().toSeq
-    assert(got == want && !got.exists(_._1 == 2))
+    (0L until n).map(d => (d, s"$word ${word.take(1)}$d common", if (d % 3 == 0) "en" else "de"))
+      .toDF("doc_id", "text", "lang")
+  }
+  private lazy val corpusA = corpus("alpha", 200)
+  private lazy val corpusB = corpus("beta", 50)
+  private lazy val halvesB = {
+    import spark.implicits._
+    Seq(corpusB.where($"doc_id" < 25L), corpusB.where($"doc_id" >= 25L))
+  }
+  private def built(docs: org.apache.spark.sql.DataFrame): String = {
+    val d = tmpDir(); IndexBuild.writeIndex(spark, docs, d, cfgB); d
+  }
+  private lazy val termB = built(corpusB)
+  private lazy val halfDirsB = halvesB.map(built)
+  /** A stream work dir whose log holds one batch index per part. */
+  private def streamLog(parts: Seq[org.apache.spark.sql.DataFrame]): String = {
+    val w = tmpDir()
+    parts.zipWithIndex.foreach { case (d, i) =>
+      IndexBuild.writeIndex(spark, d, streaming.StreamIngest.batchDir(w, i.toLong), cfgB)
+    }
+    w
+  }
+  private lazy val logOne = streamLog(Seq(corpusB))
+  private lazy val logTwo = streamLog(halvesB)
+
+  private val writers: Seq[(String, String => Unit)] = Seq(
+    "writeIndex" -> (out => IndexBuild.writeIndex(spark, corpusB, out, cfgB)),
+    "deriveDocPartitioned" -> (out => IndexBuild.deriveDocPartitioned(spark, termB, out)),
+    "mergeIndexes" -> (out => Merge.mergeIndexes(spark, halfDirsB, out)),
+    "concatMergeIndexes" -> (out => Merge.concatMergeIndexes(spark, halfDirsB, out)),
+    "compact (one unit)" -> (out => streaming.StreamIngest.compact(spark, logOne, out)),
+    "compact (two units)" -> (out => streaming.StreamIngest.compact(spark, logTwo, out)))
+
+  writers.foreach { case (name, write) =>
+    test(s"rebuild onto a non-empty dir replaces it whole: $name") {
+      import spark.implicits._
+      val shared = tmpDir(); val fresh = tmpDir()
+      IndexBuild.writeIndex(spark, corpusA, shared, cfgA)
+      Attrs.writeAttrs(spark, corpusA, shared, Seq("lang"))
+      Positional.writeBuild(spark, corpusA, Positional.positionsDir(shared),
+        cfgA.bucketWidth, cfgA.numPartitions)
+      write(shared)
+      write(fresh)
+      def decoded(d: String) = IndexBuild.readSegments(spark, d)
+        .flatMap(Codec.decodeAll _).as[Posting]
+        .collect().toSeq.sortBy(p => (p.term, p.doc_id))
+      def stats(d: String) = IndexBuild.readTermStats(spark, d)
+        .as[(String, Long, Long, Int)].collect().toSeq.sorted
+      def manifest(d: String) = spark.read.parquet(IndexBuild.manifestDir(d))
+        .as[(Int, Long, Long)].collect().toSeq.sorted
+      assert(decoded(shared) == decoded(fresh))
+      assert(stats(shared) == stats(fresh))
+      assert(manifest(shared) == manifest(fresh))
+      assert(IndexBuild.readMeta(spark, shared) == IndexBuild.readMeta(spark, fresh))
+      // no stale sidecar, segment partition or corpus-A term survives
+      assert(!Attrs.hasAttrs(spark, shared))
+      assert(!new java.io.File(Positional.positionsDir(shared)).exists)
+      val parts = new java.io.File(IndexBuild.segmentsDir(shared)).listFiles()
+        .filter(_.getName.startsWith("part_id=")).map(_.getName.stripPrefix("part_id=").toInt)
+      assert(parts.forall(_ < cfgB.numPartitions))
+      assert(!decoded(shared).exists(_.term == "alpha"))
+      val q = Seq((1, Seq("beta")), (2, Seq("alpha")), (3, Seq("common")))
+      val got = QueryEngine.runOnIndex(spark, shared, q)
+        .as[(Int, Int, Long, Long)].collect().toSeq
+      val want = QueryEngine.runOnIndex(spark, fresh, q)
+        .as[(Int, Int, Long, Long)].collect().toSeq
+      assert(got == want && !got.exists(_._1 == 2))
+    }
+  }
+
+  test("derive and both merges refuse an outDir that is one of their inputs, before clearing it") {
+    val (a, b) = (halfDirsB(0), halfDirsB(1))
+    val metaA = IndexBuild.readMeta(spark, a)
+    // the same dir spelled three ways: compared as qualified Hadoop paths
+    Seq(a, s"$a/", s"file:$a").foreach { out =>
+      intercept[IllegalArgumentException](IndexBuild.deriveDocPartitioned(spark, a, out))
+      intercept[IllegalArgumentException](Merge.mergeIndexes(spark, Seq(a, b), out))
+      intercept[IllegalArgumentException](Merge.concatMergeIndexes(spark, Seq(a, b), out))
+    }
+    assert(IndexBuild.readMeta(spark, a) == metaA)
+    assert(IndexBuild.readSegments(spark, a).count() > 0)
+  }
+
+  test("index and positions builds leave the session's partitionOverwriteMode alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    val dir = tmpDir()
+    IndexBuild.writeIndex(spark, corpusB, dir, cfgB)
+    IndexBuild.writeIndex(spark, corpusB, dir, cfgB, resume = true)
+    Positional.writeBuild(spark, corpusB, Positional.positionsDir(dir),
+      cfgB.bucketWidth, cfgB.numPartitions)
+    Positional.writeBuild(spark, corpusB, Positional.positionsDir(dir),
+      cfgB.bucketWidth, cfgB.numPartitions, resume = true)
+    assert(spark.conf.get(key) == "static")
   }
 
   test("resume: interrupted build (partial manifest) completes to identical content") {

@@ -175,16 +175,6 @@ class EngineSpec extends AnyFunSuite {
     val exactHeads = IndexBuild.headTerms(spark, ts, cfg)
     assert(IndexBuild.sampledHeadTerms(spark, docs, cfg) == exactHeads)
 
-    // the fused pre-pass's corpus scalars == the Catalyst agg they replaced
-    val scan = IndexBuild.corpusScanWithHeads(spark, docs, cfg)
-    val row = docs.agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)),
-      org.apache.spark.sql.functions.max($"doc_id"),
-      org.apache.spark.sql.functions.min($"doc_id")).head()
-    assert((scan.n_docs, scan.max_doc_id, scan.min_doc_id) ==
-      (row.getLong(0), row.getLong(1), row.getLong(2)))
-    assert(scan.heads == exactHeads)
-
     def norm(rows: Seq[PostingRow]) =
       rows.sortBy(r => (r.term, r.bucket))
         .map(r => (r.part_id, r.term, r.bucket, r.n, r.cf, r.min_doc,
@@ -224,11 +214,7 @@ class EngineSpec extends AnyFunSuite {
       .groupBy($"term").agg(count(lit(1)).as("df"))
       .where($"df" * inv > cfg.headDf)
       .select($"term").as[String].collect().toSet
-    val scan = IndexBuild.corpusScanWithHeads(spark, docs, cfg)
-    assert(scan.heads == mirror)
-    assert((scan.n_docs, scan.max_doc_id, scan.min_doc_id) == (120L, 119L, 0L))
-    // the filtered heads-only scan (what writeIndex actually runs) agrees
-    // with both the fused scan and the Catalyst mirror
+    // the filtered heads-only scan (what writeIndex actually runs)
     assert(IndexBuild.headsSampled(spark, docs, cfg) == mirror)
   }
 }

@@ -219,11 +219,20 @@ class MergeSpec extends AnyFunSuite {
     IndexBuild.writeIndex(spark, docs.where($"doc_id" >= 250L), b, cfg)
     Attrs.writeAttrs(spark, docs.where($"doc_id" < 250L), a, Seq("lang"))
     // one input has attrs, the other doesn't: a merged index would
-    // silently answer filtered queries from half the corpus
-    val e = intercept[IllegalArgumentException] {
-      Merge.concatMergeIndexes(spark, Seq(a, b), tmpDir())
+    // silently answer filtered queries from half the corpus. The check
+    // runs before the target is cleared or written: an existing index
+    // there still opens, untouched.
+    val target = tmpDir()
+    val targetMeta = IndexBuild.writeIndex(spark, docs.where($"doc_id" < 100L), target, cfg)
+    val targetRows = IndexBuild.readSegments(spark, target).count()
+    Seq[String => IndexBuild.Meta](
+      Merge.concatMergeIndexes(spark, Seq(a, b), _),
+      Merge.mergeIndexes(spark, Seq(a, b), _)).foreach { merge =>
+      val e = intercept[IllegalArgumentException](merge(target))
+      assert(e.getMessage.contains("sidecar"))
     }
-    assert(e.getMessage.contains("sidecar"))
+    assert(IndexBuild.readMeta(spark, target) == targetMeta)
+    assert(IndexBuild.readSegments(spark, target).count() == targetRows)
     // explicit opt-out merges without the sidecar
     val out = tmpDir()
     Merge.concatMergeIndexes(spark, Seq(a, b), out, dropSidecars = true)
