@@ -131,21 +131,19 @@ object IndexBuild {
     * accumulator, all inside ONE task with no intermediate row encoding.
     * The tf-row variant above materializes one Tuple4 + String per
     * (doc, term) pair across the Encoder boundary (~29M objects at bench
-    * scale); this crosses the boundary once per DOCUMENT (raw text) and
-    * tokenizes in-task with [[Tokenize.tokenize]] — the Scala mirror of
-    * the Catalyst tokenizer, spec-pinned bit-equal (EngineSpec "fused ==
-    * tf-row" compares against the Catalyst-tokenized pipeline; the
-    * DuckDB oracle is a third independent check). Avoiding the Catalyst
-    * token array also skips two allocations per TOKEN (UTF8String +
-    * String) — ~10^8 per bench build. */
+    * scale); this reads each DOCUMENT's raw text once and tokenizes
+    * in-task with the [[Tokenize]] kernel pair ([[Tokenize.scanDocInto]]),
+    * spec-pinned bit-equal to the Catalyst tokenizer (EngineSpec "fused ==
+    * tf-row" compares against the Catalyst-tokenized pipeline on the
+    * driver corpus and on a mixed ASCII/multibyte one; the DuckDB oracle
+    * is a third independent check). */
   def partialPostingsFromDocs(spark: SparkSession, docs: DataFrame,
                               headTerms: Set[String], cfg: Config): Dataset[PostingRow] = {
     import spark.implicits._
     val headsBc = spark.sparkContext.broadcast(headTerms)
     val cfgV = cfg
     // One append per OCCURRENCE (tf=1); equal-doc runs are summed at
-    // emit. Tokenization is the two-pass scan: pass 1 counts dl (and
-    // establishes pure-ASCII), pass 2 appends each token by byte range.
+    // emit.
     //
     // This is the repo's one deliberate drop below the typed Dataset
     // API in a hot path (`queryExecution.toRdd`): the Encoder boundary
@@ -156,32 +154,16 @@ object IndexBuild {
     // task-time 4.2 s at c4 vs 30.6 s at c16). Pure-ASCII documents
     // now tokenize straight off the UnsafeRow's UTF8String bytes with
     // zero per-doc allocation; any high bit falls back to the String
-    // path (per-byte +32 lowering == String.toLowerCase for pure-ASCII
-    // input under any non-Turkish default locale — the same assumption
-    // the String path's Catalyst-parity spec already makes). The
-    // declarative plan (scan → column-pruned project) is unchanged —
-    // toRdd executes exactly the optimized plan Catalyst produced;
-    // parity with the Catalyst-tokenized tf-row pipeline is spec-pinned
-    // (EngineSpec "fused == tf-row"), and the DuckDB oracle is a third
-    // independent check.
+    // kernel. The declarative plan (scan → column-pruned project) is
+    // unchanged — toRdd executes exactly the optimized plan Catalyst
+    // produced.
     // cast: toRdd reads the raw slot with getLong — unlike the Encoder
     // boundary it replaced, it would zero-extend (corrupt) a narrower
     // doc_id column instead of upcasting it. A no-op on LongType input.
     val pruned = docs.select($"doc_id".cast("long").as("doc_id"), $"text")
     val partials = pruned.queryExecution.toRdd.mapPartitions { it =>
       val acc = new PartialAcc(headsBc.value, cfgV)
-      // SINGLE scan per ASCII doc ([[Tokenize.scanTokensUtf8Into]]): the
-      // former count-then-emit pair re-read and re-classified every text
-      // byte once more just to learn dl first — pure extra memory
-      // traffic on the build's hottest stage. Ranges buffer in primitive
-      // arrays (reused across docs), then emit with the known dl.
       val ranges = new Tokenize.TokenRanges()
-      val sinkStr = new Tokenize.TokenSink {
-        var doc = 0L
-        var dl = 0
-        def token(lower: String, start: Int, end: Int, hash: Int): Unit =
-          acc.addOccurrence(lower, start, end, hash, doc, dl)
-      }
       // InternalRows are reused by the scan — every value is consumed
       // within the iteration (term Strings are materialized copies).
       it.foreach { row =>
@@ -189,19 +171,14 @@ object IndexBuild {
           require(!row.isNullAt(0), "null doc_id") // getLong on null reads 0 silently
           val d = row.getLong(0)
           val u = row.getUTF8String(1)
-          val dl = Tokenize.scanTokensUtf8Into(u, ranges)
-          if (dl >= 0) {
-            var i = 0
-            while (i < dl) {
-              acc.addOccurrenceUtf8(u, ranges.starts(i), ranges.ends(i),
-                ranges.hashes(i), d, dl)
-              i += 1
-            }
-          } else {
-            val lower = u.toString.toLowerCase
-            sinkStr.doc = d
-            sinkStr.dl = Tokenize.countTokens(lower)
-            Tokenize.scanTokens(lower, sinkStr)
+          val lower = Tokenize.scanDocInto(u, ranges)
+          val dl = ranges.n
+          var i = 0
+          while (i < dl) {
+            val s = ranges.starts(i); val e = ranges.ends(i); val h = ranges.hashes(i)
+            if (lower == null) acc.addOccurrenceUtf8(u, s, e, h, d, dl)
+            else acc.addOccurrence(lower, s, e, h, d, dl)
+            i += 1
           }
           acc.maybeFlush()
         }
@@ -291,9 +268,9 @@ object IndexBuild {
   /** Open-addressed term → [[PostingBuf]] map with REGION lookup: probes
     * with a (string, start, end, hash) view so the hot path never
     * allocates a key String for a term it has already seen. `hash` must
-    * equal `lower.substring(start, end).hashCode` ([[Tokenize.scanTokens]]
-    * computes exactly that incrementally). Linear probing, power-of-two
-    * capacity, load factor 0.75. */
+    * equal `lower.substring(start, end).hashCode` (both [[Tokenize]]
+    * kernels record exactly that in [[Tokenize.TokenRanges]]). Linear
+    * probing, power-of-two capacity, load factor 0.75. */
   private[graft] final class TermMap {
     private var cap = 1 << 10
     private var mask = cap - 1
@@ -704,8 +681,10 @@ object IndexBuild {
     * The corpus scalars come from a separate columnar agg that
     * [[writeIndex]] overlaps with the main posting pass, which leaves this
     * — 1/inv of the tokenize work — as the build's only serial pre-pass.
-    * Selection parity with the Catalyst `pmod` mirror: on the selected set
-    * (remainder zero) signed rem and pmod agree for any sign of doc_id.
+    * Each sampled doc tokenizes through the fused pass's kernel pair
+    * ([[Tokenize.scanDocInto]]) into a [[DfMap]]. Selection parity with
+    * the Catalyst `pmod` mirror: on the selected set (remainder zero)
+    * signed rem and pmod agree for any sign of doc_id.
     * Null doc_ids still fail loudly (here on sampled rows; the main fused
     * pass guards every row). */
   def headsSampled(spark: SparkSession, docs: DataFrame, cfg: Config): Set[String] = {
@@ -716,33 +695,19 @@ object IndexBuild {
     val sampled = if (inv > 1) base.where($"doc_id" % inv === 0) else base
     val partials = sampled.queryExecution.toRdd.mapPartitions { it =>
       val map = new DfMap()
-      val sinkU = new Tokenize.Utf8TokenSink {
-        var doc = 0L
-        def token(u: org.apache.spark.unsafe.types.UTF8String,
-                  start: Int, end: Int, hash: Int): Unit =
-          map.bumpUtf8(u, start, end, hash, doc)
-      }
-      val sinkS = new Tokenize.TokenSink {
-        var doc = 0L
-        def token(lower: String, start: Int, end: Int, hash: Int): Unit =
-          map.bump(lower, start, end, hash, doc)
-      }
+      val ranges = new Tokenize.TokenRanges()
       it.foreach { row =>
         require(!row.isNullAt(0), "null doc_id") // getLong on null reads 0 silently
         val d = row.getLong(0)
         if (!row.isNullAt(1)) {
           val u = row.getUTF8String(1)
-          // Single pass with mid-doc abort (vs the former ASCII pre-scan):
-          // legal here because DfMap.bump* is idempotent per (term, doc) —
-          // the String-path fallback re-covers the whole doc and re-bumping
-          // an already-seen (term, doc) pair is a no-op (last-doc marking),
-          // while every range emitted before the abort ended at an ASCII
-          // non-word byte and is therefore a complete token of the String
-          // path too.
-          sinkU.doc = d
-          if (!Tokenize.scanTokensUtf8Abortable(u, sinkU)) {
-            sinkS.doc = d
-            Tokenize.scanTokens(u.toString.toLowerCase, sinkS)
+          val lower = Tokenize.scanDocInto(u, ranges)
+          var i = 0
+          while (i < ranges.n) {
+            val s = ranges.starts(i); val e = ranges.ends(i); val h = ranges.hashes(i)
+            if (lower == null) map.bumpUtf8(u, s, e, h, d)
+            else map.bump(lower, s, e, h, d)
+            i += 1
           }
         }
       }

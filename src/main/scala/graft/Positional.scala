@@ -120,20 +120,9 @@ object Positional {
         }
         val terms = scala.collection.mutable.HashMap
           .empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-        // Allocation-light tokenizer drive (round-6): the regex
-        // `tokenizeArray` path allocated a split array + a String per
-        // TOKEN through the regex engine; [[Tokenize.scanTokens]] walks
-        // the lowered text once and the token String materializes only
-        // per distinct term of the doc (the map key) — same token
-        // stream, spec-pinned (TokenizeSpec parity).
-        val sink = new Tokenize.TokenSink {
-          var n = 0 // running token index == dl at end of doc
-          def token(lower: String, start: Int, end: Int, hash: Int): Unit = {
-            terms.getOrElseUpdate(lower.substring(start, end),
-              scala.collection.mutable.ArrayBuffer.empty) += n
-            n += 1
-          }
-        }
+        // Ranged tokenizer drive: one String per TOKEN (`substring`);
+        // the map keeps the first of each distinct term as its key.
+        val ranges = new Tokenize.TokenRanges()
         new Iterator[PosRow] {
           private var emitted: Iterator[PosRow] = Iterator.empty
           private def refill(): Unit = {
@@ -141,10 +130,15 @@ object Positional {
               if (!it.hasNext) { flush(); emitted = out.iterator; out = Vector.empty }
               else {
                 val (doc, text) = it.next()
+                val lower = text.toLowerCase
+                val dl = Tokenize.scanTokensInto(lower, ranges)
                 terms.clear()
-                sink.n = 0
-                Tokenize.scanTokens(text.toLowerCase, sink)
-                val dl = sink.n
+                var i = 0
+                while (i < dl) {
+                  terms.getOrElseUpdate(lower.substring(ranges.starts(i), ranges.ends(i)),
+                    scala.collection.mutable.ArrayBuffer.empty) += i
+                  i += 1
+                }
                 val bucket = (doc / width).toInt
                 terms.foreach { case (t, ps) =>
                   acc.getOrElseUpdate((t, bucket),
@@ -300,14 +294,20 @@ object Positional {
 
   /** Reopen a committed sidecar (meta + format gate, explicit schema). */
   def read(spark: SparkSession, dir: String): Dataset[PosRow] = {
-    import spark.implicits._
     readMeta(spark, dir)
+    segments(spark, dir)
+  }
+
+  private def segments(spark: SparkSession, dir: String): Dataset[PosRow] = {
+    import spark.implicits._
     spark.read.schema(segSchema).parquet(segmentsDir(dir))
       .select($"term", $"bucket", $"n", $"min_doc", $"bytes")
       .as[PosRow]
   }
 
-  /** Merge committed sidecars (disjoint doc sets) into `outPosDir`.
+  /** Merge committed sidecars (disjoint doc sets) of one geometry `meta`,
+    * checked equal across inputs by the caller ([[Merge]], before it clears
+    * the target), into `outPosDir`.
     * concat=true (disjoint docId INTERVALS, the tier/append case): rows
     * pass through UNION-only — zero decode; every reader already handles
     * several rows per (term, bucket) in min_doc order, so a key holds at
@@ -316,16 +316,10 @@ object Positional {
     * [[mergeByKey]], the positional analog of the index merge's decoded
     * rebuild. */
   def mergeSidecars(spark: SparkSession, posDirs: Seq[String],
-                    outPosDir: String, concat: Boolean): Unit = {
-    val metas = posDirs.map(readMeta(spark, _))
-    require(metas.map(m => (m.width, m.num_partitions)).distinct.size == 1,
-      s"mismatched positions geometry across merge inputs: $metas")
-    val all = posDirs.map(read(spark, _)).reduce(_ union _)
+                    outPosDir: String, concat: Boolean, meta: PosMeta): Unit = {
+    val all = posDirs.map(segments(spark, _)).reduce(_ union _)
     val merged = if (concat) all else mergeByKey(all)
-    val hp = new org.apache.hadoop.fs.Path(outPosDir)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-    commitTail(spark, merged, outPosDir, metas.head.width,
-      metas.head.num_partitions, Set.empty)
+    commitTail(spark, merged, outPosDir, meta.width, meta.num_partitions, Set.empty)
   }
 
   /** One bucket's positions for one term, decoded to flat primitive

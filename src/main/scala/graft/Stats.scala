@@ -12,21 +12,19 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
-  /** (doc_id, term) token rows — the exploded token stream. */
-  def tokens(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(Tokenize.tokensCol(col("text"))).as("term"))
-
   /** Term-frequency rows (doc_id, term, tf, dl) — the engine's "encoded
     * vectors". NO shuffle: a document is a single row, so its term
     * counts are a per-task computation over the token array (the naive
     * `explode → groupBy(doc_id, term)` alternative shuffles every token
     * occurrence — measured ~2× slower at bench scale and the build's
     * biggest GC source). Downstream consumers aggregate or repartition
-    * these already-combined rows. */
+    * these already-combined rows. A null-text document has no tokens,
+    * hence no rows (as in the fused build pass). */
   def tfRows(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col("doc_id"), Tokenize.tokensCol(col("text")).as("toks"))
+    docs.where(col("text").isNotNull)
+      .select(col("doc_id"), Tokenize.tokensCol(col("text")).as("toks"))
       .as[(Long, Seq[String])]
       .flatMap { case (d, toks) =>
         val dl = toks.length.toLong

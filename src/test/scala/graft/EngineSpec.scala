@@ -112,7 +112,7 @@ class EngineSpec extends AnyFunSuite {
       .select($"doc_id", Tokenize.tokensCol($"text").as("toks"))
       .as[(Long, Seq[String])].collect().toMap
     val viaScala = docs.select($"doc_id", $"text").as[(Long, String)]
-      .collect().map { case (d, t) => d -> Tokenize.tokenizeArray(t).toSeq }.toMap
+      .collect().map { case (d, t) => d -> Tokenize.tokenize(t) }.toMap
     assert(viaScala == viaCatalyst)
     // plus adversarial edge cases (punctuation runs, leading/trailing
     // separators, unicode letters, digits, empty)
@@ -120,7 +120,7 @@ class EngineSpec extends AnyFunSuite {
       "tab\tsep", "newline\nsep", "ÆØÅ æøå", "naïve café")
     val viaCol = edge.toDF("text")
       .select(Tokenize.tokensCol($"text")).as[Seq[String]].collect().toSeq
-    assert(edge.map(t => Tokenize.tokenizeArray(t).toSeq) == viaCol)
+    assert(edge.map(Tokenize.tokenize) == viaCol)
   }
 
   test("whereTerms: broadcast semi-join path (>128 terms) == isin path") {
@@ -167,46 +167,62 @@ class EngineSpec extends AnyFunSuite {
     } finally { p.unpersist(); () }
   }
 
+  /** Mixed ASCII/multibyte corpus: pure-ASCII docs with repeated terms
+    * (doc-distinct df must not double-count), multibyte docs for the
+    * String-kernel fallback — some whose first multibyte letter follows
+    * several ASCII tokens, with ß / İ / supplementary-plane letters — and
+    * null text. */
+  private def mixedDocs(n: Long): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    (0L until n).map { d =>
+      val text =
+        if (d % 7 == 3) null
+        else if (d % 5 == 0) s"héad héad wörd$d straße" // non-ASCII fallback
+        else if (d % 11 == 1) s"head common w$d tail Straße İstanbul 𝐀math$d common"
+        else s"head head w$d common common tail"
+      (d, text)
+    }.toDF("doc_id", "text")
+  }
+
   test("fused doc→postings pass == tf-row pass; sampled heads (inv=1) == exact heads") {
     import spark.implicits._
-    val docs = Stats.readDocuments(spark, "/root/testdata/sf0.01")
-    val cfg = SparkEntry.testConfig
-    val ts = Stats.termStats(Stats.tfRows(docs))
-    val exactHeads = IndexBuild.headTerms(spark, ts, cfg)
-    assert(IndexBuild.sampledHeadTerms(spark, docs, cfg) == exactHeads)
-
     def norm(rows: Seq[PostingRow]) =
       rows.sortBy(r => (r.term, r.bucket))
         .map(r => (r.part_id, r.term, r.bucket, r.n, r.cf, r.min_doc,
           r.blocks.map(b => (b.max_doc, b.n, b.max_tf, b.min_dl, b.bytes.toSeq))))
-    val viaTf = IndexBuild.postingsPipeline(spark, Stats.tfRows(docs), exactHeads, cfg)
-    val viaDocs = IndexBuild.shuffleMerge(
-      IndexBuild.partialPostingsFromDocs(spark, docs, exactHeads, cfg), cfg)
-    assert(norm(viaDocs.collect().toSeq) == norm(viaTf.collect().toSeq))
+    val Seq(_, mixedHeads) = Seq(
+      Stats.readDocuments(spark, "/root/testdata/sf0.01") -> SparkEntry.testConfig,
+      // small buckets and head df so the mixed corpus salts several heads
+      mixedDocs(600) -> IndexBuild.Config(numPartitions = 8, bucketWidth = 32, headDf = 10)
+    ).map { case (docs, cfg) =>
+      val ts = Stats.termStats(Stats.tfRows(docs))
+      val exactHeads = IndexBuild.headTerms(spark, ts, cfg)
+      assert(IndexBuild.sampledHeadTerms(spark, docs, cfg) == exactHeads)
 
-    // stats derived from segments == tokenize-and-count stats
-    val derived = viaDocs.groupBy($"term")
-      .agg(org.apache.spark.sql.functions.sum($"n").as("df"),
-        org.apache.spark.sql.functions.sum($"cf").as("cf"))
-      .as[(String, Long, Long)].collect().toSeq.sorted
-    val direct = ts.select($"term", $"df", $"cf")
-      .as[(String, Long, Long)].collect().toSeq.sorted
-    assert(derived == direct)
+      val viaTf = IndexBuild.postingsPipeline(spark, Stats.tfRows(docs), exactHeads, cfg)
+      val viaDocs = IndexBuild.shuffleMerge(
+        IndexBuild.partialPostingsFromDocs(spark, docs, exactHeads, cfg), cfg)
+      assert(norm(viaDocs.collect().toSeq) == norm(viaTf.collect().toSeq))
+
+      // stats derived from segments == tokenize-and-count stats
+      val derived = viaDocs.groupBy($"term")
+        .agg(org.apache.spark.sql.functions.sum($"n").as("df"),
+          org.apache.spark.sql.functions.sum($"cf").as("cf"))
+        .as[(String, Long, Long)].collect().toSeq.sorted
+      val direct = ts.select($"term", $"df", $"cf")
+        .as[(String, Long, Long)].collect().toSeq.sorted
+      assert(derived == direct)
+      exactHeads
+    }
+    // the mixed corpus really salts, ASCII and fallback terms alike
+    assert(Set("head", "héad", "straße").subsetOf(mixedHeads))
   }
 
   test("sampled heads (inv>1, mixed ASCII/non-ASCII) == Catalyst sample mirror") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // repeated terms per doc (doc-distinct df must not double-count),
-    // non-ASCII docs (String-fallback path), null text, and an inv that
-    // actually drops docs
-    val docs = (0L until 120L).map { d =>
-      val text =
-        if (d % 7 == 3) null
-        else if (d % 5 == 0) s"héad héad wörd$d straße" // non-ASCII fallback
-        else s"head head w$d common common tail"
-      (d, text)
-    }.toDF("doc_id", "text")
+    // the mixed corpus, and an inv that actually drops docs
+    val docs = mixedDocs(120)
     val cfg = IndexBuild.Config(headDf = 10, headSampleInv = 3)
     val inv = cfg.headSampleInv
     val mirror = docs.where(pmod($"doc_id", lit(inv)) === 0)

@@ -214,25 +214,44 @@ class MergeSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Stats.readDocuments(spark, "/root/testdata/sf0.001")
     val cfg = SparkEntry.testConfig
-    val a = tmpDir(); val b = tmpDir()
-    IndexBuild.writeIndex(spark, docs.where($"doc_id" < 250L), a, cfg)
-    IndexBuild.writeIndex(spark, docs.where($"doc_id" >= 250L), b, cfg)
-    Attrs.writeAttrs(spark, docs.where($"doc_id" < 250L), a, Seq("lang"))
+    val halves = Seq(docs.where($"doc_id" < 250L), docs.where($"doc_id" >= 250L))
+    /** Two indexes over the halves, input i given sidecars by `side(i)`. */
+    def pair(side: Int => (org.apache.spark.sql.DataFrame, String) => Unit): Seq[String] =
+      halves.zipWithIndex.map { case (h, i) =>
+        val d = tmpDir()
+        IndexBuild.writeIndex(spark, h, d, cfg)
+        side(i)(h, d)
+        d
+      }
+    val noSidecar = (_: org.apache.spark.sql.DataFrame, _: String) => ()
+    def attrs(cols: String*) = (h: org.apache.spark.sql.DataFrame, d: String) =>
+      Attrs.writeAttrs(spark, h, d, cols)
+    def positions(width: Long) = (h: org.apache.spark.sql.DataFrame, d: String) =>
+      Positional.writeBuild(spark, h, Positional.positionsDir(d), width, cfg.numPartitions)
     // one input has attrs, the other doesn't: a merged index would
-    // silently answer filtered queries from half the corpus. The check
-    // runs before the target is cleared or written: an existing index
-    // there still opens, untouched.
+    // silently answer filtered queries from half the corpus
+    val Seq(a, b) = pair(Seq(attrs("lang"), noSidecar))
+    // present on both but of unequal geometry: no merged sidecar could
+    // serve both inputs' filters / phrase buckets
+    val refusals = Seq(
+      Seq(a, b) -> "sidecar",
+      pair(Seq(attrs("lang"), attrs("n_chars"))) -> "mismatched attr column sets",
+      pair(Seq(positions(cfg.bucketWidth), positions(cfg.bucketWidth * 2))) ->
+        "mismatched positions geometry")
+    // every check runs before the target is cleared or written: an
+    // existing index there still opens, untouched
     val target = tmpDir()
     val targetMeta = IndexBuild.writeIndex(spark, docs.where($"doc_id" < 100L), target, cfg)
     val targetRows = IndexBuild.readSegments(spark, target).count()
-    Seq[String => IndexBuild.Meta](
-      Merge.concatMergeIndexes(spark, Seq(a, b), _),
-      Merge.mergeIndexes(spark, Seq(a, b), _)).foreach { merge =>
+    for ((inputs, msg) <- refusals;
+         merge <- Seq[String => IndexBuild.Meta](
+           Merge.concatMergeIndexes(spark, inputs, _),
+           Merge.mergeIndexes(spark, inputs, _))) {
       val e = intercept[IllegalArgumentException](merge(target))
-      assert(e.getMessage.contains("sidecar"))
+      assert(e.getMessage.contains(msg), e.getMessage)
+      assert(IndexBuild.readMeta(spark, target) == targetMeta)
+      assert(IndexBuild.readSegments(spark, target).count() == targetRows)
     }
-    assert(IndexBuild.readMeta(spark, target) == targetMeta)
-    assert(IndexBuild.readSegments(spark, target).count() == targetRows)
     // explicit opt-out merges without the sidecar
     val out = tmpDir()
     Merge.concatMergeIndexes(spark, Seq(a, b), out, dropSidecars = true)

@@ -1,42 +1,63 @@
 package graft
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
 
-/** Parity of the allocation-free tokenizer scan ([[Tokenize.scanTokens]] /
-  * [[Tokenize.countTokens]]) with the frozen regex definition
-  * ([[Tokenize.tokenizeArray]]) — the scan replaces the regex in the
-  * index build's fused map pass, so any divergence would silently change
-  * every index. Property-tested over adversarial Unicode including
+/** Parity of the ranged tokenizer kernels ([[Tokenize.scanTokensInto]] /
+  * [[Tokenize.scanTokensUtf8Into]]) with the frozen regex definition
+  * ([[Tokenize.tokenize]]) — the kernels replace the regex in every
+  * tokenizing build pass, so any divergence would silently change every
+  * index. Property-tested over adversarial Unicode including
   * supplementary-plane code points, lone surrogates, and Nl/No number
-  * categories the `isDigit` shortcut would miss. */
+  * categories the `isDigit` shortcut would miss. Every check runs both
+  * kernels on ONE reused [[Tokenize.TokenRanges]], first filled by a long
+  * document (past its initial capacity), so stale ranges would show. */
 class TokenizeSpec extends AnyFunSuite {
 
-  private def viaScan(text: String): (Seq[String], Int) = {
+  private val buf = new Tokenize.TokenRanges()
+  private val longDoc = (1 to 300).map(i => s"Tok$i").mkString(" ")
+
+  /** Tokens of `[0, n)`, each checked against its recorded hash. */
+  private def tokensOf(n: Int, token: Int => String): Seq[String] = {
+    assert(n == buf.n, s"returned count $n != buffer count ${buf.n}")
+    (0 until n).map { i =>
+      val t = token(i)
+      assert(buf.hashes(i) == t.hashCode, s"hash mismatch for token '$t'")
+      t
+    }
+  }
+
+  private def viaString(text: String): Seq[String] = {
+    assert(Tokenize.scanTokensInto(longDoc.toLowerCase, buf) == 300)
     val lower = text.toLowerCase
-    val out = Seq.newBuilder[String]
-    Tokenize.scanTokens(lower, new Tokenize.TokenSink {
-      def token(l: String, s: Int, e: Int, h: Int): Unit = {
-        val t = l.substring(s, e)
-        assert(h == t.hashCode, s"hash mismatch for token '$t'")
-        out += t
-      }
-    })
-    (out.result(), Tokenize.countTokens(lower))
+    tokensOf(Tokenize.scanTokensInto(lower, buf),
+      i => lower.substring(buf.starts(i), buf.ends(i)))
+  }
+
+  /** None iff the byte kernel refused the text (returned -1). */
+  private def viaUtf8(text: String): Option[Seq[String]] = {
+    assert(Tokenize.scanTokensUtf8Into(UTF8String.fromString(longDoc), buf) == 300)
+    val u = UTF8String.fromString(text)
+    val n = Tokenize.scanTokensUtf8Into(u, buf)
+    assert((n < 0) == u.getBytes.exists(_ < 0),
+      s"byte kernel must return -1 exactly on a high-bit byte: ${text.take(80)}")
+    if (n < 0) { assert(buf.n == 0); None }
+    else Some(tokensOf(n, i => Tokenize.lowerAsciiToken(u, buf.starts(i), buf.ends(i))))
   }
 
   private def checkParity(text: String): Unit = {
-    val expected = Tokenize.tokenizeArray(text).toSeq
-    val (got, n) = viaScan(text)
-    assert(got == expected, s"scan tokens diverge for ${text.take(80)}")
-    assert(n == expected.length, s"countTokens diverges for ${text.take(80)}")
+    val expected = Tokenize.tokenize(text)
+    assert(viaString(text) == expected, s"scan tokens diverge for ${text.take(80)}")
+    viaUtf8(text).foreach(got =>
+      assert(got == expected, s"utf8 tokens diverge for ${text.take(80)}"))
   }
 
   test("parity on hand-picked edges") {
     Seq(
       "", "...", "The  quick,brown fox! 42", "a", " a ", "7seven 7",
       "ünïcödé Straße ĲSSELMEER", // sharp-s lowercasing changes length
-      "İstanbul İ", // dotted capital I → i + combining dot
+      "İstanbul İ", // dotted capital I → i + combining dot
       "Ⅻ rome Ⅻ", // Nl LETTER_NUMBER (not isDigit)
       "½ and ¾ halves", // No OTHER_NUMBER
       "𝐀math𝐚bold", // supplementary-plane letters
@@ -66,46 +87,29 @@ class TokenizeSpec extends AnyFunSuite {
       .select("text").collect().foreach(r => checkParity(r.getString(0)))
   }
 
-  /** The ASCII byte fast path of the fused build pass: tokenize straight
-    * off the UTF8String bytes with on-the-fly lowering. Must be token-
-    * and hash-identical to the String path for any pure-ASCII input and
-    * must refuse (count = -1, nothing emitted) anything else. */
-  private def viaUtf8Scan(text: String): Option[(Seq[String], Int)] = {
-    val u = org.apache.spark.unsafe.types.UTF8String.fromString(text)
-    val n = Tokenize.countTokensUtf8Ascii(u)
-    if (n < 0) return None
-    val out = Seq.newBuilder[String]
-    Tokenize.scanTokensUtf8(u, new Tokenize.Utf8TokenSink {
-      def token(uu: org.apache.spark.unsafe.types.UTF8String,
-                s: Int, e: Int, h: Int): Unit = {
-        val t = Tokenize.lowerAsciiToken(uu, s, e)
-        assert(h == t.hashCode, s"utf8 hash mismatch for token '$t'")
-        out += t
-      }
-    })
-    Some((out.result(), n))
-  }
-
+  /** The byte kernel of the fused build pass: tokenize straight off the
+    * UTF8String bytes with on-the-fly lowering. Must be token- and
+    * hash-identical to the String kernel for any pure-ASCII input and
+    * must refuse (-1, no ranges) anything else. */
   test("utf8 ascii fast path parity (hand-picked + random)") {
     val hand = Seq("", "...", "The  quick,brown fox! 42", "A", " MiXeD CaSe ",
       "UPPER lower 0123456789", "under_score-dash", "a!b@c#d$e%f")
     hand.foreach { t =>
-      val Some((got, n)) = viaUtf8Scan(t): @unchecked
-      val expected = Tokenize.tokenizeArray(t).toSeq
-      assert(got == expected, s"utf8 tokens diverge for '$t'")
-      assert(n == expected.length)
+      assert(viaUtf8(t).isDefined, s"pure ASCII refused: '$t'")
+      checkParity(t)
     }
     val asciiTexts: Gen[String] =
       Gen.listOf(Gen.choose(0.toChar, 127.toChar)).map(_.mkString)
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(500),
       Prop.forAll(asciiTexts) { text =>
-        val Some((got, n)) = viaUtf8Scan(text): @unchecked
-        val expected = Tokenize.tokenizeArray(text).toSeq
-        got == expected && n == expected.length
+        checkParity(text)
+        viaUtf8(text).isDefined
       })
     assert(res.passed, res.status.toString)
-    assert(viaUtf8Scan("naïve").isEmpty, "non-ASCII must fall back")
-    assert(viaUtf8Scan("😀 emoji").isEmpty, "supplementary must fall back")
+    assert(viaUtf8("naïve").isEmpty, "non-ASCII must fall back")
+    assert(viaUtf8("😀 emoji").isEmpty, "supplementary must fall back")
+    assert(viaUtf8("ascii tokens first, then straße").isEmpty,
+      "a late multibyte letter must fall back")
   }
 }
