@@ -173,40 +173,22 @@ object Attrs {
     * concat=true (disjoint docId INTERVALS): per (value-term, bucket) the
     * inputs' block lists concatenate in min_doc order — zero decode, the
     * same fast path as [[Merge.concatSegments]], legal because blocks are
-    * self-contained. concat=false (interleaved): decode, resort by docId,
-    * re-encode per key — the sidecar analog of the index merge's decoded
-    * posting rebuild. */
+    * self-contained. concat=false (interleaved): the build's reduce-side
+    * run merge ([[IndexBuild.mergePartials]]) decodes, resorts and
+    * re-encodes each key with several runs — the sidecar analog of the
+    * index merge's decoded posting rebuild. Either way ONE shuffle by
+    * bucket, sorted within files by (term, bucket) as [[writeAttrs]]
+    * writes them. */
   def mergeSidecars(spark: SparkSession, dirs: Seq[String], outDir: String,
                     blockSize: Int, concat: Boolean, attrCols: Seq[String]): Unit = {
     import spark.implicits._
-    val all = dirs.map(rows(spark, _)).reduce(_ union _)
-    val merged: Dataset[PostingRow] =
-      if (concat)
-        all.repartition(col("bucket"))
-          .sortWithinPartitions(col("term"), col("bucket"), col("min_doc"))
-          .mapPartitions(Merge.concatSegments _)
-      else
-        all.groupByKey(r => (r.term, r.bucket))
-          .mapGroups { (key: (String, Int), rows: Iterator[PostingRow]) =>
-            val (t, b) = key
-            val seq = rows.toSeq
-            if (seq.size == 1) seq.head
-            else {
-              val triples = seq.flatMap(_.blocks.flatMap { blk =>
-                val (ds, tfs, dls) = Codec.decodeBlock(blk)
-                ds.indices.map(i => (ds(i), tfs(i), dls(i)))
-              }).sortBy(_._1) // doc sets disjoint ⇒ no dup docIds
-              val ds = triples.map(_._1).toArray
-              val tfs = triples.map(_._2).toArray
-              val dls = triples.map(_._3).toArray
-              PostingRow(seq.head.part_id, t, b, ds.length.toLong,
-                seq.map(_.cf).sum, ds(0),
-                Codec.encodeBlocks(ds, tfs, dls, blockSize))
-            }
-          }
-    merged
+    val kernel: Iterator[PostingRow] => Iterator[PostingRow] =
+      if (concat) Merge.concatSegments
+      else IndexBuild.mergePartials(_, blockSize) // filter rows are VByte, cf = 0
+    dirs.map(rows(spark, _)).reduce(_ union _)
       .repartition(col("bucket"))
-      .sortWithinPartitions(col("term"), col("bucket"))
+      .sortWithinPartitions(col("term"), col("bucket"), col("min_doc"))
+      .mapPartitions(kernel)
       .write.mode(SaveMode.Overwrite).parquet(attrsDir(outDir))
     commitSidecarMeta(spark, outDir, attrCols)
   }

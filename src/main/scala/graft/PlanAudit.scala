@@ -1,28 +1,101 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
-/** Writes PLANS.md: the physical plans of the engine's key jobs, as
-  * evidence that the declarative parts stay inside Catalyst's optimizer
-  * (parquet filter pushdown, partition pruning, whole-stage codegen,
-  * map-side partial aggregation). Run per round:
+/** The engine's diagnostic main (the timed build/query numbers live in
+  * `Bench point`/`Bench spawn` and perfbench). Three modes, one session:
+  *
   *   sbt -batch "runMain graft.PlanAudit"
+  *     writes PLANS.md: the physical plans of the engine's key jobs, as
+  *     evidence that the declarative parts stay inside Catalyst's
+  *     optimizer (parquet filter pushdown, partition pruning, whole-stage
+  *     codegen, map-side partial aggregation).
+  *   sbt -batch "runMain graft.PlanAudit plans <outDir> [query ...]"
+  *     `.explain("formatted")` of contract queries (default: all) over
+  *     sf0.001, one `<outDir>/<query>.txt` each. Building the DataFrame
+  *     runs any index-build side effects; the final query is only planned.
+  *   sbt -batch "runMain graft.PlanAudit walls <sfDir> [query ...]"
+  *     the warm wall of each contract query (default: all): one untimed
+  *     run, then a timed one (build side effects + one count()). One line
+  *     per query, then the total.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
+    val sfDir = "/root/testdata/sf0.001"
+    def known(names: List[String]): Seq[String] = {
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      if (unknown.nonEmpty) usage(s"unknown contract queries: ${unknown.mkString(" ")}")
+      if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names
+    }
+    args.toList match {
+      case Nil => withSession(audit(_, sfDir))
+      case "plans" :: outDir :: names =>
+        val qs = known(names)
+        withSession(plans(_, sfDir, outDir, qs))
+      case "walls" :: wallSf :: names =>
+        val qs = known(names)
+        withSession(walls(_, wallSf, qs))
+      case _ => usage("")
+    }
+  }
+
+  private def usage(why: String): Nothing = {
+    if (why.nonEmpty) System.err.println(why)
+    System.err.println(
+      "usage: PlanAudit | PlanAudit plans <outDir> [query ...] | PlanAudit walls <sfDir> [query ...]")
+    sys.exit(2)
+  }
+
+  /** `Verify`'s session at its default 4 cpus: local[4], 4 shuffle
+    * partitions, UTC, shuffle files on repo disk. */
+  private def withSession(body: SparkSession => Unit): Unit = {
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.local.dir", Bench.localDir)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    try body(spark) finally spark.stop()
+  }
+
+  private def explain(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  private def plans(spark: SparkSession, sfDir: String, outDir: String,
+                    names: Seq[String]): Unit = {
+    val out = Paths.get(outDir)
+    Files.createDirectories(out)
+    names.foreach { n =>
+      val t0 = System.nanoTime()
+      Files.writeString(out.resolve(s"$n.txt"), explain(SparkEntry.queries(n)(spark, sfDir)))
+      println(f"$n ${(System.nanoTime() - t0) / 1e9}%.1fs")
+    }
+  }
+
+  private def walls(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    val secs = names.map { n =>
+      SparkEntry.queries(n)(spark, sfDir).count() // warm-up
+      val t0 = System.nanoTime()
+      val c = SparkEntry.queries(n)(spark, sfDir).count()
+      val s = (System.nanoTime() - t0) / 1e9
+      println(f"$n%-28s $s%7.2fs rows=$c")
+      s
+    }
+    println(f"TOTAL ${secs.sum}%.1fs")
+  }
+
+  private def audit(spark: SparkSession, sfDir: String): Unit = {
     import spark.implicits._
-    val sfDir = "/root/testdata/sf0.001"
     val docs = Stats.readDocuments(spark, sfDir)
-    val dir = "/root/repo/target/plan-audit-index"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(dir), true)
+    val dir = "target/plan-audit-index"
+    def clear(d: String): Unit =
+      org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(d), true)
+    clear(dir)
     val meta = IndexBuild.writeIndex(spark, docs, dir, SparkEntry.testConfig)
 
     val sb = new StringBuilder
@@ -34,10 +107,9 @@ object PlanAudit {
     sb ++= "(3) column pruning: scans read only the needed columns\n"
     sb ++= "(`ReadSchema`); (4) arithmetic stays in WholeStageCodegen spans.\n\n"
 
-    def dump(title: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    def dump(title: String, df: DataFrame): Unit = {
       sb ++= s"## $title\n\n```\n"
-      sb ++= df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      sb ++= explain(df)
       sb ++= "\n```\n\n"
     }
 
@@ -67,9 +139,8 @@ object PlanAudit {
       extra.TextMetrics.quality(docs))
 
     // 5. persisted ANN index: probed read must show cell partition pruning
-    val annDir = "/root/repo/target/plan-audit-ann"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(annDir), true)
+    val annDir = "target/plan-audit-ann"
+    clear(annDir)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     extra.AnnIndex.write(spark, emb, annDir)
     dump("ANN index probed-cell read (partition pruning on cell)",
@@ -77,9 +148,8 @@ object PlanAudit {
 
     // 6. composed IVF∘PQ index: probed codes read (partition pruning) and
     //    the exact rerank (candidate side broadcast — corpus never shuffled)
-    val pqDir = "/root/repo/target/plan-audit-ivfpq"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(pqDir), true)
+    val pqDir = "target/plan-audit-ivfpq"
+    clear(pqDir)
     extra.AnnIndexPq.write(spark, emb, pqDir)
     dump("IVF∘PQ probed codes read (partition pruning on cell)",
       extra.AnnIndexPq.readCodes(spark, pqDir).where($"cell".isin(0, 1, 2)))
@@ -92,9 +162,8 @@ object PlanAudit {
     // 7. positional sidecar: the phrase path's filtered read must show the
     //    term predicate pushed to the parquet scan (row-group skipping on
     //    the term-sorted files), reading only the phrase terms' positions
-    val posDir = "/root/repo/target/plan-audit-pos"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(posDir), true)
+    val posDir = "target/plan-audit-pos"
+    clear(posDir)
     Positional.write(Positional.build(spark, docs, SparkEntry.testConfig.bucketWidth),
       posDir, SparkEntry.testConfig.bucketWidth, SparkEntry.testConfig.numPartitions)
     dump("Positional sidecar read for a phrase query (term pushdown)",
@@ -109,8 +178,7 @@ object PlanAudit {
     dump("Attr filter-list read for lang IN ('es','de') (term pushdown on the sidecar)",
       Attrs.filterRows(spark, dir, "lang", Seq("es", "de")).toDF())
 
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println("wrote /root/repo/PLANS.md")
-    spark.stop()
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
+    println("wrote PLANS.md")
   }
 }

@@ -105,6 +105,7 @@ object Positional {
                     flushEntries: Int = 2000000): Dataset[PosRow] = {
     import spark.implicits._
     docs
+      .where($"text".isNotNull) // no tokens, hence no positions (as in Stats.tfRows)
       .select($"doc_id", $"text")
       .as[(Long, String)]
       .mapPartitions { it =>

@@ -809,7 +809,8 @@ object QueryEngine {
     * Cost is bounded: salted head-term rows are ALREADY range-confined
     * (pass through, no decode — the common bulk); only rare-term rows
     * (n ≤ headDf by construction) that straddle a range boundary decode,
-    * split and re-encode. */
+    * split and re-encode, in the codec of the row's own blocks (so a PFor
+    * index derives a PFor serving layout). */
   def rebucketByRange(rows: Dataset[PostingRow], width: Long,
                       blockSize: Int): Dataset[PostingRow] = {
     import rows.sparkSession.implicits._
@@ -848,7 +849,7 @@ object QueryEngine {
         var cf = 0L; var i = 0
         while (i < tfs.length) { cf += tfs(i); i += 1 }
         PostingRow(r.part_id, r.term, (ds(0) / width).toInt, ds.length.toLong,
-          cf, ds(0), Codec.encodeBlocks(ds, tfs, dls, blockSize))
+          cf, ds(0), Codec.encodeBlocks(ds, tfs, dls, blockSize, r.blocks.head.codec))
       }
       new Iterator[PostingRow] {
         private val queue = scala.collection.mutable.Queue.empty[PostingRow]

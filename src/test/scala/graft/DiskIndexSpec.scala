@@ -296,28 +296,31 @@ class DiskIndexSpec extends AnyFunSuite {
   test("derived serving layout is BIT-identical to a direct doc-partitioned build") {
     import spark.implicits._
     val docs = Stats.readDocuments(spark, sfDir)
-    val cfg = SparkEntry.testConfig
-    val termDir = tmpDir(); val derivedDir = tmpDir(); val directDir = tmpDir()
-    IndexBuild.writeIndex(spark, docs, termDir, cfg)
-    IndexBuild.deriveDocPartitioned(spark, termDir, derivedDir)
-    IndexBuild.writeIndex(spark, docs, directDir, cfg.copy(docPartitioned = true))
-    // full row equality INCLUDING encoded block bytes: the derivation must
-    // reproduce the direct build's exact segments (head rows pass through;
-    // split rare rows re-encode deterministically)
-    def rowsOf(d: String) = IndexBuild.readSegments(spark, d).collect().toSeq
-      .map(r => (r.part_id, r.term, r.bucket, r.n, r.cf, r.min_doc,
-        r.blocks.map(b => (b.max_doc, b.n, b.max_tf, b.min_dl, b.bytes.toSeq))))
-      .sortBy(t => (t._2, t._3))
-    assert(rowsOf(derivedDir) == rowsOf(directDir))
-    // stats + meta match too (max_bucket flips from salted-only to
-    // every-term ranges; the derivation must re-aggregate it)
-    def statsOf(d: String) = spark.read.parquet(s"$d/stats/terms")
-      .as[(String, Long, Long, Int)].collect().toSeq.sortBy(_._1)
-    assert(statsOf(derivedDir) == statsOf(directDir))
-    assert(IndexBuild.readMeta(spark, derivedDir) ==
-      IndexBuild.readMeta(spark, directDir))
-    // and the served batch is identical
-    assert(queryRows(derivedDir) == queryRows(directDir))
+    // both codecs: split rare rows must re-encode in the index's own codec
+    for (codec <- Seq(Codec.VByteId, Codec.PForId)) {
+      val cfg = SparkEntry.testConfig.copy(codec = codec)
+      val termDir = tmpDir(); val derivedDir = tmpDir(); val directDir = tmpDir()
+      IndexBuild.writeIndex(spark, docs, termDir, cfg)
+      IndexBuild.deriveDocPartitioned(spark, termDir, derivedDir)
+      IndexBuild.writeIndex(spark, docs, directDir, cfg.copy(docPartitioned = true))
+      // full row equality INCLUDING encoded block bytes and codec ids: the
+      // derivation must reproduce the direct build's exact segments (head
+      // rows pass through; split rare rows re-encode deterministically)
+      def rowsOf(d: String) = IndexBuild.readSegments(spark, d).collect().toSeq
+        .map(r => (r.part_id, r.term, r.bucket, r.n, r.cf, r.min_doc,
+          r.blocks.map(b => (b.max_doc, b.n, b.max_tf, b.min_dl, b.codec, b.bytes.toSeq))))
+        .sortBy(t => (t._2, t._3))
+      assert(rowsOf(derivedDir) == rowsOf(directDir), s"codec $codec")
+      // stats + meta match too (max_bucket flips from salted-only to
+      // every-term ranges; the derivation must re-aggregate it)
+      def statsOf(d: String) = spark.read.parquet(s"$d/stats/terms")
+        .as[(String, Long, Long, Int)].collect().toSeq.sortBy(_._1)
+      assert(statsOf(derivedDir) == statsOf(directDir))
+      assert(IndexBuild.readMeta(spark, derivedDir) ==
+        IndexBuild.readMeta(spark, directDir))
+      // and the served batch is identical
+      assert(queryRows(derivedDir) == queryRows(directDir))
+    }
   }
 
   test("corpus that tokenizes to ZERO postings still commits, opens and answers empty") {

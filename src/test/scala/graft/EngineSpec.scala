@@ -167,6 +167,31 @@ class EngineSpec extends AnyFunSuite {
     } finally { p.unpersist(); () }
   }
 
+  test("1000-query batch at 128 shuffle partitions: distributed final merge == oracle") {
+    import spark.implicits._
+    val docs = Stats.readDocuments(spark, "/root/testdata/sf0.001")
+    val (postings, ts, cs) = IndexBuild.buildPostings(spark, docs, SparkEntry.testConfig)
+    val p = postings.persist()
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    try {
+      val batch = Bench.queryBatch(50)
+      val termDf = ts.select($"term", $"df").as[(String, Long)].collect().toMap
+      val plan = QueryEngine.plan(cs, termDf, batch)
+      assert(batch.size == 1000 && plan.k == 10)
+      val oracle = rows(Oracle.topk(spark, docs, queries = batch))
+      val driverMerged = rows(QueryEngine.run(spark, p, plan))
+      spark.conf.set(key, "128")
+      // 128 partitions × 1000 queries × k = 10 exceeds the driver-merge
+      // cap, so the partial heaps merge through reduceGroups(mergeTopK)
+      assert(128L * plan.queryTermSets.size * plan.k > QueryEngine.DriverMergeMaxCands)
+      val distributed = rows(QueryEngine.run(spark, p, plan))
+      assert(oracle.nonEmpty)
+      assert(distributed == oracle)
+      assert(distributed == driverMerged)
+    } finally { spark.conf.set(key, before); p.unpersist(); () }
+  }
+
   /** Mixed ASCII/multibyte corpus: pure-ASCII docs with repeated terms
     * (doc-distinct df must not double-count), multibyte docs for the
     * String-kernel fallback — some whose first multibyte letter follows

@@ -193,6 +193,19 @@ class MergeSpec extends AnyFunSuite {
         cs.n_docs, cs.avgdl).as[(Int, Int, Long, Long)].collect().toSeq
     val got = tk(Positional.read(spark, Positional.positionsDir(merged)))
     assert(got == tk(single) && got.nonEmpty)
+    // the re-encoding merge rebuilds the union's exact filter lists,
+    // block bytes included (concat keeps its inputs' block cuts)
+    if (!concat) {
+      val meta = IndexBuild.readMeta(spark, merged)
+      def norm(ds: org.apache.spark.sql.Dataset[PostingRow]) = ds.collect().toSeq
+        .map(r => (r.part_id, r.term, r.bucket, r.n, r.cf, r.min_doc,
+          r.blocks.map(b => (b.max_doc, b.n, b.max_tf, b.min_dl, b.codec, b.bytes.toSeq))))
+        .sortBy(t => (t._2, t._3))
+      val want = Seq("lang", "n_chars")
+        .map(Attrs.attrPostings(spark, docs, _, meta.bucket_width, meta.block_size))
+        .reduce(_ union _)
+      assert(norm(Attrs.allFilterRows(spark, merged)) == norm(want))
+    }
   }
 
   private def tmpPosDirBuild(docs: org.apache.spark.sql.DataFrame) = {

@@ -44,7 +44,7 @@ class PositionalSpec extends AnyFunSuite {
       val corpus = (0 until 40).map { i =>
         val n = 3 + rnd.nextInt(30)
         (i.toLong, (0 until n).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" "))
-      }
+      } :+ ((40L, null: String)) // null text: no tokens, no positions
       val docsDf = corpus.toDF("doc_id", "text")
       val phrases = Seq(
         1 -> Seq("a", "b"),
@@ -59,7 +59,7 @@ class PositionalSpec extends AnyFunSuite {
       val want = (for {
         (pid, ph) <- phrases
         (doc, text) <- corpus
-        toks = Tokenize.tokenize(text)
+        toks = Option(text).map(Tokenize.tokenize).getOrElse(Seq.empty)
         tf = naiveTf(toks, ph) if tf > 0
       } yield (pid, doc, tf.toLong, toks.size.toLong)).toSet
       assert(got == want, s"round $round: got=$got want=$want")
