@@ -105,7 +105,9 @@ object PlanAudit {
     sb ++= "partition directories (`PartitionFilters` on part_id); (2) the\n"
     sb ++= "stats job partially aggregates map-side before its (tiny) shuffle;\n"
     sb ++= "(3) column pruning: scans read only the needed columns\n"
-    sb ++= "(`ReadSchema`); (4) arithmetic stays in WholeStageCodegen spans.\n\n"
+    sb ++= "(`ReadSchema`); (4) arithmetic stays in WholeStageCodegen spans;\n"
+    sb ++= "(5) a query batch restricts postings to its terms with one `InSet`\n"
+    sb ++= "filter (pushed into the parquet reader), no `BroadcastExchange`.\n\n"
 
     def dump(title: String, df: DataFrame): Unit = {
       sb ++= s"## $title\n\n```\n"
@@ -120,6 +122,20 @@ object PlanAudit {
     dump("Pruned segment scan (rare term 'dup' → 1 of 32 partitions)",
       IndexBuild.readSegments(spark, dir)
         .where($"part_id".isin(partIds: _*) && $"term".isin("dup")).toDF())
+
+    // 1b. a 1000-query batch's posting restriction (QueryEngine.whereTerms):
+    //     one InSet filter, pushed into the segments' parquet scan, and the
+    //     same filter over the handle's cached serving layout
+    val batchTerms = Bench.queryBatch(50).flatMap(_._2).distinct.sorted
+    dump(s"1000-query batch term filter over term-partitioned segments (${batchTerms.size} terms, one InSet)",
+      QueryEngine.whereTerms(IndexBuild.readSegments(spark, dir), batchTerms).toDF())
+    val serveDir = "target/plan-audit-serve"
+    clear(serveDir)
+    IndexBuild.deriveDocPartitioned(spark, dir, serveDir)
+    val handle = QueryEngine.openIndex(spark, serveDir)
+    dump(s"1000-query batch term filter over the cached serving layout (${batchTerms.size} terms, one InSet)",
+      QueryEngine.whereTerms(handle.served.get, batchTerms).toDF())
+    handle.close()
 
     // 2. segment-derived stats job (column-pruned scan, map-side partials):
     //    the build's actual stats path — no tokenize pass, reads only

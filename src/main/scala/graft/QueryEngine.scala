@@ -6,19 +6,23 @@ import org.apache.spark.sql.functions._
 /** Batched indexed query — the graft of the reference's two-phase routed
   * query (`TopWId` routing + `TopKId` scan, EP3 in SURVEY.md §3):
   *
-  *  Phase 1 (driver, no job): build the per-batch term table — idf per
-  *  query term from the stats table (the reference's per-query `DTable`
-  *  LUT, `src/index_ivfpq.cpp:554-568`) — and the candidate partition set
-  *  (term-partition pruning: rare terms hash to exactly one (term,0)
-  *  partition; salted head terms enumerate their docId buckets). Both are
-  *  broadcast.
+  *  Phase 1 (driver, no job once the handle has memoized the batch's
+  *  terms): build the per-batch term table — idf per query term from the
+  *  stats table (the reference's per-query `DTable` LUT,
+  *  `src/index_ivfpq.cpp:554-568`), broadcast to the tasks — and the
+  *  candidate partition set (term-partition pruning: rare terms hash to
+  *  exactly one (term,0) partition; salted head terms enumerate their
+  *  docId buckets).
   *
-  *  Phase 2 (one Spark job for the WHOLE query batch, like `TopKId`'s
-  *  single OMP pass): scan only candidate partitions/terms (Parquet
-  *  partition pruning on part_id + row-group skipping on the term-sorted
-  *  files), bring each docId-range bucket's rows together, score every
-  *  query of the batch per bucket with the shared-contribution
-  *  [[QueryEngine.BucketTaat]] scorer, collect nq·k hit rows.
+  *  Phase 2 (one Spark job for the WHOLE query batch on the cached
+  *  serving layout, like `TopKId`'s single OMP pass): scan only candidate
+  *  partitions/terms (one `isin` term filter: Parquet partition pruning
+  *  on part_id + row-group skipping on the term-sorted files), bring each
+  *  docId-range bucket's rows together, score every query of the batch
+  *  per bucket with the shared-contribution [[QueryEngine.BucketTaat]]
+  *  scorer, and merge the tasks' per-query top-k blocks in one
+  *  `treeAggregate`. The nq·k hits come back in (query_id, rank) order as
+  *  a local relation, so collecting them runs no further job.
   *
   * Scale note: one scorer serves every layout. A term-partitioned scan is
   * re-bucketed into docId ranges first ([[QueryEngine.rebucketByRange]]),
@@ -704,21 +708,13 @@ object QueryEngine {
     }
   }
 
-  /** Restrict postings to the batch's terms. Small batches use `isin`
-    * (literal pushdown → parquet row-group skipping on the term-sorted
-    * files); large batches (thousands of distinct terms — an `isin` of
-    * that size bloats the plan and the pushed filter) use a broadcast
-    * left-semi join, which Catalyst executes as a BroadcastHashJoin with
-    * runtime (DPP-style) filtering. */
-  def whereTerms(postings: Dataset[PostingRow], terms: Seq[String]): Dataset[PostingRow] = {
-    val spark = postings.sparkSession
-    import spark.implicits._
-    if (terms.size <= 128) postings.where($"term".isin(terms: _*))
-    else {
-      val t = terms.toDF("term")
-      postings.join(broadcast(t), Seq("term"), "left_semi").as[PostingRow]
-    }
-  }
+  /** Restrict postings to the batch's terms with one `isin`, at every
+    * batch size. Catalyst turns a long list into an `InSet` (a hash-set
+    * probe per row) and pushes it into the Parquet scan (row-group
+    * skipping on the term-sorted files); a broadcast semi-join would cost
+    * a job of its own per batch. */
+  def whereTerms(postings: Dataset[PostingRow], terms: Seq[String]): Dataset[PostingRow] =
+    postings.where(col("term").isin(terms: _*))
 
   /** The batch's posting restriction: scoring terms + explicit filter
     * terms via [[whereTerms]], plus — for a range predicate — the attr's
@@ -789,8 +785,9 @@ object QueryEngine {
   }
 
   /** part_id for each candidate pair, computed with the SAME Catalyst
-    * xxhash64 expression the build used (tiny local job ⇒ exact parity,
-    * no hand-rolled hash drift). */
+    * xxhash64 expression the build used (exact parity, no hand-rolled
+    * hash drift). The projection folds into the local relation, so the
+    * collect runs no job; dedupe and sort happen on the driver. */
   def candidatePartIds(spark: SparkSession, meta: IndexBuild.Meta,
                        pairs: Seq[(String, Int)]): Seq[Int] = {
     import spark.implicits._
@@ -798,7 +795,7 @@ object QueryEngine {
     else pairs.toDF("term", "bucket")
       .select(pmod(xxhash64($"term", $"bucket"), lit(meta.num_partitions))
         .cast("int").as("part_id"))
-      .distinct().as[Int].collect().toSeq.sorted
+      .as[Int].collect().distinct.sorted.toSeq
   }
 
   /** Re-bucket posting rows into docId-range buckets (bucket = doc_id /
@@ -880,26 +877,29 @@ object QueryEngine {
     * ranges, so it evaluates EVERY query of the batch against its
     * partition once (zero posting duplication). Per (query, bucket) the
     * shared-contribution [[BucketTaat]] scorer, with its block-max bucket
-    * skip, chunk-max skip and TA walk, produces bounded partial heaps;
-    * heaps merge associatively per query (the treeReduce shape:
-    * `reduceGroups(mergeTopK)` over O(parts · nq · k) tiny rows).
-    * Rank-identity: per-bucket doc sets are disjoint, and top-k of a
-    * disjoint union = top-k of per-part top-k's under the frozen total
-    * order. */
+    * skip, chunk-max skip and TA walk, fills the task's per-query heaps;
+    * the task emits them as one [[TopK.Block]], and the blocks merge in
+    * one `treeAggregate` of depth [[mergeDepth]]: the driver merges them
+    * as they arrive up to a fan-in of 64 tasks, executors add levels
+    * above it. Rank-identity: per-bucket doc sets are disjoint, and top-k
+    * of a disjoint union = top-k of per-part top-k's under the frozen
+    * total order, whatever the merge tree.
+    *
+    * The hits come back in (query_id, rank) order as a local relation:
+    * no sort, and collecting them runs no job. */
   def runDocPartitioned(spark: SparkSession, postings: Dataset[PostingRow],
                         plan: Plan, effort: Option[EffortAccs] = None,
                         preFiltered: Boolean = false,
                         bucketLocal: Boolean = false): DataFrame = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(plan)
-    val terms = plan.termToQueries.keys.toSeq
-    val width = plan.bucketWidth.toInt
-    require(width > 0, "doc-partitioned plan needs bucketWidth from meta")
+    val k = plan.k
+    require(plan.bucketWidth > 0, "doc-partitioned plan needs bucketWidth from meta")
     // preFiltered: caller already restricted to the batch's terms (the
-    // rebucket paths) — don't plan a second semi-join stage.
+    // rebucket paths) — don't filter twice.
     // An attr-filtered batch also keeps its virtual filter lists.
     val filtered = if (preFiltered) postings
-                   else restrictToPlan(postings, terms, plan)
+                   else restrictToPlan(postings, plan.termToQueries.keys.toSeq, plan)
     // bucketLocal: the caller guarantees every bucket's rows are already
     // co-located in one input partition (the handle's cached serving
     // layout) — the repartition below would be a pure re-shuffle of the
@@ -910,59 +910,36 @@ object QueryEngine {
       // scoring work. Spread buckets across the cluster; the shuffle moves
       // only the pruned, compressed lists.
       filtered.repartition($"bucket")
-    val partials: Dataset[(Int, Seq[TopK.Cand])] =
-      spread.mapPartitions(it => scorePartition(bc.value, it, effort))
-    // Final merge. The partials are BOUNDED: one row per (task, query),
-    // each ≤ k cands — at most shufflePartitions·nq·k candidate rows.
-    // When that fits comfortably on the driver, merge there: the
-    // distributed alternative is a whole extra shuffle + sort stage whose
-    // scheduling latency is pure FIXED cost (~1s), which the fast
-    // parallelism point pays 4× more dearly — it was the main structural
-    // drag on the measured query scaling efficiency. The merged top-k SET
-    // is unique under the frozen total order, so merge order (driver or
-    // tree) cannot change results. Above the cap (10^5 tasks at web
-    // scale), the distributed treeReduce path serves unchanged.
-    val shufP = spark.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(200)
-    val estPartialCands = shufP.toLong * plan.queryTermSets.size * plan.k
-    if (estPartialCands <= DriverMergeMaxCands) {
-      val collected = partials.collect() // the scoring job itself
+    val blocks = spread.rdd.mapPartitions(it =>
+      Iterator.single(scorePartition(bc.value, it, effort)))
+    val merge = (a: TopK.Block, b: TopK.Block) => {
       val t0 = System.nanoTime()
-      val byQ = scala.collection.mutable.HashMap.empty[Int, Seq[TopK.Cand]]
-      collected.foreach { case (qid, cands) =>
-        byQ(qid) = TopK.mergeTopK(byQ.getOrElse(qid, Vector.empty), cands, plan.k)
-      }
+      val m = TopK.merge(a, b, k)
       effort.foreach(_.mergeNanos.add(System.nanoTime() - t0))
-      val hits = byQ.toSeq.sortBy(_._1).flatMap { case (qid, cands) =>
-        cands.zipWithIndex.map { case (c, i) => Hit(qid, i + 1, c.doc_id, c.score_micro) }
-      }
-      spark.createDataset(hits).toDF()
-        .select($"query_id", $"rank", $"doc_id", $"score_micro")
-        .orderBy($"query_id", $"rank") // same declared order as the distributed branch
-    } else partials
-      .groupByKey(_._1)
-      .reduceGroups { (a: (Int, Seq[TopK.Cand]), b: (Int, Seq[TopK.Cand])) =>
-        if (effort.isDefined) {
-          val t0 = System.nanoTime()
-          val m = TopK.mergeTopK(a._2, b._2, plan.k)
-          effort.foreach(_.mergeNanos.add(System.nanoTime() - t0))
-          (a._1, m)
-        } else (a._1, TopK.mergeTopK(a._2, b._2, plan.k))
-      }
-      .flatMap { case (qid, (_, cands)) =>
-        cands.zipWithIndex.map { case (c, i) => Hit(qid, i + 1, c.doc_id, c.score_micro) }
-      }
-      .toDF()
-      .select($"query_id", $"rank", $"doc_id", $"score_micro")
-      .orderBy($"query_id", $"rank")
+      m
+    }
+    val top = blocks.treeAggregate(TopK.emptyBlock)(merge, merge,
+      mergeDepth(blocks.getNumPartitions))
+    val hits = top.qids.indices.flatMap(i => (top.off(i) until top.off(i + 1)).map(j =>
+      Hit(top.qids(i), j - top.off(i) + 1, top.docs(j), top.scores(j))))
+    spark.createDataset(hits).toDF()
+  }
+
+  /** `treeAggregate` depth for merging `nTasks` blocks: 1 (the driver
+    * merges every block) up to a fan-in of 64, else ⌈log₆₄ nTasks⌉. */
+  def mergeDepth(nTasks: Int): Int = {
+    var depth = 1
+    var reach = 64L
+    while (nTasks > reach) { depth += 1; reach *= 64 }
+    depth
   }
 
   /** The per-partition body of [[runDocPartitioned]]: score every query
     * of `p` over one partition's rows (all rows of a bucket must sit in
-    * the same partition) and return one bounded partial top-k per query
-    * the partition touches. */
+    * the same partition) and return the partition's top-k block: one
+    * bounded list per query that has a candidate here. */
   def scorePartition(p: Plan, it: Iterator[PostingRow],
-                     effort: Option[EffortAccs]): Iterator[(Int, Seq[TopK.Cand])] = {
+                     effort: Option[EffortAccs]): TopK.Block = {
     val w = p.bucketWidth.toInt
     // bucket -> term -> rows (one row per (term,bucket) normally;
     // merged inputs may contribute several)
@@ -1085,15 +1062,12 @@ object QueryEngine {
       a.decodeNanos.add(decodeNs); a.contribNanos.add(contribNs)
       a.scoreNanos.add(scoreNs)
     }
-    // one bounded partial per (task, query) — fewer merge rows than
-    // the per-bucket emission this replaces
-    heaps.iterator.map { case (qid, h) => (qid, h.toCands) }
+    // one block per task: the heaps of the queries with a candidate here
+    val live = heaps.toSeq.filter(_._2.n > 0).sortBy(_._1)
+    new TopK.Block(live.map(_._1).toArray, live.scanLeft(0)(_ + _._2.n).toArray,
+      live.flatMap { case (_, h) => h.hDoc.take(h.n) }.toArray,
+      live.flatMap { case (_, h) => h.hScore.take(h.n) }.toArray)
   }
-
-  /** Driver-merge ceiling for the batched scorer's final stage: the
-    * collect is O(tasks·nq·k) bounded rows (~50 MB at the cap), NOT a
-    * distributed-work collect. */
-  val DriverMergeMaxCands: Long = 1L << 20
 
   /** An OPENED index — the reference's LoadIndex analog
     * (`src/index_ivfpq.cpp:326-348`): meta is read once, and the
@@ -1147,7 +1121,7 @@ object QueryEngine {
         // into the SAME cache: filter rows bucket like postings and are
         // tiny beside them (one docId per doc per attr vs one posting per
         // token), so filtered batches serve from memory too. Unfiltered
-        // batches drop them in their whereTerms semi-join as usual.
+        // batches drop them in their whereTerms term filter as usual.
         val hasAttrs = Attrs.hasAttrs(spark, dir)
         val withAttrs =
           if (hasAttrs) segments.union(Attrs.allFilterRows(spark, dir))

@@ -25,7 +25,8 @@ object SparkEntry {
     * querying it. A fresh temp dir per call (not a path keyed by the
     * dataset basename — round-3 ADVICE: two concurrent Verify runs, or
     * two datasets sharing a basename, would clobber each other's
-    * index/checkpoint state mid-query). Rooted under target/, not /tmp:
+    * index/checkpoint state mid-query). Rooted under the working
+    * directory's target/ (so each checkout keeps its own), not /tmp:
     * the sandbox reaps /tmp mid-job, and the returned DataFrames read
     * these dirs lazily — so cleanup is a JVM-EXIT hook (after all lazy
     * reads), not eager deletion, plus a first-use sweep of dirs older
@@ -54,7 +55,7 @@ object SparkEntry {
         .foreach(deleteRecursively)
   }
   private lazy val scratchRoot: java.nio.file.Path = {
-    val root = java.nio.file.Paths.get("/root/repo/target/scratch")
+    val root = java.nio.file.Paths.get("target", "scratch").toAbsolutePath
     java.nio.file.Files.createDirectories(root)
     sweepStale(root.toFile, System.currentTimeMillis() - 24L * 3600 * 1000)
     Runtime.getRuntime.addShutdownHook(new Thread(() =>

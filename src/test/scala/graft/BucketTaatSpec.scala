@@ -194,7 +194,7 @@ class BucketTaatSpec extends AnyFunSuite {
 
   // --- the end-to-end scoring path, pure JVM: posting rows (salted
   // multi-bucket head rows, blockSize 8) → row re-bucketing → the
-  // per-partition body of runDocPartitioned → cross-partition merge,
+  // per-partition body of runDocPartitioned → cross-partition block merge,
   // against an exhaustive scorer. Mirrors the reference's synthetic
   // self-check (`tests/test_ivf.cpp:27-108`), seeded for determinism
   // (reference precedent seed=123).
@@ -251,7 +251,7 @@ class BucketTaatSpec extends AnyFunSuite {
 
   /** One query through the serving path: re-bucket every row at `width`,
     * spread the buckets over `nParts` partitions, score each partition
-    * with the runDocPartitioned body, merge the partials. */
+    * with the runDocPartitioned body, merge the blocks with its merge. */
   private def scored(qid: Int, lists: Map[String, (Double, Seq[PostingRow])],
                      avgdl: Double, k: Int, width: Int, nParts: Int,
                      rnd: Random): Seq[TopK.Cand] = {
@@ -262,11 +262,11 @@ class BucketTaatSpec extends AnyFunSuite {
       bucketWidth = width.toLong)
     val rows = lists.values.flatMap(_._2)
       .flatMap(QueryEngine.rebucketRow(_, width.toLong, blockSize = 8)).toSeq
-    rows.groupBy(_.bucket % nParts).values
-      .flatMap(part => QueryEngine.scorePartition(plan, rnd.shuffle(part).iterator, None))
-      .foldLeft(Seq.empty[TopK.Cand]) { case (acc, (q, cands)) =>
-        assert(q == qid); TopK.mergeTopK(acc, cands, k)
-      }
+    val top = rows.groupBy(_.bucket % nParts).values
+      .map(part => QueryEngine.scorePartition(plan, rnd.shuffle(part).iterator, None))
+      .foldLeft(TopK.emptyBlock)(TopK.merge(_, _, k))
+    assert(top.qids.forall(_ == qid))
+    if (top.isEmpty) Seq.empty else top.cands(0)
   }
 
   test("rebucket + partition scorer == naive exhaustive top-k on 200 random corpora") {

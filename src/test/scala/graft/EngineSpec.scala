@@ -123,26 +123,27 @@ class EngineSpec extends AnyFunSuite {
     assert(edge.map(Tokenize.tokenize) == viaCol)
   }
 
-  test("whereTerms: broadcast semi-join path (>128 terms) == isin path") {
+  test("whereTerms: one isin == driver-side term filter, few or thousands of terms") {
     import spark.implicits._
     val docs = Stats.readDocuments(spark, "/root/testdata/sf0.01")
     val (postings, ts, _) = IndexBuild.buildPostings(spark, docs, SparkEntry.testConfig)
     val p = postings.persist()
     try {
-      // corpus vocab is small; pad with absent terms to cross the 128
-      // threshold (absent terms must match nothing on either path)
+      val all = p.collect().toSeq
+      def expect(terms: Seq[String]) = {
+        val set = terms.toSet
+        all.filter(r => set(r.term)).map(r => (r.term, r.bucket)).toSet
+      }
+      // the whole vocab padded with absent terms (which match nothing),
+      // past Catalyst's InSet conversion and Parquet's In-pushdown
+      // thresholds; then a few terms
       val vocab = ts.select($"term").as[String].collect().toSeq.sorted ++
-        (0 until 150).map(i => f"zz_absent_$i%03d")
-      assert(vocab.size > 128)
-      val viaJoin = QueryEngine.whereTerms(p, vocab).collect()
-        .map(r => (r.term, r.bucket)).toSet
-      val viaIsin = p.where($"term".isin(vocab: _*)).collect()
-        .map(r => (r.term, r.bucket)).toSet
-      assert(viaJoin == viaIsin)
-      // and a sub-128 subset still routes through isin with equal results
-      val few = vocab.take(20)
-      assert(QueryEngine.whereTerms(p, few).collect().map(_.term).toSet ==
-        p.where($"term".isin(few: _*)).collect().map(_.term).toSet)
+        (0 until 1500).map(i => f"zz_absent_$i%04d")
+      Seq(vocab, vocab.take(20), Seq.empty).foreach { terms =>
+        assert(QueryEngine.whereTerms(p, terms).collect()
+          .map(r => (r.term, r.bucket)).toSet == expect(terms))
+      }
+      assert(expect(vocab.take(20)).nonEmpty)
     } finally { p.unpersist(); () }
   }
 
@@ -173,7 +174,9 @@ class EngineSpec extends AnyFunSuite {
     val (postings, ts, cs) = IndexBuild.buildPostings(spark, docs, SparkEntry.testConfig)
     val p = postings.persist()
     val key = "spark.sql.shuffle.partitions"
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
     val before = spark.conf.get(key)
+    val coalesceBefore = spark.conf.get(coalesce)
     try {
       val batch = Bench.queryBatch(50)
       val termDf = ts.select($"term", $"df").as[(String, Long)].collect().toMap
@@ -181,15 +184,62 @@ class EngineSpec extends AnyFunSuite {
       assert(batch.size == 1000 && plan.k == 10)
       val oracle = rows(Oracle.topk(spark, docs, queries = batch))
       val driverMerged = rows(QueryEngine.run(spark, p, plan))
+      // 128 scoring tasks (kept: no coalescing of the bucket shuffle) are
+      // past the driver's fan-in, so the blocks merge through an
+      // executor level of the treeAggregate first
       spark.conf.set(key, "128")
-      // 128 partitions × 1000 queries × k = 10 exceeds the driver-merge
-      // cap, so the partial heaps merge through reduceGroups(mergeTopK)
-      assert(128L * plan.queryTermSets.size * plan.k > QueryEngine.DriverMergeMaxCands)
+      spark.conf.set(coalesce, "false")
+      assert(QueryEngine.mergeDepth(4) == 1)
+      assert(QueryEngine.mergeDepth(128) > 1)
       val distributed = rows(QueryEngine.run(spark, p, plan))
       assert(oracle.nonEmpty)
       assert(distributed == oracle)
       assert(distributed == driverMerged)
-    } finally { spark.conf.set(key, before); p.unpersist(); () }
+    } finally {
+      spark.conf.set(key, before); spark.conf.set(coalesce, coalesceBefore)
+      p.unpersist(); ()
+    }
+  }
+
+  test("cached 1000-query batch: one Spark job, no Sort or Exchange; uncached rows in (query_id, rank) order") {
+    import org.apache.spark.TestBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val docs = Stats.readDocuments(spark, "/root/testdata/sf0.001")
+    val root = java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
+    val base = java.nio.file.Files.createTempDirectory(root, "jobs").toAbsolutePath.toString
+    val (termDir, docDir) = (s"$base/term", s"$base/doc")
+    IndexBuild.writeIndex(spark, docs, termDir, SparkEntry.testConfig)
+    IndexBuild.deriveDocPartitioned(spark, termDir, docDir)
+    val batch = Bench.queryBatch(50)
+    val oracle = rows(Oracle.topk(spark, docs, queries = batch))
+    val uncached = rows(QueryEngine.runOnIndex(spark, termDir, batch))
+    assert(uncached == oracle)
+    assert(uncached == uncached.sortBy(r => (r._1, r._2)))
+    val h = QueryEngine.openIndex(spark, docDir)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    try {
+      // warm-up: fills the serving cache and memoizes the batch's terms
+      assert(rows(QueryEngine.runOnHandle(spark, h, batch)) == oracle)
+      TestBus.drain(sc)
+      sc.addSparkListener(counter)
+      val df = QueryEngine.runOnHandle(spark, h, batch)
+      val got = rows(df)
+      TestBus.drain(sc)
+      assert(jobs.get == 1, s"${jobs.get} jobs for one cached batch")
+      val executed = df.queryExecution.executedPlan.treeString
+      assert(!executed.contains("Sort") && !executed.contains("Exchange"), executed)
+      assert(got == oracle)
+    } finally {
+      sc.removeSparkListener(counter)
+      h.close()
+      org.apache.hadoop.fs.FileSystem.get(sc.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(base), true)
+      ()
+    }
   }
 
   /** Mixed ASCII/multibyte corpus: pure-ASCII docs with repeated terms

@@ -16,10 +16,12 @@ class TopKSpec extends AnyFunSuite {
   private def sortAll(cs: Seq[Cand]): Seq[Cand] =
     cs.sortBy(c => (-c.score_micro, c.doc_id))
 
-  private val candsGen: Gen[List[Cand]] = Gen.listOf(for {
+  private val candGen: Gen[Cand] = for {
     d <- Gen.choose(0L, 50L)
     s <- Gen.choose(0L, 20L) // small ranges force ties
-  } yield Cand(d, s)).map(_.distinctBy(_.doc_id))
+  } yield Cand(d, s)
+
+  private val candsGen: Gen[List[Cand]] = Gen.listOf(candGen).map(_.distinctBy(_.doc_id))
 
   test("insert keeps exactly the k best (property, with ties)") {
     check(Prop.forAll(candsGen, Gen.choose(1, 12)) { (cs, k) =>
@@ -36,6 +38,55 @@ class TopKSpec extends AnyFunSuite {
       val ta = sortAll(as).take(k)
       val tb = sortAll(bs).take(k)
       mergeTopK(ta, tb, k) == sortAll(as ++ bs).take(k)
+    })
+  }
+
+  /** Per-task blocks over disjoint doc sets: 0–6 blocks, each holding a
+    * random subset of 8 qids (possibly none), each list the true top-k of
+    * its random cands (ties on small scores). */
+  private val blocksGen: Gen[(Int, Seq[Map[Int, Seq[Cand]]])] = for {
+    k <- Gen.choose(1, 12)
+    nBlocks <- Gen.choose(0, 6)
+    blocks <- Gen.listOfN(nBlocks, Gen.mapOf(Gen.zip(Gen.choose(0, 7),
+      Gen.nonEmptyListOf(candGen))))
+  } yield (k, blocks.zipWithIndex.map { case (m, bi) =>
+    m.map { case (q, cs) =>
+      // doc ids disjoint across blocks: a doc is scored in one task only
+      q -> sortAll(cs.map(c => c.copy(doc_id = c.doc_id * 8 + bi))
+        .distinctBy(_.doc_id)).take(k)
+    }
+  })
+
+  private def toBlock(m: Map[Int, Seq[Cand]]): Block = {
+    val qs = m.keys.toArray.sorted
+    val lists = qs.map(m)
+    new Block(qs, lists.scanLeft(0)(_ + _.length),
+      lists.flatMap(_.map(_.doc_id)), lists.flatMap(_.map(_.score_micro)))
+  }
+
+  private def fromBlock(b: Block): Map[Int, Seq[Cand]] =
+    b.qids.indices.map(i => b.qids(i) -> b.cands(i)).toMap
+
+  /** Merge in a random tree shape: split at a random point, merge halves. */
+  private def mergeTree(bs: Seq[Block], k: Int, rnd: scala.util.Random): Block =
+    if (bs.isEmpty) emptyBlock
+    else if (bs.length == 1) bs.head
+    else {
+      val cut = 1 + rnd.nextInt(bs.length - 1)
+      merge(mergeTree(bs.take(cut), k, rnd), mergeTree(bs.drop(cut), k, rnd), k)
+    }
+
+  test("block merge in any order or grouping == mergeTopK reference (property)") {
+    check(Prop.forAll(blocksGen, Gen.long) { case ((k, blocks), seed) =>
+      val want = blocks.flatMap(_.toSeq).groupBy(_._1).map { case (q, xs) =>
+        q -> xs.map(_._2).foldLeft(Seq.empty[Cand])(mergeTopK(_, _, k))
+      }
+      val rnd = new scala.util.Random(seed)
+      val got = mergeTree(rnd.shuffle(blocks.map(toBlock)), k, rnd)
+      val folded = blocks.map(toBlock).foldLeft(emptyBlock)(merge(_, _, k))
+      got.qids.toSeq == got.qids.toSeq.sorted.distinct &&
+        got.off.length == got.qids.length + 1 &&
+        fromBlock(got) == want && fromBlock(folded) == want
     })
   }
 
