@@ -60,13 +60,15 @@ object Attrs {
 
   private def sidecarMetaPath(dir: String) = s"${attrsDir(dir)}/_sidecar_meta.json"
 
+  /** The sidecar's paths in [[IndexBuild.clearDirs]] order: marker first. */
+  private[graft] def clearPaths(dir: String): Seq[String] =
+    Seq(sidecarMetaPath(dir), attrsDir(dir))
+
   /** A sidecar exists only once its version marker committed (written
     * LAST) — a half-written or pre-versioning sidecar is invisible, so
     * filtered queries fail loudly instead of matching nothing. */
-  def hasAttrs(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(sidecarMetaPath(dir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def hasAttrs(spark: SparkSession, dir: String): Boolean =
+    IndexBuild.exists(spark, sidecarMetaPath(dir))
 
   /** Virtual posting lists for one attribute column: one [[PostingRow]]
     * per (value, bucket) with that bucket's matching docIds (sorted,
@@ -99,8 +101,8 @@ object Attrs {
     * by (term, bucket) within files so a value predicate prunes on
     * parquet row-group min/max stats. Overwrites any previous sidecar.
     *
-    * Commit ordering mirrors the index: parquet first (the Overwrite
-    * deletes any previous version marker with the old rows), the version
+    * Commit ordering mirrors the index: the previous sidecar is cleared
+    * marker first ([[IndexBuild.clearDirs]]), then parquet, the version
     * marker LAST — a write killed mid-way leaves a sidecar that
     * [[hasAttrs]] does not see. */
   def writeAttrs(spark: SparkSession, docs: DataFrame, dir: String,
@@ -110,6 +112,7 @@ object Attrs {
     val rows = attrCols
       .map(a => attrPostings(spark, docs, a, meta.bucket_width, meta.block_size))
       .reduce(_ union _)
+    IndexBuild.clearDirs(spark, clearPaths(dir))
     rows
       .repartition(col("bucket"))
       .sortWithinPartitions(col("term"), col("bucket"))

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable.ArrayBuffer
 
 /** Inverted-index build — the graft of the reference's `Populate`/
@@ -745,20 +746,42 @@ object IndexBuild {
   def metricsDir(dir: String)  = s"$dir/metrics"
 
   // ---- The one index-dir commit path ------------------------------------
-  // Every index writer — writeIndex, deriveDocPartitioned, both Merges and
-  // StreamIngest.compact — follows the same order:
+  // Every partitioned on-disk artifact commits here: the index (writeIndex,
+  // deriveDocPartitioned, both Merges, StreamIngest.compact), the positions
+  // sidecar (Positional.write/writeBuild/mergeSidecars) and both ANN
+  // indexes (AnnIndex.write, AnnIndexPq.write), in one order:
   //
-  //   validate inputs → clearIndexDir (unless resuming) → commitSegments
-  //   (segments, then stats/terms ∥ manifest) → sidecars → meta LAST
+  //   validate inputs → clearDirs (resume: committedParts instead)
+  //   → commitParts (data, manifest gap rows) → sidecars → meta LAST
   //
-  // readMeta refuses a dir without meta, so a writer killed at any step
-  // leaves a dir that fails to open, never one that opens and serves a
-  // mixture of old and new content.
+  // Every reader refuses a dir without meta, so a writer killed at any
+  // step leaves a dir that fails to open, never one that opens and serves
+  // a mixture of old and new content.
 
   private def hadoopPath(spark: SparkSession, p: String) = {
     val hp = new org.apache.hadoop.fs.Path(p)
     (hp, hp.getFileSystem(spark.sparkContext.hadoopConfiguration))
   }
+
+  private[graft] def exists(spark: SparkSession, path: String): Boolean = {
+    val (p, fs) = hadoopPath(spark, path)
+    fs.exists(p)
+  }
+
+  /** A parquet artifact is COMMITTED once its _SUCCESS marker exists: a
+    * kill mid-write leaves the dir present without it. */
+  private[graft] def committed(spark: SparkSession, path: String): Boolean =
+    exists(spark, s"$path/_SUCCESS")
+
+  /** The one ordered clear: delete `paths` in order, each one's _SUCCESS
+    * marker first. A recursive delete is not atomic (object stores remove
+    * key by key), so callers list meta first, then the manifest a resume
+    * trusts, then the data: a clear killed at any step leaves a dir that
+    * refuses to open, a manifest naming no deleted part, and models that
+    * are whole or uncommitted. */
+  private[graft] def clearDirs(spark: SparkSession, paths: Seq[String]): Unit =
+    paths.flatMap(p => Seq(s"$p/_SUCCESS", p))
+      .foreach { p => val (hp, fs) = hadoopPath(spark, p); fs.delete(hp, true) }
 
   /** Delete an index dir's content so a writer replaces it WHOLE: dynamic
     * partition overwrite replaces only the part_ids present in the new
@@ -769,12 +792,11 @@ object IndexBuild {
     * would fold stale filter lists into the new index (wrong filtered
     * candidates, or out-of-range mask offsets if bucket_width changed),
     * and a stale positions sidecar would answer phrase queries about the
-    * old corpus. Meta goes FIRST, so a clear killed mid-way already fails
-    * to open. `metrics/` stays: it is append-only build history. */
+    * old corpus. `metrics/` stays: it is append-only build history. */
   private[graft] def clearIndexDir(spark: SparkSession, dir: String): Unit =
-    Seq(s"$dir/stats/meta", segmentsDir(dir), manifestDir(dir), s"$dir/stats",
-        Attrs.attrsDir(dir), Positional.positionsDir(dir))
-      .foreach { p => val (hp, fs) = hadoopPath(spark, p); fs.delete(hp, true) }
+    clearDirs(spark, Seq(s"$dir/stats/meta") ++ Attrs.clearPaths(dir) ++
+      Positional.clearPaths(Positional.positionsDir(dir)) ++
+      Seq(manifestDir(dir), segmentsDir(dir), s"$dir/stats"))
 
   /** A writer must not clear one of its own inputs: compares fully
     * qualified Hadoop paths, so `dir`, `dir/` and `file:dir` all match. */
@@ -784,6 +806,15 @@ object IndexBuild {
       s"output dir $outDir is one of the inputs $inputs — writing it would " +
         "clear the input first")
   }
+
+  /** The one resume read: the part keys committed to `manifestDir`.
+    * [[committed]]-gated: a first manifest append killed mid-write leaves
+    * a fileless dir, and schema inference on it would wedge every resume. */
+  private[graft] def committedParts(spark: SparkSession, manifestDir: String,
+                                    key: String): Set[Int] =
+    if (!committed(spark, manifestDir)) Set.empty
+    else spark.read.parquet(manifestDir).select(col(key).cast("int"))
+      .collect().map(_.getInt(0)).toSet
 
   private def gcMs: Long = {
     import scala.jdk.CollectionConverters._
@@ -800,68 +831,75 @@ object IndexBuild {
     r
   }
 
-  /** The segments commit shared by every index writer: write `postings`
-    * under `dir/segments`, then derive stats/terms and the manifest from
-    * the just-written segments. Returns n_tokens = Σ cf over every
-    * partition on disk. The caller writes meta LAST.
-    *
-    * The segments write uses dynamic partition overwrite (a per-write
-    * option, so the caller's session conf is untouched): only the
-    * part_ids present in `postings` are replaced, which is what lets a
-    * resume keep its `done` partitions and clean partial files a killed
-    * run left in the others.
+  /** The one partition write: write `rows` under `dataDir` partitioned by
+    * the int column `key`, append manifest rows (key ++ `manifestAggs`)
+    * for the written parts not in `done` (the per-part commit point of a
+    * resume), and return every part's row (key ++ `manifestAggs` ++
+    * `extraAggs`; extras are returned, not persisted). Dynamic partition
+    * overwrite (a per-write option) replaces only the parts in `rows`:
+    * a resume keeps its `done` parts and scrubs partial files elsewhere.
+    * The aggregates read the written files back with `rows.schema` (a
+    * zero-row write leaves a fileless dir schema inference throws on):
+    * parquet prunes them to a few small columns, where persist() would
+    * materialize every column during the hot write. `alongside` runs on
+    * the same read-back concurrently with the manifest job. */
+  private[graft] def commitParts(rows: Dataset[_], dataDir: String, manifestDir: String,
+                                 key: String, manifestAggs: Seq[Column], done: Set[Int],
+                                 extraAggs: Seq[Column] = Nil,
+                                 alongside: DataFrame => Unit = _ => ()): Seq[Row] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.jdk.CollectionConverters._
+    val spark = rows.sparkSession
+    phase(s"write $dataDir") {
+      rows.write
+        .mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(key)
+        .parquet(dataDir)
+    }
+    val written = spark.read.schema(rows.schema).parquet(dataDir)
+    val fSide = Future(alongside(written))
+    val all = phase(s"manifest $manifestDir") {
+      val aggs = manifestAggs ++ extraAggs
+      val agg = written.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
+      val all = agg.collect().toSeq
+      val kept = 1 + manifestAggs.size
+      val fresh = all.filterNot(r => done.contains(r.getInt(0)))
+        .map(r => Row.fromSeq(r.toSeq.take(kept)))
+      // nothing committed (done empty): files a killed run left are not
+      // rows to keep, and appending beside them would list parts twice
+      if (fresh.nonEmpty)
+        spark.createDataFrame(fresh.asJava, StructType(agg.schema.take(kept)))
+          .coalesce(1)
+          .write.mode(if (done.isEmpty) SaveMode.Overwrite else SaveMode.Append)
+          .parquet(manifestDir)
+      all
+    }
+    Await.result(fSide, Duration.Inf)
+    all
+  }
+
+  /** The index's segments commit: [[commitParts]] on part_id, with the
+    * stats/terms write as its concurrent job. Returns n_tokens = Σ cf over
+    * every partition on disk. The caller writes meta LAST.
     *
     * Stats derive from the COMPLETE index on disk (resumed partitions
     * too): df = Σ n, cf = Σ cf per term — exact, no block decode.
     * max_bucket records the ACTUAL salting (max docId bucket per term):
     * query routing prunes from it instead of re-deriving head-ness from
     * df, so a sampled head estimate that disagrees with exact df can never
-    * strand postings in unread buckets.
-    *
-    * Both aggregations read the written segments, not a persisted copy of
-    * the pipeline output: neither touches the `blocks` column, so parquet
-    * column pruning feeds them a few small columns, whereas persist()
-    * would materialize every column (blocks are the bulk of the index)
-    * during the hot write pass. They are independent vocab-sized jobs and
-    * run concurrently, halving a tail that is mostly fixed job overhead.
-    * Manifest rows are appended only for the part_ids not in `done` (those
-    * keep their rows) — the per-partition commit point of a resume. */
+    * strand postings in unread buckets. */
   private[graft] def commitSegments(spark: SparkSession, postings: Dataset[PostingRow],
-                                    dir: String, done: Set[Int] = Set.empty): Long = {
-    import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    phase("segments-write") {
-      postings.write
-        .mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(segmentsDir(dir))
-    }
-    val written = spark.read.schema(segmentSchema).parquet(segmentsDir(dir))
-    val fStats = Future {
-      phase("stats") {
+                                    dir: String, done: Set[Int] = Set.empty): Long =
+    commitParts(postings, segmentsDir(dir), manifestDir(dir), "part_id",
+      Seq(count(lit(1)).as("n_lists"), sum(col("n")).as("n_postings")), done,
+      extraAggs = Seq(sum(col("cf")).as("cf_sum")),
+      alongside = written => phase("stats") {
         termStatsFromPostings(written)
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/stats/terms")
-      }
-    }
-    val nTokens = phase("manifest") {
-      val all = written.groupBy($"part_id")
-        .agg(count(lit(1)).as("n_lists"), sum($"n").as("n_postings"),
-          sum($"cf").as("cf_sum"))
-        .collect().toSeq
-      val fresh = all.filterNot(r => done.contains(r.getInt(0)))
-      if (fresh.nonEmpty)
-        fresh.map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-          .toDF("part_id", "n_lists", "n_postings")
-          .coalesce(1)
-          .write.mode(SaveMode.Append).parquet(manifestDir(dir))
-      all.map(_.getLong(3)).sum
-    }
-    Await.result(fStats, Duration.Inf)
-    nTokens
-  }
+      }).map(_.getLong(3)).sum
 
   /** Full build to disk: clear → [[commitSegments]] → meta LAST. With
     * resume=true the dir is NOT cleared: partitions already present in
@@ -892,13 +930,7 @@ object IndexBuild {
     }
     val heads = phase("heads")(sampledHeadTerms(spark, docs, cfg))
 
-    val done: Set[Int] =
-      // _SUCCESS: a first manifest append killed mid-write leaves the dir
-      // present but fileless — bare existence would wedge every resume on
-      // schema inference instead of rebuilding from zero
-      if (resume && exists(spark, s"${manifestDir(dir)}/_SUCCESS"))
-        spark.read.parquet(manifestDir(dir)).select($"part_id").as[Int].collect().toSet
-      else Set.empty
+    val done = if (resume) committedParts(spark, manifestDir(dir), "part_id") else Set.empty[Int]
 
     // resume filter sits BETWEEN the map-side partials and the shuffle, so
     // already-committed partitions are dropped before any shuffle/merge work
@@ -957,13 +989,22 @@ object IndexBuild {
     new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
   }
 
+  /** A flat record of numbers and booleans as one JSON object, fields in
+    * declaration order: the form of every meta the commit path writes. */
+  private[graft] def recordJson(r: Product): String =
+    r.productElementNames.zip(r.productIterator)
+      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+
+  /** Read and `parse` a meta committed by [[commitJson]]; a missing or
+    * unreadable one (a writer killed before its meta-last commit, a meta
+    * of an older layout) refuses loudly with `why`. */
+  private[graft] def readMetaJson[T](spark: SparkSession, path: String, why: String)(
+      parse: com.fasterxml.jackson.databind.JsonNode => T): T =
+    try parse(readJson(spark, path))
+    catch { case e: Exception => throw new IllegalStateException(why, e) }
+
   def writeMetaFile(spark: SparkSession, path: String, meta: Meta): Unit =
-    commitJson(spark, path,
-      s"""{"n_docs":${meta.n_docs},"n_tokens":${meta.n_tokens},""" +
-      s""""max_doc_id":${meta.max_doc_id},"min_doc_id":${meta.min_doc_id},""" +
-      s""""num_partitions":${meta.num_partitions},"bucket_width":${meta.bucket_width},""" +
-      s""""head_df":${meta.head_df},"block_size":${meta.block_size},""" +
-      s""""doc_partitioned":${meta.doc_partitioned},"codec":${meta.codec}}""")
+    commitJson(spark, path, recordJson(meta))
 
   /** One JSON line per build under the metrics dir (observability table;
     * append-only, name-unique per process+timestamp). */
@@ -975,25 +1016,20 @@ object IndexBuild {
     finally out.close()
   }
 
-  def readMeta(spark: SparkSession, dir: String): Meta = {
-    try {
-      val n = readJson(spark, s"$dir/stats/meta")
+  def readMeta(spark: SparkSession, dir: String): Meta =
+    readMetaJson(spark, s"$dir/stats/meta",
+      s"$dir is not a readable index of the current layout (pre-round-2 " +
+        "dirs lack min_doc_id/max_bucket; pre-round-4 dirs store meta " +
+        "as a parquet dir, not a JSON file; a merge killed before its " +
+        "meta-last commit leaves no meta at all) — rebuild with " +
+        "IndexBuild.writeIndex or re-run the merge") { n =>
       Meta(n.get("n_docs").asLong, n.get("n_tokens").asLong,
         n.get("max_doc_id").asLong, n.get("min_doc_id").asLong,
         n.get("num_partitions").asInt, n.get("bucket_width").asLong,
         n.get("head_df").asLong, n.get("block_size").asInt,
         n.get("doc_partitioned").asBoolean,
         if (n.has("codec")) n.get("codec").asInt else Codec.VByteId)
-    } catch {
-      case e: Exception =>
-        throw new IllegalStateException(
-          s"$dir is not a readable index of the current layout (pre-round-2 " +
-            "dirs lack min_doc_id/max_bucket; pre-round-4 dirs store meta " +
-            "as a parquet dir, not a JSON file; a merge killed before its " +
-            "meta-last commit leaves no meta at all) — rebuild with " +
-            "IndexBuild.writeIndex or re-run the merge", e)
     }
-  }
 
   /** Segments-dir schema, supplied EXPLICITLY to every segments read: a
     * build whose corpus tokenizes to zero postings writes a fileless dir
@@ -1048,8 +1084,4 @@ object IndexBuild {
     meta
   }
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val (p, fs) = hadoopPath(spark, path)
-    fs.exists(p)
-  }
 }

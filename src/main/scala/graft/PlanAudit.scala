@@ -62,8 +62,12 @@ object PlanAudit {
     try body(spark) finally spark.stop()
   }
 
+  /** Formatted plan text, with U+0000 (the attr filter-term marker,
+    * [[Attrs.FilterMarker]]) rendered as the two characters `\0` so the
+    * written files stay text. */
   private def explain(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      .replace("\u0000", "\\0")
 
   private def plans(spark: SparkSession, sfDir: String, outDir: String,
                     names: Seq[String]): Unit = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,6 +23,14 @@ import org.apache.spark.sql.functions._
   * bucket row group, and per-task memory is bounded by one bucket's token
   * mass (width · avgdl), the same bound the TAAT scorer rides. The encode
   * is one shuffle of the exploded tokens; no driver-side state.
+  *
+  * On-disk layout under a sidecar dir (canonically `<index dir>/positions`),
+  * committed through [[IndexBuild.commitParts]], meta LAST:
+  *   segments/part_id=N/  PosRow parquet, part_id = pmod(bucket, P),
+  *                        term-sorted within files
+  *   manifest             (part_id, n_rows, n_doc_entries) — resume lineage
+  *   meta                 JSON {format, width, num_partitions} — the commit
+  *                        point; [[read]] refuses a sidecar without it
   */
 object Positional {
 
@@ -174,9 +182,9 @@ object Positional {
       }
   }
 
-  // ---- on-disk lifecycle (mirrors the index: segments → manifest →
-  // meta-LAST commit; round-4 VERDICT #3 — the sidecar was a bare parquet
-  // write with no commit marker, no resume, no merge) --------------------
+  // ---- on-disk lifecycle: the index's commit path ([[IndexBuild]]'s
+  // "one index-dir commit path" section) — ordered clear, committed-parts
+  // resume read, partitioned write + manifest, meta LAST ------------------
 
   /** Canonical sidecar location under an index dir (what the merge and
     * the streaming tiers carry). */
@@ -185,6 +193,11 @@ object Positional {
   def segmentsDir(posDir: String): String = s"$posDir/segments"
   def manifestDir(posDir: String): String = s"$posDir/manifest"
   private def metaPath(posDir: String): String = s"$posDir/meta"
+
+  /** The sidecar's paths in [[IndexBuild.clearDirs]] order: meta, manifest,
+    * segments, then the dir itself. */
+  private[graft] def clearPaths(posDir: String): Seq[String] =
+    Seq(metaPath(posDir), manifestDir(posDir), segmentsDir(posDir), posDir)
 
   /** On-disk format version (see [[Attrs.FormatVersion]] for the policy). */
   val FormatVersion = 1
@@ -198,15 +211,8 @@ object Positional {
   val segSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[PosRow].schema.add("part_id", "int")
 
-  def hasPositions(spark: SparkSession, posDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(metaPath(posDir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def writeMetaJson(spark: SparkSession, posDir: String,
-                            width: Long, numPartitions: Int): Unit =
-    IndexBuild.commitJson(spark, metaPath(posDir),
-      s"""{"format":$FormatVersion,"width":$width,"num_partitions":$numPartitions}""")
+  def hasPositions(spark: SparkSession, posDir: String): Boolean =
+    IndexBuild.exists(spark, metaPath(posDir))
 
   def readMeta(spark: SparkSession, posDir: String): PosMeta = {
     require(hasPositions(spark, posDir),
@@ -222,45 +228,30 @@ object Positional {
     m
   }
 
-  /** Segments + manifest + meta-LAST commit for an in-memory built (or
-    * merged) positions dataset. `done` part_ids keep their manifest rows
-    * (the resume path appends only the gap). */
-  private def commitTail(spark: SparkSession, merged: Dataset[PosRow],
-                         posDir: String, width: Long, numPartitions: Int,
-                         done: Set[Int]): Unit = {
-    import spark.implicits._
-    merged
+  /** Lay `pos` out by part_id = pmod(bucket, P), term-sorted within files
+    * (tight row-group min/max stats: a phrase query's `term isin` prunes
+    * row groups instead of scanning all), commit it through
+    * [[IndexBuild.commitParts]] (`done` part_ids keep their manifest
+    * rows), then the meta LAST. */
+  private def commit(pos: Dataset[PosRow], posDir: String, width: Long,
+                     numPartitions: Int, done: Set[Int]): Unit = {
+    val parts = pos
       .withColumn("part_id", pmod(col("bucket"), lit(numPartitions)).cast("int"))
       .repartition(numPartitions, col("part_id"))
-      // term-sorted files ⇒ tight row-group min/max stats: a phrase
-      // query's `term isin` prunes row groups instead of scanning all
       .sortWithinPartitions(col("term"), col("bucket"), col("min_doc"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic") // resume: only rebuilt part_ids
-      .partitionBy("part_id")
-      .parquet(segmentsDir(posDir))
-    val written = spark.read.schema(segSchema).parquet(segmentsDir(posDir))
-    val all = written.groupBy($"part_id")
-      .agg(count(lit(1)).as("n_rows"), sum($"n").as("n_doc_entries"))
-      .collect().toSeq
-    val fresh = all.filterNot(r => done.contains(r.getInt(0)))
-    if (fresh.nonEmpty)
-      fresh.map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-        .toDF("part_id", "n_rows", "n_doc_entries")
-        .coalesce(1)
-        .write.mode(SaveMode.Append).parquet(manifestDir(posDir))
-    writeMetaJson(spark, posDir, width, numPartitions)
+    IndexBuild.commitParts(parts, segmentsDir(posDir), manifestDir(posDir), "part_id",
+      Seq(count(lit(1)).as("n_rows"), sum(col("n")).as("n_doc_entries")), done)
+    IndexBuild.commitJson(pos.sparkSession, metaPath(posDir),
+      IndexBuild.recordJson(PosMeta(FormatVersion, width, numPartitions)))
   }
 
-  /** Persist an in-memory built positions dataset with the full commit
-    * discipline (segments → manifest → meta LAST). A write killed mid-way
-    * leaves a dir [[read]] refuses to open. */
+  /** Persist an in-memory built positions dataset, replacing any sidecar
+    * at `dir`. A write killed mid-way leaves a dir [[read]] refuses to
+    * open. */
   def write(pos: Dataset[PosRow], dir: String, width: Long,
             numPartitions: Int = 32): Unit = {
-    val spark = pos.sparkSession
-    val hp = new org.apache.hadoop.fs.Path(dir)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-    commitTail(spark, pos, dir, width, numPartitions, Set.empty)
+    IndexBuild.clearDirs(pos.sparkSession, clearPaths(dir))
+    commit(pos, dir, width, numPartitions, Set.empty)
   }
 
   /** Full disk build with kill-and-resume, mirroring
@@ -271,26 +262,16 @@ object Positional {
                  width: Long, numPartitions: Int = 32,
                  resume: Boolean = false,
                  flushEntries: Int = 2000000): Unit = {
-    import spark.implicits._
-    if (!resume) {
-      val hp = new org.apache.hadoop.fs.Path(posDir)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-    }
-    val done: Set[Int] = {
-      // _SUCCESS gate, not bare existence: a first manifest append killed
-      // mid-write leaves the dir present but fileless (the wedge the
-      // round-4 review sweep fixed for the index)
-      val p = new org.apache.hadoop.fs.Path(s"${manifestDir(posDir)}/_SUCCESS")
-      if (resume && p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        spark.read.parquet(manifestDir(posDir)).select($"part_id").as[Int].collect().toSet
-      else Set.empty
-    }
+    if (!resume) IndexBuild.clearDirs(spark, clearPaths(posDir))
+    val done =
+      if (resume) IndexBuild.committedParts(spark, manifestDir(posDir), "part_id")
+      else Set.empty[Int]
     val partials0 = buildPartials(spark, docs, width, flushEntries)
     val partials =
       if (done.isEmpty) partials0
       else partials0.where(!pmod(col("bucket"), lit(numPartitions))
         .isin(done.toSeq: _*))
-    commitTail(spark, mergeByKey(partials), posDir, width, numPartitions, done)
+    commit(mergeByKey(partials), posDir, width, numPartitions, done)
   }
 
   /** Reopen a committed sidecar (meta + format gate, explicit schema). */
@@ -319,8 +300,8 @@ object Positional {
   def mergeSidecars(spark: SparkSession, posDirs: Seq[String],
                     outPosDir: String, concat: Boolean, meta: PosMeta): Unit = {
     val all = posDirs.map(segments(spark, _)).reduce(_ union _)
-    val merged = if (concat) all else mergeByKey(all)
-    commitTail(spark, merged, outPosDir, meta.width, meta.num_partitions, Set.empty)
+    commit(if (concat) all else mergeByKey(all), outPosDir, meta.width,
+      meta.num_partitions, Set.empty)
   }
 
   /** One bucket's positions for one term, decoded to flat primitive
@@ -385,100 +366,84 @@ object Positional {
     * binary searches. */
   def phraseHits(spark: SparkSession, pos: Dataset[PosRow],
                  phrases: Seq[(Int, Seq[String])]): DataFrame = {
-    import spark.implicits._
-    val allTerms = phrases.flatMap(_._2).distinct
     val bc = spark.sparkContext.broadcast(phrases)
-    pos.where($"term".isin(allTerms: _*))
-      .groupByKey(_.bucket)
-      .flatMapGroups { (_, it) =>
-        // merged inputs may deliver several rows per term — ranges stay
-        // disjoint, order restored by min_doc before the flat decode
-        val rowsByTerm = scala.collection.mutable.HashMap
-          .empty[String, scala.collection.mutable.ArrayBuffer[PosRow]]
-        it.foreach { r =>
-          rowsByTerm.getOrElseUpdate(r.term,
-            scala.collection.mutable.ArrayBuffer.empty) += r
-        }
-        val flat: Map[String, TermPositions] = rowsByTerm.iterator.map {
-          case (t, rs) => t -> decodeFlat(rs.sortBy(_.min_doc).toSeq)
-        }.toMap
-        var scratch = new Array[Int](256)
-        bc.value.iterator.flatMap { case (pid, terms) =>
-          // empty term lists (a phrase that tokenized to nothing) match
-          // nothing — and must not reach lists(0) below
-          if (terms.isEmpty || !terms.forall(flat.contains)) Iterator.empty
-          else {
-            val lists = terms.map(flat).toArray
-            val nl = lists.length
-            val cursors = new Array[Int](nl)
-            // drive the doc intersection from the RAREST term's list: the
-            // walk visits min-df docs, not term0's df (on Zipf text a
-            // phrase with one selective word skips the head term's mass
-            // entirely — the standard phrase-query ordering; this synthetic
-            // corpus has a 31-term head-only vocabulary, so all drivers
-            // tie here, but the shape is what survives real data)
-            var m = 0
-            var li0 = 1
-            while (li0 < nl) {
-              if (lists(li0).docs.length < lists(m).docs.length) m = li0
-              li0 += 1
-            }
-            val driver = lists(m)
-            val out = scala.collection.mutable.ArrayBuffer
-              .empty[(Int, Long, Long, Long)]
-            var i0 = 0
-            while (i0 < driver.docs.length) {
-              val d = driver.docs(i0)
-              cursors(m) = i0
-              var ok = true
-              var li = 0
-              while (ok && li < nl) {
-                if (li != m) {
-                  val l = lists(li)
-                  var c = cursors(li)
-                  while (c < l.docs.length && l.docs(c) < d) c += 1
-                  cursors(li) = c
-                  ok = c < l.docs.length && l.docs(c) == d
-                }
-                li += 1
-              }
-              if (ok) {
-                // adjacency chain anchored at term0's slice for this doc
-                val l0 = lists(0)
-                val c0 = cursors(0)
-                val s0 = l0.offs(c0)
-                var n = l0.offs(c0 + 1) - s0
-                if (scratch.length < n)
-                  scratch = new Array[Int](Integer.highestOneBit(n) << 1)
-                System.arraycopy(l0.pos, s0, scratch, 0, n)
-                var li2 = 1
-                while (n > 0 && li2 < nl) {
-                  val l = lists(li2)
-                  val ci = cursors(li2)
-                  val le = l.offs(ci + 1)
-                  var w = 0
-                  var a = 0
-                  var b = l.offs(ci)
-                  while (a < n && b < le) {
-                    val want = scratch(a) + li2
-                    if (l.pos(b) < want) b += 1
-                    else {
-                      if (l.pos(b) == want) { scratch(w) = scratch(a); w += 1 }
-                      a += 1
-                    }
-                  }
-                  n = w
-                  li2 += 1
-                }
-                if (n > 0) out += ((pid, d, n.toLong, l0.dls(c0).toLong))
-              }
-              i0 += 1
-            }
-            out.iterator
+    bucketHits(spark, pos, phrases.flatMap(_._2)) { flat =>
+      var scratch = new Array[Int](256)
+      bc.value.iterator.flatMap { case (pid, terms) =>
+        // empty term lists (a phrase that tokenized to nothing) match
+        // nothing — and must not reach lists(0) below
+        if (terms.isEmpty || !terms.forall(flat.contains)) Iterator.empty
+        else {
+          val lists = terms.map(flat).toArray
+          val nl = lists.length
+          val cursors = new Array[Int](nl)
+          // drive the doc intersection from the RAREST term's list: the
+          // walk visits min-df docs, not term0's df (on Zipf text a
+          // phrase with one selective word skips the head term's mass
+          // entirely — the standard phrase-query ordering; this synthetic
+          // corpus has a 31-term head-only vocabulary, so all drivers
+          // tie here, but the shape is what survives real data)
+          var m = 0
+          var li0 = 1
+          while (li0 < nl) {
+            if (lists(li0).docs.length < lists(m).docs.length) m = li0
+            li0 += 1
           }
+          val driver = lists(m)
+          val out = scala.collection.mutable.ArrayBuffer
+            .empty[(Int, Long, Long, Long)]
+          var i0 = 0
+          while (i0 < driver.docs.length) {
+            val d = driver.docs(i0)
+            cursors(m) = i0
+            var ok = true
+            var li = 0
+            while (ok && li < nl) {
+              if (li != m) {
+                val l = lists(li)
+                var c = cursors(li)
+                while (c < l.docs.length && l.docs(c) < d) c += 1
+                cursors(li) = c
+                ok = c < l.docs.length && l.docs(c) == d
+              }
+              li += 1
+            }
+            if (ok) {
+              // adjacency chain anchored at term0's slice for this doc
+              val l0 = lists(0)
+              val c0 = cursors(0)
+              val s0 = l0.offs(c0)
+              var n = l0.offs(c0 + 1) - s0
+              if (scratch.length < n)
+                scratch = new Array[Int](Integer.highestOneBit(n) << 1)
+              System.arraycopy(l0.pos, s0, scratch, 0, n)
+              var li2 = 1
+              while (n > 0 && li2 < nl) {
+                val l = lists(li2)
+                val ci = cursors(li2)
+                val le = l.offs(ci + 1)
+                var w = 0
+                var a = 0
+                var b = l.offs(ci)
+                while (a < n && b < le) {
+                  val want = scratch(a) + li2
+                  if (l.pos(b) < want) b += 1
+                  else {
+                    if (l.pos(b) == want) { scratch(w) = scratch(a); w += 1 }
+                    a += 1
+                  }
+                }
+                n = w
+                li2 += 1
+              }
+              if (n > 0) out += ((pid, d, n.toLong, l0.dls(c0).toLong))
+            }
+            i0 += 1
+          }
+          out.iterator
         }
       }
-      .toDF("phrase_id", "doc_id", "tf", "dl")
+    }.toDF("phrase_id", "doc_id", "tf", "dl")
   }
 
   /** Ordered-proximity hits for term PAIRS: (pair_id, doc_id, tf, dl)
@@ -489,10 +454,59 @@ object Positional {
     * decode as [[phraseHits]]. */
   def proximityHits(spark: SparkSession, pos: Dataset[PosRow],
                     pairs: Seq[(Int, String, String, Int)]): DataFrame = {
-    import spark.implicits._
-    val allTerms = pairs.flatMap(p => Seq(p._2, p._3)).distinct
     val bc = spark.sparkContext.broadcast(pairs)
-    pos.where($"term".isin(allTerms: _*))
+    bucketHits(spark, pos, pairs.flatMap(p => Seq(p._2, p._3))) { flat =>
+      bc.value.iterator.flatMap { case (pid, t1, t2, slop) =>
+        (flat.get(t1), flat.get(t2)) match {
+          case (Some(a), Some(b)) =>
+            val out = scala.collection.mutable.ArrayBuffer
+              .empty[(Int, Long, Long, Long)]
+            var ia = 0
+            var ib = 0
+            while (ia < a.docs.length && ib < b.docs.length) {
+              val da = a.docs(ia)
+              val db = b.docs(ib)
+              if (da < db) ia += 1
+              else if (db < da) ib += 1
+              else {
+                // window pair count: for each pa, #pb in (pa, pa+slop+1]
+                val as = a.offs(ia); val ae = a.offs(ia + 1)
+                val bs = b.offs(ib); val be = b.offs(ib + 1)
+                var tf = 0L
+                var lo = bs
+                var hi = bs
+                var i = as
+                while (i < ae) {
+                  val pa = a.pos(i)
+                  while (lo < be && b.pos(lo) <= pa) lo += 1
+                  if (hi < lo) hi = lo
+                  while (hi < be && b.pos(hi) <= pa + slop + 1) hi += 1
+                  tf += hi - lo
+                  i += 1
+                }
+                if (tf > 0) out += ((pid, da, tf, a.dls(ia).toLong))
+                ia += 1
+                ib += 1
+              }
+            }
+            out.iterator
+          case _ => Iterator.empty
+        }
+      }
+    }.toDF("pair_id", "doc_id", "tf", "dl")
+  }
+
+  /** The shared prologue of [[phraseHits]] and [[proximityHits]]: restrict
+    * the sidecar to `terms`, group it by bucket, decode each bucket's term
+    * rows ONCE into flat arrays (shared by every phrase or pair using the
+    * term) and run `hits` over them. Merged inputs may deliver several
+    * rows per term: ranges stay disjoint, and the order is restored by
+    * min_doc before the flat decode. */
+  private def bucketHits(spark: SparkSession, pos: Dataset[PosRow], terms: Seq[String])(
+      hits: Map[String, TermPositions] => Iterator[(Int, Long, Long, Long)])
+      : Dataset[(Int, Long, Long, Long)] = {
+    import spark.implicits._
+    pos.where($"term".isin(terms.distinct: _*))
       .groupByKey(_.bucket)
       .flatMapGroups { (_, it) =>
         val rowsByTerm = scala.collection.mutable.HashMap
@@ -501,70 +515,18 @@ object Positional {
           rowsByTerm.getOrElseUpdate(r.term,
             scala.collection.mutable.ArrayBuffer.empty) += r
         }
-        val flat: Map[String, TermPositions] = rowsByTerm.iterator.map {
+        hits(rowsByTerm.iterator.map {
           case (t, rs) => t -> decodeFlat(rs.sortBy(_.min_doc).toSeq)
-        }.toMap
-        bc.value.iterator.flatMap { case (pid, t1, t2, slop) =>
-          (flat.get(t1), flat.get(t2)) match {
-            case (Some(a), Some(b)) =>
-              val out = scala.collection.mutable.ArrayBuffer
-                .empty[(Int, Long, Long, Long)]
-              var ia = 0
-              var ib = 0
-              while (ia < a.docs.length && ib < b.docs.length) {
-                val da = a.docs(ia)
-                val db = b.docs(ib)
-                if (da < db) ia += 1
-                else if (db < da) ib += 1
-                else {
-                  // window pair count: for each pa, #pb in (pa, pa+slop+1]
-                  val as = a.offs(ia); val ae = a.offs(ia + 1)
-                  val bs = b.offs(ib); val be = b.offs(ib + 1)
-                  var tf = 0L
-                  var lo = bs
-                  var hi = bs
-                  var i = as
-                  while (i < ae) {
-                    val pa = a.pos(i)
-                    while (lo < be && b.pos(lo) <= pa) lo += 1
-                    if (hi < lo) hi = lo
-                    while (hi < be && b.pos(hi) <= pa + slop + 1) hi += 1
-                    tf += hi - lo
-                    i += 1
-                  }
-                  if (tf > 0) out += ((pid, da, tf, a.dls(ia).toLong))
-                  ia += 1
-                  ib += 1
-                }
-              }
-              out.iterator
-            case _ => Iterator.empty
-          }
-        }
+        }.toMap)
       }
-      .toDF("pair_id", "doc_id", "tf", "dl")
   }
 
   /** Proximity top-k over [[proximityHits]] — same BM25-as-one-term
     * scoring and frozen order as [[phraseTopK]]. */
   def proximityTopK(spark: SparkSession, pos: Dataset[PosRow],
                     pairs: Seq[(Int, String, String, Int)], k: Int,
-                    nDocs: Long, avgdl: Double): DataFrame = {
-    import spark.implicits._
-    // df via a window over the same partition key as the rank window: ONE
-    // evaluation of the hits subtree (an agg+join would run the decode +
-    // window-walk job twice — once per plan branch)
-    proximityHits(spark, pos, pairs)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy($"pair_id")))
-      .select($"pair_id", $"doc_id",
-        Bm25.contribMicroCol(nDocs, avgdl, $"df", $"tf", $"dl").as("score_micro"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"pair_id").orderBy($"score_micro".desc, $"doc_id".asc))
-        .cast("int"))
-      .where($"rank" <= k)
-      .select($"pair_id", $"rank", $"doc_id", $"score_micro")
-      .orderBy($"pair_id", $"rank")
-  }
+                    nDocs: Long, avgdl: Double): DataFrame =
+    rankHits(proximityHits(spark, pos, pairs), "pair_id", k, nDocs, avgdl)
 
   /** Phrase top-k: each phrase scored as one BM25 "term" with
     * tf = occurrence count and df = |{docs: tf > 0}|, ranked under the
@@ -573,21 +535,27 @@ object Positional {
     * tiny intermediate. */
   def phraseTopK(spark: SparkSession, pos: Dataset[PosRow],
                  phrases: Seq[(Int, Seq[String])], k: Int,
-                 nDocs: Long, avgdl: Double): DataFrame = {
-    import spark.implicits._
-    // df via a window over the same partition key as the rank window: ONE
-    // evaluation of the hits subtree (an agg+join would run the decode +
-    // intersection job twice — once per plan branch)
-    phraseHits(spark, pos, phrases)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy($"phrase_id")))
-      .select($"phrase_id", $"doc_id",
-        Bm25.contribMicroCol(nDocs, avgdl, $"df", $"tf", $"dl").as("score_micro"))
+                 nDocs: Long, avgdl: Double): DataFrame =
+    rankHits(phraseHits(spark, pos, phrases), "phrase_id", k, nDocs, avgdl)
+
+  /** The shared ranking tail of [[phraseTopK]] and [[proximityTopK]] over
+    * (`id`, doc_id, tf, dl) hits: top `k` per id as (`id`, rank, doc_id,
+    * score_micro). df comes from a window over the same partition key as
+    * the rank window: ONE evaluation of the hits subtree (an agg+join
+    * would run the decode + intersection job twice — once per plan
+    * branch). */
+  private def rankHits(hits: DataFrame, id: String, k: Int, nDocs: Long,
+                       avgdl: Double): DataFrame = {
+    val byId = Window.partitionBy(col(id))
+    hits
+      .withColumn("df", count(lit(1)).over(byId))
+      .select(col(id), col("doc_id"),
+        Bm25.contribMicroCol(nDocs, avgdl, col("df"), col("tf"), col("dl")).as("score_micro"))
       .withColumn("rank", row_number().over(
-        Window.partitionBy($"phrase_id").orderBy($"score_micro".desc, $"doc_id".asc))
-        .cast("int"))
-      .where($"rank" <= k)
-      .select($"phrase_id", $"rank", $"doc_id", $"score_micro")
-      .orderBy($"phrase_id", $"rank")
+        byId.orderBy(col("score_micro").desc, col("doc_id").asc)).cast("int"))
+      .where(col("rank") <= k)
+      .select(col(id), col("rank"), col("doc_id"), col("score_micro"))
+      .orderBy(col(id), col("rank"))
   }
 }
 

@@ -2,6 +2,7 @@ package graft.extra
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.IndexBuild
 
 /** Persisted IVF index over an embedding table — the graft of the
   * reference's core index lifecycle train → WriteIndex → LoadIndex →
@@ -10,10 +11,13 @@ import org.apache.spark.sql.functions._
   * time and persisted; query time trains NOTHING and reads ONLY the
   * probed cells (parquet partition pruning on the cell directory key).
   *
-  * On-disk layout (mirrors the fulltext index's manifest-last commit):
+  * On-disk layout, committed through the fulltext index's commit path
+  * ([[IndexBuild.commitParts]], meta LAST):
   *   dir/cells/cell=N/  (vec_id, embedding) — one directory per coarse cell
+  *   dir/manifest       (cell, n_vecs) — per-cell resume lineage
   *   dir/centroids      (cell, centroid: array<double>) — the codebook
-  *   dir/meta           (n_vecs, dim, kc, iters) — written LAST (commit point)
+  *   dir/meta           JSON {n_vecs, dim, kc, iters} — written LAST (the
+  *                      commit point; [[topk]] refuses an index without it)
   */
 object AnnIndex {
 
@@ -30,25 +34,28 @@ object AnnIndex {
     if (inv <= 1) emb else emb.where(pmod(col("vec_id"), lit(inv)) === 0)
 
   def manifestDir(dir: String): String = s"$dir/manifest"
+  private[extra] def metaPath(dir: String): String = s"$dir/meta"
 
-  private[extra] def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  /** The meta of a committed ANN index, refusing loudly when there is
+    * none: a write killed before its meta-last commit, or a parquet-dir
+    * meta of the layout before metas were JSON records. No Spark job. */
+  private[extra] def readMetaJson[T](spark: SparkSession, dir: String)(
+      parse: com.fasterxml.jackson.databind.JsonNode => T): T =
+    IndexBuild.readMetaJson(spark, metaPath(dir),
+      s"$dir holds no committed ANN index (no JSON meta: a write killed " +
+        "before its meta-last commit, or a parquet-dir meta of an older " +
+        "layout) — resume or rebuild it with write")(parse)
+
+  /** Persist a coarse codebook (tiny: kc × dim doubles) as one parquet
+    * file; a resume reuses it only once [[IndexBuild.committed]]. */
+  private[extra] def writeCentroids(spark: SparkSession, c: Array[Array[Double]],
+                                    dir: String): Unit = {
+    import spark.implicits._
+    c.zipWithIndex.map { case (ct, i) => (i, ct.toSeq) }.toSeq
+      .toDF("cell", "centroid")
+      .coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
   }
-
-  /** A parquet artifact counts as COMMITTED only once the committer's
-    * _SUCCESS marker exists — a kill mid-write leaves the directory
-    * present but fileless (only _temporary), and a resume that trusted
-    * bare existence would crash on schema inference at every retry
-    * instead of redoing the step. */
-  private[extra] def committed(spark: SparkSession, path: String): Boolean =
-    exists(spark, s"$path/_SUCCESS")
-
-  private[extra] def deletePaths(spark: SparkSession, paths: Seq[String]): Unit =
-    paths.foreach { s =>
-      val p = new org.apache.hadoop.fs.Path(s)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true); ()
-    }
 
   /** Build: one k-means fit over a deterministic sample (the only
     * training, ever) + one assignment pass writing cell-partitioned
@@ -57,67 +64,54 @@ object AnnIndex {
     * parallel, and the write shuffles nothing (each task appends to its
     * cells' directories).
     *
-    * Commit protocol mirrors the fulltext build (meta LAST; per-cell
-    * manifest; reference analog: LoadFromBook idempotent selective load,
-    * `src/index_ivfpq.cpp:122-159`). With resume=true a killed build
-    * restarts from its last commit point: a complete index no-ops, a
-    * committed codebook skips retraining, and cells already in the
-    * manifest are dropped BEFORE the encode shuffle-free write (dynamic
+    * Commits through the index's commit path ([[IndexBuild.commitParts]]
+    * on `cell`, meta LAST; reference analog: LoadFromBook idempotent
+    * selective load, `src/index_ivfpq.cpp:122-159`). With resume=true a
+    * killed build restarts from its last commit point: a complete index
+    * no-ops, a committed codebook skips retraining, and cells already in
+    * the manifest are dropped BEFORE the shuffle-free write (dynamic
     * partition overwrite scrubs partial files in gap cells). With
-    * resume=false any previous index at `dir` is deleted first — dynamic
-    * overwrite alone would leave stale cells a smaller rebuild never
-    * touches. */
+    * resume=false any previous index at `dir` is cleared first
+    * ([[IndexBuild.clearDirs]]) — dynamic overwrite alone would leave
+    * stale cells a smaller rebuild never touches. n_vecs is the sum of
+    * the per-cell counts the commit returns, dim the codebook's. */
   def write(spark: SparkSession, emb: DataFrame, dir: String,
             kc: Int = Ann.KmKc, iters: Int = 8, trainSampleInv: Int = 4,
             resume: Boolean = false): Meta = {
     import spark.implicits._
     if (!resume)
-      deletePaths(spark, Seq(s"$dir/meta", s"$dir/cells", s"$dir/centroids",
-        manifestDir(dir)))
-    else if (committed(spark, s"$dir/meta"))
+      IndexBuild.clearDirs(spark, Seq(metaPath(dir), manifestDir(dir), s"$dir/cells",
+        s"$dir/centroids"))
+    else if (IndexBuild.exists(spark, metaPath(dir)))
       return readMeta(spark, dir) // meta is the commit point: already complete
     val centroids =
-      if (resume && committed(spark, s"$dir/centroids"))
+      if (resume && IndexBuild.committed(spark, s"$dir/centroids"))
         loadCentroids(spark, dir)
       else {
         val c = Ann.kmeansFit(trainSample(emb, trainSampleInv), kc, iters)
-        c.zipWithIndex
-          .map { case (ct, i) => (i, ct.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-          .coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
+        writeCentroids(spark, c, dir)
         c
       }
-    val done: Set[Int] =
-      if (resume && committed(spark, manifestDir(dir)))
-        spark.read.parquet(manifestDir(dir)).select($"cell").as[Int].collect().toSet
-      else Set.empty
+    val done =
+      if (resume) IndexBuild.committedParts(spark, manifestDir(dir), "cell")
+      else Set.empty[Int]
     val assignUdf = udf((v: Seq[Float]) => Ann.argminL2(v, centroids))
     val assigned0 = emb.select($"vec_id", $"embedding", assignUdf($"embedding").as("cell"))
     val assigned = if (done.isEmpty) assigned0
                    else assigned0.where(!$"cell".isin(done.toSeq: _*))
-    assigned.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell")
-      .parquet(s"$dir/cells")
-    // manifest rows for the cells THIS run wrote (append = the per-cell
-    // commit; counted from the written partitions — partition pruning
-    // makes this a gap-only read, no second encode pass)
-    val gapManifest = spark.read.parquet(s"$dir/cells")
-      .select(col("cell").cast("int").as("cell"))
-      .where(if (done.isEmpty) lit(true) else !col("cell").isin(done.toSeq: _*))
-      .groupBy($"cell").agg(count(lit(1)).as("n_vecs"))
-    gapManifest.coalesce(1).write.mode(SaveMode.Append).parquet(manifestDir(dir))
-    val row = emb.agg(count(lit(1)), max(size($"embedding"))).head()
-    val meta = Meta(row.getLong(0), row.getInt(1), kc, iters)
-    Seq(meta).toDS().write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
+    val cells = IndexBuild.commitParts(assigned, s"$dir/cells", manifestDir(dir), "cell",
+      Seq(count(lit(1)).as("n_vecs")), done)
+    val meta = Meta(cells.map(_.getLong(1)).sum, centroids.headOption.fold(0)(_.length), kc,
+      iters)
+    IndexBuild.commitJson(spark, metaPath(dir), IndexBuild.recordJson(meta))
     meta
   }
 
-  def readMeta(spark: SparkSession, dir: String): Meta = {
-    import spark.implicits._
-    spark.read.parquet(s"$dir/meta").as[Meta].head()
-  }
+  def readMeta(spark: SparkSession, dir: String): Meta =
+    readMetaJson(spark, dir) { n =>
+      Meta(n.get("n_vecs").asLong, n.get("dim").asInt, n.get("kc").asInt,
+        n.get("iters").asInt)
+    }
 
   /** The persisted codebook, cell-ordered (tiny: kc × dim doubles). */
   def loadCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
@@ -137,6 +131,7 @@ object AnnIndex {
   def topk(spark: SparkSession, dir: String, queries: DataFrame,
            nprobe: Int, k: Int = Ann.K): DataFrame = {
     import spark.implicits._
+    readMeta(spark, dir) // the commit gate: never answer from partial cells
     val centroids = loadCentroids(spark, dir)
     val probeUdf = udf((v: Seq[Float]) => Ann.probeCellsKmeans(v, centroids, nprobe))
     val routed = queries

@@ -2,7 +2,7 @@ package graft.extra
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.TopK
+import graft.{IndexBuild, TopK}
 
 /** The COMPOSED persisted IVF∘PQ index — the reference's flagship
   * artifact (`src/index_ivfpq.cpp`): coarse routing AND compressed
@@ -31,12 +31,14 @@ import graft.TopK
   * a query touches nprobe/kc of them, and the only full-corpus passes are
   * the one build encode and the 1/trainSampleInv-sampled training scans.
   *
-  * On-disk layout (meta written LAST = the commit point, like the
-  * fulltext manifest):
+  * On-disk layout, committed through the fulltext index's commit path
+  * ([[IndexBuild.commitParts]], meta LAST):
   *   dir/codes/cell=N/   (vec_id, code: array<int>) — per-cell PQ codes
+  *   dir/manifest        (cell, n_vecs)             — per-cell resume lineage
   *   dir/centroids       (cell, centroid)           — coarse codebook
   *   dir/codebooks       (m, cw, vec)               — PQ codebooks
-  *   dir/meta            (counts + config)
+  *   dir/meta            JSON counts + config — written LAST (the commit
+  *                       point; [[topk]] refuses an index without it)
   */
 object AnnIndexPq {
 
@@ -51,45 +53,43 @@ object AnnIndexPq {
     * cell-partitioned (encode-in-insert). No shuffle: each task appends
     * to its cells' directories.
     *
-    * Commit protocol mirrors the fulltext build (meta LAST; per-cell
-    * manifest; reference analog: LoadFromBook idempotent selective load,
-    * `src/index_ivfpq.cpp:122-159`). resume=true restarts a killed build
-    * from its last commit point: complete index → no-op; committed models
-    * (centroids + codebooks) → skip the training scans; manifest cells →
-    * dropped before the encode pass, and dynamic partition overwrite
-    * scrubs partial files in the gap cells. resume=false deletes any
-    * previous index at `dir` first (stale-cell footgun). */
+    * Commits through the index's commit path ([[IndexBuild.commitParts]]
+    * on `cell`, meta LAST; reference analog: LoadFromBook idempotent
+    * selective load, `src/index_ivfpq.cpp:122-159`). resume=true restarts
+    * a killed build from its last commit point: complete index → no-op;
+    * committed models (centroids + codebooks) → skip the training scans;
+    * manifest cells → dropped before the encode pass, and dynamic
+    * partition overwrite scrubs partial files in the gap cells.
+    * resume=false clears any previous index at `dir` first
+    * ([[IndexBuild.clearDirs]]; stale-cell footgun). */
   def write(spark: SparkSession, emb: DataFrame, dir: String,
             kc: Int = Ann.KmKc, ks: Int = Pq.Ks,
             kmIters: Int = 4, pqIters: Int = 2,
             trainSampleInv: Int = 4, resume: Boolean = false): Meta = {
     import spark.implicits._
     if (!resume)
-      AnnIndex.deletePaths(spark, Seq(s"$dir/meta", s"$dir/codes",
-        s"$dir/centroids", s"$dir/codebooks", manifestDir(dir)))
-    else if (AnnIndex.committed(spark, s"$dir/meta"))
+      IndexBuild.clearDirs(spark, Seq(AnnIndex.metaPath(dir), manifestDir(dir),
+        s"$dir/codes", s"$dir/centroids", s"$dir/codebooks"))
+    else if (IndexBuild.exists(spark, AnnIndex.metaPath(dir)))
       return readMeta(spark, dir) // meta is the commit point: already complete
     val (centroids, codebooks) =
-      if (resume && AnnIndex.committed(spark, s"$dir/centroids") &&
-          AnnIndex.committed(spark, s"$dir/codebooks"))
+      if (resume && IndexBuild.committed(spark, s"$dir/centroids") &&
+          IndexBuild.committed(spark, s"$dir/codebooks"))
         (AnnIndex.loadCentroids(spark, dir), loadCodebooks(spark, dir))
       else {
         val train = AnnIndex.trainSample(emb, trainSampleInv)
         val c = Ann.kmeansFit(train, kc, kmIters)
         val cb = Pq.trainCodebooks(train, ks, pqIters)
-        c.zipWithIndex.map { case (ct, i) => (i, ct.toSeq) }.toSeq
-          .toDF("cell", "centroid").coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
+        AnnIndex.writeCentroids(spark, c, dir)
         cb.zipWithIndex.flatMap { case (b, m) =>
           b.zipWithIndex.map { case (cw, ci) => (m, ci, cw.toSeq) }
         }.toSeq.toDF("m", "cw", "vec").coalesce(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/codebooks")
         (c, cb)
       }
-    val done: Set[Int] =
-      if (resume && AnnIndex.committed(spark, manifestDir(dir)))
-        spark.read.parquet(manifestDir(dir)).select($"cell").as[Int].collect().toSet
-      else Set.empty
+    val done =
+      if (resume) IndexBuild.committedParts(spark, manifestDir(dir), "cell")
+      else Set.empty[Int]
     val ctrBc = spark.sparkContext.broadcast(centroids)
     val cbBc = spark.sparkContext.broadcast(codebooks)
     val encoded0 = emb.select($"vec_id", $"embedding").as[(Long, Seq[Float])]
@@ -99,28 +99,21 @@ object AnnIndexPq {
       .toDF("vec_id", "cell", "code")
     val encoded = if (done.isEmpty) encoded0
                   else encoded0.where(!$"cell".isin(done.toSeq: _*))
-    encoded.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell")
-      .parquet(s"$dir/codes")
-    // per-cell manifest append (counted from the written gap partitions —
-    // partition pruning, no second encode pass)
-    val gapManifest = spark.read.parquet(s"$dir/codes")
-      .select(col("cell").cast("int").as("cell"))
-      .where(if (done.isEmpty) lit(true) else !col("cell").isin(done.toSeq: _*))
-      .groupBy($"cell").agg(count(lit(1)).as("n_vecs"))
-    gapManifest.coalesce(1).write.mode(SaveMode.Append).parquet(manifestDir(dir))
-    val row = emb.agg(count(lit(1)), max(size($"embedding"))).head()
-    val meta = Meta(row.getLong(0), row.getInt(1), kc, Pq.M, Pq.SubDim, ks,
-      kmIters, pqIters, trainSampleInv)
-    Seq(meta).toDS().write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
+    val cells = IndexBuild.commitParts(encoded, s"$dir/codes", manifestDir(dir), "cell",
+      Seq(count(lit(1)).as("n_vecs")), done)
+    val meta = Meta(cells.map(_.getLong(1)).sum, centroids.headOption.fold(0)(_.length),
+      kc, Pq.M, Pq.SubDim, ks, kmIters, pqIters, trainSampleInv)
+    IndexBuild.commitJson(spark, AnnIndex.metaPath(dir), IndexBuild.recordJson(meta))
     meta
   }
 
-  def readMeta(spark: SparkSession, dir: String): Meta = {
-    import spark.implicits._
-    spark.read.parquet(s"$dir/meta").as[Meta].head()
-  }
+  def readMeta(spark: SparkSession, dir: String): Meta =
+    AnnIndex.readMetaJson(spark, dir) { n =>
+      Meta(n.get("n_vecs").asLong, n.get("dim").asInt, n.get("kc").asInt,
+        n.get("m").asInt, n.get("sub_dim").asInt, n.get("ks").asInt,
+        n.get("km_iters").asInt, n.get("pq_iters").asInt,
+        n.get("train_sample_inv").asInt)
+    }
 
   /** The persisted PQ codebooks: M × ks × SubDim (Quantizer::Load). */
   def loadCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
@@ -150,6 +143,7 @@ object AnnIndexPq {
            emb: DataFrame, nprobe: Int, k: Int = Ann.K,
            rerankFactor: Int = 4): DataFrame = {
     import spark.implicits._
+    readMeta(spark, dir) // the commit gate: never answer from partial codes
     val centroids = AnnIndex.loadCentroids(spark, dir)
     val codebooks = loadCodebooks(spark, dir)
     val qs: Array[(Long, Seq[Float])] = queries

@@ -49,10 +49,8 @@ object StreamIngest {
   private def fs(spark: SparkSession) =
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
-  private def committed(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/stats/meta")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private def committed(spark: SparkSession, dir: String): Boolean =
+    IndexBuild.exists(spark, s"$dir/stats/meta")
 
   /** Ids of batches already committed under workDir (meta present). */
   def committedBatchIds(spark: SparkSession, workDir: String): Seq[Long] = {

@@ -59,6 +59,31 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.loadCentroids(spark, dir2).map(_.toSeq).toSeq)
   }
 
+  test("both ANN topks refuse an index without committed meta, naming the dir") {
+    import spark.implicits._
+    val small = emb.where($"vec_id" < 200)
+    val queries = small.where($"vec_id" < 4)
+    val ivf = tmpDir(); val pq = tmpDir()
+    AnnIndex.write(spark, small, ivf)
+    AnnIndexPq.write(spark, small, pq)
+    // committed: both answer
+    assert(AnnIndex.topk(spark, ivf, queries, nprobe = 4).count() > 0)
+    assert(AnnIndexPq.topk(spark, pq, queries, small, nprobe = 4).count() > 0)
+    // a write killed before its meta-last commit: cells/codes, manifest and
+    // models all on disk, no meta
+    Seq(ivf, pq).foreach { d =>
+      val meta = new org.apache.hadoop.fs.Path(s"$d/meta")
+      meta.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(meta, true)
+    }
+    val e1 = intercept[IllegalStateException](AnnIndex.topk(spark, ivf, queries, nprobe = 4))
+    val e2 = intercept[IllegalStateException](
+      AnnIndexPq.topk(spark, pq, queries, small, nprobe = 4))
+    Seq(ivf -> e1, pq -> e2).foreach { case (d, e) =>
+      assert(e.getMessage.contains(d) && e.getMessage.contains("resume or rebuild"),
+        e.getMessage)
+    }
+  }
+
   test("PQ/ADC: lossless config == exact L2 scan; lossy ks=16 keeps recall; 32x smaller codes") {
     import spark.implicits._
     // exact-L2 ground truth via the same canonical fold as the SQL oracle
