@@ -145,11 +145,6 @@ object Attrs {
     n.get("attrs").elements().asScala.map(_.asText).toSeq
   }
 
-  private def readRows(spark: SparkSession, dir: String): Dataset[PostingRow] = {
-    sidecarAttrs(spark, dir) // existence + format-version gate
-    rows(spark, dir)
-  }
-
   private def rows(spark: SparkSession, dir: String): Dataset[PostingRow] = {
     import spark.implicits._
     // explicit schema: an attr column that is all-NULL writes a fileless
@@ -161,11 +156,28 @@ object Attrs {
       .as[PostingRow]
   }
 
-  /** Every persisted filter list (all attrs, all values) — what
-    * [[QueryEngine.openIndex]] folds into the cached serving layout so
-    * filtered batches hit the same in-memory cache as unfiltered ones. */
+  /** A committed sidecar as a query reads it: its attr columns (from the
+    * marker, format-gated by [[sidecarAttrs]]) and every persisted filter
+    * list, all attrs and all values. A batch's restriction
+    * ([[QueryEngine.restrictToPlan]]) selects the lists it needs. */
+  final case class Sidecar(dir: String, attrs: Seq[String], rows: Dataset[PostingRow]) {
+    /** Refuse a predicate on an attr the sidecar does not hold: it has no
+      * lists for it, so the filter would mask every bucket and answer
+      * nothing. */
+    def requireAttr(attr: String): Unit =
+      require(attrs.contains(attr),
+        s"attribute '$attr' is not in the sidecar at ${attrsDir(dir)}, which " +
+          s"holds [${attrs.mkString(", ")}] — rewrite it with Attrs.writeAttrs " +
+          s"including '$attr'")
+  }
+
+  /** Read a committed sidecar: one marker read, one (lazy) scan. */
+  def readSidecar(spark: SparkSession, dir: String): Sidecar =
+    Sidecar(dir, sidecarAttrs(spark, dir), rows(spark, dir))
+
+  /** Every persisted filter list (all attrs, all values). */
   def allFilterRows(spark: SparkSession, dir: String): Dataset[PostingRow] =
-    readRows(spark, dir)
+    readSidecar(spark, dir).rows
 
   /** Merge committed attr sidecars (inputs over disjoint doc sets) with
     * one column set `attrCols`, checked equal across inputs by the caller
@@ -196,16 +208,6 @@ object Attrs {
     commitSidecarMeta(spark, outDir, attrCols)
   }
 
-  /** Filter lists for `attr IN values` only (parquet row-group pruning on
-    * the sorted term column keeps this read proportional to the MATCHING
-    * lists, not the sidecar). */
-  def filterRows(spark: SparkSession, dir: String, attr: String,
-                 values: Seq[String]): Dataset[PostingRow] = {
-    import spark.implicits._
-    val terms = values.map(v => filterTerm(attr, v))
-    readRows(spark, dir).where($"term".isin(terms: _*))
-  }
-
   // ---- range predicates (`attr BETWEEN lo AND hi`, numeric) -------------
   // The training-pipeline filter shape (a warc_ts date window, a doc-length
   // band): compiles to the attr's virtual lists whose VALUE parses numeric
@@ -213,10 +215,10 @@ object Attrs {
   // written as epoch numbers (a lexicographic range over raw timestamp
   // strings would depend on their rendering).
   //
-  // The binding match decision is the SCORER-side [[rangeTermMatches]]
-  // (both the cached and the disk-read query paths apply it when folding
-  // the mask); the Catalyst predicate below only pre-selects rows for the
-  // disk path and must stay a SUPERSET of the scorer's matches.
+  // The binding match decision is the SCORER-side [[rangeTermMatches]],
+  // applied when the scorer folds the mask; the Catalyst predicate below
+  // is the batch restriction's row selection ([[QueryEngine.restrictToPlan]])
+  // and must stay a SUPERSET of the scorer's matches.
 
   /** Anchored decimal/scientific literal — the forms Java's parseDouble
     * and Spark's string→double cast agree on. Gates out Java-only exotica
@@ -246,12 +248,5 @@ object Attrs {
     col("term").startsWith(lit(p)) &&
       expr(s"TRY_CAST(SUBSTRING(term, ${p.length + 1}) AS DOUBLE)")
         .between(lit(lo), lit(hi))
-  }
-
-  /** Filter lists for `attr BETWEEN lo AND hi` (numeric values). */
-  def rangeFilterRows(spark: SparkSession, dir: String, attr: String,
-                      lo: Double, hi: Double): Dataset[PostingRow] = {
-    import spark.implicits._
-    readRows(spark, dir).where(rangeTermCond(attr, lo, hi)).as[PostingRow]
   }
 }

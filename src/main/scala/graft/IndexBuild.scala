@@ -87,9 +87,10 @@ object IndexBuild {
       codec: Int = Codec.VByteId)
 
 
-  /** Scala mirror of the Catalyst `pmod(xxhash64(term, bucket), P)` used
-    * for partition routing — bit-exact parity with
-    * [[QueryEngine.candidatePartIds]] is spec-asserted (EngineSpec). */
+  /** part_id of a (term, bucket) row of a term-partitioned index: the
+    * Catalyst `pmod(xxhash64(term, bucket), P)` computed in Scala,
+    * bit-exact (EngineSpec). The build places rows with it and partition
+    * pruning ([[QueryEngine.candidatePartIds]]) routes with it. */
   def partIdOf(term: String, bucket: Int, numPartitions: Int): Int = {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
     import org.apache.spark.sql.types.{IntegerType, StringType}

@@ -122,7 +122,7 @@ object PlanAudit {
     // 1. pruned segment scan for a rare-term query (the nprobe analog);
     //    max_bucket = 0: 'dup' was not salted by the build
     val pairs = QueryEngine.candidatePairs(Map("dup" -> 0), Seq((3, Seq("dup"))))
-    val partIds = QueryEngine.candidatePartIds(spark, meta, pairs)
+    val partIds = QueryEngine.candidatePartIds(meta, pairs)
     dump("Pruned segment scan (rare term 'dup' → 1 of 32 partitions)",
       IndexBuild.readSegments(spark, dir)
         .where($"part_id".isin(partIds: _*) && $"term".isin("dup")).toDF())
@@ -190,13 +190,24 @@ object PlanAudit {
       Positional.read(spark, posDir)
         .where($"term".isin("table", "hash")).toDF())
 
-    // 8. attr-filter sidecar: a value predicate reads only the matching
-    //    virtual posting lists (filter-term pushdown into the sidecar
-    //    scan — row-group skipping on the term-sorted files), never the
-    //    corpus or the match set on the driver
-    Attrs.writeAttrs(spark, docs, dir, Seq("lang"))
-    dump("Attr filter-list read for lang IN ('es','de') (term pushdown on the sidecar)",
-      Attrs.filterRows(spark, dir, "lang", Seq("es", "de")).toDF())
+    // 8. attr-filter sidecar: a batch's restriction (QueryEngine.restrictToPlan)
+    //    over every filter list reads only the requested lists (filter-term
+    //    pushdown into the sidecar scan — row-group skipping on the
+    //    term-sorted files), never the corpus or the match set on the
+    //    driver. A range-filtered batch over the segments ∪ sidecar source
+    //    scans each side once: `In ∨ StringStartsWith` pushed into both
+    //    scans, the value cast applied after them
+    Attrs.writeAttrs(spark, docs, dir, Seq("lang", "n_chars"))
+    val cs = CorpusStats(meta.n_docs, meta.n_tokens, meta.max_doc_id)
+    dump("Attr filter-list restriction for lang IN ('es','de') (term pushdown on the sidecar)",
+      QueryEngine.restrictToPlan(Attrs.allFilterRows(spark, dir),
+        QueryEngine.plan(cs, Map.empty, Nil)
+          .copy(filterTerms = Seq("es", "de").map(Attrs.filterTerm("lang", _)))).toDF())
+    dump("Segments ∪ sidecar restriction for 'dup table' with n_chars BETWEEN 120 AND 260 (one scan per side)",
+      QueryEngine.restrictToPlan(
+        IndexBuild.readSegments(spark, dir).union(Attrs.allFilterRows(spark, dir)),
+        QueryEngine.plan(cs, Map("dup" -> 1L, "table" -> 1L), Seq((1, Seq("dup", "table"))))
+          .copy(filterRange = Some(("n_chars", 120.0, 260.0)))).toDF())
 
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")

@@ -9,26 +9,25 @@ import org.apache.spark.sql.functions._
   *  Phase 1 (driver, no job once the handle has memoized the batch's
   *  terms): build the per-batch term table — idf per query term from the
   *  stats table (the reference's per-query `DTable` LUT,
-  *  `src/index_ivfpq.cpp:554-568`), broadcast to the tasks — and the
-  *  candidate partition set (term-partition pruning: rare terms hash to
-  *  exactly one (term,0) partition; salted head terms enumerate their
-  *  docId buckets).
+  *  `src/index_ivfpq.cpp:554-568`), broadcast to the tasks — and, on a
+  *  term-partitioned index, the candidate partition set (driver
+  *  arithmetic: rare terms hash to exactly one (term,0) partition; salted
+  *  head terms enumerate their docId buckets).
   *
   *  Phase 2 (one Spark job for the WHOLE query batch on the cached
-  *  serving layout, like `TopKId`'s single OMP pass): scan only candidate
-  *  partitions/terms (one `isin` term filter: Parquet partition pruning
-  *  on part_id + row-group skipping on the term-sorted files), bring each
-  *  docId-range bucket's rows together, score every query of the batch
-  *  per bucket with the shared-contribution [[QueryEngine.BucketTaat]]
-  *  scorer, and merge the tasks' per-query top-k blocks in one
-  *  `treeAggregate`. The nq·k hits come back in (query_id, rank) order as
-  *  a local relation, so collecting them runs no further job.
+  *  serving layout, like `TopKId`'s single OMP pass): every batch runs
+  *  the same four steps of [[QueryEngine.runOnHandle]] — pick a posting
+  *  source, restrict it once to the batch's terms and filter lists,
+  *  re-bucket it into docId ranges if it is term-partitioned, and score
+  *  every query per bucket with the shared-contribution
+  *  [[QueryEngine.BucketTaat]] scorer, the tasks' per-query top-k blocks
+  *  merged in one `treeAggregate`. The nq·k hits come back in
+  *  (query_id, rank) order as a local relation, so collecting them runs
+  *  no further job.
   *
-  * Scale note: one scorer serves every layout. A term-partitioned scan is
-  * re-bucketed into docId ranges first ([[QueryEngine.rebucketByRange]]),
-  * so per-task memory is bounded by the range width, never by a head
-  * term's full posting set — the same shape as the reference's
-  * per-cluster fan-out.
+  * Scale note: one scorer serves every layout. Re-bucketing bounds
+  * per-task memory by the range width, never by a head term's full
+  * posting set — the same shape as the reference's per-cluster fan-out.
   */
 object QueryEngine {
 
@@ -91,9 +90,8 @@ object QueryEngine {
     @transient private lazy val filterTermSet: Set[String] = filterTerms.toSet
 
     /** Is this term one of the predicate's requested virtual lists? The
-      * BINDING match decision for the mask fold — both the cached path
-      * (which sees every persisted attr list) and the disk path (whose
-      * Catalyst pre-selection is a superset) apply it. */
+      * BINDING match decision for the mask fold, applied to every row the
+      * batch's restriction selected (a superset for a range). */
     def isRequestedFilter(term: String): Boolean =
       Attrs.isFilterTerm(term) && (filterTermSet.contains(term) ||
         filterRange.exists { case (a, lo, hi) =>
@@ -716,36 +714,36 @@ object QueryEngine {
   def whereTerms(postings: Dataset[PostingRow], terms: Seq[String]): Dataset[PostingRow] =
     postings.where(col("term").isin(terms: _*))
 
-  /** The batch's posting restriction: scoring terms + explicit filter
-    * terms via [[whereTerms]], plus — for a range predicate — the attr's
-    * in-range virtual lists (the range rows are disjoint from both by the
-    * filter-marker prefix, so the union never duplicates). */
-  def restrictToPlan(postings: Dataset[PostingRow], terms: Seq[String],
-                     plan: Plan): Dataset[PostingRow] = {
-    val base = whereTerms(postings, terms ++ plan.filterTerms)
+  /** The batch's posting restriction, the one place that selects its
+    * rows: scoring and IN filter terms through one `isin`; a range
+    * predicate adds the attr's lists whose value casts into the range
+    * ([[Attrs.rangeTermCond]]) as one pushed `isin ∨ startsWith` filter
+    * with the cast after the scan, so each side of a segments ∪ sidecar
+    * source is scanned once. */
+  def restrictToPlan(postings: Dataset[PostingRow], plan: Plan): Dataset[PostingRow] = {
+    val terms = plan.termToQueries.keys.toSeq ++ plan.filterTerms
     plan.filterRange match {
       case Some((a, lo, hi)) =>
-        base.union(postings.where(Attrs.rangeTermCond(a, lo, hi)))
-      case None => base
+        val inAttr = col("term").startsWith(Attrs.attrPrefix(a))
+        postings.where(col("term").isin(terms: _*) || inAttr)
+          .where(!inAttr || Attrs.rangeTermCond(a, lo, hi))
+      case None => whereTerms(postings, terms)
     }
   }
 
-  /** Run the batch over a postings Dataset (in-memory or disk-backed).
-    * Emits (query_id, rank, doc_id, score_micro), ordered.
-    *
-    * The rows are re-bucketed into docId ranges and scored by
+  /** Run the batch over an in-memory postings Dataset (the filter lists,
+    * when the plan has a filter, unioned in by the caller). Emits
+    * (query_id, rank, doc_id, score_micro), ordered: the rows are
+    * restricted to the plan, re-bucketed into docId ranges and scored by
     * [[runDocPartitioned]], so per-task memory is bounded by the range
     * width — the reference's `TopKId` never concentrates one query's
-    * candidates in one thread (`src/index_ivfpq.cpp:239-295`).
-    * Attr-filtered callers must have unioned the virtual filter lists
-    * into `postings` ([[runOnHandle]] does). */
+    * candidates in one thread (`src/index_ivfpq.cpp:239-295`). */
   def run(spark: SparkSession, postings: Dataset[PostingRow], plan: Plan,
           effort: Option[EffortAccs] = None): DataFrame = {
-    val width = if (plan.bucketWidth > 0) plan.bucketWidth
-                else 4096L // in-memory postings carry no geometry; any positive width is rank-safe
-    val filtered = restrictToPlan(postings, plan.termToQueries.keys.toSeq, plan)
-    runDocPartitioned(spark, rebucketByRange(filtered, width, Codec.BlockSize),
-      plan.copy(bucketWidth = width), effort, preFiltered = true)
+    val p = if (plan.bucketWidth > 0) plan
+            else plan.copy(bucketWidth = 4096L) // in-memory postings carry no geometry; any positive width is rank-safe
+    runDocPartitioned(spark,
+      rebucketByRange(restrictToPlan(postings, p), p.bucketWidth, Codec.BlockSize), p, effort)
   }
 
   /** Candidate (term, bucket) pairs for partition pruning (phase-1
@@ -774,29 +772,20 @@ object QueryEngine {
     * pushdown; rare-term batches keep exact single-partition pruning.
     * The cutoff counts actual pairs (Σ max_bucket+1) without
     * materializing them. */
-  def prunedPartIds(spark: SparkSession, meta: IndexBuild.Meta,
-                    termMaxBucket: Map[String, Int],
+  def prunedPartIds(meta: IndexBuild.Meta, termMaxBucket: Map[String, Int],
                     queries: Seq[(Int, Seq[String])]): Option[Seq[Int]] = {
     val terms = queries.flatMap(_._2).distinct.filter(termMaxBucket.contains)
     val nPairs = terms.iterator.map(termMaxBucket(_).toLong + 1).sum
     if (nPairs > 4L * meta.num_partitions) None
-    else Some(candidatePartIds(spark, meta,
-      candidatePairs(termMaxBucket, queries)))
+    else Some(candidatePartIds(meta, candidatePairs(termMaxBucket, queries)))
   }
 
-  /** part_id for each candidate pair, computed with the SAME Catalyst
-    * xxhash64 expression the build used (exact parity, no hand-rolled
-    * hash drift). The projection folds into the local relation, so the
-    * collect runs no job; dedupe and sort happen on the driver. */
-  def candidatePartIds(spark: SparkSession, meta: IndexBuild.Meta,
-                       pairs: Seq[(String, Int)]): Seq[Int] = {
-    import spark.implicits._
-    if (pairs.isEmpty) Seq.empty
-    else pairs.toDF("term", "bucket")
-      .select(pmod(xxhash64($"term", $"bucket"), lit(meta.num_partitions))
-        .cast("int").as("part_id"))
-      .as[Int].collect().distinct.sorted.toSeq
-  }
+  /** part_id for each candidate pair, deduped and sorted: driver
+    * arithmetic through [[IndexBuild.partIdOf]], the Scala mirror of the
+    * build's `pmod(xxhash64(term, bucket), P)` (bit-exact, EngineSpec). */
+  def candidatePartIds(meta: IndexBuild.Meta, pairs: Seq[(String, Int)]): Seq[Int] =
+    pairs.map { case (t, b) => IndexBuild.partIdOf(t, b, meta.num_partitions) }
+      .distinct.sorted
 
   /** Re-bucket posting rows into docId-range buckets (bucket = doc_id /
     * width) so the doc-partitioned batched scorer can serve a TERM-
@@ -871,8 +860,9 @@ object QueryEngine {
     }
   }
 
-  /** The engine's one scorer: a batch over docId-range bucketed postings
-    * (a doc-partitioned index, or term-partitioned rows after
+  /** The engine's one scorer, step 4 of every batch: score rows that a
+    * caller has already restricted to the plan ([[restrictToPlan]]) and
+    * bucketed by docId range (a doc-partitioned source, or rows after
     * [[rebucketByRange]]). Each task holds ALL batch terms of its docId
     * ranges, so it evaluates EVERY query of the batch against its
     * partition once (zero posting duplication). Per (query, bucket) the
@@ -885,31 +875,25 @@ object QueryEngine {
     * of a disjoint union = top-k of per-part top-k's under the frozen
     * total order, whatever the merge tree.
     *
+    * `bucketLocal`: every bucket's rows already sit in one input
+    * partition (the handle's cached serving layout), so no shuffle;
+    * otherwise the rows are repartitioned by bucket first.
+    *
     * The hits come back in (query_id, rank) order as a local relation:
     * no sort, and collecting them runs no job. */
-  def runDocPartitioned(spark: SparkSession, postings: Dataset[PostingRow],
+  def runDocPartitioned(spark: SparkSession, rows: Dataset[PostingRow],
                         plan: Plan, effort: Option[EffortAccs] = None,
-                        preFiltered: Boolean = false,
                         bucketLocal: Boolean = false): DataFrame = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(plan)
     val k = plan.k
     require(plan.bucketWidth > 0, "doc-partitioned plan needs bucketWidth from meta")
-    // preFiltered: caller already restricted to the batch's terms (the
-    // rebucket paths) — don't filter twice.
-    // An attr-filtered batch also keeps its virtual filter lists.
-    val filtered = if (preFiltered) postings
-                   else restrictToPlan(postings, plan.termToQueries.keys.toSeq, plan)
-    // bucketLocal: the caller guarantees every bucket's rows are already
-    // co-located in one input partition (the handle's cached serving
-    // layout) — the repartition below would be a pure re-shuffle of the
-    // same grouping, paid once per BATCH.
-    val spread = if (bucketLocal) filtered else
+    val spread = if (bucketLocal) rows else
       // The pruned posting set is compact parquet — a plain scan packs it
       // into very few input splits (maxPartitionBytes), serializing the
       // scoring work. Spread buckets across the cluster; the shuffle moves
       // only the pruned, compressed lists.
-      filtered.repartition($"bucket")
+      rows.repartition($"bucket")
     val blocks = spread.rdd.mapPartitions(it =>
       Iterator.single(scorePartition(bc.value, it, effort)))
     val merge = (a: TopK.Block, b: TopK.Block) => {
@@ -1096,6 +1080,15 @@ object QueryEngine {
       * the distinct terms actually queried (never the vocabulary). */
     private[QueryEngine] val termStatsMemo =
       new java.util.concurrent.ConcurrentHashMap[String, Option[(Long, Int)]]()
+    /** The attr sidecar as this handle reads it, once: at open when the
+      * serving cache folds it in, else at the handle's first filtered
+      * batch — a cached filtered batch reads no file. */
+    private[QueryEngine] val sidecarMemo =
+      new java.util.concurrent.atomic.AtomicReference[Attrs.Sidecar]()
+    private[QueryEngine] def sidecar(spark: SparkSession): Attrs.Sidecar = {
+      if (sidecarMemo.get == null) sidecarMemo.compareAndSet(null, Attrs.readSidecar(spark, dir))
+      sidecarMemo.get
+    }
     /** Release the cached serving layout (no-op for uncached handles). */
     def close(): Unit = served.foreach(_.unpersist())
   }
@@ -1115,28 +1108,26 @@ object QueryEngine {
                 cacheServing: Boolean = true): IndexHandle = {
     val meta = IndexBuild.readMeta(spark, dir)
     val segments = IndexBuild.readSegments(spark, dir)
-    val served =
-      if (cacheServing && meta.doc_partitioned) {
-        // An attribute sidecar (virtual filter lists, [[Attrs]]) loads
-        // into the SAME cache: filter rows bucket like postings and are
-        // tiny beside them (one docId per doc per attr vs one posting per
-        // token), so filtered batches serve from memory too. Unfiltered
-        // batches drop them in their whereTerms term filter as usual.
-        val hasAttrs = Attrs.hasAttrs(spark, dir)
-        val withAttrs =
-          if (hasAttrs) segments.union(Attrs.allFilterRows(spark, dir))
-          else segments
-        (Some(withAttrs.repartition(org.apache.spark.sql.functions.col("bucket"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
-          hasAttrs)
-      } else (None, false)
-    IndexHandle(dir, meta, segments, IndexBuild.readTermStats(spark, dir),
-      served._1, attrsCached = served._2)
+    val cache = cacheServing && meta.doc_partitioned
+    // An attribute sidecar (virtual filter lists, [[Attrs]]) loads into
+    // the SAME cache: filter rows bucket like postings and are tiny beside
+    // them (one docId per doc per attr vs one posting per token), so
+    // filtered batches serve from memory too. Unfiltered batches drop
+    // them in their term restriction as usual.
+    val sidecar =
+      if (cache && Attrs.hasAttrs(spark, dir)) Some(Attrs.readSidecar(spark, dir)) else None
+    val served = if (!cache) None else
+      Some(sidecar.fold(segments)(sc => segments.union(sc.rows))
+        .repartition(col("bucket"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val h = IndexHandle(dir, meta, segments, IndexBuild.readTermStats(spark, dir),
+      served, attrsCached = sidecar.isDefined)
+    sidecar.foreach(h.sidecarMemo.set)
+    h
   }
 
-  /** End-to-end: query a disk index once. Both layouts serve through the
-    * batched scorer ([[runOnHandle]]); term-partitioned ones first prune
-    * partitions and re-bucket the rows into docId ranges. */
+  /** End-to-end: query a disk index once, through [[runOnHandle]] on an
+    * uncached handle. */
   def runOnIndex(spark: SparkSession, dir: String,
                  queries: Seq[(Int, Seq[String])] = QuerySet.queryTerms,
                  k: Int = QuerySet.K,
@@ -1150,14 +1141,20 @@ object QueryEngine {
       queries, k, effort, conjunctive, filter, rangeFilter)
 
   /** One query batch against an opened index (load once, query many —
-    * the reference's test-harness shape).
+    * the reference's test-harness shape), in four steps: (1) source —
+    * the handle's cache when it can answer the batch (no filter, or it
+    * holds the sidecar's lists), else the segments ([[prunedPartIds]]
+    * narrows a term-partitioned index) unioned with the sidecar's filter
+    * lists when a filter is on; (2) [[restrictToPlan]]; (3)
+    * [[rebucketByRange]] for term-partitioned segments, the one source
+    * not docId-range bucketed already; (4) [[runDocPartitioned]], with no
+    * shuffle on the cache.
     *
     * `filter = Some((attr, values))` restricts results to docs whose
     * persisted attribute (an [[Attrs]] sidecar next to the index) is IN
-    * `values` — BM25 stats stay corpus-global, only candidacy changes.
-    * The predicate's virtual posting lists join the batch's stream: from
-    * the serving cache when the handle holds one (openIndex folds the
-    * sidecar in), else unioned before the bucket co-shuffle. */
+    * `values`, `rangeFilter` to docs whose numeric attribute lies in
+    * [lo, hi] — BM25 stats stay corpus-global, only candidacy changes. A
+    * predicate on an attribute the sidecar does not hold is refused. */
   def runOnHandle(spark: SparkSession, h: IndexHandle,
                   queries: Seq[(Int, Seq[String])] = QuerySet.queryTerms,
                   k: Int = QuerySet.K,
@@ -1177,6 +1174,11 @@ object QueryEngine {
     if (filter.exists(_._2.isEmpty))
       return spark.emptyDataset[Hit].toDF()
         .select($"query_id", $"rank", $"doc_id", $"score_micro")
+    val sidecar = filter.map(_._1).orElse(rangeFilter.map(_._1)).map { a =>
+      val sc = h.sidecar(spark)
+      sc.requireAttr(a)
+      sc
+    }
     val meta = h.meta
     val qTerms = queries.flatMap(_._2).distinct
     // df + salting lookup restricted to query terms — filter pushed to
@@ -1201,36 +1203,18 @@ object QueryEngine {
     val p = plan(cs, termDf, queries, k, conjunctive)
       .copy(bucketWidth = meta.bucket_width, filterTerms = fTerms,
         filterRange = rangeFilter)
-    val filterOn = p.filterActive
-    def fRows(): Dataset[PostingRow] = (filter, rangeFilter) match {
-      case (Some((a, vs)), _) => Attrs.filterRows(spark, h.dir, a, vs)
-      case (_, Some((a, lo, hi))) => Attrs.rangeFilterRows(spark, h.dir, a, lo, hi)
-      case _ => throw new IllegalStateException("fRows without a filter")
+    val cached = h.served.filter(_ => sidecar.isEmpty || h.attrsCached)
+    val source = cached.getOrElse {
+      val segs =
+        if (meta.doc_partitioned) h.segments
+        else prunedPartIds(meta, termMaxBucket, queries)
+          .fold(h.segments)(ids => h.segments.where($"part_id".isin(ids: _*)))
+      sidecar.fold(segs)(sc => segs.union(sc.rows))
     }
-    // Pick the posting source; every batch then ends in ONE scorer call.
-    // Cached: the serving layout is already bucket-co-located (filtered
-    // batches may use it only if it carries the attr sidecar — openIndex
-    // folds it in when present at open time — otherwise their buckets
-    // would all look filter-empty). Doc-partitioned segments carry the
-    // batch's terms plus the filter rows. Term-partitioned segments are
-    // narrowed to the candidate partitions when pruning applies (the
-    // rare-term fast path reads 1..few), restricted to the batch's terms
-    // and re-bucketed into docId ranges; the filter rows are already
-    // range-bucketed and ride the same shuffle.
-    val (source, preFiltered, bucketLocal) = h.served match {
-      case Some(cached) if !filterOn || h.attrsCached => (cached, false, true)
-      case _ if meta.doc_partitioned =>
-        (if (!filterOn) h.segments else h.segments.union(fRows()), false, false)
-      case _ =>
-        val scanned = prunedPartIds(spark, meta, termMaxBucket, queries) match {
-          case Some(partIds) => h.segments.where($"part_id".isin(partIds: _*))
-          case None => h.segments
-        }
-        val rebucketed = rebucketByRange(
-          whereTerms(scanned, p.termToQueries.keys.toSeq),
-          meta.bucket_width, meta.block_size)
-        (if (!filterOn) rebucketed else rebucketed.union(fRows()), true, false)
-    }
-    runDocPartitioned(spark, source, p, effort, preFiltered, bucketLocal)
+    val restricted = restrictToPlan(source, p)
+    val rows =
+      if (cached.isDefined || meta.doc_partitioned) restricted
+      else rebucketByRange(restricted, meta.bucket_width, meta.block_size)
+    runDocPartitioned(spark, rows, p, effort, bucketLocal = cached.isDefined)
   }
 }

@@ -136,46 +136,65 @@ object Ann {
 
   val KmKc = 16 // coarse cells (kc); test corpus is 500-5000 vectors
 
-  /** Deterministic Lloyd k-means over the embedding column, expressed as
-    * Catalyst jobs per iteration: broadcast-centroid argmin assignment →
-    * `posexplode` + `groupBy(label, pos)` centroid update (the reference's
-    * grouped-AVG update, kmeans.hpp:83-100). Init = the kc lowest vec_ids
-    * (deterministic; reference uses a seeded shuffle). Clusters that lose
-    * all members keep their previous centroid.
+  /** Deterministic Lloyd k-means over the embedding column: the
+    * one-subspace case of [[kmeansFitSubspaces]]. */
+  def kmeansFit(emb: DataFrame, kc: Int = KmKc, iters: Int = 8): Array[Array[Double]] =
+    kmeansFitSubspaces(emb, 1, 0, kc, iters)(0)
+
+  /** Deterministic Lloyd k-means of `nSub` subspaces of the embedding
+    * column in ONE loop — subspace m is the slice [m·subDim, (m+1)·subDim)
+    * (`subDim` 0: the whole vector, `nSub` must be 1) — each fit
+    * bit-identical to fitting that slice alone. Per iteration ONE Catalyst
+    * job: every row, once per still-moving subspace, takes a
+    * broadcast-centroid argmin label, then `posexplode` +
+    * `groupBy(m, label, pos)` updates the centroids (the reference's
+    * grouped-AVG update, kmeans.hpp:83-100). Init = the kc lowest vec_ids,
+    * one collect for all subspaces (deterministic; reference uses a
+    * seeded shuffle). Clusters that lose all members keep their previous
+    * centroid.
     *
     * The per-dimension mean sums in DECIMAL, not double: decimal addition
     * is exact and associative, so the shuffle's partial-merge order cannot
     * perturb low bits — two fits of the same table are bit-identical BY
     * CONSTRUCTION (a double sum through a shuffle is not; the spec's
-    * bit-equality assertion used to rely on merge-order luck). The 10^-9
+    * bit-equality assertion used to rely on merge-order luck), and
+    * grouping several subspaces into one job changes no bit. The 10^-9
     * input quantization is immaterial to a coarse quantizer. */
-  def kmeansFit(emb: DataFrame, kc: Int = KmKc, iters: Int = 8): Array[Array[Double]] = {
+  def kmeansFitSubspaces(emb: DataFrame, nSub: Int, subDim: Int, kc: Int,
+                         iters: Int): Array[Array[Array[Double]]] = {
+    require(subDim > 0 || nSub == 1, "the whole vector is one subspace")
     val spark = emb.sparkSession
     import spark.implicits._
-    var centroids: Array[Array[Double]] = emb
-      .orderBy($"vec_id").limit(kc)
+    val init = emb.orderBy($"vec_id").limit(kc)
       .select($"embedding").as[Seq[Float]].collect()
       .map(_.toArray.map(_.toDouble))
+    var centroids = Array.tabulate(nSub) { m =>
+      if (subDim == 0) init
+      else init.map(v => java.util.Arrays.copyOfRange(v, math.min(m * subDim, v.length),
+        math.min((m + 1) * subDim, v.length))) // == slice() on short vectors
+    }
+    val sub = if (subDim == 0) $"embedding"
+              else slice($"embedding", $"m" * subDim + 1, lit(subDim))
+    var moving: Seq[Int] = (0 until nSub).toList
     var it = 0
-    var converged = false
-    while (it < iters && !converged) {
+    while (it < iters && moving.nonEmpty) {
       val cb = centroids // stable closure capture per iteration
-      val assignUdf = udf((v: Seq[Float]) => argminL2(v, cb))
+      val assignUdf = udf((m: Int, v: Seq[Float]) => argminL2(v, cb(m)))
       val updated = emb
-        .select(assignUdf($"embedding").as("label"), posexplode($"embedding"))
-        .groupBy($"label", $"pos")
+        .select(explode(typedLit(moving)).as("m"), $"embedding")
+        .select($"m", assignUdf($"m", sub).as("label"), posexplode(sub))
+        .groupBy($"m", $"label", $"pos")
         .agg((sum($"col".cast("decimal(28,9)")) / count(lit(1)))
           .cast("double").as("c"))
         .collect()
-      val next = centroids.map(_.clone())
-      updated.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
-      // Fixed-point early exit (bit-exact equality): Lloyd is a pure
-      // function of the centroids, so an iteration that reproduces them
-      // exactly makes every remaining iteration a provable no-op — the
-      // final codebook is IDENTICAL to running all `iters`, the
-      // remaining assignment/update jobs are just skipped (a contract
-      // query at test scale used to pay 8 Spark jobs for a clustering
-      // that converges in 2-3).
+      val next = centroids.map(_.map(_.clone()))
+      updated.foreach(r => next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3))
+      // Fixed-point early exit (bit-exact equality), per subspace: Lloyd
+      // is a pure function of the centroids, so an iteration that
+      // reproduces a subspace's centroids exactly makes every remaining
+      // iteration of it a provable no-op — its codebook is IDENTICAL to
+      // running all `iters`, and it leaves the job; the loop ends when
+      // every subspace has.
       // Determinism beyond local mode: "pure function" needs every
       // iteration's aggregate to come out bit-identical whatever order
       // the shuffle merges partial sums in. A double sum only guarantees
@@ -184,8 +203,8 @@ object Ann {
       // not) by luck. The update above therefore sums in exact DECIMAL
       // (associative) and the assignment is a per-row function, so the
       // exit holds on a cluster too — keep it that way if either changes.
-      converged = java.util.Arrays.deepEquals(
-        next.asInstanceOf[Array[AnyRef]], centroids.asInstanceOf[Array[AnyRef]])
+      moving = moving.filterNot(m => java.util.Arrays.deepEquals(
+        next(m).asInstanceOf[Array[AnyRef]], centroids(m).asInstanceOf[Array[AnyRef]]))
       centroids = next
       it += 1
     }

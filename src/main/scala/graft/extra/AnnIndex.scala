@@ -126,24 +126,19 @@ object AnnIndex {
     * query to its nprobe nearest persisted centroids (driver-side, like
     * the fulltext candidatePartIds); the union of probed cells becomes a
     * partition filter on the cells directory, so unprobed cells are never
-    * read (reference: LoadFromBook's selective cell load). Phase 2 scores
-    * exact cosine inside probed cells and heap-merges per-query top-k. */
+    * read (reference: LoadFromBook's selective cell load). Phase 2 is
+    * [[Ann.scoreProbed]] over those cells: exact cosine inside probed
+    * cells, heap-merged per-query top-k. */
   def topk(spark: SparkSession, dir: String, queries: DataFrame,
            nprobe: Int, k: Int = Ann.K): DataFrame = {
     import spark.implicits._
     readMeta(spark, dir) // the commit gate: never answer from partial cells
     val centroids = loadCentroids(spark, dir)
-    val probeUdf = udf((v: Seq[Float]) => Ann.probeCellsKmeans(v, centroids, nprobe))
-    val routed = queries
-      .select($"vec_id".as("query_vec_id"), $"embedding".as("qe"))
-      .withColumn("probes", probeUdf($"qe"))
-    val allProbes = routed.select(explode($"probes").as("c"))
-      .distinct().as[Int].collect().toSeq.sorted
-    val cells = readCells(spark, dir).where($"cell".isin(allProbes: _*))
-    val pairs = broadcast(routed).join(cells,
-        array_contains($"probes", $"cell") && $"vec_id" =!= $"query_vec_id")
-      .select($"query_vec_id", $"vec_id", Ann.cosCol($"qe", $"embedding").as("cos"))
-    Ann.topkFromPairs(pairs, k)
+    val q = queries.select($"vec_id".as("query_vec_id"), $"embedding".as("qe"))
+    val allProbes = q.select($"qe").as[Seq[Float]].collect()
+      .flatMap(Ann.probeCellsKmeans(_, centroids, nprobe)).distinct.sorted.toSeq
+    Ann.scoreProbed(spark, readCells(spark, dir).where($"cell".isin(allProbes: _*)), q,
+      centroids, nprobe, k)
   }
 
   def readCells(spark: SparkSession, dir: String): DataFrame =

@@ -10,8 +10,8 @@ import graft.TopK
   * accumulation `src/index_ivfpq.cpp:554-568`):
   *
   *  - train: per-subspace k-means codebooks (M=8 subspaces × SubDim=8 of
-  *    the 64-dim embeddings), reusing [[Ann.kmeansFit]] on sliced
-  *    subvector columns;
+  *    the 64-dim embeddings), all fit in one Lloyd loop
+  *    ([[Ann.kmeansFitSubspaces]]);
   *  - encode: each vector → M codeword ids (one byte each at ks ≤ 256 —
   *    32× smaller than the raw floats);
   *  - query: per-query DTable (M × ks partial L2²) computed ONCE and
@@ -34,30 +34,13 @@ object Pq {
   /** Subvector m of the embedding column (1-based slice). */
   def subCol(m: Int): Column = slice(col("embedding"), m * SubDim + 1, SubDim)
 
-  /** Per-subspace codebooks: M × ks × SubDim. iters=0 returns the init
-    * (the ks lowest vec_ids' subvectors) — with ks = n that is the
-    * lossless verification codebook, no training jobs at all.
-    *
-    * iters=0 fast path: ONE collect of the ks lowest full vectors, sliced
-    * per subspace driver-side — bit-identical to M per-subspace init
-    * collects (each init is exactly the same rows' subvector slice), at
-    * 1/M of the Spark jobs (the lossless contract queries paid M
-    * sequential collect jobs for identical data). */
+  /** Per-subspace codebooks: M × ks × SubDim, all M subspaces fit in one
+    * Lloyd loop ([[Ann.kmeansFitSubspaces]]: one init collect, then one
+    * job per iteration). iters=0 returns the init (the ks lowest vec_ids'
+    * subvectors) — with ks = n that is the lossless verification
+    * codebook. */
   def trainCodebooks(emb: DataFrame, ks: Int = Ks, iters: Int = 4): Array[Array[Array[Double]]] =
-    if (iters == 0) {
-      val spark = emb.sparkSession
-      import spark.implicits._
-      val init: Array[Array[Double]] = emb
-        .orderBy($"vec_id").limit(ks)
-        .select($"embedding").as[Seq[Float]].collect()
-        .map(_.toArray.map(_.toDouble))
-      Array.tabulate(M)(m =>
-        init.map(v => java.util.Arrays.copyOfRange(v,
-          math.min(m * SubDim, v.length),
-          math.min((m + 1) * SubDim, v.length)))) // == slice() on short vectors
-    } else Array.tabulate(M) { m =>
-      Ann.kmeansFit(emb.select(col("vec_id"), subCol(m).as("embedding")), ks, iters)
-    }
+    Ann.kmeansFitSubspaces(emb, M, SubDim, ks, iters)
 
   /** PQ code of one vector: per subspace, the nearest codeword id. */
   def encodeOne(v: Seq[Float], codebooks: Array[Array[Array[Double]]]): Array[Int] =

@@ -188,4 +188,32 @@ class AnnIndexPqSpec extends AnyFunSuite {
       .as[(Long, Seq[Int], Int)].collect().toSeq.sortBy(_._1)
     assert(codesOf(wedgedPq) == codesOf(fullPq))
   }
+
+  test("PQ codebooks: all M subspaces in one Lloyd loop == per-subspace kmeansFit, 1 + iters jobs") {
+    import org.apache.spark.TestBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val train = AnnIndex.trainSample(emb, 4)
+    train.schema // resolve the scan before counting
+    for (iters <- Seq(0, 2, 8)) {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val counter = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      }
+      TestBus.drain(sc)
+      sc.addSparkListener(counter)
+      val cb = try Pq.trainCodebooks(train, Pq.Ks, iters) finally {
+        TestBus.drain(sc)
+        sc.removeSparkListener(counter)
+      }
+      // adaptive execution runs a shuffle's map stage as a job of its own
+      val perIter = if (spark.conf.get("spark.sql.adaptive.enabled").toBoolean) 2 else 1
+      assert(jobs.get <= 1 + perIter * iters, s"${jobs.get} jobs for iters=$iters")
+      (0 until Pq.M).foreach { m =>
+        val alone = Ann.kmeansFit(train.select(col("vec_id"), Pq.subCol(m).as("embedding")),
+          Pq.Ks, iters)
+        assert(cb(m).map(_.toSeq).toSeq == alone.map(_.toSeq).toSeq, s"subspace $m, iters=$iters")
+      }
+    }
+  }
 }

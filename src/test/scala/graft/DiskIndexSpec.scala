@@ -49,7 +49,7 @@ class DiskIndexSpec extends AnyFunSuite {
     assert(dupMaxBucket == 0)
     val pairs = QueryEngine.candidatePairs(Map("dup" -> dupMaxBucket), Seq((3, Seq("dup"))))
     assert(pairs == Seq(("dup", 0)))
-    val partIds = QueryEngine.candidatePartIds(spark, meta, pairs)
+    val partIds = QueryEngine.candidatePartIds(meta, pairs)
     assert(partIds.length == 1)
     // and the pruned query still matches the oracle restricted to q3
     import spark.implicits._
@@ -122,9 +122,9 @@ class DiskIndexSpec extends AnyFunSuite {
       .select($"term", $"max_bucket").as[(String, Int)].collect().toMap
     // the head query abandons partition pruning (32 buckets > 4*P=16)...
     val headQ = Seq((1, Seq("the")), (2, Seq("the", "rare")), (3, Seq("rare")))
-    assert(QueryEngine.prunedPartIds(spark, meta, maxBucket, headQ).isEmpty)
+    assert(QueryEngine.prunedPartIds(meta, maxBucket, headQ).isEmpty)
     // ...while a rare-only batch still prunes to ONE partition
-    val rareOnly = QueryEngine.prunedPartIds(spark, meta, maxBucket, Seq((3, Seq("rare"))))
+    val rareOnly = QueryEngine.prunedPartIds(meta, maxBucket, Seq((3, Seq("rare"))))
     assert(rareOnly.exists(_.length == 1))
     // re-bucketed rows: per-task per-term work is bounded by bucketWidth
     // and every posting lands inside its row's docId range

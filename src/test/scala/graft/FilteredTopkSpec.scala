@@ -99,10 +99,10 @@ class FilteredTopkSpec extends AnyFunSuite {
     val fTerms = values.map(Attrs.filterTerm(attr, _))
     val p = QueryEngine.plan(cs, termDf)
       .copy(bucketWidth = SparkEntry.testConfig.bucketWidth, filterTerms = fTerms)
-    val fRows = Attrs.attrPostings(spark, docs, attr,
+    val filterLists = Attrs.attrPostings(spark, docs, attr,
       SparkEntry.testConfig.bucketWidth, Codec.BlockSize)
       .where($"term".isin(fTerms: _*))
-    val got = rows(QueryEngine.run(spark, postings.union(fRows), p))
+    val got = rows(QueryEngine.run(spark, postings.union(filterLists), p))
     assert(got == oracle)
   }
 
@@ -223,6 +223,43 @@ class FilteredTopkSpec extends AnyFunSuite {
         filter = Some(("lang", Seq("en")))).collect()
     }
     assert(e.getMessage.contains("sidecar"))
+  }
+
+  test("a filter on an attr the sidecar does not hold refuses on every route; a cached batch reads no marker") {
+    import spark.implicits._
+    val sdf = (0L until 48L).map(i => (i, s"alpha w${i % 5}", if (i % 3 == 0) "de" else "en", i * 10))
+      .toDF("doc_id", "text", "lang", "n_chars")
+    val r = tmpDir()
+    val cfg = IndexBuild.Config(numPartitions = 2, bucketWidth = 8, headDf = 4)
+    IndexBuild.writeIndex(spark, sdf, s"$r/term", cfg)
+    IndexBuild.writeIndex(spark, sdf, s"$r/doc", cfg.copy(docPartitioned = true))
+    Seq("term", "doc").foreach(l => Attrs.writeAttrs(spark, sdf, s"$r/$l", Seq("lang")))
+    val qs = Seq((1, Seq("alpha", "w2")))
+    def refused(run: => DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException](rows(run))
+      assert(e.getMessage.contains("'n_chars'") && e.getMessage.contains("[lang]"),
+        e.getMessage)
+    }
+    val h = QueryEngine.openIndex(spark, s"$r/doc")
+    try {
+      assert(h.attrsCached)
+      for (l <- Seq("term", "doc")) {
+        refused(QueryEngine.runOnIndex(spark, s"$r/$l", qs,
+          filter = Some(("n_chars", Seq("10")))))
+        refused(QueryEngine.runOnIndex(spark, s"$r/$l", qs,
+          rangeFilter = Some(("n_chars", 0.0, 100.0))))
+      }
+      refused(QueryEngine.runOnHandle(spark, h, qs, filter = Some(("n_chars", Seq("10")))))
+      refused(QueryEngine.runOnHandle(spark, h, qs, rangeFilter = Some(("n_chars", 0.0, 100.0))))
+      // the cached handle read its sidecar's marker at open: without the
+      // marker it still answers (and refuses) from memory
+      val marker = new org.apache.hadoop.fs.Path(s"${Attrs.attrsDir(s"$r/doc")}/_sidecar_meta.json")
+      marker.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(marker, false)
+      assert(rows(QueryEngine.runOnHandle(spark, h, qs, k = 5,
+        filter = Some(("lang", Seq("de"))))) ==
+        rows(Oracle.topkFiltered(spark, sdf, "lang", Seq("de"), k = 5, queries = qs)))
+      refused(QueryEngine.runOnHandle(spark, h, qs, filter = Some(("n_chars", Seq("10")))))
+    } finally h.close()
   }
 
   test("empty-bucket masking: a bucket with zero matching docs is skipped, results exact") {

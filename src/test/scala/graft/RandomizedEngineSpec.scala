@@ -20,14 +20,18 @@ class RandomizedEngineSpec extends AnyFunSuite {
     import spark.implicits._
     val rnd = new scala.util.Random(20260817L)
     val vocab = ('a' to 'o').map(c => s"w$c") // 15 terms → heavy collisions
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"query_id", $"rank", $"doc_id", $"score_micro")
+        .as[(Int, Int, Long, Long)].collect().toSeq
     for (iter <- 1 to 8) {
       val n = 30 + rnd.nextInt(120)
       var id = 0L
-      val docs = (0 until n).map { _ =>
+      val docRows = (0 until n).map { _ =>
         id += 1 + rnd.nextInt(5) // sparse, gappy docIds
         val len = rnd.nextInt(40) // zero-token docs included
         (id, Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
-      }.toDF("doc_id", "text")
+      }
+      val docs = docRows.toDF("doc_id", "text")
       val cfg = IndexBuild.Config(
         numPartitions = 4 + rnd.nextInt(12),
         bucketWidth = 8 + rnd.nextInt(56),
@@ -49,6 +53,55 @@ class RandomizedEngineSpec extends AnyFunSuite {
         .as[(Int, Int, Long, Long)].collect().toSeq
       assert(got == oracle,
         s"iter=$iter cfg=$cfg queries=$queries: indexed != oracle")
+
+      // The other serving routes on the same round. Their draws come from
+      // a second generator, so the rounds above stay as they were.
+      val ctx = s"iter=$iter cfg=$cfg"
+      val arnd = new scala.util.Random(20260817L + iter)
+      // in-memory run over the built postings
+      val (postings, ts, cs) = IndexBuild.buildPostings(spark, docs, cfg)
+      val termDf = ts.select($"term", $"df").as[(String, Long)].collect().toMap
+      assert(rows(QueryEngine.run(spark, postings, QueryEngine.plan(cs, termDf, queries))) ==
+        oracle, s"$ctx: in-memory run != oracle")
+      // a term-partitioned batch over every vocab term: more (term,
+      // bucket) pairs than the partition-pruning size guard allows, so
+      // the whole index is scanned and re-bucketed
+      val guardDir = tmpDir()
+      val guardCfg = cfg.copy(docPartitioned = false, numPartitions = 2)
+      IndexBuild.writeIndex(spark, docs, guardDir, guardCfg)
+      val maxBucket = IndexBuild.readTermStats(spark, guardDir)
+        .select($"term", $"max_bucket").as[(String, Int)].collect().toMap
+      val wide = vocab.grouped(3).zipWithIndex.map { case (ts, i) => (i + 1, ts) }.toSeq
+      assert(wide.flatMap(_._2).distinct.flatMap(maxBucket.get).map(_ + 1L).sum >
+        4L * guardCfg.numPartitions, s"$ctx: the wide batch no longer trips the guard")
+      assert(rows(QueryEngine.runOnIndex(spark, guardDir, wide)) ==
+        rows(Oracle.topk(spark, docs, queries = wide)), s"$ctx: unpruned batch != oracle")
+      // an IN and a range filter on seeded attr columns
+      val attrDocs = docRows.map { case (d, t) =>
+        (d, t, Seq("x", "y", "z")(arnd.nextInt(3)), arnd.nextInt(50))
+      }.toDF("doc_id", "text", "lang", "num")
+      Attrs.writeAttrs(spark, attrDocs, dir, Seq("lang", "num"))
+      val values = Seq("x", "y", "z").filter(_ => arnd.nextBoolean())
+      val (lo, hi) = { val a = arnd.nextInt(50); (a.toDouble, (a + arnd.nextInt(25)).toDouble) }
+      val inWant = rows(Oracle.topkFiltered(spark, attrDocs, "lang", values, queries = queries))
+      val rangeWant = rows(Oracle.topkFilteredRange(spark, attrDocs, "num", lo, hi,
+        queries = queries))
+      assert(rows(QueryEngine.runOnIndex(spark, dir, queries,
+        filter = Some(("lang", values)))) == inWant, s"$ctx: IN $values != oracle")
+      assert(rows(QueryEngine.runOnIndex(spark, dir, queries,
+        rangeFilter = Some(("num", lo, hi)))) == rangeWant, s"$ctx: [$lo, $hi] != oracle")
+      // a cached handle on the doc-partitioned rounds
+      if (cfg.docPartitioned) {
+        val h = QueryEngine.openIndex(spark, dir)
+        try {
+          assert(rows(QueryEngine.runOnHandle(spark, h, queries)) == oracle,
+            s"$ctx: cached != oracle")
+          assert(rows(QueryEngine.runOnHandle(spark, h, queries,
+            filter = Some(("lang", values)))) == inWant, s"$ctx: cached IN != oracle")
+          assert(rows(QueryEngine.runOnHandle(spark, h, queries,
+            rangeFilter = Some(("num", lo, hi)))) == rangeWant, s"$ctx: cached range != oracle")
+        } finally h.close()
+      }
     }
   }
 
