@@ -101,6 +101,7 @@ object PlanAudit {
         .delete(new org.apache.hadoop.fs.Path(d), true)
     clear(dir)
     val meta = IndexBuild.writeIndex(spark, docs, dir, SparkEntry.testConfig)
+    val cs = CorpusStats(meta.n_docs, meta.n_tokens, meta.max_doc_id)
 
     val sb = new StringBuilder
     sb ++= "# PLANS — physical-plan audit (generated by `graft.PlanAudit`)\n\n"
@@ -110,8 +111,10 @@ object PlanAudit {
     sb ++= "stats job partially aggregates map-side before its (tiny) shuffle;\n"
     sb ++= "(3) column pruning: scans read only the needed columns\n"
     sb ++= "(`ReadSchema`); (4) arithmetic stays in WholeStageCodegen spans;\n"
-    sb ++= "(5) a query batch restricts postings to its terms with one `InSet`\n"
-    sb ++= "filter (pushed into the parquet reader), no `BroadcastExchange`.\n\n"
+    sb ++= "(5) an uncached query batch restricts postings to its terms with one\n"
+    sb ++= "`InSet` filter (pushed into the parquet reader), no `BroadcastExchange`;\n"
+    sb ++= "(6) a batch over the cached serving layout runs no SQL operator: its\n"
+    sb ++= "one stage scores the persisted parts (RDD lineage below).\n\n"
 
     def dump(title: String, df: DataFrame): Unit = {
       sb ++= s"## $title\n\n```\n"
@@ -128,17 +131,23 @@ object PlanAudit {
         .where($"part_id".isin(partIds: _*) && $"term".isin("dup")).toDF())
 
     // 1b. a 1000-query batch's posting restriction (QueryEngine.whereTerms):
-    //     one InSet filter, pushed into the segments' parquet scan, and the
-    //     same filter over the handle's cached serving layout
-    val batchTerms = Bench.queryBatch(50).flatMap(_._2).distinct.sorted
+    //     one InSet filter, pushed into the segments' parquet scan. Over
+    //     the handle's cached serving layout the batch runs no Catalyst
+    //     plan: its one stage is the scorer over the persisted parts, whose
+    //     lineage is dumped after a first batch has filled the cache
+    val batch = Bench.queryBatch(50)
+    val batchTerms = batch.flatMap(_._2).distinct.sorted
     dump(s"1000-query batch term filter over term-partitioned segments (${batchTerms.size} terms, one InSet)",
       QueryEngine.whereTerms(IndexBuild.readSegments(spark, dir), batchTerms).toDF())
     val serveDir = "target/plan-audit-serve"
     clear(serveDir)
     IndexBuild.deriveDocPartitioned(spark, dir, serveDir)
     val handle = QueryEngine.openIndex(spark, serveDir)
-    dump(s"1000-query batch term filter over the cached serving layout (${batchTerms.size} terms, one InSet)",
-      QueryEngine.whereTerms(handle.served.get, batchTerms).toDF())
+    QueryEngine.runOnHandle(spark, handle, batch).collect()
+    sb ++= s"## 1000-query batch over the cached serving layout (RDD lineage of its one stage)\n\n```\n"
+    sb ++= QueryEngine.scoredBlocks(handle.served.get, QueryEngine.plan(cs, Map.empty, Nil))
+      .toDebugString
+    sb ++= "\n```\n\n"
     handle.close()
 
     // 2. segment-derived stats job (column-pruned scan, map-side partials):
@@ -198,7 +207,6 @@ object PlanAudit {
     //    scans each side once: `In ∨ StringStartsWith` pushed into both
     //    scans, the value cast applied after them
     Attrs.writeAttrs(spark, docs, dir, Seq("lang", "n_chars"))
-    val cs = CorpusStats(meta.n_docs, meta.n_tokens, meta.max_doc_id)
     dump("Attr filter-list restriction for lang IN ('es','de') (term pushdown on the sidecar)",
       QueryEngine.restrictToPlan(Attrs.allFilterRows(spark, dir),
         QueryEngine.plan(cs, Map.empty, Nil)

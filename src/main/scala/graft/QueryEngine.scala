@@ -1,29 +1,37 @@
 package graft
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Batched indexed query — the graft of the reference's two-phase routed
   * query (`TopWId` routing + `TopKId` scan, EP3 in SURVEY.md §3):
   *
   *  Phase 1 (driver, no job once the handle has memoized the batch's
-  *  terms): build the per-batch term table — idf per query term from the
-  *  stats table (the reference's per-query `DTable` LUT,
-  *  `src/index_ivfpq.cpp:554-568`), broadcast to the tasks — and, on a
-  *  term-partitioned index, the candidate partition set (driver
-  *  arithmetic: rare terms hash to exactly one (term,0) partition; salted
-  *  head terms enumerate their docId buckets).
+  *  terms): build the per-batch term table — idf per query term slot
+  *  from the stats table (the reference's per-query `DTable` LUT,
+  *  `src/index_ivfpq.cpp:554-568`), a few primitive arrays shipped in the
+  *  scoring stage's task binary — and, on a term-partitioned index, the
+  *  candidate partition set (driver arithmetic: rare terms hash to
+  *  exactly one (term,0) partition; salted head terms enumerate their
+  *  docId buckets).
   *
-  *  Phase 2 (one Spark job for the WHOLE query batch on the cached
-  *  serving layout, like `TopKId`'s single OMP pass): every batch runs
-  *  the same four steps of [[QueryEngine.runOnHandle]] — pick a posting
-  *  source, restrict it once to the batch's terms and filter lists,
-  *  re-bucket it into docId ranges if it is term-partitioned, and score
-  *  every query per bucket with the shared-contribution
-  *  [[QueryEngine.BucketTaat]] scorer, the tasks' per-query top-k blocks
-  *  merged in one `treeAggregate`. The nq·k hits come back in
-  *  (query_id, rank) order as a local relation, so collecting them runs
-  *  no further job.
+  *  Phase 2 (one Spark job of one stage for the WHOLE query batch on the
+  *  cached serving layout, like `TopKId`'s single OMP pass): the handle
+  *  persists one [[QueryEngine.ServingPart]] per partition — the posting
+  *  and filter lists of its docId buckets, grouped by term, blocks still
+  *  encoded — and each task reads only the batch's lists by key and
+  *  scores every query per bucket with the shared-contribution
+  *  [[QueryEngine.BucketTaat]] scorer; no Catalyst plan runs. Uncached
+  *  batches pick a posting source, restrict it once to the batch's terms
+  *  and filter lists, re-bucket it into docId ranges if it is
+  *  term-partitioned, and group it per task into the same parts. The
+  *  tasks' per-query top-k blocks merge in one `treeAggregate`; the nq·k
+  *  hits come back in (query_id, rank) order as a local relation, so
+  *  collecting them runs no further job.
   *
   * Scale note: one scorer serves every layout. Re-bucketing bounds
   * per-task memory by the range width, never by a head term's full
@@ -63,13 +71,21 @@ object QueryEngine {
         s"score_ms=${scoreNanos.value / 1000000} merge_ms=${mergeNanos.value / 1000000}"
   }
 
-  /** Broadcast query plan (the "DTable" of the batch). */
+  /** The batch's query plan (the "DTable" of the batch), shipped to every
+    * scoring task. Terms are numbered by slot and queries by index, so
+    * the scorer's per-bucket bookkeeping is array indexing:
+    * `terms(s)`/`idf(s)` per slot; `qids(q)` (ascending) and the slots of
+    * query q's terms `queryTerms(q)` (in query order, a repeated term
+    * repeated) per query index; `termQueries(s)` the ascending query
+    * indexes using slot s. */
   final case class Plan(
       k: Int,
       avgdl: Double,
-      termIdf: Map[String, Double],
-      termToQueries: Map[String, Seq[Int]],
-      queryTermSets: Map[Int, Seq[String]],
+      terms: Array[String],
+      idf: Array[Double],
+      qids: Array[Int],
+      queryTerms: Array[Array[Int]],
+      termQueries: Array[Array[Int]],
       bucketWidth: Long = 0L, // doc-partitioned batch scoring needs the geometry
       conjunctive: Boolean = false, // AND semantics: docs must match EVERY query term
       // attribute filter as virtual posting lists ([[Attrs]]): a doc may
@@ -105,19 +121,24 @@ object QueryEngine {
     * qualifies only if it contains EVERY distinct term of the query
     * (scored by the same BM25 sum over them). A query containing a term
     * absent from the corpus can match nothing — it is dropped from the
-    * plan here, so the scorer only ever needs the all-present term count. */
+    * plan here, so the scorer only ever needs the all-present term count.
+    * A query with no indexed term scores nothing and is left out; a
+    * query id given twice keeps its last term list. */
   def plan(cs: CorpusStats, termDf: Map[String, Long],
            queries: Seq[(Int, Seq[String])] = QuerySet.queryTerms,
            k: Int = QuerySet.K, conjunctive: Boolean = false): Plan = {
     val live =
       if (conjunctive) queries.filter(_._2.forall(termDf.contains)) else queries
-    val terms = live.flatMap(_._2).distinct.filter(termDf.contains)
-    val idf = terms.map(t => t -> Bm25.idf(cs.n_docs, termDf(t))).toMap
-    val t2q = live
-      .flatMap { case (qid, ts) => ts.filter(termDf.contains).map(t => (t, qid)) }
-      .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).sorted }
-    val qts = live.map { case (qid, ts) => qid -> ts.filter(termDf.contains) }.toMap
-    Plan(k, cs.avgdl, idf, t2q, qts, conjunctive = conjunctive)
+    val byQid = live.map { case (qid, ts) => qid -> ts.filter(termDf.contains) }
+      .toMap.filter(_._2.nonEmpty)
+    val qids = byQid.keys.toArray.sorted
+    val terms = qids.flatMap(byQid).distinct
+    val slotOf = terms.zipWithIndex.toMap
+    val queryTerms = qids.map(q => byQid(q).map(slotOf).toArray)
+    val users = Array.fill(terms.length)(Array.newBuilder[Int])
+    queryTerms.indices.foreach(q => queryTerms(q).distinct.foreach(users(_) += q))
+    Plan(k, cs.avgdl, terms, terms.map(t => Bm25.idf(cs.n_docs, termDf(t))),
+      qids, queryTerms, users.map(_.result()), conjunctive = conjunctive)
   }
 
   /** Carried per-query top-k under the frozen (score DESC, doc_id ASC)
@@ -199,6 +220,7 @@ object QueryEngine {
     // gathered per-call list references (grown on demand; no per-call alloc)
     private var gIdx = new Array[Array[Int]](8)
     private var gCs = new Array[Array[Long]](8)
+    private var gSlot = new Array[Int](8)
     // Attribute-filter mask, stamp-cleared like `scores`: one width-sized
     // int array reused across ALL of this task's buckets (a fresh
     // Array[Boolean] per bucket was alloc + zeroing the scorer otherwise
@@ -222,8 +244,8 @@ object QueryEngine {
     // addition is commutative/associative, so per-doc sums — tag bits
     // included — are bit-identical to the scatter path's.
     //
-    // Cache keyed by the idxs array's IDENTITY (each bucket decodes
-    // fresh arrays); [[beginBucket]] recycles the columns so per-task
+    // Cache keyed by the plan's term slot, valid for the lists bound by
+    // the last [[beginBucket]], which recycles the columns so per-task
     // memory stays O(batch terms · width), capped at [[MaxCols]] columns
     // (beyond it a term falls back to the old inline scatter).
     /** A densified term: the width-sized tagged contribution column plus
@@ -236,30 +258,48 @@ object QueryEngine {
     }
     private val ChunkShift = 8
     private val nChunks = (width + (1 << ChunkShift) - 1) >> ChunkShift
-    private val colCache = new java.util.IdentityHashMap[Array[Int], DenseCol]()
     private val colPool = new scala.collection.mutable.ArrayBuffer[DenseCol]()
     private val MaxCols = 256
     private var gCols = new Array[DenseCol](8)
-    // per-bucket contrib-DESC-sorted term lists for the TA pruned walk
-    // (packed (contrib << 32) | idx; one sort per term per bucket, shared
-    // by every query using the term)
-    private val sortCache = new java.util.IdentityHashMap[Array[Int], Array[Long]]()
+    // The bucket's lists by slot (null = the term has no postings here).
+    private var lIdx = new Array[Array[Int]](0)
+    private var lCs = new Array[Array[Long]](0)
+    // Per slot, this bucket's dense column and its contrib-DESC-sorted
+    // list for the TA pruned walk (packed (contrib << 32) | idx; one sort
+    // per term per bucket, shared by every query using the term), and
+    // the slots holding either.
+    private var colOf = new Array[DenseCol](0)
+    private var sortedOf = new Array[Array[Long]](0)
+    private val cachedSlots = new scala.collection.mutable.ArrayBuffer[Int]()
+    private var nCols = 0
 
-    /** Recycle the previous bucket's dense columns (call per bucket). */
-    def beginBucket(): Unit = {
-      val it = colCache.values().iterator()
-      while (it.hasNext) colPool += it.next()
-      colCache.clear()
-      sortCache.clear()
+    /** Bind the next bucket's term lists, indexed by plan slot (null when
+      * the term has no postings in the bucket), and recycle the previous
+      * bucket's cached columns and sorted lists. Call once per bucket,
+      * before its [[score]] calls. */
+    def beginBucket(idxs: Array[Array[Int]], cs: Array[Array[Long]]): Unit = {
+      cachedSlots.foreach { s =>
+        if (colOf(s) != null) colPool += colOf(s)
+        colOf(s) = null; sortedOf(s) = null
+      }
+      cachedSlots.clear()
+      nCols = 0
+      if (colOf.length < idxs.length) {
+        colOf = new Array[DenseCol](idxs.length)
+        sortedOf = new Array[Array[Long]](idxs.length)
+      }
+      lIdx = idxs; lCs = cs
     }
 
-    /** The term's (contrib, idx) pairs packed ASC-sorted (walked from the
+    /** The slot's (contrib, idx) pairs packed ASC-sorted (walked from the
       * tail for descending contribs). Packing is safe under the same
       * bound the [[DenseTag]] design already relies on: one contribution
       * is ≤ ~6.1e7 micros < 2^31, and idx < width fits the low 32 bits. */
-    private def sortedFor(idxs: Array[Int], cs: Array[Long]): Array[Long] = {
-      val got = sortCache.get(idxs)
+    private def sortedFor(slot: Int): Array[Long] = {
+      val got = sortedOf(slot)
       if (got != null) return got
+      val idxs = lIdx(slot)
+      val cs = lCs(slot)
       val n = idxs.length
       val packed = new Array[Long](n)
       var i = 0
@@ -268,20 +308,24 @@ object QueryEngine {
         i += 1
       }
       java.util.Arrays.sort(packed)
-      sortCache.put(idxs, packed)
+      if (colOf(slot) == null) cachedSlots += slot
+      sortedOf(slot) = packed
       packed
     }
 
-    private def colFor(idxs: Array[Int], cs: Array[Long]): DenseCol = {
-      val got = colCache.get(idxs)
+    private def colFor(slot: Int): DenseCol = {
+      val got = colOf(slot)
       if (got != null) return got
-      if (colCache.size >= MaxCols) return null
+      if (nCols >= MaxCols) return null
+      nCols += 1
       val e = if (colPool.nonEmpty) colPool.remove(colPool.length - 1)
               else new DenseCol(new Array[Long](width), new Array[Long](nChunks))
       val col = e.col
       val cmax = e.cmax
       java.util.Arrays.fill(col, 0L)
       java.util.Arrays.fill(cmax, 0L)
+      val idxs = lIdx(slot)
+      val cs = lCs(slot)
       var i = 0
       val n = idxs.length
       var bm = 0L
@@ -295,7 +339,8 @@ object QueryEngine {
         i += 1
       }
       e.bmax = bm
-      colCache.put(idxs, e)
+      if (sortedOf(slot) == null) cachedSlots += slot
+      colOf(slot) = e
       e
     }
 
@@ -307,14 +352,10 @@ object QueryEngine {
 
     @inline private def allowed(ix: Int): Boolean = maskStamp(ix) == curMask
 
-    /** termLists: per term of this bucket, (docIdx within bucket, contribMicro).
-      * Contract: every bucket decodes FRESH arrays. The dense-column and
-      * sorted-list caches are keyed by the idxs array's IDENTITY and live
-      * until the next [[beginBucket]], so two terms sharing one idxs
-      * array, or an array refilled in place within a bucket, would be
-      * scored from the first term's cached column.
-      * Scores every posting of `queryTerms` present in this bucket into
-      * `heap` (doc ids globalized with `base`). Returns touched-doc count.
+    /** Scores every posting of the query's term `slots` present in the
+      * bucket bound by [[beginBucket]] — per slot, (docIdx within bucket,
+      * contribMicro) — into `heap` (doc ids globalized with `base`).
+      * Returns touched-doc count.
       *
       * `required = 0` is disjunctive (OR) BM25; `required = m > 0` is
       * conjunctive — only docs matched by exactly m lists qualify (the
@@ -329,26 +370,28 @@ object QueryEngine {
       * hot loops stay branch-free) and filtered at the single selection
       * point of each shape; the unfiltered paths run the exact loops they
       * ran before (masked = false ⇒ the pre-filter code). */
-    def score(queryTerms: Seq[String],
-              termLists: scala.collection.Map[String, (Array[Int], Array[Long])],
-              base: Long, heap: QueryHeap, required: Int = 0,
+    def score(slots: Array[Int], base: Long, heap: QueryHeap, required: Int = 0,
               masked: Boolean = false): Int = {
       var nl = 0
       var total = 0
-      if (gIdx.length < queryTerms.size) {
-        gIdx = new Array[Array[Int]](queryTerms.size)
-        gCs = new Array[Array[Long]](queryTerms.size)
+      if (gIdx.length < slots.length) {
+        gIdx = new Array[Array[Int]](slots.length)
+        gCs = new Array[Array[Long]](slots.length)
+        gSlot = new Array[Int](slots.length)
       }
-      queryTerms.foreach { t =>
-        termLists.get(t) match {
-          case Some((idxs, cs)) =>
-            gIdx(nl) = idxs; gCs(nl) = cs; nl += 1; total += idxs.length
-          case None =>
+      var i = 0
+      while (i < slots.length) {
+        val s = slots(i)
+        val idxs = lIdx(s)
+        if (idxs != null) {
+          gIdx(nl) = idxs; gCs(nl) = lCs(s); gSlot(nl) = s
+          nl += 1; total += idxs.length
         }
+        i += 1
       }
       if (nl == 0) 0
       else if (required > 0 && nl < required) 0 // conj: a term absent here excludes the whole bucket
-      else if (nl == 1 && required <= 1) scoreSingle(gIdx(0), gCs(0), base, heap, masked)
+      else if (nl == 1 && required <= 1) scoreSingle(gSlot(0), base, heap, masked)
       else if (total >= width) scoreDense(nl, base, heap, required, masked)
       else if (required > 0) scoreSparseConj(nl, base, heap, required, masked)
       else scoreSparse(nl, base, heap, masked)
@@ -358,9 +401,10 @@ object QueryEngine {
       * Lists are docId-ascending, so the tight θ floor applies (see
       * [[QueryHeap.tightFloorFor]]): with a full heap strictly below this
       * bucket, acceptance is the single compare `contrib > kth`. */
-    private def scoreSingle(idxs: Array[Int], cs: Array[Long],
-                            base: Long, heap: QueryHeap,
+    private def scoreSingle(slot: Int, base: Long, heap: QueryHeap,
                             masked: Boolean): Int = {
+      val idxs = lIdx(slot)
+      val cs = lCs(slot)
       var i = 0
       val n = idxs.length
       if (heap.tightFloorFor(base)) {
@@ -373,7 +417,7 @@ object QueryEngine {
         // hybrid gate is needed — the walk never visits more entries
         // than the plain stream.
         val th = heap.kth
-        val packed = sortedFor(idxs, cs)
+        val packed = sortedFor(slot)
         var j = packed.length - 1
         if (!masked)
           while (j >= 0 && (packed(j) >>> 32) > th) {
@@ -416,7 +460,7 @@ object QueryEngine {
       var li = 0
       var allCols = true
       while (li < nl) {
-        val c = colFor(gIdx(li), gCs(li))
+        val c = colFor(gSlot(li))
         gCols(li) = c
         if (c == null) allCols = false
         li += 1
@@ -457,7 +501,7 @@ object QueryEngine {
           if (nl == 3 && bm2 > (if (tStar == 0) bm0 else bm1)) tStar = 2
           val thr = th - (bm0 + bm1 + bm2 - (if (tStar == 0) bm0 else if (tStar == 1) bm1 else bm2))
           if (thr >= 0) {
-            val packed = sortedFor(gIdx(tStar), gCs(tStar))
+            val packed = sortedFor(gSlot(tStar))
             // Hybrid gate: count survivors by binary search first; the
             // walk's random column accesses only beat the sequential
             // chunked scan when the surviving set is genuinely small
@@ -721,7 +765,7 @@ object QueryEngine {
     * with the cast after the scan, so each side of a segments ∪ sidecar
     * source is scanned once. */
   def restrictToPlan(postings: Dataset[PostingRow], plan: Plan): Dataset[PostingRow] = {
-    val terms = plan.termToQueries.keys.toSeq ++ plan.filterTerms
+    val terms = plan.terms.toSeq ++ plan.filterTerms
     plan.filterRange match {
       case Some((a, lo, hi)) =>
         val inAttr = col("term").startsWith(Attrs.attrPrefix(a))
@@ -742,8 +786,8 @@ object QueryEngine {
           effort: Option[EffortAccs] = None): DataFrame = {
     val p = if (plan.bucketWidth > 0) plan
             else plan.copy(bucketWidth = 4096L) // in-memory postings carry no geometry; any positive width is rank-safe
-    runDocPartitioned(spark,
-      rebucketByRange(restrictToPlan(postings, p), p.bucketWidth, Codec.BlockSize), p, effort)
+    runDocPartitioned(spark, servingParts(
+      rebucketByRange(restrictToPlan(postings, p), p.bucketWidth, Codec.BlockSize)), p, effort)
   }
 
   /** Candidate (term, bucket) pairs for partition pruning (phase-1
@@ -860,11 +904,76 @@ object QueryEngine {
     }
   }
 
-  /** The engine's one scorer, step 4 of every batch: score rows that a
-    * caller has already restricted to the plan ([[restrictToPlan]]) and
-    * bucketed by docId range (a doc-partitioned source, or rows after
-    * [[rebucketByRange]]). Each task holds ALL batch terms of its docId
-    * ranges, so it evaluates EVERY query of the batch against its
+  /** The posting rows of one partition grouped for scoring, blocks still
+    * encoded: per term, its rows by ascending docId bucket. Scoring terms
+    * and attr filter lists ([[Attrs]]) sit in separate maps, so a range
+    * predicate scans only filter lists. The handle's serving cache
+    * persists one per partition; uncached routes build one per task from
+    * their restricted rows ([[servingParts]]). Term-major, so a batch
+    * reads its lists with one lookup per term, however many buckets the
+    * partition holds. */
+  final class ServingPart(val postings: java.util.HashMap[String, TermRows],
+                          val filters: java.util.HashMap[String, TermRows])
+      extends Serializable {
+    /** The filter lists the plan's predicate requests: the IN terms by
+      * key, or every list [[Plan.isRequestedFilter]] admits when a range
+      * is in force. */
+    def requestedFilters(p: Plan): Array[TermRows] =
+      if (p.filterRange.isEmpty) p.filterTerms.flatMap(t => Option(filters.get(t))).toArray
+      else {
+        val b = Array.newBuilder[TermRows]
+        filters.forEach((t, l) => if (p.isRequestedFilter(t)) b += l)
+        b.result()
+      }
+  }
+
+  /** One term's rows in one partition: `buckets` ascending, `rows(i)` the
+    * rows of bucket `buckets(i)` by `min_doc` (one row per (term, bucket)
+    * normally; merged inputs may contribute several). */
+  final class TermRows(val buckets: Array[Int], val rows: Array[Array[PostingRow]])
+      extends Serializable
+
+  object ServingPart {
+    /** Group one partition's rows; all rows of a bucket must sit in it. */
+    def apply(it: Iterator[PostingRow]): ServingPart = {
+      val byTerm = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[PostingRow]]()
+      it.foreach(r => byTerm.computeIfAbsent(r.term, _ => scala.collection.mutable.ArrayBuffer.empty) += r)
+      val postings = new java.util.HashMap[String, TermRows]()
+      val filters = new java.util.HashMap[String, TermRows]()
+      byTerm.forEach { (t, rs) =>
+        val sorted = rs.toArray.sortWith((a, b) =>
+          a.bucket < b.bucket || (a.bucket == b.bucket && a.min_doc < b.min_doc))
+        val runs = Array.newBuilder[Array[PostingRow]]
+        var i = 0
+        while (i < sorted.length) {
+          var j = i + 1
+          while (j < sorted.length && sorted(j).bucket == sorted(i).bucket) j += 1
+          runs += sorted.slice(i, j)
+          i = j
+        }
+        val rows = runs.result()
+        (if (Attrs.isFilterTerm(t)) filters else postings)
+          .put(t, new TermRows(rows.map(_.head.bucket), rows))
+      }
+      new ServingPart(postings, filters)
+    }
+  }
+
+  /** Steps 3-4 of an uncached batch: group rows that a caller has
+    * restricted to the plan ([[restrictToPlan]]) and bucketed by docId
+    * range (a doc-partitioned source, or rows after [[rebucketByRange]])
+    * into one [[ServingPart]] per task, after one shuffle by bucket. The
+    * pruned posting set is compact parquet — a plain scan packs it into
+    * very few input splits (maxPartitionBytes), serializing the scoring
+    * work; the shuffle spreads the buckets across the cluster and moves
+    * only the pruned, compressed lists. */
+  def servingParts(rows: Dataset[PostingRow]): RDD[ServingPart] =
+    rows.repartition(col("bucket")).rdd.mapPartitions(it => Iterator.single(ServingPart(it)))
+
+  /** The engine's one scorer, the last step of every batch: score bucket-
+    * grouped parts — the handle's cached serving layout, or an uncached
+    * route's [[servingParts]]. Each task holds ALL batch terms of its
+    * docId ranges, so it evaluates EVERY query of the batch against its
     * partition once (zero posting duplication). Per (query, bucket) the
     * shared-contribution [[BucketTaat]] scorer, with its block-max bucket
     * skip, chunk-max skip and TA walk, fills the task's per-query heaps;
@@ -875,27 +984,14 @@ object QueryEngine {
     * of a disjoint union = top-k of per-part top-k's under the frozen
     * total order, whatever the merge tree.
     *
-    * `bucketLocal`: every bucket's rows already sit in one input
-    * partition (the handle's cached serving layout), so no shuffle;
-    * otherwise the rows are repartitioned by bucket first.
-    *
     * The hits come back in (query_id, rank) order as a local relation:
     * no sort, and collecting them runs no job. */
-  def runDocPartitioned(spark: SparkSession, rows: Dataset[PostingRow],
-                        plan: Plan, effort: Option[EffortAccs] = None,
-                        bucketLocal: Boolean = false): DataFrame = {
+  def runDocPartitioned(spark: SparkSession, parts: RDD[ServingPart],
+                        plan: Plan, effort: Option[EffortAccs] = None): DataFrame = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(plan)
     val k = plan.k
     require(plan.bucketWidth > 0, "doc-partitioned plan needs bucketWidth from meta")
-    val spread = if (bucketLocal) rows else
-      // The pruned posting set is compact parquet — a plain scan packs it
-      // into very few input splits (maxPartitionBytes), serializing the
-      // scoring work. Spread buckets across the cluster; the shuffle moves
-      // only the pruned, compressed lists.
-      rows.repartition($"bucket")
-    val blocks = spread.rdd.mapPartitions(it =>
-      Iterator.single(scorePartition(bc.value, it, effort)))
+    val blocks = scoredBlocks(parts, plan, effort)
     val merge = (a: TopK.Block, b: TopK.Block) => {
       val t0 = System.nanoTime()
       val m = TopK.merge(a, b, k)
@@ -909,6 +1005,13 @@ object QueryEngine {
     spark.createDataset(hits).toDF()
   }
 
+  /** The batch's scoring stage: one [[scorePartition]] block per part.
+    * The plan rides in the task closure, which Spark ships once per
+    * stage as the stage's task binary. */
+  def scoredBlocks(parts: RDD[ServingPart], plan: Plan,
+                   effort: Option[EffortAccs] = None): RDD[TopK.Block] =
+    parts.map(scorePartition(plan, _, effort))
+
   /** `treeAggregate` depth for merging `nTasks` blocks: 1 (the driver
     * merges every block) up to a fan-in of 64, else ⌈log₆₄ nTasks⌉. */
   def mergeDepth(nTasks: Int): Int = {
@@ -919,138 +1022,179 @@ object QueryEngine {
   }
 
   /** The per-partition body of [[runDocPartitioned]]: score every query
-    * of `p` over one partition's rows (all rows of a bucket must sit in
-    * the same partition) and return the partition's top-k block: one
-    * bounded list per query that has a candidate here. */
-  def scorePartition(p: Plan, it: Iterator[PostingRow],
+    * of `p` over one grouped part and return the part's top-k block: one
+    * bounded list per query that has a candidate here. Reads only the
+    * plan's lists, by key: its scoring terms and the filter lists its
+    * predicate requests ([[ServingPart.requestedFilters]]). */
+  def scorePartition(p: Plan, part: ServingPart,
                      effort: Option[EffortAccs]): TopK.Block = {
     val w = p.bucketWidth.toInt
-    // bucket -> term -> rows (one row per (term,bucket) normally;
-    // merged inputs may contribute several)
-    val byBucket = scala.collection.mutable.Map
-      .empty[Int, scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[PostingRow]]]
-    it.foreach { r =>
-      byBucket.getOrElseUpdate(r.bucket, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(r.term, scala.collection.mutable.ArrayBuffer.empty) += r
+    val nS = p.terms.length
+    // entries 0 until nS are the plan's term slots, then the requested
+    // filter lists; null = no rows in this part
+    val lists = p.terms.map(part.postings.get) ++ part.requestedFilters(p)
+    // (bucket, entry) pairs sorted: the buckets to visit, ascending, each
+    // with its entries (scoring slots before filter lists)
+    var nPairs = 0
+    lists.foreach(l => if (l != null) nPairs += l.buckets.length)
+    val pairs = new Array[Long](nPairs)
+    var o = 0
+    var e = 0
+    while (e < lists.length) {
+      val l = lists(e)
+      if (l != null) l.buckets.foreach { b => pairs(o) = (b.toLong << 32) | e; o += 1 }
+      e += 1
     }
+    java.util.Arrays.sort(pairs)
+    @inline def entry(x: Int): Int = (pairs(x) & 0xffffffffL).toInt
+    // each entry's next bucket in its TermRows (pairs visit them in order)
+    val cur = new Array[Int](lists.length)
     val taat = new BucketTaat(w, p.k)
     val prof = effort.isDefined
-    // Per-task running top-k per query: the threshold CARRIES across
-    // this task's buckets, enabling the block-max skip below (phase
-    // profiling at 8M docs: TAAT accumulation was 96% of query task
-    // time; decode+contrib ~3%). Rank-identity is exact: a bucket is
+    // Per-task running top-k per query index: the threshold CARRIES
+    // across this task's buckets, enabling the block-max skip below
+    // (phase profiling at 8M docs: TAAT accumulation was 96% of query
+    // task time; decode+contrib ~3%). Rank-identity is exact: a bucket is
     // skipped only when its score upper bound is STRICTLY below the
-    // query's current k-th score, i.e. when every insert from it
-    // would provably no-op under the frozen (score DESC, doc_id ASC)
-    // order — the reference's block-max pruning argument
+    // query's current k-th score, i.e. when every insert from it would
+    // provably no-op under the frozen (score DESC, doc_id ASC) order —
+    // the reference's block-max pruning argument
     // (`src/index_ivf.cpp:220-234` partial_sort + threshold).
-    val heaps = scala.collection.mutable.HashMap.empty[Int, QueryHeap]
+    val heaps = new Array[QueryHeap](p.qids.length)
+    // this bucket's decoded lists and max contribs by slot, and the
+    // queries using them (stamped per bucket)
+    val bIdx = new Array[Array[Int]](nS)
+    val bCs = new Array[Array[Long]](nS)
+    val maxC = new Array[Long](nS)
+    val qSeen = new Array[Int](p.qids.length)
+    val qHere = new Array[Int](p.qids.length)
+    var stamp = 0
+    val masked = p.filterActive
     var decodeNs = 0L; var contribNs = 0L; var scoreNs = 0L
-    // ASCENDING bucket order: results are order-independent (the
-    // merged top-k set is unique under the frozen total order), but
-    // ascending docId ranges make the tight θ floor
-    // ([[QueryHeap.tightFloorFor]]) true for every bucket after each
-    // query's heap first fills — the earliest (lowest-docId) ties win
-    // immediately and every later bucket's ties are provably
-    // rejectable with one compare. Also makes task execution
-    // deterministic (HashMap order was arbitrary).
-    byBucket.toSeq.sortBy(_._1).foreach { case (bucket, termRows) =>
+    // ASCENDING bucket order: results are order-independent (the merged
+    // top-k set is unique under the frozen total order), but ascending
+    // docId ranges make the tight θ floor ([[QueryHeap.tightFloorFor]])
+    // true for every bucket after each query's heap first fills — the
+    // earliest (lowest-docId) ties win immediately and every later
+    // bucket's ties are provably rejectable with one compare.
+    var i = 0
+    while (i < nPairs) {
+      val bucket = (pairs(i) >> 32).toInt
+      var j = i
+      while (j < nPairs && (pairs(j) >> 32).toInt == bucket) j += 1
       val base = bucket.toLong * w
-      taat.beginBucket() // recycle the previous bucket's dense columns
-      // Attribute filter: fold this bucket's virtual filter lists
-      // ([[Attrs]] rows riding the same posting stream) into the
-      // scorer's stamp-cleared allowed-offset mask — OR across the
-      // predicate's values. A filtered plan with NO filter row here
-      // means no doc of this bucket matches the predicate: skip the
-      // bucket outright.
-      val masked = p.filterActive
+      // Attribute filter: fold this bucket's requested filter lists into
+      // the scorer's stamp-cleared allowed-offset mask — OR across the
+      // predicate's values. A filtered plan with NO filter row here means
+      // no doc of this bucket matches the predicate: skip the bucket.
       var anyAllowed = !masked
       if (masked) {
         taat.beginMask()
-        termRows.foreach { case (t, rows) =>
-          if (p.isRequestedFilter(t))
-            rows.foreach(_.blocks.foreach { b =>
-              val (ds, _, _) = Codec.decodeBlock(b)
-              var i = 0
-              while (i < ds.length) {
-                taat.allow((ds(i) - base).toInt)
-                i += 1
-              }
-              anyAllowed ||= ds.length > 0
-            })
+        var x = i
+        while (x < j) {
+          val fe = entry(x)
+          if (fe >= nS) lists(fe).rows(cur(fe)).foreach(_.blocks.foreach { b =>
+            val (ds, _, _) = Codec.decodeBlock(b)
+            var d = 0
+            while (d < ds.length) {
+              taat.allow((ds(d) - base).toInt)
+              d += 1
+            }
+            anyAllowed ||= ds.length > 0
+          })
+          x += 1
         }
       }
       if (anyAllowed) {
-      // decode each term's postings ONCE; precompute micro-contribs
-      // (and the term's max contrib = its block-max bound) ONCE,
-      // shared by every query using the term
-      var bucketBlocks = 0L
-      val maxC = scala.collection.mutable.HashMap.empty[String, Long]
-      val termLists: Map[String, (Array[Int], Array[Long])] =
-        termRows.iterator.filter(e => !Attrs.isFilterTerm(e._1))
-          .map { case (t, rows) =>
-          val idf = p.termIdf(t)
-          val n = rows.iterator.map(_.n).sum.toInt
-          val idxs = new Array[Int](n)
-          val cs = new Array[Long](n)
-          var o = 0
-          var mx = 0L
-          rows.sortBy(_.min_doc).foreach { r =>
-            bucketBlocks += r.blocks.size
-            r.blocks.foreach { b =>
-              val t0 = if (prof) System.nanoTime() else 0L
-              val (ds, tfs, dls) = Codec.decodeBlock(b)
-              val t1 = if (prof) System.nanoTime() else 0L
-              var i = 0
-              while (i < ds.length) {
-                idxs(o) = (ds(i) - base).toInt
-                val c = Bm25.contribMicro(idf, tfs(i).toLong, dls(i).toLong, p.avgdl)
-                cs(o) = c
-                if (c > mx) mx = c
-                o += 1; i += 1
+        // decode each term's postings ONCE; precompute micro-contribs (and
+        // the term's max contrib = its block-max bound) ONCE, shared by
+        // every query using the term
+        var bucketBlocks = 0L
+        var nHere = 0
+        stamp += 1
+        var x = i
+        while (x < j) {
+          val s = entry(x)
+          if (s < nS) {
+            val rows = lists(s).rows(cur(s))
+            val idf = p.idf(s)
+            var n = 0
+            rows.foreach(n += _.n.toInt)
+            val idxs = new Array[Int](n)
+            val cs = new Array[Long](n)
+            var oi = 0
+            var mx = 0L
+            rows.foreach { r =>
+              bucketBlocks += r.blocks.size
+              r.blocks.foreach { b =>
+                val t0 = if (prof) System.nanoTime() else 0L
+                val (ds, tfs, dls) = Codec.decodeBlock(b)
+                val t1 = if (prof) System.nanoTime() else 0L
+                var d = 0
+                while (d < ds.length) {
+                  idxs(oi) = (ds(d) - base).toInt
+                  val c = Bm25.contribMicro(idf, tfs(d).toLong, dls(d).toLong, p.avgdl)
+                  cs(oi) = c
+                  if (c > mx) mx = c
+                  oi += 1; d += 1
+                }
+                if (prof) { decodeNs += t1 - t0; contribNs += System.nanoTime() - t1 }
               }
-              if (prof) { decodeNs += t1 - t0; contribNs += System.nanoTime() - t1 }
+            }
+            bIdx(s) = idxs; bCs(s) = cs; maxC(s) = mx
+            p.termQueries(s).foreach { q =>
+              if (qSeen(q) != stamp) { qSeen(q) = stamp; qHere(nHere) = q; nHere += 1 }
             }
           }
-          maxC(t) = mx
-          t -> (idxs, cs)
-        }.toMap
-      val queriesHere = termRows.keysIterator
-        .flatMap(t => p.termToQueries.getOrElse(t, Nil)).toSet
-      // blocksTotal = naive per-query decode cost; blocksDecoded = the
-      // actual once-per-bucket decodes — the ratio is the sharing win
-      effort.foreach { a =>
-        a.blocksTotal.add(bucketBlocks * queriesHere.size)
-        a.blocksDecoded.add(bucketBlocks)
-      }
-      queriesHere.foreach { qid =>
-        val heap = heaps.getOrElseUpdate(qid, new QueryHeap(p.k))
-        var bound = 0L
-        p.queryTermSets(qid).foreach(t => bound += maxC.getOrElse(t, 0L))
-        if (heap.n == p.k && bound < heap.kth) {
-          effort.foreach(_.bucketsSkipped.add(1L)) // provably fruitless
-        } else {
-          val t0 = if (prof) System.nanoTime() else 0L
-          val req = if (p.conjunctive) p.queryTermSets(qid).size else 0
-          val nTouched =
-            taat.score(p.queryTermSets(qid), termLists, base, heap, req, masked)
-          effort.foreach { a =>
-            scoreNs += System.nanoTime() - t0
-            a.wandCalls.add(1L); a.docsScored.add(nTouched.toLong)
+          x += 1
+        }
+        // blocksTotal = naive per-query decode cost; blocksDecoded = the
+        // actual once-per-bucket decodes — the ratio is the sharing win
+        effort.foreach { a =>
+          a.blocksTotal.add(bucketBlocks * nHere)
+          a.blocksDecoded.add(bucketBlocks)
+        }
+        taat.beginBucket(bIdx, bCs)
+        var qi = 0
+        while (qi < nHere) {
+          val q = qHere(qi)
+          if (heaps(q) == null) heaps(q) = new QueryHeap(p.k)
+          val heap = heaps(q)
+          val slots = p.queryTerms(q)
+          var bound = 0L
+          slots.foreach(bound += maxC(_))
+          if (heap.n == p.k && bound < heap.kth) {
+            effort.foreach(_.bucketsSkipped.add(1L)) // provably fruitless
+          } else {
+            val t0 = if (prof) System.nanoTime() else 0L
+            val req = if (p.conjunctive) slots.length else 0
+            val nTouched = taat.score(slots, base, heap, req, masked)
+            effort.foreach { a =>
+              scoreNs += System.nanoTime() - t0
+              a.wandCalls.add(1L); a.docsScored.add(nTouched.toLong)
+            }
           }
+          qi += 1
+        }
+        x = i
+        while (x < j) {
+          val s = entry(x)
+          if (s < nS) { bIdx(s) = null; bCs(s) = null; maxC(s) = 0L }
+          x += 1
         }
       }
-      } // anyAllowed
+      while (i < j) { cur(entry(i)) += 1; i += 1 }
     }
     effort.foreach { a =>
       a.decodeNanos.add(decodeNs); a.contribNanos.add(contribNs)
       a.scoreNanos.add(scoreNs)
     }
-    // one block per task: the heaps of the queries with a candidate here
-    val live = heaps.toSeq.filter(_._2.n > 0).sortBy(_._1)
-    new TopK.Block(live.map(_._1).toArray, live.scanLeft(0)(_ + _._2.n).toArray,
-      live.flatMap { case (_, h) => h.hDoc.take(h.n) }.toArray,
-      live.flatMap { case (_, h) => h.hScore.take(h.n) }.toArray)
+    // one block per task: the heaps of the queries with a candidate here,
+    // in ascending query id
+    val live = p.qids.indices.filter(q => heaps(q) != null && heaps(q).n > 0)
+    new TopK.Block(live.map(p.qids).toArray, live.scanLeft(0)(_ + heaps(_).n).toArray,
+      live.flatMap(q => heaps(q).hDoc.take(heaps(q).n)).toArray,
+      live.flatMap(q => heaps(q).hScore.take(heaps(q).n)).toArray)
   }
 
   /** An OPENED index — the reference's LoadIndex analog
@@ -1059,11 +1203,16 @@ object QueryEngine {
     * schema resolution are driver-side serial work; re-doing them per
     * query batch was ~0.3-0.5 s of the measured ~2 s serial section of
     * the batched query path). Query batches against a handle pay only
-    * their own term-stats lookup + the scoring job. */
+    * their own term-stats lookup + the scoring job.
+    *
+    * `served` is the serving cache of a doc-partitioned index opened
+    * with `cacheServing`: one persisted [[ServingPart]] per partition,
+    * which a cached batch scores with no Catalyst plan, restriction or
+    * shuffle of its own. */
   final case class IndexHandle(dir: String, meta: IndexBuild.Meta,
                                segments: Dataset[PostingRow],
                                stats: DataFrame,
-                               served: Option[Dataset[PostingRow]] = None,
+                               served: Option[RDD[ServingPart]] = None,
                                // the serving cache carries the attr
                                // sidecar's virtual filter lists (false for
                                // a sidecar written AFTER the open — then
@@ -1094,12 +1243,17 @@ object QueryEngine {
   }
 
   /** Open an index for querying. For a DOC-partitioned serving index the
-    * handle caches the bucket-partitioned posting layout in executor
-    * memory (spilling to disk) — the reference's LoadIndex-into-RAM
-    * serving shape (`src/index_ivfpq.cpp:326-348`): the first batch pays
-    * one scan+shuffle to materialize it; every later batch scores
-    * straight from the cache. Without this, EVERY batch re-paid a full
-    * scan + shuffle of the batch's posting mass (at bench scale: 627 MB
+    * handle caches the serving layout in executor memory (spilling to
+    * disk) — the reference's LoadIndex-into-RAM serving shape, lists kept
+    * by list number (`src/index_ivfpq.cpp:326-348`): the segments ∪
+    * sidecar rows, shuffled by bucket and grouped into one
+    * [[ServingPart]] per partition, blocks still encoded. The first
+    * batch pays one scan+shuffle to materialize it; every later batch
+    * scores straight from the cache, reading only its own terms' lists
+    * by key. The shuffle is an RDD-level one (a `ShuffledRDD` keyed by
+    * bucket), so the persisted RDD's lineage inside a batch's stage holds
+    * no SQL operator. Without the cache, EVERY batch re-paid a full scan
+    * + shuffle of the batch's posting mass (at bench scale: 627 MB
     * and the single worst-scaling stage of the whole query path, since
     * its cost is mostly fixed I/O wait, which the high-parallelism point
     * cannot speed up). Callers that query once should pass
@@ -1112,14 +1266,21 @@ object QueryEngine {
     // An attribute sidecar (virtual filter lists, [[Attrs]]) loads into
     // the SAME cache: filter rows bucket like postings and are tiny beside
     // them (one docId per doc per attr vs one posting per token), so
-    // filtered batches serve from memory too. Unfiltered batches drop
-    // them in their term restriction as usual.
+    // filtered batches serve from memory too. Unfiltered batches never
+    // read them.
     val sidecar =
       if (cache && Attrs.hasAttrs(spark, dir)) Some(Attrs.readSidecar(spark, dir)) else None
-    val served = if (!cache) None else
-      Some(sidecar.fold(segments)(sc => segments.union(sc.rows))
-        .repartition(col("bucket"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val served = if (!cache) None else {
+      val rows = sidecar.fold(segments)(sc => segments.union(sc.rows)).rdd.keyBy(_.bucket)
+      val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      // Kryo for this one shuffle of posting objects: under Java
+      // serialization the cache-filling first batch took twice as long
+      Some(new ShuffledRDD[Int, PostingRow, PostingRow](rows, new HashPartitioner(nParts))
+        .setSerializer(new KryoSerializer(spark.sparkContext.getConf))
+        .mapPartitions(it => Iterator.single(ServingPart(it.map(_._2))))
+        .setName(s"serving layout $dir")
+        .persist(StorageLevel.MEMORY_AND_DISK))
+    }
     val h = IndexHandle(dir, meta, segments, IndexBuild.readTermStats(spark, dir),
       served, attrsCached = sidecar.isDefined)
     sidecar.foreach(h.sidecarMemo.set)
@@ -1141,14 +1302,16 @@ object QueryEngine {
       queries, k, effort, conjunctive, filter, rangeFilter)
 
   /** One query batch against an opened index (load once, query many —
-    * the reference's test-harness shape), in four steps: (1) source —
-    * the handle's cache when it can answer the batch (no filter, or it
-    * holds the sidecar's lists), else the segments ([[prunedPartIds]]
-    * narrows a term-partitioned index) unioned with the sidecar's filter
-    * lists when a filter is on; (2) [[restrictToPlan]]; (3)
+    * the reference's test-harness shape). The handle's cache, when it can
+    * answer the batch (no filter, or it holds the sidecar's lists), goes
+    * straight to [[runDocPartitioned]]: no Catalyst plan, no restriction,
+    * no shuffle — one job of one stage. Otherwise: (1) source — the
+    * segments ([[prunedPartIds]] narrows a term-partitioned index)
+    * unioned with the sidecar's filter lists when a filter is on; (2)
+    * [[restrictToPlan]], the one storage-pruning step; (3)
     * [[rebucketByRange]] for term-partitioned segments, the one source
-    * not docId-range bucketed already; (4) [[runDocPartitioned]], with no
-    * shuffle on the cache.
+    * not docId-range bucketed already; (4) [[servingParts]] and
+    * [[runDocPartitioned]].
     *
     * `filter = Some((attr, values))` restricts results to docs whose
     * persisted attribute (an [[Attrs]] sidecar next to the index) is IN
@@ -1171,9 +1334,9 @@ object QueryEngine {
     // what empty filterTerms would silently mean downstream. An empty
     // RANGE (lo > hi) needs no special case: it selects zero virtual
     // lists, so every bucket folds an empty mask and admits nothing.
-    if (filter.exists(_._2.isEmpty))
-      return spark.emptyDataset[Hit].toDF()
-        .select($"query_id", $"rank", $"doc_id", $"score_micro")
+    def noHits = spark.emptyDataset[Hit].toDF()
+      .select($"query_id", $"rank", $"doc_id", $"score_micro")
+    if (filter.exists(_._2.isEmpty)) return noHits
     val sidecar = filter.map(_._1).orElse(rangeFilter.map(_._1)).map { a =>
       val sc = h.sidecar(spark)
       sc.requireAttr(a)
@@ -1203,18 +1366,18 @@ object QueryEngine {
     val p = plan(cs, termDf, queries, k, conjunctive)
       .copy(bucketWidth = meta.bucket_width, filterTerms = fTerms,
         filterRange = rangeFilter)
-    val cached = h.served.filter(_ => sidecar.isEmpty || h.attrsCached)
-    val source = cached.getOrElse {
+    // a batch none of whose terms the index holds has no hits: no job
+    if (p.qids.isEmpty) return noHits
+    val parts = h.served.filter(_ => sidecar.isEmpty || h.attrsCached).getOrElse {
       val segs =
         if (meta.doc_partitioned) h.segments
         else prunedPartIds(meta, termMaxBucket, queries)
           .fold(h.segments)(ids => h.segments.where($"part_id".isin(ids: _*)))
-      sidecar.fold(segs)(sc => segs.union(sc.rows))
+      val restricted = restrictToPlan(sidecar.fold(segs)(sc => segs.union(sc.rows)), p)
+      servingParts(
+        if (meta.doc_partitioned) restricted
+        else rebucketByRange(restricted, meta.bucket_width, meta.block_size))
     }
-    val restricted = restrictToPlan(source, p)
-    val rows =
-      if (cached.isDefined || meta.doc_partitioned) restricted
-      else rebucketByRange(restricted, meta.bucket_width, meta.block_size)
-    runDocPartitioned(spark, rows, p, effort, bucketLocal = cached.isDefined)
+    runDocPartitioned(spark, parts, p, effort)
   }
 }

@@ -14,6 +14,19 @@ import scala.util.Random
   * exist exactly so those stay distinguishable from untouched slots). */
 class BucketTaatSpec extends AnyFunSuite {
 
+  /** Score one query over one bucket given by string-keyed lists: bind
+    * the lists by slot (the order of the bucket's and the query's terms),
+    * then score the query's slots. */
+  private def scoreBucket(taat: QueryEngine.BucketTaat, queryTerms: Seq[String],
+                          lists: Map[String, (Array[Int], Array[Long])], base: Long,
+                          heap: QueryEngine.QueryHeap, required: Int = 0,
+                          masked: Boolean = false): Int = {
+    val terms = (lists.keys ++ queryTerms).toSeq.distinct
+    taat.beginBucket(terms.map(lists.get(_).map(_._1).orNull).toArray,
+      terms.map(lists.get(_).map(_._2).orNull).toArray)
+    taat.score(queryTerms.map(terms.indexOf(_)).toArray, base, heap, required, masked)
+  }
+
   /** One random scenario: `nBuckets` buckets of `width` docs, a global
     * term universe with per-(term, bucket) posting lists, one query. */
   private def runScenario(rnd: Random, width: Int, k: Int, nBuckets: Int,
@@ -51,7 +64,7 @@ class BucketTaatSpec extends AnyFunSuite {
     val taat = new QueryEngine.BucketTaat(width, k)
     val heap = new QueryEngine.QueryHeap(k)
     buckets.foreach { case (base, lists) =>
-      taat.score(queryTerms, lists, base, heap)
+      scoreBucket(taat, queryTerms, lists, base, heap)
     }
     assert(heap.toCands == naive,
       s"width=$width k=$k q=$queryTerms got=${heap.toCands} want=$naive")
@@ -114,7 +127,7 @@ class BucketTaatSpec extends AnyFunSuite {
     val taat = new QueryEngine.BucketTaat(width, k)
     val heap = new QueryEngine.QueryHeap(k)
     buckets.foreach { case (base, lists) =>
-      taat.score(queryTerms, lists, base, heap, required = m)
+      scoreBucket(taat, queryTerms, lists, base, heap, required = m)
     }
     assert(heap.toCands == naive,
       s"CONJ width=$width k=$k q=$queryTerms got=${heap.toCands} want=$naive")
@@ -143,16 +156,16 @@ class BucketTaatSpec extends AnyFunSuite {
     val heap = new QueryEngine.QueryHeap(k)
     val t = "t"
     // bucket 0: scores 10, 9, 8 at docs 0,1,2
-    taat.score(Seq(t), Map(t -> (Array(0, 1, 2), Array(10L, 9L, 8L))), 0L, heap)
+    scoreBucket(taat, Seq(t), Map(t -> (Array(0, 1, 2), Array(10L, 9L, 8L))), 0L, heap)
     assert(heap.kth == 8L)
     // bucket 1 (base 8): doc 8 scores 8 (tie with k-th, LARGER doc id —
     // must lose), doc 9 scores 9 (tie with 2nd, larger id — must slot
     // after doc 1), doc 10 scores 7 (below θ — rejected)
-    taat.score(Seq(t), Map(t -> (Array(0, 1, 2), Array(8L, 9L, 7L))), 8L, heap)
+    scoreBucket(taat, Seq(t), Map(t -> (Array(0, 1, 2), Array(8L, 9L, 7L))), 8L, heap)
     assert(heap.toCands == Seq(TopK.Cand(0, 10), TopK.Cand(1, 9), TopK.Cand(9, 9)))
     // bucket 2 (base 16): doc 16 ties the NEW k-th (9) with smaller... no:
     // larger id — rejected; doc 17 beats everything
-    taat.score(Seq(t), Map(t -> (Array(0, 1), Array(9L, 11L))), 16L, heap)
+    scoreBucket(taat, Seq(t), Map(t -> (Array(0, 1), Array(9L, 11L))), 16L, heap)
     assert(heap.toCands == Seq(TopK.Cand(17, 11), TopK.Cand(0, 10), TopK.Cand(1, 9)))
   }
 
@@ -165,7 +178,7 @@ class BucketTaatSpec extends AnyFunSuite {
     val lists = Map(
       "a" -> (Array(0, 1, 2, 3), Array(0L, 0L, 0L, 0L)),
       "b" -> (Array(0, 1, 2, 3), Array(0L, 0L, 0L, 0L)))
-    taat.score(Seq("a", "b"), lists, 0L, heap)
+    scoreBucket(taat, Seq("a", "b"), lists, 0L, heap)
     // all four docs are genuine 0-score candidates, ordered by doc id
     assert(heap.toCands == (0 until 4).map(d => TopK.Cand(d.toLong, 0L)))
   }
@@ -178,18 +191,58 @@ class BucketTaatSpec extends AnyFunSuite {
     // bucket 0: only offsets 0 and 2 allowed
     val h0 = new QueryEngine.QueryHeap(4)
     taat.beginMask(); taat.allow(0); taat.allow(2)
-    taat.score(Seq(t), lists, 0L, h0, masked = true)
+    scoreBucket(taat, Seq(t), lists, 0L, h0, masked = true)
     assert(h0.toCands == Seq(TopK.Cand(0, 4), TopK.Cand(2, 2)))
     // bucket 1 reuses the SAME scorer: a fresh mask allowing only offset 1
     // must not leak bucket 0's allows (the reused array is stamp-cleared)
     val h1 = new QueryEngine.QueryHeap(4)
     taat.beginMask(); taat.allow(1)
-    taat.score(Seq(t), lists, 4L, h1, masked = true)
+    scoreBucket(taat, Seq(t), lists, 4L, h1, masked = true)
     assert(h1.toCands == Seq(TopK.Cand(5, 3)))
     // and masked=false ignores the mask entirely
     val h2 = new QueryEngine.QueryHeap(4)
-    taat.score(Seq(t), lists, 8L, h2)
+    scoreBucket(taat, Seq(t), lists, 8L, h2)
     assert(h2.toCands.map(_.doc_id) == Seq(8L, 9L, 10L, 11L))
+  }
+
+  test("slot-keyed caches: two terms sharing one idxs array keep their own contributions") {
+    // The dense-column and sorted-list caches are keyed by term slot. Here
+    // slots 0 and 1 of every bucket share ONE idxs array instance with
+    // different contributions; a cache keyed by the array's identity would
+    // score the second term from the first term's column or sorted list.
+    val rnd = new Random(7)
+    (0 until 200).foreach { _ =>
+      val width = 4 + rnd.nextInt(40)
+      val k = 1 + rnd.nextInt(4)
+      def list(n: Int) = rnd.shuffle((0 until width).toList).take(n).sorted.toArray
+      val buckets = (0 until 2 + rnd.nextInt(3)).map { b =>
+        // near-full lists, so multi-term queries take the dense path
+        val shared = list(width - rnd.nextInt(math.max(1, width / 4)))
+        val own = list(width - rnd.nextInt(math.max(1, width / 4)))
+        (b.toLong * width, Array(shared, shared, own),
+          Array(Array.fill(shared.length)(rnd.nextInt(10).toLong),
+            Array.fill(shared.length)(10L + rnd.nextInt(10)),
+            Array.fill(own.length)(rnd.nextInt(20).toLong)))
+      }
+      val queries = Seq(Array(0), Array(1), Array(0, 2), Array(1, 2), Array(0, 1), Array(1, 0, 2))
+      val taat = new QueryEngine.BucketTaat(width, k)
+      val heaps = queries.map(_ => new QueryEngine.QueryHeap(k))
+      buckets.foreach { case (base, idxs, cs) =>
+        taat.beginBucket(idxs, cs)
+        queries.zip(heaps).foreach { case (q, h) => taat.score(q, base, h) }
+      }
+      queries.zip(heaps).foreach { case (q, h) =>
+        val naive = buckets.flatMap { case (base, idxs, cs) =>
+          val acc = scala.collection.mutable.Map.empty[Long, Long]
+          q.foreach(s => idxs(s).indices.foreach { i =>
+            val d = base + idxs(s)(i)
+            acc(d) = acc.getOrElse(d, 0L) + cs(s)(i)
+          })
+          acc.toSeq
+        }.sortBy { case (d, s) => (-s, d) }.take(k).map { case (d, s) => TopK.Cand(d, s) }
+        assert(h.toCands == naive, s"width=$width k=$k q=${q.toSeq}")
+      }
+    }
   }
 
   // --- the end-to-end scoring path, pure JVM: posting rows (salted
@@ -255,15 +308,15 @@ class BucketTaatSpec extends AnyFunSuite {
   private def scored(qid: Int, lists: Map[String, (Double, Seq[PostingRow])],
                      avgdl: Double, k: Int, width: Int, nParts: Int,
                      rnd: Random): Seq[TopK.Cand] = {
-    val plan = QueryEngine.Plan(k, avgdl,
-      termIdf = lists.map { case (t, (idf, _)) => t -> idf },
-      termToQueries = lists.keys.map(_ -> Seq(qid)).toMap,
-      queryTermSets = Map(qid -> lists.keys.toSeq),
-      bucketWidth = width.toLong)
+    val terms = lists.keys.toArray
+    val plan = QueryEngine.Plan(k, avgdl, terms, idf = terms.map(lists(_)._1),
+      qids = Array(qid), queryTerms = Array(terms.indices.toArray),
+      termQueries = terms.map(_ => Array(0)), bucketWidth = width.toLong)
     val rows = lists.values.flatMap(_._2)
       .flatMap(QueryEngine.rebucketRow(_, width.toLong, blockSize = 8)).toSeq
     val top = rows.groupBy(_.bucket % nParts).values
-      .map(part => QueryEngine.scorePartition(plan, rnd.shuffle(part).iterator, None))
+      .map(part => QueryEngine.scorePartition(plan,
+        QueryEngine.ServingPart(rnd.shuffle(part).iterator), None))
       .foldLeft(TopK.emptyBlock)(TopK.merge(_, _, k))
     assert(top.qids.forall(_ == qid))
     if (top.isEmpty) Seq.empty else top.cands(0)
@@ -299,8 +352,8 @@ class BucketTaatSpec extends AnyFunSuite {
 
   test("exhausted/empty cases: no rows and absent terms score nothing") {
     assert(scored(1, Map.empty, 10.0, 5, width = 16, nParts = 1, new Random(1)).isEmpty)
-    val plan = QueryEngine.Plan(5, 10.0, Map("a" -> 1.0), Map("a" -> Seq(1)),
-      Map(1 -> Seq("a")), bucketWidth = 16)
-    assert(QueryEngine.scorePartition(plan, Iterator.empty, None).isEmpty)
+    val plan = QueryEngine.Plan(5, 10.0, Array("a"), Array(1.0), Array(1), Array(Array(0)),
+      Array(Array(0)), bucketWidth = 16)
+    assert(QueryEngine.scorePartition(plan, QueryEngine.ServingPart(Iterator.empty), None).isEmpty)
   }
 }

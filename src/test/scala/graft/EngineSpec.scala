@@ -203,7 +203,8 @@ class EngineSpec extends AnyFunSuite {
 
   test("cached 1000-query batch: one Spark job, no Sort or Exchange; uncached rows in (query_id, rank) order") {
     import org.apache.spark.TestBus
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    import org.apache.spark.storage.RDDInfo
     val sc = spark.sparkContext
     val docs = Stats.readDocuments(spark, "/root/testdata/sf0.001")
     val root = java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
@@ -218,8 +219,12 @@ class EngineSpec extends AnyFunSuite {
     assert(uncached == uncached.sortBy(r => (r._1, r._2)))
     val h = QueryEngine.openIndex(spark, docDir)
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Seq[RDDInfo]]
     val counter = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        stages.add(e.stageInfo.rddInfos); ()
+      }
     }
     try {
       // warm-up: fills the serving cache and memoizes the batch's terms
@@ -230,6 +235,14 @@ class EngineSpec extends AnyFunSuite {
       val got = rows(df)
       TestBus.drain(sc)
       assert(jobs.get == 1, s"${jobs.get} jobs for one cached batch")
+      // its one stage scores the handle's persisted serving parts with no
+      // Catalyst plan: no SQL operator scope among the stage's RDDs
+      assert(stages.size == 1, s"${stages.size} stages for one cached batch")
+      val rdds = stages.peek()
+      assert(rdds.exists(_.id == h.served.get.id), rdds.mkString("\n"))
+      val sqlScopes = rdds.flatMap(TestBus.scopeName)
+        .filter(n => n.contains("InMemoryTableScan") || n.contains("WholeStageCodegen"))
+      assert(sqlScopes.isEmpty, sqlScopes.mkString(", "))
       val executed = df.queryExecution.executedPlan.treeString
       assert(!executed.contains("Sort") && !executed.contains("Exchange"), executed)
       assert(got == oracle)
@@ -238,6 +251,26 @@ class EngineSpec extends AnyFunSuite {
       h.close()
       org.apache.hadoop.fs.FileSystem.get(sc.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(base), true)
+      ()
+    }
+  }
+
+  test("IndexHandle.close() releases the serving cache") {
+    val sc = spark.sparkContext
+    val docs = Stats.readDocuments(spark, "/root/testdata/sf0.001")
+    val root = java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
+    val dir = java.nio.file.Files.createTempDirectory(root, "close").toAbsolutePath.toString
+    try {
+      IndexBuild.writeIndex(spark, docs, dir, SparkEntry.testConfig.copy(docPartitioned = true))
+      val h = QueryEngine.openIndex(spark, dir)
+      val id = h.served.get.id
+      assert(rows(QueryEngine.runOnHandle(spark, h)) == rows(Oracle.topk(spark, docs)))
+      assert(sc.getPersistentRDDs.contains(id))
+      h.close()
+      assert(!sc.getPersistentRDDs.contains(id))
+    } finally {
+      org.apache.hadoop.fs.FileSystem.get(sc.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(dir), true)
       ()
     }
   }
