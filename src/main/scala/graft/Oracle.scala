@@ -97,20 +97,14 @@ object Oracle {
       .orderBy($"query_id", $"rank")
   }
 
-  /** Same result via the bounded-heap [[TopK.Agg]] aggregator (the
-    * treeReduce-style scale path, SURVEY.md §2.6 T2). */
+  /** Same result via [[TopK.topk]], the engine's one top-k merge (per-
+    * task bounded heaps, one `treeAggregate`; the treeReduce-style scale
+    * path, SURVEY.md §2.6 T2), as a local relation in (query_id, rank)
+    * order. */
   def topkViaHeap(spark: SparkSession, docs: DataFrame, k: Int = QuerySet.K): DataFrame = {
     import spark.implicits._
-    val agg = new TopK.Agg[Int](k).toColumn
-    scores(spark, docs)
-      .select($"query_id".as[Int], struct($"doc_id", $"score_micro").as[TopK.Cand])
-      .groupByKey(_._1)
-      .agg(agg.name("hits"))
-      .flatMap { case (qid, hits) =>
-        hits.zipWithIndex.map { case (c, i) => Hit(qid, i + 1, c.doc_id, c.score_micro) }
-      }
-      .toDF()
-      .select($"query_id", $"rank", $"doc_id", $"score_micro")
-      .orderBy($"query_id", $"rank")
+    val top = TopK.topk(scores(spark, docs)
+      .select($"query_id".cast("long"), $"doc_id", $"score_micro").as[(Long, Long, Long)].rdd, k)
+    spark.createDataset(top.ranked((q, rank, doc, score) => Hit(q.toInt, rank, doc, score))).toDF()
   }
 }

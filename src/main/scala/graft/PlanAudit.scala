@@ -176,7 +176,9 @@ object PlanAudit {
       extra.AnnIndex.readCells(spark, annDir).where($"cell".isin(0, 1, 2)))
 
     // 6. composed IVF∘PQ index: probed codes read (partition pruning) and
-    //    the exact rerank (candidate side broadcast — corpus never shuffled)
+    //    the exact rerank's pairs (candidate side broadcast — corpus never
+    //    shuffled); their top-k is TopK.topk's per-task heaps and one
+    //    treeAggregate, outside any SQL plan
     val pqDir = "target/plan-audit-ivfpq"
     clear(pqDir)
     extra.AnnIndexPq.write(spark, emb, pqDir)
@@ -185,8 +187,8 @@ object PlanAudit {
     val cands = Seq((0L, 5L), (1L, 7L)).toDF("query_vec_id", "vec_id")
     val q = emb.where($"vec_id" < 2)
       .select($"vec_id".as("query_vec_id"), $"embedding".as("qe"))
-    dump("IVF∘PQ exact rerank (broadcast candidate pool, hash-probe corpus scan)",
-      extra.Pq.rerankExact(cands, emb, q, k = 5))
+    dump("IVF∘PQ exact rerank pairs (broadcast candidate pool, hash-probe corpus scan, no Window)",
+      extra.Pq.rerankPairs(cands, emb, q))
 
     // 7. positional sidecar: the phrase path's filtered read must show the
     //    term predicate pushed to the parquet scan (row-group skipping on

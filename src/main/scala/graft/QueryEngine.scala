@@ -6,6 +6,7 @@ import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.TopK.QueryHeap
 
 /** Batched indexed query — the graft of the reference's two-phase routed
   * query (`TopWId` routing + `TopKId` scan, EP3 in SURVEY.md §3):
@@ -139,52 +140,6 @@ object QueryEngine {
     queryTerms.indices.foreach(q => queryTerms(q).distinct.foreach(users(_) += q))
     Plan(k, cs.avgdl, terms, terms.map(t => Bm25.idf(cs.n_docs, termDf(t))),
       qids, queryTerms, users.map(_.result()), conjunctive = conjunctive)
-  }
-
-  /** Carried per-query top-k under the frozen (score DESC, doc_id ASC)
-    * order: a sorted prefix of length `n` maintained by shift-insert (k is
-    * small). The scorer SEEDS its selection with this state, which (a)
-    * makes the cross-bucket merge free — offering into the carried heap IS
-    * the merge, so the per-(query, bucket) `mergeTopK` + Vector allocation
-    * disappear — and (b) turns the carried k-th score into a θ floor every
-    * scorer path can reject against with one compare. Exactness: a doc
-    * rejected by `offer` has (score, doc) strictly dominated by the current
-    * k-th, and the final k-th only rises, so the reject can never exclude a
-    * true top-k member (the reference's partial_sort + threshold argument,
-    * `src/index_ivf.cpp:220-234`). */
-  final class QueryHeap(val k: Int) {
-    val hScore = new Array[Long](k)
-    val hDoc = new Array[Long](k)
-    var n = 0
-    /** Current k-th score — the θ floor (MinValue until the heap fills). */
-    def kth: Long = if (n == k) hScore(k - 1) else Long.MinValue
-    /** TIGHT θ floor: when the heap is full and every doc still to be
-      * offered has doc_id ≥ base > hDoc(k-1), a tie on the k-th score can
-      * never be accepted under the frozen (score DESC, doc_id ASC) order
-      * (the tie-breaker needs a SMALLER doc_id), so acceptance reduces to
-      * the single strict compare `s > kth`. Stays valid THROUGHOUT an
-      * ascending-docId offer sequence: each accepted doc is ≥ base and
-      * < every later candidate, so hDoc(k-1) remains below the next
-      * candidate — callers must offer docs in ascending order. */
-    def tightFloorFor(base: Long): Boolean = n == k && base > hDoc(k - 1)
-    def offer(s: Long, d: Long): Unit = {
-      if (n == k && (s < hScore(n - 1) ||
-          (s == hScore(n - 1) && d > hDoc(n - 1)))) return
-      var pos = if (n < k) n else n - 1
-      while (pos > 0 && (hScore(pos - 1) < s ||
-          (hScore(pos - 1) == s && hDoc(pos - 1) > d))) {
-        if (pos < k) { hScore(pos) = hScore(pos - 1); hDoc(pos) = hDoc(pos - 1) }
-        pos -= 1
-      }
-      hScore(pos) = s; hDoc(pos) = d
-      if (n < k) n += 1
-    }
-    def toCands: Seq[TopK.Cand] = {
-      val b = Vector.newBuilder[TopK.Cand]
-      var i = 0
-      while (i < n) { b += TopK.Cand(hDoc(i), hScore(i)); i += 1 }
-      b.result()
-    }
   }
 
   /** Batched per-bucket scorer: shared-contribution term-at-a-time.
@@ -978,31 +933,19 @@ object QueryEngine {
     * shared-contribution [[BucketTaat]] scorer, with its block-max bucket
     * skip, chunk-max skip and TA walk, fills the task's per-query heaps;
     * the task emits them as one [[TopK.Block]], and the blocks merge in
-    * one `treeAggregate` of depth [[mergeDepth]]: the driver merges them
-    * as they arrive up to a fan-in of 64 tasks, executors add levels
-    * above it. Rank-identity: per-bucket doc sets are disjoint, and top-k
-    * of a disjoint union = top-k of per-part top-k's under the frozen
-    * total order, whatever the merge tree.
+    * [[TopK.mergeAll]]'s one `treeAggregate`. Rank-identity: per-bucket
+    * doc sets are disjoint, and top-k of a disjoint union = top-k of
+    * per-part top-k's under the frozen total order, whatever the merge
+    * tree.
     *
     * The hits come back in (query_id, rank) order as a local relation:
     * no sort, and collecting them runs no job. */
   def runDocPartitioned(spark: SparkSession, parts: RDD[ServingPart],
                         plan: Plan, effort: Option[EffortAccs] = None): DataFrame = {
     import spark.implicits._
-    val k = plan.k
     require(plan.bucketWidth > 0, "doc-partitioned plan needs bucketWidth from meta")
-    val blocks = scoredBlocks(parts, plan, effort)
-    val merge = (a: TopK.Block, b: TopK.Block) => {
-      val t0 = System.nanoTime()
-      val m = TopK.merge(a, b, k)
-      effort.foreach(_.mergeNanos.add(System.nanoTime() - t0))
-      m
-    }
-    val top = blocks.treeAggregate(TopK.emptyBlock)(merge, merge,
-      mergeDepth(blocks.getNumPartitions))
-    val hits = top.qids.indices.flatMap(i => (top.off(i) until top.off(i + 1)).map(j =>
-      Hit(top.qids(i), j - top.off(i) + 1, top.docs(j), top.scores(j))))
-    spark.createDataset(hits).toDF()
+    val top = TopK.mergeAll(scoredBlocks(parts, plan, effort), plan.k, effort.map(_.mergeNanos))
+    spark.createDataset(top.ranked((q, rank, doc, score) => Hit(q.toInt, rank, doc, score))).toDF()
   }
 
   /** The batch's scoring stage: one [[scorePartition]] block per part.
@@ -1011,15 +954,6 @@ object QueryEngine {
   def scoredBlocks(parts: RDD[ServingPart], plan: Plan,
                    effort: Option[EffortAccs] = None): RDD[TopK.Block] =
     parts.map(scorePartition(plan, _, effort))
-
-  /** `treeAggregate` depth for merging `nTasks` blocks: 1 (the driver
-    * merges every block) up to a fan-in of 64, else ⌈log₆₄ nTasks⌉. */
-  def mergeDepth(nTasks: Int): Int = {
-    var depth = 1
-    var reach = 64L
-    while (nTasks > reach) { depth += 1; reach *= 64 }
-    depth
-  }
 
   /** The per-partition body of [[runDocPartitioned]]: score every query
     * of `p` over one grouped part and return the part's top-k block: one
@@ -1189,12 +1123,8 @@ object QueryEngine {
       a.decodeNanos.add(decodeNs); a.contribNanos.add(contribNs)
       a.scoreNanos.add(scoreNs)
     }
-    // one block per task: the heaps of the queries with a candidate here,
-    // in ascending query id
-    val live = p.qids.indices.filter(q => heaps(q) != null && heaps(q).n > 0)
-    new TopK.Block(live.map(p.qids).toArray, live.scanLeft(0)(_ + heaps(_).n).toArray,
-      live.flatMap(q => heaps(q).hDoc.take(heaps(q).n)).toArray,
-      live.flatMap(q => heaps(q).hScore.take(heaps(q).n)).toArray)
+    // one block per task: the heaps of the queries with a candidate here
+    TopK.block(p.qids.map(_.toLong), heaps)
   }
 
   /** An OPENED index — the reference's LoadIndex analog

@@ -1,19 +1,21 @@
 package graft
 
-import org.apache.spark.sql.Encoder
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.rdd.RDD
+import org.apache.spark.util.LongAccumulator
 
-/** Bounded top-k under the frozen total order (score_micro DESC, doc_id
-  * ASC) — the graft of the reference's `partial_sort` top-k
-  * (`src/index_ivf.cpp:220-234`, SURVEY.md §2.6 T2), as per-task
-  * [[Block]]s merged through `treeAggregate` (the batched scorer), or as
-  * the [[Agg]] `Aggregator` (the grouped oracle and ANN paths): per-query
-  * state is O(k) regardless of group size — no full sort, no window
-  * shuffle of all candidates.
+/** Bounded top-k under the frozen total order (score DESC, id ASC) — the
+  * graft of the reference's `partial_sort` top-k
+  * (`src/index_ivf.cpp:220-234`, SURVEY.md §2.6 T2) — and the one top-k
+  * merge of every ranked result: each task fills one bounded
+  * [[QueryHeap]] per query, emits them as one [[Block]], and one
+  * `treeAggregate` merges the blocks ([[mergeAll]]). The batched BM25
+  * scorer fills its heaps itself; every other ranked result (the heap
+  * oracle, the ANN and PQ paths, the exact rerank) hands its
+  * `(qid, id, score)` rows to [[topk]]. Per-query state is O(k)
+  * whatever the group size: no full sort, no shuffle.
   *
-  * Because the order is TOTAL (integer score, then doc_id) the merged
-  * top-k set is unique — partial-aggregation order cannot change results.
+  * Because the order is TOTAL (integer score, then id) the merged top-k
+  * set is unique — merge order and tree shape cannot change results.
   */
 object TopK {
   final case class Cand(doc_id: Long, score_micro: Long)
@@ -23,7 +25,8 @@ object TopK {
     a.score_micro > b.score_micro ||
       (a.score_micro == b.score_micro && a.doc_id < b.doc_id)
 
-  /** Merge two sorted-best-first lists, keep k (classic merge step). */
+  /** Merge two sorted-best-first lists, keep k (classic merge step; the
+    * reference TopKSpec checks [[merge]] against). */
   def mergeTopK(a: Seq[Cand], b: Seq[Cand], k: Int): Seq[Cand] = {
     val out = Vector.newBuilder[Cand]
     var i = 0; var j = 0; var n = 0
@@ -35,53 +38,91 @@ object TopK {
     out.result()
   }
 
-  /** Insert into a sorted-best-first bounded list. O(k) per insert — fine
-    * for k=10; swap for a binary heap if k grows. */
-  def insert(buf: Seq[Cand], c: Cand, k: Int): Seq[Cand] = {
-    if (buf.length >= k && !better(c, buf.last)) buf
-    else {
-      val idx = buf.indexWhere(x => better(c, x)) match {
-        case -1 => buf.length
-        case i  => i
+  /** Carried per-query top-k: a sorted prefix of length `n` maintained by
+    * shift-insert (k is small). The batched scorer SEEDS its selection
+    * with this state, which (a) makes the cross-bucket merge free —
+    * offering into the carried heap IS the merge — and (b) turns the
+    * carried k-th score into a θ floor every scorer path can reject
+    * against with one compare. Exactness: a doc rejected by `offer` has
+    * (score, doc) strictly dominated by the current k-th, and the final
+    * k-th only rises, so the reject can never exclude a true top-k member
+    * (the reference's partial_sort + threshold argument,
+    * `src/index_ivf.cpp:220-234`). */
+  final class QueryHeap(val k: Int) {
+    val hScore = new Array[Long](k)
+    val hDoc = new Array[Long](k)
+    var n = 0
+    /** Current k-th score — the θ floor (MinValue until the heap fills). */
+    def kth: Long = if (n == k) hScore(k - 1) else Long.MinValue
+    /** TIGHT θ floor: when the heap is full and every doc still to be
+      * offered has doc_id ≥ base > hDoc(k-1), a tie on the k-th score can
+      * never be accepted under the frozen (score DESC, doc_id ASC) order
+      * (the tie-breaker needs a SMALLER doc_id), so acceptance reduces to
+      * the single strict compare `s > kth`. Stays valid THROUGHOUT an
+      * ascending-docId offer sequence: each accepted doc is ≥ base and
+      * < every later candidate, so hDoc(k-1) remains below the next
+      * candidate — callers must offer docs in ascending order. */
+    def tightFloorFor(base: Long): Boolean = n == k && base > hDoc(k - 1)
+    def offer(s: Long, d: Long): Unit = {
+      if (n == k && (s < hScore(n - 1) ||
+          (s == hScore(n - 1) && d > hDoc(n - 1)))) return
+      var pos = if (n < k) n else n - 1
+      while (pos > 0 && (hScore(pos - 1) < s ||
+          (hScore(pos - 1) == s && hDoc(pos - 1) > d))) {
+        if (pos < k) { hScore(pos) = hScore(pos - 1); hDoc(pos) = hDoc(pos - 1) }
+        pos -= 1
       }
-      (buf.take(idx) :+ c) ++ buf.drop(idx).take(k - idx - 1)
+      hScore(pos) = s; hDoc(pos) = d
+      if (n < k) n += 1
     }
-  }
-
-  final class Agg[K](k: Int) extends Aggregator[(K, Cand), Seq[Cand], Seq[Cand]] {
-    def zero: Seq[Cand] = Vector.empty
-    def reduce(buf: Seq[Cand], in: (K, Cand)): Seq[Cand] = insert(buf, in._2, k)
-    def merge(a: Seq[Cand], b: Seq[Cand]): Seq[Cand] = mergeTopK(a, b, k)
-    def finish(r: Seq[Cand]): Seq[Cand] = r
-    def bufferEncoder: Encoder[Seq[Cand]] = ExpressionEncoder[Seq[Cand]]()
-    def outputEncoder: Encoder[Seq[Cand]] = ExpressionEncoder[Seq[Cand]]()
+    def toCands: Seq[Cand] = (0 until n).map(i => Cand(hDoc(i), hScore(i)))
   }
 
   /** Per-query top-k lists of a query batch in CSR form: query `qids(i)`
     * owns `docs`/`scores` slots `off(i) until off(i + 1)`, best-first,
     * at most k of them. `qids` is strictly ascending. Immutable once
     * built, so [[merge]] may return either input as is. */
-  final class Block(val qids: Array[Int], val off: Array[Int],
+  final class Block(val qids: Array[Long], val off: Array[Int],
                     val docs: Array[Long], val scores: Array[Long]) extends Serializable {
     def isEmpty: Boolean = qids.isEmpty
     /** Query slot `i`'s list. */
     def cands(i: Int): Seq[Cand] =
       (off(i) until off(i + 1)).map(j => Cand(docs(j), scores(j)))
+    /** Every list's entries in (qid, rank) order, as `row(qid, rank, doc,
+      * score)` with rank 1-based. */
+    def ranked[T](row: (Long, Int, Long, Long) => T): IndexedSeq[T] =
+      qids.indices.flatMap(i => (off(i) until off(i + 1)).map(j =>
+        row(qids(i), j - off(i) + 1, docs(j), scores(j))))
   }
 
   val emptyBlock: Block = new Block(Array.empty, Array(0), Array.empty, Array.empty)
+
+  /** The block of `heaps(i)` as query `qids(i)`'s list (`qids`
+    * ascending); a null or empty heap is left out. */
+  def block(qids: Array[Long], heaps: Array[QueryHeap]): Block = {
+    val live = qids.indices.filter(i => heaps(i) != null && heaps(i).n > 0)
+    val off = live.scanLeft(0)(_ + heaps(_).n).toArray
+    val docs = new Array[Long](off.last)
+    val scores = new Array[Long](off.last)
+    live.indices.foreach { j =>
+      val h = heaps(live(j))
+      System.arraycopy(h.hDoc, 0, docs, off(j), h.n)
+      System.arraycopy(h.hScore, 0, scores, off(j), h.n)
+    }
+    new Block(live.map(qids).toArray, off, docs, scores)
+  }
 
   /** Merge two blocks: a merge-join on `qids`; each output query runs
     * the classic merge step over its list on either side (empty when
     * the query is absent there), kept to k. The inputs must hold
     * disjoint doc sets per query (a doc is scored in exactly one docId
-    * bucket). Associative and commutative, so any fold order or tree
-    * shape gives the same block. */
+    * bucket, a row is read by exactly one task). Associative and
+    * commutative, so any fold order or tree shape gives the same block. */
   def merge(a: Block, b: Block, k: Int): Block = {
     if (a.isEmpty) return b
     if (b.isEmpty) return a
     val (na, nb) = (a.qids.length, b.qids.length)
-    val qids = new Array[Int](na + nb)
+    val qids = new Array[Long](na + nb)
     val off = new Array[Int](na + nb + 1)
     val docs = new Array[Long](a.docs.length + b.docs.length)
     val scores = new Array[Long](docs.length)
@@ -108,10 +149,47 @@ object TopK {
       java.util.Arrays.copyOf(docs, o), java.util.Arrays.copyOf(scores, o))
   }
 
+  /** `treeAggregate` depth for merging `nTasks` blocks: 1 (the driver
+    * merges every block) up to a fan-in of 64, else ⌈log₆₄ nTasks⌉. */
+  def mergeDepth(nTasks: Int): Int = {
+    var depth = 1
+    var reach = 64L
+    while (nTasks > reach) { depth += 1; reach *= 64 }
+    depth
+  }
+
+  /** Merge per-task blocks in one `treeAggregate` of depth
+    * [[mergeDepth]] — one job: the driver merges the blocks as they
+    * arrive up to a fan-in of 64 tasks, executors add levels above it.
+    * `nanos`, when given, adds each merge's time. */
+  def mergeAll(blocks: RDD[Block], k: Int, nanos: Option[LongAccumulator] = None): Block = {
+    val m = (a: Block, b: Block) => {
+      val t0 = System.nanoTime()
+      val r = merge(a, b, k)
+      nanos.foreach(_.add(System.nanoTime() - t0))
+      r
+    }
+    blocks.treeAggregate(emptyBlock)(m, m, mergeDepth(blocks.getNumPartitions))
+  }
+
+  /** The top-k per qid of `(qid, id, score)` rows under (score DESC,
+    * id ASC): each task offers its rows into one [[QueryHeap]] per qid
+    * and emits them as one block; [[mergeAll]] merges the blocks. A
+    * (qid, id) pair must occur at most once. A double score rides as its
+    * [[sortableBits]]. One job, O(k) state per qid per task; the result
+    * is on the driver. */
+  def topk(rows: RDD[(Long, Long, Long)], k: Int): Block =
+    mergeAll(rows.mapPartitions { it =>
+      val heaps = new scala.collection.mutable.LongMap[QueryHeap]
+      it.foreach { case (q, id, s) => heaps.getOrElseUpdate(q, new QueryHeap(k)).offer(s, id) }
+      val qids = heaps.keys.toArray.sorted
+      Iterator.single(block(qids, qids.map(heaps)))
+    }, k)
+
   /** Order-preserving bijection Double ↔ Long (the classic IEEE-754 sign
     * trick): signed-long comparison of the encoding == double comparison,
-    * so a DOUBLE-scored candidate set can ride the integer-keyed [[Cand]]
-    * heap with zero loss — encode before, decode after. */
+    * so a DOUBLE-scored row can ride the integer-keyed heap with zero
+    * loss — encode before, decode after. */
   @inline def sortableBits(d: Double): Long = {
     val b = java.lang.Double.doubleToLongBits(d)
     b ^ ((b >> 63) & Long.MaxValue)

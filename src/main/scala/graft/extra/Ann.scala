@@ -2,14 +2,15 @@ package graft.extra
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TopK
 
 /** Approximate-nearest-neighbor search over an embedding column — the
   * literal IVF capability of the reference (`src/index_ivf.cpp`), re-done
   * Spark-first on the driver's `embeddings` table (64-dim FLOAT arrays):
   *
   *  - [[bruteTopk]]: exact cosine top-k via a broadcast cross join +
-  *    per-query window top-k — the ground-truth path (reference
-  *    `get_groundtruth` kc=1 analog).
+  *    the one top-k merge ([[topkFromPairs]]) — the ground-truth path
+  *    (reference `get_groundtruth` kc=1 analog).
   *  - [[lshTopk]]: sign-random-projection bucketing (2^NumPlanes cells);
   *    queries probe the `nprobe` hamming-closest cells — the coarse-
   *    quantizer pruning analog (`TopWId`). With nprobe = all cells the
@@ -61,35 +62,33 @@ object Ann {
     dot(a, b) / (norm(a) * norm(b))
   }
 
-  /** (query_vec_id, vec_id, cos) candidate pairs → bounded-heap top-k per
-    * query under (cos DESC, vec_id ASC). The double score rides the
-    * integer-keyed [[graft.TopK.Agg]] via the order-preserving IEEE-754
-    * encoding — per-group state is O(k), candidates are partially
-    * aggregated map-side, NO window shuffle-and-rank of all candidates
-    * (VERDICT round-1 item: the window form shuffled every candidate). */
-  def topkFromPairs(pairs: DataFrame, k: Int = K): DataFrame = {
+  /** (query_vec_id, vec_id, score) candidate pairs → the top-k per query
+    * under (score DESC, vec_id ASC), or (score ASC, vec_id ASC) when
+    * `ascending` (a distance), through [[graft.TopK.topk]]: per-task
+    * bounded heaps, one `treeAggregate`, no shuffle. The double score
+    * rides the Long-keyed heap as its order-preserving IEEE-754 encoding
+    * (negated when ascending). Returns the nq·k rows as a local relation
+    * (query_vec_id, rank, vec_id, <score>_micro) in (query_vec_id, rank)
+    * order. */
+  def topkFromPairs(pairs: DataFrame, k: Int = K, ascending: Boolean = false): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    import graft.TopK
-    val agg = new TopK.Agg[Long](k).toColumn
-    pairs.select(col("query_vec_id").cast("long"), col("vec_id").cast("long"),
-        col("cos"))
-      .as[(Long, Long, Double)]
-      .map { case (q, v, c) => (q, TopK.Cand(v, TopK.sortableBits(c))) }
-      .groupByKey(_._1)
-      .agg(agg.name("hits"))
-      .flatMap { case (q, hits) =>
-        hits.zipWithIndex.map { case (c, i) =>
-          (q, i + 1, c.doc_id,
-            math.floor(TopK.fromSortableBits(c.score_micro) * 1e6 + 0.5).toLong)
-        }
-      }
-      .toDF("query_vec_id", "rank", "vec_id", "cos_micro")
-      .orderBy(col("query_vec_id"), col("rank"))
+    val Array(_, _, score) = pairs.columns
+    val sign = if (ascending) -1.0 else 1.0
+    val top = TopK.topk(pairs
+      .select(col("query_vec_id").cast("long"), col("vec_id").cast("long"), col(score))
+      .as[(Long, Long, Double)].rdd
+      .map { case (q, v, x) => (q, v, TopK.sortableBits(sign * x)) }, k)
+    spark.createDataset(top.ranked((q, rank, v, s) =>
+        (q, rank, v, math.floor(sign * TopK.fromSortableBits(s) * 1e6 + 0.5).toLong)))
+      .toDF("query_vec_id", "rank", "vec_id", s"${score}_micro")
   }
 
   /** Exact top-k cosine neighbors for query vectors (vec_id < NumQueryVecs),
-    * self excluded. Output (query_vec_id, rank, vec_id, cos_micro). */
+    * self excluded. Output (query_vec_id, rank, vec_id, cos_micro). Costs
+    * O(nq·n) cosines and O(nq·k) heap state per task, so it needs no size
+    * guard: it scans the table once per query, never pairs the table with
+    * itself. */
   def bruteTopk(emb: DataFrame, k: Int = K, nq: Int = NumQueryVecs): DataFrame = {
     val q = emb.where(col("vec_id") < nq)
       .select(col("vec_id").as("query_vec_id"), col("embedding").as("qe"))

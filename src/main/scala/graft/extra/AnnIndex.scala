@@ -113,13 +113,13 @@ object AnnIndex {
         n.get("iters").asInt)
     }
 
-  /** The persisted codebook, cell-ordered (tiny: kc × dim doubles). */
+  /** The persisted codebook, cell-ordered (tiny: kc × dim doubles, so
+    * one collect, sorted on the driver). */
   def loadCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
     import spark.implicits._
     spark.read.parquet(s"$dir/centroids")
-      .orderBy($"cell")
-      .select($"centroid").as[Seq[Double]].collect()
-      .map(_.toArray)
+      .select($"cell", $"centroid").as[(Int, Seq[Double])].collect()
+      .sortBy(_._1).map(_._2.toArray)
   }
 
   /** Query a loaded index: NO training, NO full scan. Phase 1 routes each
@@ -134,11 +134,11 @@ object AnnIndex {
     import spark.implicits._
     readMeta(spark, dir) // the commit gate: never answer from partial cells
     val centroids = loadCentroids(spark, dir)
-    val q = queries.select($"vec_id".as("query_vec_id"), $"embedding".as("qe"))
-    val allProbes = q.select($"qe").as[Seq[Float]].collect()
-      .flatMap(Ann.probeCellsKmeans(_, centroids, nprobe)).distinct.sorted.toSeq
-    Ann.scoreProbed(spark, readCells(spark, dir).where($"cell".isin(allProbes: _*)), q,
-      centroids, nprobe, k)
+    val qs = queries.select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect()
+    val allProbes = qs.flatMap(q => Ann.probeCellsKmeans(q._2, centroids, nprobe))
+      .distinct.sorted.toSeq
+    Ann.scoreProbed(spark, readCells(spark, dir).where($"cell".isin(allProbes: _*)),
+      qs.toSeq.toDF("query_vec_id", "qe"), centroids, nprobe, k)
   }
 
   def readCells(spark: SparkSession, dir: String): DataFrame =

@@ -171,15 +171,25 @@ object Dedup {
       .orderBy($"doc_id")
   }
 
+  /** Row bound of [[embeddingDup]]: its self-join scores n·(n−1)/2
+    * pairs, 2·10^8 at this bound (the contract tables hold 500 and 2 000
+    * vectors). */
+  val MaxExactDupRows = 20000L
+
   /** Embedding-cosine near-dup pairs (cross-join; the SMALL-SCALE ORACLE
     * for [[embeddingDupLsh]] — the same oracle/scale-path pairing as
-    * [[ngramJaccard]]/[[minhashLsh]]). threshold on exact cosine. */
-  def embeddingDup(emb: DataFrame, threshold: Double = 0.4): DataFrame =
+    * [[ngramJaccard]]/[[minhashLsh]]). threshold on exact cosine. Refuses
+    * a table above [[MaxExactDupRows]] before it pairs any row. */
+  def embeddingDup(emb: DataFrame, threshold: Double = 0.4): DataFrame = {
+    val n = emb.count()
+    require(n <= MaxExactDupRows, s"embeddingDup pairs every row with every other: " +
+      s"$n rows is above its $MaxExactDupRows-row bound; use embeddingDupLsh")
     cosPairsThresholded(
       emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
           col("a.embedding").as("ea"), col("b.embedding").as("eb")),
       threshold)
+  }
 
   /** (vec_a, vec_b, ea, eb) → thresholded (vec_a, vec_b, cos_micro),
     * cosine computed by the COMPILED Scala mirror (bit-equal to the

@@ -14,10 +14,10 @@ import graft.TopK
   *    ([[Ann.kmeansFitSubspaces]]);
   *  - encode: each vector → M codeword ids (one byte each at ks ≤ 256 —
   *    32× smaller than the raw floats);
-  *  - query: per-query DTable (M × ks partial L2²) computed ONCE and
-  *    broadcast; per-vector approximate distance = M table lookups; the
-  *    bounded heap keeps top-k per query; selected candidates re-rank on
-  *    exact L2 (the classic ADC + refine shape).
+  *  - query: per-query DTable (M × ks partial L2²) computed ONCE on the
+  *    driver; per-vector approximate distance = M table lookups; the
+  *    engine's one top-k merge keeps a pool per query; the pool re-ranks
+  *    on exact L2 (the classic ADC + refine shape, [[adcTopk]]).
   *
   * Verification config (the DuckDB-checked contract, q_ann_pq): ks =
   * n_vecs with 0 Lloyd iterations makes every subvector its own codeword
@@ -75,73 +75,76 @@ object Pq {
         (p, q) => (p.cast("double") - q.cast("double")) * (p.cast("double") - q.cast("double"))),
       lit(0.0), (acc, v) => acc + v)
 
-  /** ADC top-k + exact rerank. Scale shape: queries' DTables broadcast
-    * (nq × M × ks doubles); one pass over the code table scores every
-    * query per code row (M lookups each) into bounded per-query heaps
-    * (map-side partial aggregation — no per-candidate shuffle); only the
-    * nq·k winners join back to raw embeddings for the exact rerank.
-    * Output (query_vec_id, rank, vec_id, l2_micro) under (L2 ASC, vec_id
-    * ASC).
-    *
-    * This flat variant scans EVERY code row per query — the in-memory
-    * oracle shape. The scale path is [[AnnIndexPq]]: the same ADC against
-    * cell-partitioned PERSISTED codes where each query touches only its
-    * probed cells, which bounds both the scanned rows and the per-row
-    * `nq` loop (only queries probing that cell score it). */
+  /** ADC top-k + exact rerank over the flat code table: one cell (0)
+    * that holds every vector and every query probes ([[adcTopk]]). Every
+    * query scores every code row — the in-memory oracle shape; the scale
+    * path is [[AnnIndexPq]], the same ADC over cell-partitioned PERSISTED
+    * codes where each query touches only its probed cells. Output
+    * (query_vec_id, rank, vec_id, l2_micro) under (L2 ASC, vec_id ASC). */
   def pqTopk(spark: SparkSession, emb: DataFrame,
              codebooks: Array[Array[Array[Double]]],
              k: Int = Ann.K, nq: Int = Ann.NumQueryVecs,
              rerankFactor: Int = 4): DataFrame = {
     import spark.implicits._
-    val queries: Map[Long, Array[Array[Double]]] = emb
-      .where($"vec_id" < nq)
+    val qs = emb.where($"vec_id" < nq)
       .select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect()
-      .map { case (id, v) => id -> dtable(v, codebooks) }.toMap
-    val qBc = spark.sparkContext.broadcast(queries)
-    // ADC keeps a pool of k·rerankFactor; the exact rerank distills to k
-    // (quantization error shuffles near-ties — a wider pool restores
-    // recall at negligible cost since the pool is still O(k))
-    val agg = new TopK.Agg[Long](k * rerankFactor).toColumn
-    val cands = encode(emb, codebooks)
-      .as[(Long, Seq[Int])]
-      .flatMap { case (vid, code) =>
-        qBc.value.iterator.collect { case (qid, dt) if qid != vid =>
-          var d = 0.0; var m = 0
-          while (m < M) { d += dt(m)(code(m)); m += 1 }
-          // distance ASC rides the max-heap as encoded(-d); vec_id ASC
-          // tie-break matches Cand's doc_id ASC
-          (qid, TopK.Cand(vid, TopK.sortableBits(-d)))
-        }
-      }
-      .groupByKey(_._1)
-      .agg(agg.name("hits"))
-      .flatMap { case (qid, hits) => hits.map(c => (qid, c.doc_id)) }
-      .toDF("query_vec_id", "vec_id")
-    val q = emb.where($"vec_id" < nq)
-      .select($"vec_id".as("query_vec_id"), $"embedding".as("qe"))
-    rerankExact(cands, emb, q, k)
+    adcTopk(encode(emb, codebooks).withColumn("cell", lit(0)),
+      qs.map { case (id, v) => (id, v, Seq(0)) }, codebooks, emb, k, rerankFactor)
   }
 
-  /** Exact-L2 rerank of an ADC candidate pool: join the O(nq·k·rf)
-    * survivors back to raw vectors, score with the canonical fold
-    * ([[l2Col]] — the DuckDB-parity order), keep top-k per query. Both
-    * joins BROADCAST the tiny candidate/query side, so the corpus is one
-    * column-pruned hash-probe scan — never shuffled — and the window runs
-    * over the tiny candidate set, not the corpus. */
-  def rerankExact(cands: DataFrame, emb: DataFrame, q: DataFrame,
-                  k: Int): DataFrame = {
+  /** The ADC scan and exact rerank shared by [[pqTopk]] and
+    * [[AnnIndexPq.topk]]. `codes` holds (vec_id, code, cell) rows; each
+    * query (id, vector, probed cells) gets its DTable (M × ks partial L2²)
+    * computed ONCE on the driver. Per code row, only the queries probing
+    * its cell sum their M table lookups, into the per-task bounded heaps
+    * of [[graft.TopK.topk]] (no per-candidate shuffle). The pool keeps
+    * k·rerankFactor per query under (ADC distance ASC, vec_id ASC), self
+    * excluded — quantization error shuffles near-ties, and a wider pool
+    * restores recall at negligible cost since it is still O(k) — and
+    * only those winners join back to raw vectors for [[rerankExact]]. */
+  def adcTopk(codes: DataFrame, queries: Array[(Long, Seq[Float], Seq[Int])],
+              codebooks: Array[Array[Array[Double]]], emb: DataFrame, k: Int,
+              rerankFactor: Int): DataFrame = {
+    val spark = codes.sparkSession
+    import spark.implicits._
+    val qByCell: Map[Int, Array[(Long, Array[Array[Double]])]] = queries.flatMap {
+      case (qid, v, cells) =>
+        val dt = dtable(v, codebooks)
+        cells.map(c => (c, (qid, dt)))
+    }.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
+    val pool = TopK.topk(codes.select($"vec_id", $"code", $"cell")
+      .as[(Long, Seq[Int], Int)].rdd
+      .flatMap { case (vid, code, cell) =>
+        qByCell.getOrElse(cell, Array.empty[(Long, Array[Array[Double]])]).iterator.collect {
+          case (qid, dt) if qid != vid =>
+            var d = 0.0; var m = 0
+            while (m < M) { d += dt(m)(code(m)); m += 1 }
+            (qid, vid, TopK.sortableBits(-d)) // distance ASC = -d DESC
+        }
+      }, k * rerankFactor)
+    rerankExact(spark.createDataset(pool.ranked((q, _, v, _) => (q, v)))
+        .toDF("query_vec_id", "vec_id"), emb,
+      spark.createDataset(queries.map(q => (q._1, q._2)).toSeq).toDF("query_vec_id", "qe"), k)
+  }
+
+  /** The exact rerank's pairs: the O(nq·k·rf) candidate pool joined back
+    * to raw vectors, scored with the canonical fold ([[l2Col]] — the
+    * DuckDB-parity order). Both joins BROADCAST the tiny candidate/query
+    * side, so the corpus is one column-pruned hash-probe scan — never
+    * shuffled. */
+  def rerankPairs(cands: DataFrame, emb: DataFrame, q: DataFrame): DataFrame = {
     import cands.sparkSession.implicits._
-    val rer = emb.select($"vec_id", $"embedding")
+    emb.select($"vec_id", $"embedding")
       .join(broadcast(cands.join(broadcast(q), Seq("query_vec_id"))), Seq("vec_id"))
       .select($"query_vec_id", $"vec_id", l2Col($"qe", $"embedding").as("l2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_vec_id").orderBy($"l2".asc, $"vec_id".asc)
-    rer.withColumn("rank", row_number().over(w))
-      .where($"rank" <= k)
-      .select($"query_vec_id", $"rank".cast("int").as("rank"), $"vec_id",
-        floor($"l2" * 1e6 + 0.5).cast("long").as("l2_micro"))
-      .orderBy($"query_vec_id", $"rank")
   }
+
+  /** Exact-L2 rerank of an ADC candidate pool: the top-k per query of
+    * [[rerankPairs]] under (L2 ASC, vec_id ASC), through the one top-k
+    * merge ([[Ann.topkFromPairs]]): a local relation (query_vec_id, rank,
+    * vec_id, l2_micro) in (query_vec_id, rank) order. */
+  def rerankExact(cands: DataFrame, emb: DataFrame, q: DataFrame, k: Int): DataFrame =
+    Ann.topkFromPairs(rerankPairs(cands, emb, q), k, ascending = true)
 
   /** The lossless verification pipeline (ks = n, zero Lloyd iterations):
     * codewords ARE the subvectors, so ADC lookups sum the same per-

@@ -59,6 +59,48 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.loadCentroids(spark, dir2).map(_.toSeq).toSeq)
   }
 
+  /** The Spark jobs `body` starts (each by its last stage's call site),
+    * the listener bus drained before and after. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.TestBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(e.stageInfos.maxBy(_.stageId).name); ()
+      }
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(counter)
+    try { body; TestBus.drain(sc) } finally sc.removeSparkListener(counter)
+    jobs.toArray(Array.empty[String]).toSeq
+  }
+
+  test("ranked ANN results run few jobs: bruteTopk 2, AnnIndex.topk < 11, rerankExact < 6") {
+    import spark.implicits._
+    val e = emb
+    val dir = tmpDir()
+    AnnIndex.write(spark, e, dir)
+    val queries = e.where($"vec_id" < Ann.NumQueryVecs)
+    val cands = Seq((0L, 5L), (0L, 9L), (1L, 7L)).toDF("query_vec_id", "vec_id")
+    val q = e.where($"vec_id" < 2).select($"vec_id".as("query_vec_id"), $"embedding".as("qe"))
+    // warm-up: each path once, so no first-call work is counted
+    Ann.bruteTopk(e).collect()
+    AnnIndex.topk(spark, dir, queries, nprobe = 4).collect()
+    Pq.rerankExact(cands, e, q, k = 5).collect()
+    // the query broadcast, then one job that scores every pair and merges
+    // the per-task heaps
+    val brute = jobsOf(Ann.bruteTopk(e).collect())
+    assert(brute.size <= 2, brute.mkString("bruteTopk jobs: ", ", ", ""))
+    val probed = jobsOf(AnnIndex.topk(spark, dir, queries, nprobe = 4).collect())
+    assert(probed.size < 11, probed.mkString("AnnIndex.topk jobs: ", ", ", ""))
+    val rerank = jobsOf(Pq.rerankExact(cands, e, q, k = 5).collect())
+    assert(rerank.size < 6, rerank.mkString("rerankExact jobs: ", ", ", ""))
+    // report, not asserted: the counts of this run
+    info(s"jobs: bruteTopk ${brute.size}, AnnIndex.topk ${probed.size}, rerankExact ${rerank.size}")
+  }
+
   test("both ANN topks refuse an index without committed meta, naming the dir") {
     import spark.implicits._
     val small = emb.where($"vec_id" < 200)

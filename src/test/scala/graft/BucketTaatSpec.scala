@@ -19,7 +19,7 @@ class BucketTaatSpec extends AnyFunSuite {
     * then score the query's slots. */
   private def scoreBucket(taat: QueryEngine.BucketTaat, queryTerms: Seq[String],
                           lists: Map[String, (Array[Int], Array[Long])], base: Long,
-                          heap: QueryEngine.QueryHeap, required: Int = 0,
+                          heap: TopK.QueryHeap, required: Int = 0,
                           masked: Boolean = false): Int = {
     val terms = (lists.keys ++ queryTerms).toSeq.distinct
     taat.beginBucket(terms.map(lists.get(_).map(_._1).orNull).toArray,
@@ -62,7 +62,7 @@ class BucketTaatSpec extends AnyFunSuite {
       .map { case (d, s) => TopK.Cand(d, s) }
 
     val taat = new QueryEngine.BucketTaat(width, k)
-    val heap = new QueryEngine.QueryHeap(k)
+    val heap = new TopK.QueryHeap(k)
     buckets.foreach { case (base, lists) =>
       scoreBucket(taat, queryTerms, lists, base, heap)
     }
@@ -125,7 +125,7 @@ class BucketTaatSpec extends AnyFunSuite {
       .map { case (d, s) => TopK.Cand(d, s) }
 
     val taat = new QueryEngine.BucketTaat(width, k)
-    val heap = new QueryEngine.QueryHeap(k)
+    val heap = new TopK.QueryHeap(k)
     buckets.foreach { case (base, lists) =>
       scoreBucket(taat, queryTerms, lists, base, heap, required = m)
     }
@@ -153,7 +153,7 @@ class BucketTaatSpec extends AnyFunSuite {
     val width = 8
     val k = 3
     val taat = new QueryEngine.BucketTaat(width, k)
-    val heap = new QueryEngine.QueryHeap(k)
+    val heap = new TopK.QueryHeap(k)
     val t = "t"
     // bucket 0: scores 10, 9, 8 at docs 0,1,2
     scoreBucket(taat, Seq(t), Map(t -> (Array(0, 1, 2), Array(10L, 9L, 8L))), 0L, heap)
@@ -173,7 +173,7 @@ class BucketTaatSpec extends AnyFunSuite {
     val width = 4
     val k = 4
     val taat = new QueryEngine.BucketTaat(width, k)
-    val heap = new QueryEngine.QueryHeap(k)
+    val heap = new TopK.QueryHeap(k)
     // two full-width lists (total=8 >= width → dense path), every contrib 0
     val lists = Map(
       "a" -> (Array(0, 1, 2, 3), Array(0L, 0L, 0L, 0L)),
@@ -189,18 +189,18 @@ class BucketTaatSpec extends AnyFunSuite {
     val t = "t"
     val lists = Map(t -> (Array(0, 1, 2, 3), Array(4L, 3L, 2L, 1L)))
     // bucket 0: only offsets 0 and 2 allowed
-    val h0 = new QueryEngine.QueryHeap(4)
+    val h0 = new TopK.QueryHeap(4)
     taat.beginMask(); taat.allow(0); taat.allow(2)
     scoreBucket(taat, Seq(t), lists, 0L, h0, masked = true)
     assert(h0.toCands == Seq(TopK.Cand(0, 4), TopK.Cand(2, 2)))
     // bucket 1 reuses the SAME scorer: a fresh mask allowing only offset 1
     // must not leak bucket 0's allows (the reused array is stamp-cleared)
-    val h1 = new QueryEngine.QueryHeap(4)
+    val h1 = new TopK.QueryHeap(4)
     taat.beginMask(); taat.allow(1)
     scoreBucket(taat, Seq(t), lists, 4L, h1, masked = true)
     assert(h1.toCands == Seq(TopK.Cand(5, 3)))
     // and masked=false ignores the mask entirely
-    val h2 = new QueryEngine.QueryHeap(4)
+    val h2 = new TopK.QueryHeap(4)
     scoreBucket(taat, Seq(t), lists, 8L, h2)
     assert(h2.toCands.map(_.doc_id) == Seq(8L, 9L, 10L, 11L))
   }
@@ -226,7 +226,7 @@ class BucketTaatSpec extends AnyFunSuite {
       }
       val queries = Seq(Array(0), Array(1), Array(0, 2), Array(1, 2), Array(0, 1), Array(1, 0, 2))
       val taat = new QueryEngine.BucketTaat(width, k)
-      val heaps = queries.map(_ => new QueryEngine.QueryHeap(k))
+      val heaps = queries.map(_ => new TopK.QueryHeap(k))
       buckets.foreach { case (base, idxs, cs) =>
         taat.beginBucket(idxs, cs)
         queries.zip(heaps).foreach { case (q, h) => taat.score(q, base, h) }

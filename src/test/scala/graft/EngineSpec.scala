@@ -189,8 +189,8 @@ class EngineSpec extends AnyFunSuite {
       // executor level of the treeAggregate first
       spark.conf.set(key, "128")
       spark.conf.set(coalesce, "false")
-      assert(QueryEngine.mergeDepth(4) == 1)
-      assert(QueryEngine.mergeDepth(128) > 1)
+      assert(TopK.mergeDepth(4) == 1)
+      assert(TopK.mergeDepth(128) > 1)
       val distributed = rows(QueryEngine.run(spark, p, plan))
       assert(oracle.nonEmpty)
       assert(distributed == oracle)

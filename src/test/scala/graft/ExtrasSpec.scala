@@ -92,6 +92,17 @@ class ExtrasSpec extends AnyFunSuite {
     assert(got == Seq((1L, 2L, 1000000L)))
   }
 
+  test("embedding dedup refuses a table above its row bound, naming embeddingDupLsh") {
+    import spark.implicits._
+    // the contract tables (500 and 2 000 vectors) stay well under it
+    assert(Dedup.MaxExactDupRows >= 10 * 2000L)
+    // one row over the bound; refused on its count, before any pair
+    val big = spark.range(Dedup.MaxExactDupRows + 1)
+      .select($"id".as("vec_id"), array(lit(1f)).as("embedding"))
+    val e = intercept[IllegalArgumentException](Dedup.embeddingDup(big))
+    assert(e.getMessage.contains("embeddingDupLsh"), e.getMessage)
+  }
+
   test("simhash: identical docs identical hash; near-dup low hamming; unrelated high") {
     import spark.implicits._
     val df = Seq(

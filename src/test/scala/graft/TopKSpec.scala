@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** Bounded top-k structure: insert/merge equal full-sort truncation under
-  * the frozen total order (score DESC, doc_id ASC). */
+/** Bounded top-k structure: heap offers, block merges and the rows entry
+  * equal full-sort truncation under the frozen total order (score DESC,
+  * doc_id ASC). */
 class TopKSpec extends AnyFunSuite {
   import TopK._
 
@@ -23,10 +24,11 @@ class TopKSpec extends AnyFunSuite {
 
   private val candsGen: Gen[List[Cand]] = Gen.listOf(candGen).map(_.distinctBy(_.doc_id))
 
-  test("insert keeps exactly the k best (property, with ties)") {
+  test("QueryHeap.offer keeps exactly the k best (property, with ties)") {
     check(Prop.forAll(candsGen, Gen.choose(1, 12)) { (cs, k) =>
-      val got = cs.foldLeft(Seq.empty[Cand])((b, c) => insert(b, c, k))
-      got == sortAll(cs).take(k)
+      val heap = new QueryHeap(k)
+      cs.foreach(c => heap.offer(c.score_micro, c.doc_id))
+      heap.toCands == sortAll(cs).take(k)
     })
   }
 
@@ -44,10 +46,10 @@ class TopKSpec extends AnyFunSuite {
   /** Per-task blocks over disjoint doc sets: 0–6 blocks, each holding a
     * random subset of 8 qids (possibly none), each list the true top-k of
     * its random cands (ties on small scores). */
-  private val blocksGen: Gen[(Int, Seq[Map[Int, Seq[Cand]]])] = for {
+  private val blocksGen: Gen[(Int, Seq[Map[Long, Seq[Cand]]])] = for {
     k <- Gen.choose(1, 12)
     nBlocks <- Gen.choose(0, 6)
-    blocks <- Gen.listOfN(nBlocks, Gen.mapOf(Gen.zip(Gen.choose(0, 7),
+    blocks <- Gen.listOfN(nBlocks, Gen.mapOf(Gen.zip(Gen.choose(0L, 7L),
       Gen.nonEmptyListOf(candGen))))
   } yield (k, blocks.zipWithIndex.map { case (m, bi) =>
     m.map { case (q, cs) =>
@@ -57,14 +59,14 @@ class TopKSpec extends AnyFunSuite {
     }
   })
 
-  private def toBlock(m: Map[Int, Seq[Cand]]): Block = {
+  private def toBlock(m: Map[Long, Seq[Cand]]): Block = {
     val qs = m.keys.toArray.sorted
     val lists = qs.map(m)
     new Block(qs, lists.scanLeft(0)(_ + _.length),
       lists.flatMap(_.map(_.doc_id)), lists.flatMap(_.map(_.score_micro)))
   }
 
-  private def fromBlock(b: Block): Map[Int, Seq[Cand]] =
+  private def fromBlock(b: Block): Map[Long, Seq[Cand]] =
     b.qids.indices.map(i => b.qids(i) -> b.cands(i)).toMap
 
   /** Merge in a random tree shape: split at a random point, merge halves. */
@@ -87,6 +89,39 @@ class TopKSpec extends AnyFunSuite {
       got.qids.toSeq == got.qids.toSeq.sorted.distinct &&
         got.off.length == got.qids.length + 1 &&
         fromBlock(got) == want && fromBlock(folded) == want
+    })
+  }
+
+  /** (k, rows spread over partitions): qids low, around Int.MaxValue and
+    * at Long.MaxValue; scores small (ties) or the sortableBits of doubles
+    * of both signs (negative encodings); each (qid, id) pair once; 1–6
+    * partitions, each row in a random one, so some are empty. */
+  private val rowsGen: Gen[(Int, Seq[Seq[(Long, Long, Long)]])] = for {
+    k <- Gen.choose(1, 12)
+    rows <- Gen.listOf(for {
+      q <- Gen.oneOf(Gen.choose(0L, 4L),
+        Gen.choose(Int.MaxValue - 1L, Int.MaxValue + 2L), Gen.const(Long.MaxValue))
+      id <- Gen.choose(0L, 40L)
+      s <- Gen.oneOf(Gen.choose(-5L, 5L),
+        Gen.oneOf(-2.5, -1.0, -0.0, 0.0, 0.75, 3.0).map(sortableBits))
+    } yield (q, id, s))
+    nParts <- Gen.choose(1, 6)
+    where <- Gen.listOfN(rows.length, Gen.choose(0, nParts - 1))
+  } yield {
+    val distinct = rows.distinctBy(r => (r._1, r._2))
+    val placed = distinct.zip(where)
+    (k, (0 until nParts).map(p => placed.collect { case (r, `p`) => r }))
+  }
+
+  test("topk over (qid, id, score) rows == sort-all reference (property, Spark)") {
+    val sc = TestSpark.spark.sparkContext
+    check(Prop.forAll(rowsGen) { case (k, parts) =>
+      val want = parts.flatten.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, rs) =>
+        rs.sortWith((a, b) => a._3 > b._3 || (a._3 == b._3 && a._2 < b._2)).take(k)
+          .zipWithIndex.map { case ((_, id, s), i) => (q, i + 1, id, s) }
+      }
+      val got = topk(sc.parallelize(parts, parts.length).flatMap(identity), k)
+      got.ranked((q, rank, id, s) => (q, rank, id, s)) == want
     })
   }
 
