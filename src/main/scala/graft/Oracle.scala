@@ -99,12 +99,12 @@ object Oracle {
 
   /** Same result via [[TopK.topk]], the engine's one top-k merge (per-
     * task bounded heaps, one `treeAggregate`; the treeReduce-style scale
-    * path, SURVEY.md §2.6 T2), as a local relation in (query_id, rank)
-    * order. */
+    * path, SURVEY.md §2.6 T2), as one [[HitsRelation]] in (query_id,
+    * rank) order. */
   def topkViaHeap(spark: SparkSession, docs: DataFrame, k: Int = QuerySet.K): DataFrame = {
     import spark.implicits._
     val top = TopK.topk(scores(spark, docs)
       .select($"query_id".cast("long"), $"doc_id", $"score_micro").as[(Long, Long, Long)].rdd, k)
-    spark.createDataset(top.ranked((q, rank, doc, score) => Hit(q.toInt, rank, doc, score))).toDF()
+    HitsRelation.toDF(spark, top)
   }
 }

@@ -114,7 +114,8 @@ object PlanAudit {
     sb ++= "(5) an uncached query batch restricts postings to its terms with one\n"
     sb ++= "`InSet` filter (pushed into the parquet reader), no `BroadcastExchange`;\n"
     sb ++= "(6) a batch over the cached serving layout runs no SQL operator: its\n"
-    sb ++= "one stage scores the persisted parts (RDD lineage below).\n\n"
+    sb ++= "one stage scores the persisted parts (RDD lineage below), and its hits\n"
+    sb ++= "come back as one `HitsScan` leaf over the merged block, no row list.\n\n"
 
     def dump(title: String, df: DataFrame): Unit = {
       sb ++= s"## $title\n\n```\n"
@@ -134,7 +135,8 @@ object PlanAudit {
     //     one InSet filter, pushed into the segments' parquet scan. Over
     //     the handle's cached serving layout the batch runs no Catalyst
     //     plan: its one stage is the scorer over the persisted parts, whose
-    //     lineage is dumped after a first batch has filled the cache
+    //     lineage is dumped after a first batch has filled the cache; that
+    //     batch's hits are one HitsScan leaf
     val batch = Bench.queryBatch(50)
     val batchTerms = batch.flatMap(_._2).distinct.sorted
     dump(s"1000-query batch term filter over term-partitioned segments (${batchTerms.size} terms, one InSet)",
@@ -143,11 +145,14 @@ object PlanAudit {
     clear(serveDir)
     IndexBuild.deriveDocPartitioned(spark, dir, serveDir)
     val handle = QueryEngine.openIndex(spark, serveDir)
-    QueryEngine.runOnHandle(spark, handle, batch).collect()
+    val hits = QueryEngine.runOnHandle(spark, handle, batch)
     sb ++= s"## 1000-query batch over the cached serving layout (RDD lineage of its one stage)\n\n```\n"
     sb ++= QueryEngine.scoredBlocks(handle.served.get, QueryEngine.plan(cs, Map.empty, Nil))
       .toDebugString
     sb ++= "\n```\n\n"
+    sb ++= s"## The cached batch's result (executed plan: one leaf over the merged block)\n\n```\n"
+    sb ++= hits.queryExecution.executedPlan.treeString
+    sb ++= "```\n\n"
     handle.close()
 
     // 2. segment-derived stats job (column-pruned scan, map-side partials):

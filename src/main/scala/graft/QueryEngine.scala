@@ -31,8 +31,8 @@ import graft.TopK.QueryHeap
   *  and filter lists, re-bucket it into docId ranges if it is
   *  term-partitioned, and group it per task into the same parts. The
   *  tasks' per-query top-k blocks merge in one `treeAggregate`; the nq·k
-  *  hits come back in (query_id, rank) order as a local relation, so
-  *  collecting them runs no further job.
+  *  hits come back in (query_id, rank) order as one [[HitsRelation]] leaf
+  *  over the merged block, so collecting them runs no further job.
   *
   * Scale note: one scorer serves every layout. Re-bucketing bounds
   * per-task memory by the range width, never by a head term's full
@@ -938,14 +938,14 @@ object QueryEngine {
     * per-part top-k's under the frozen total order, whatever the merge
     * tree.
     *
-    * The hits come back in (query_id, rank) order as a local relation:
-    * no sort, and collecting them runs no job. */
+    * The hits come back in (query_id, rank) order as one
+    * [[HitsRelation]] over the merged block: no sort, no row list in the
+    * plan, and collecting them runs no job. */
   def runDocPartitioned(spark: SparkSession, parts: RDD[ServingPart],
                         plan: Plan, effort: Option[EffortAccs] = None): DataFrame = {
-    import spark.implicits._
     require(plan.bucketWidth > 0, "doc-partitioned plan needs bucketWidth from meta")
-    val top = TopK.mergeAll(scoredBlocks(parts, plan, effort), plan.k, effort.map(_.mergeNanos))
-    spark.createDataset(top.ranked((q, rank, doc, score) => Hit(q.toInt, rank, doc, score))).toDF()
+    HitsRelation.toDF(spark,
+      TopK.mergeAll(scoredBlocks(parts, plan, effort), plan.k, effort.map(_.mergeNanos)))
   }
 
   /** The batch's scoring stage: one [[scorePartition]] block per part.
@@ -1264,8 +1264,7 @@ object QueryEngine {
     // what empty filterTerms would silently mean downstream. An empty
     // RANGE (lo > hi) needs no special case: it selects zero virtual
     // lists, so every bucket folds an empty mask and admits nothing.
-    def noHits = spark.emptyDataset[Hit].toDF()
-      .select($"query_id", $"rank", $"doc_id", $"score_micro")
+    def noHits = HitsRelation.toDF(spark, TopK.emptyBlock)
     if (filter.exists(_._2.isEmpty)) return noHits
     val sidecar = filter.map(_._1).orElse(rangeFilter.map(_._1)).map { a =>
       val sc = h.sidecar(spark)

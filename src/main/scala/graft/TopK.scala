@@ -20,24 +20,6 @@ import org.apache.spark.util.LongAccumulator
 object TopK {
   final case class Cand(doc_id: Long, score_micro: Long)
 
-  /** true iff a is strictly better than b under (score DESC, doc_id ASC). */
-  @inline def better(a: Cand, b: Cand): Boolean =
-    a.score_micro > b.score_micro ||
-      (a.score_micro == b.score_micro && a.doc_id < b.doc_id)
-
-  /** Merge two sorted-best-first lists, keep k (classic merge step; the
-    * reference TopKSpec checks [[merge]] against). */
-  def mergeTopK(a: Seq[Cand], b: Seq[Cand], k: Int): Seq[Cand] = {
-    val out = Vector.newBuilder[Cand]
-    var i = 0; var j = 0; var n = 0
-    while (n < k && (i < a.length || j < b.length)) {
-      val takeA = j >= b.length || (i < a.length && better(a(i), b(j)))
-      if (takeA) { out += a(i); i += 1 } else { out += b(j); j += 1 }
-      n += 1
-    }
-    out.result()
-  }
-
   /** Carried per-query top-k: a sorted prefix of length `n` maintained by
     * shift-insert (k is small). The batched scorer SEEDS its selection
     * with this state, which (a) makes the cross-bucket merge free —

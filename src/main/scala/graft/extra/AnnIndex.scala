@@ -114,10 +114,12 @@ object AnnIndex {
     }
 
   /** The persisted codebook, cell-ordered (tiny: kc × dim doubles, so
-    * one collect, sorted on the driver). */
+    * one collect, sorted on the driver). Every table the index wrote
+    * itself is read with its known schema: parquet then runs no
+    * schema-inference job. */
   def loadCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/centroids")
+    spark.read.schema("cell INT, centroid ARRAY<DOUBLE>").parquet(s"$dir/centroids")
       .select($"cell", $"centroid").as[(Int, Seq[Double])].collect()
       .sortBy(_._1).map(_._2.toArray)
   }
@@ -141,7 +143,7 @@ object AnnIndex {
       qs.toSeq.toDF("query_vec_id", "qe"), centroids, nprobe, k)
   }
 
+  /** The cells as written: `cell` is the int partition column. */
   def readCells(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/cells")
-      .select(col("vec_id"), col("embedding"), col("cell").cast("int").as("cell"))
+    spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>, cell INT").parquet(s"$dir/cells")
 }

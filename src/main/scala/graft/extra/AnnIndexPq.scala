@@ -119,7 +119,7 @@ object AnnIndexPq {
   /** The persisted PQ codebooks: M × ks × SubDim (Quantizer::Load). */
   def loadCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
     import spark.implicits._
-    val rows = spark.read.parquet(s"$dir/codebooks")
+    val rows = spark.read.schema("m INT, cw INT, vec ARRAY<DOUBLE>").parquet(s"$dir/codebooks")
       .select($"m", $"cw", $"vec").as[(Int, Int, Seq[Double])].collect()
     val m = rows.map(_._1).max + 1
     Array.tabulate(m) { mi =>
@@ -127,9 +127,9 @@ object AnnIndexPq {
     }
   }
 
+  /** The codes as written: `cell` is the int partition column. */
   def readCodes(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/codes")
-      .select(col("vec_id"), col("code"), col("cell").cast("int").as("cell"))
+    spark.read.schema("vec_id BIGINT, code ARRAY<INT>, cell INT").parquet(s"$dir/codes")
 
   /** Query a loaded index. Phase 1 (driver-side, like the fulltext book
     * routing): per query, the nprobe nearest persisted centroids + the

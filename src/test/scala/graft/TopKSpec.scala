@@ -17,6 +17,24 @@ class TopKSpec extends AnyFunSuite {
   private def sortAll(cs: Seq[Cand]): Seq[Cand] =
     cs.sortBy(c => (-c.score_micro, c.doc_id))
 
+  /** true iff a is strictly better than b under (score DESC, doc_id ASC). */
+  private def better(a: Cand, b: Cand): Boolean =
+    a.score_micro > b.score_micro ||
+      (a.score_micro == b.score_micro && a.doc_id < b.doc_id)
+
+  /** Merge two sorted-best-first lists, keep k: the classic merge step,
+    * the reference [[merge]] is checked against. */
+  private def mergeTopK(a: Seq[Cand], b: Seq[Cand], k: Int): Seq[Cand] = {
+    val out = Vector.newBuilder[Cand]
+    var i = 0; var j = 0; var n = 0
+    while (n < k && (i < a.length || j < b.length)) {
+      val takeA = j >= b.length || (i < a.length && better(a(i), b(j)))
+      if (takeA) { out += a(i); i += 1 } else { out += b(j); j += 1 }
+      n += 1
+    }
+    out.result()
+  }
+
   private val candGen: Gen[Cand] = for {
     d <- Gen.choose(0L, 50L)
     s <- Gen.choose(0L, 20L) // small ranges force ties
