@@ -162,8 +162,8 @@ object Attrs {
     * ([[QueryEngine.restrictToPlan]]) selects the lists it needs. */
   final case class Sidecar(dir: String, attrs: Seq[String], rows: Dataset[PostingRow]) {
     /** Refuse a predicate on an attr the sidecar does not hold: it has no
-      * lists for it, so the filter would mask every bucket and answer
-      * nothing. */
+      * lists for it, so the filter would admit no doc in any bucket and
+      * answer nothing. */
     def requireAttr(attr: String): Unit =
       require(attrs.contains(attr),
         s"attribute '$attr' is not in the sidecar at ${attrsDir(dir)}, which " +
@@ -216,7 +216,7 @@ object Attrs {
   // strings would depend on their rendering).
   //
   // The binding match decision is the SCORER-side [[rangeTermMatches]],
-  // applied when the scorer folds the mask; the Catalyst predicate below
+  // applied when the scorer folds a bucket's filter lists; the Catalyst predicate below
   // is the batch restriction's row selection ([[QueryEngine.restrictToPlan]])
   // and must stay a SUPERSET of the scorer's matches.
 

@@ -64,10 +64,12 @@ object PlanAudit {
 
   /** Formatted plan text, with U+0000 (the attr filter-term marker,
     * [[Attrs.FilterMarker]]) rendered as the two characters `\0` so the
-    * written files stay text. */
+    * written files stay text, and a lambda argument's per-JVM class
+    * number and identity hash (`/0x00007f2c3938d9a0@15045e40`) cut. */
   private def explain(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       .replace("\u0000", "\\0")
+      .replaceAll("""\$\$Lambda[$0-9]*/0x[0-9a-f]+@[0-9a-f]+""", "\\$\\$Lambda")
 
   private def plans(spark: SparkSession, sfDir: String, outDir: String,
                     names: Seq[String]): Unit = {
@@ -181,19 +183,21 @@ object PlanAudit {
       extra.AnnIndex.readCells(spark, annDir).where($"cell".isin(0, 1, 2)))
 
     // 6. composed IVF∘PQ index: probed codes read (partition pruning) and
-    //    the exact rerank's pairs (candidate side broadcast — corpus never
-    //    shuffled); their top-k is TopK.topk's per-task heaps and one
-    //    treeAggregate, outside any SQL plan
+    //    the exact rerank's pairs (the candidate pool, each candidate
+    //    beside its query vector, broadcast once — corpus never shuffled);
+    //    their top-k is TopK.topk's per-task heaps and one treeAggregate,
+    //    outside any SQL plan
     val pqDir = "target/plan-audit-ivfpq"
     clear(pqDir)
     extra.AnnIndexPq.write(spark, emb, pqDir)
     dump("IVF∘PQ probed codes read (partition pruning on cell)",
       extra.AnnIndexPq.readCodes(spark, pqDir).where($"cell".isin(0, 1, 2)))
-    val cands = Seq((0L, 5L), (1L, 7L)).toDF("query_vec_id", "vec_id")
-    val q = emb.where($"vec_id" < 2)
-      .select($"vec_id".as("query_vec_id"), $"embedding".as("qe"))
+    val qv = emb.where($"vec_id" < 2).select($"vec_id", $"embedding")
+      .as[(Long, Seq[Float])].collect().toMap
+    val pool = Seq((0L, 5L), (1L, 7L)).map { case (q, v) => (q, v, qv(q)) }
+      .toDF("query_vec_id", "vec_id", "qe")
     dump("IVF∘PQ exact rerank pairs (broadcast candidate pool, hash-probe corpus scan, no Window)",
-      extra.Pq.rerankPairs(cands, emb, q))
+      extra.Pq.rerankPairs(pool, emb))
 
     // 7. positional sidecar: the phrase path's filtered read must show the
     //    term predicate pushed to the parquet scan (row-group skipping on

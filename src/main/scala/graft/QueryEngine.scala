@@ -52,7 +52,8 @@ object QueryEngine {
     /** Slots the scorer touched after chunk-skip / TA-walk pruning,
       * summed over calls: a dense call counts the non-empty slots of the
       * chunks it scanned (or the TA walk's survivors), a sparse or
-      * single-list call its lists' postings. */
+      * single-list call its lists' postings. Under an attribute filter
+      * the lists hold admitted docs only, so only those are counted. */
     val docsScored = spark.sparkContext.longAccumulator("docs_scored")
     // Wall-time split of the batched scorer (task-summed nanos; the
     // SURVEY §7.5 codegen-Expression question needs the DECODE share of
@@ -89,15 +90,16 @@ object QueryEngine {
       termQueries: Array[Array[Int]],
       bucketWidth: Long = 0L, // doc-partitioned batch scoring needs the geometry
       conjunctive: Boolean = false, // AND semantics: docs must match EVERY query term
-      // attribute filter as virtual posting lists ([[Attrs]]): a doc may
-      // reach any heap only if it appears in at least one of these lists
-      // (OR across the values of an IN-predicate). BM25 stats stay
-      // corpus-global — a filter restricts candidates, not scoring.
+      // attribute filter as virtual posting lists ([[Attrs]]): per bucket,
+      // [[scorePartition]] keeps in the scored term lists only the docs
+      // that appear in at least one of these lists (OR across the values
+      // of an IN-predicate). BM25 stats stay corpus-global — a filter
+      // restricts candidates, not scoring.
       filterTerms: Seq[String] = Nil,
       // range predicate `attr BETWEEN lo AND hi` over NUMERIC attr values
-      // ([[Attrs.rangeTermMatches]]): same virtual-list mask as
-      // filterTerms, the requested lists selected by value range instead
-      // of an explicit IN set
+      // ([[Attrs.rangeTermMatches]]): narrows the term lists as
+      // filterTerms does, the requested lists selected by value range
+      // instead of an explicit IN set
       filterRange: Option[(String, Double, Double)] = None) {
 
     /** Any attribute filter in force? (empty-IN batches are answered
@@ -107,8 +109,9 @@ object QueryEngine {
     @transient private lazy val filterTermSet: Set[String] = filterTerms.toSet
 
     /** Is this term one of the predicate's requested virtual lists? The
-      * BINDING match decision for the mask fold, applied to every row the
-      * batch's restriction selected (a superset for a range). */
+      * BINDING match decision for the per-bucket admit fold, applied to
+      * every row the batch's restriction selected (a superset for a
+      * range). */
     def isRequestedFilter(term: String): Boolean =
       Attrs.isFilterTerm(term) && (filterTermSet.contains(term) ||
         filterRange.exists { case (a, lo, hi) =>
@@ -166,7 +169,9 @@ object QueryEngine {
     *    terms at huge N can floor to 0 — rank-identity cannot depend on
     *    contribs being nonzero).
     *  - otherwise → SPARSE: the stamp-cleared scatter of rounds 1-3
-    *    (cost ∝ touched docs, not width). */
+    *    (cost ∝ touched docs, not width).
+    * No shape knows of attribute filters: [[scorePartition]] binds lists
+    * that hold only the bucket's admitted docs. */
   final class BucketTaat(width: Int, k: Int) {
     private val scores = new Array[Long](width)
     private val stamp = new Array[Int](width)
@@ -176,15 +181,6 @@ object QueryEngine {
     private var gIdx = new Array[Array[Int]](8)
     private var gCs = new Array[Array[Long]](8)
     private var gSlot = new Array[Int](8)
-    // Attribute-filter mask, stamp-cleared like `scores`: one width-sized
-    // int array reused across ALL of this task's buckets (a fresh
-    // Array[Boolean] per bucket was alloc + zeroing the scorer otherwise
-    // avoids). beginMask() invalidates every prior allow() in O(1).
-    // curMask starts at 1 with the stamps zeroed: a masked score() call
-    // that never saw a beginMask() admits NOTHING (round-4 ADVICE: at 0/0
-    // the misuse silently degraded to an unfiltered query).
-    private val maskStamp = new Array[Int](width)
-    private var curMask = 1
 
     // Per-bucket DENSE CONTRIBUTION COLUMNS (the round-6 batched-scorer
     // optimization): the dense path used to re-scatter every term's
@@ -299,14 +295,6 @@ object QueryEngine {
       e
     }
 
-    /** Start a new bucket's allowed-offset mask (clears the previous one). */
-    def beginMask(): Unit = curMask += 1
-
-    /** Admit local doc offset `ix` to the current mask. */
-    def allow(ix: Int): Unit = maskStamp(ix) = curMask
-
-    @inline private def allowed(ix: Int): Boolean = maskStamp(ix) == curMask
-
     /** Scores every posting of the query's term `slots` present in the
       * bucket bound by [[beginBucket]] — per slot, (docIdx within bucket,
       * contribMicro) — into `heap` (doc ids globalized with `base`).
@@ -316,17 +304,8 @@ object QueryEngine {
       * conjunctive — only docs matched by exactly m lists qualify (the
       * caller passes the query's FULL distinct-term count, so a term with
       * no postings in this bucket excludes every doc of the bucket: a
-      * doc lives in exactly one bucket, so per-bucket AND is global AND).
-      *
-      * `masked = true` is an attribute filter ([[Attrs]]): only local doc
-      * offsets the caller passed to [[allow]] since the last [[beginMask]]
-      * may reach the heap. The mask gates the OFFER, not the
-      * accumulation — contributions are summed for all docs (branch-free
-      * hot loops stay branch-free) and filtered at the single selection
-      * point of each shape; the unfiltered paths run the exact loops they
-      * ran before (masked = false ⇒ the pre-filter code). */
-    def score(slots: Array[Int], base: Long, heap: QueryHeap, required: Int = 0,
-              masked: Boolean = false): Int = {
+      * doc lives in exactly one bucket, so per-bucket AND is global AND). */
+    def score(slots: Array[Int], base: Long, heap: QueryHeap, required: Int = 0): Int = {
       var nl = 0
       var total = 0
       if (gIdx.length < slots.length) {
@@ -346,18 +325,16 @@ object QueryEngine {
       }
       if (nl == 0) 0
       else if (required > 0 && nl < required) 0 // conj: a term absent here excludes the whole bucket
-      else if (nl == 1 && required <= 1) scoreSingle(gSlot(0), base, heap, masked)
-      else if (total >= width) scoreDense(nl, base, heap, required, masked)
-      else if (required > 0) scoreSparseConj(nl, base, heap, required, masked)
-      else scoreSparse(nl, base, heap, masked)
+      else if (nl == 1 && required <= 1) scoreSingle(gSlot(0), base, heap)
+      else if (total >= width) scoreDense(nl, base, heap, required)
+      else scoreSparse(nl, base, heap, required)
     }
 
     /** One list: the list IS the score column — stream it into the heap.
       * Lists are docId-ascending, so the tight θ floor applies (see
       * [[QueryHeap.tightFloorFor]]): with a full heap strictly below this
       * bucket, acceptance is the single compare `contrib > kth`. */
-    private def scoreSingle(slot: Int, base: Long, heap: QueryHeap,
-                            masked: Boolean): Int = {
+    private def scoreSingle(slot: Int, base: Long, heap: QueryHeap): Int = {
       val idxs = lIdx(slot)
       val cs = lCs(slot)
       var i = 0
@@ -374,24 +351,12 @@ object QueryEngine {
         val th = heap.kth
         val packed = sortedFor(slot)
         var j = packed.length - 1
-        if (!masked)
-          while (j >= 0 && (packed(j) >>> 32) > th) {
-            heap.offer(packed(j) >>> 32, base + (packed(j) & 0xffffffffL))
-            j -= 1
-          }
-        else
-          while (j >= 0 && (packed(j) >>> 32) > th) {
-            val ix = (packed(j) & 0xffffffffL).toInt
-            if (allowed(ix)) heap.offer(packed(j) >>> 32, base + ix)
-            j -= 1
-          }
-      } else if (!masked)
-        while (i < n) { heap.offer(cs(i), base + idxs(i)); i += 1 }
-      else
-        while (i < n) {
-          if (allowed(idxs(i))) heap.offer(cs(i), base + idxs(i))
-          i += 1
+        while (j >= 0 && (packed(j) >>> 32) > th) {
+          heap.offer(packed(j) >>> 32, base + (packed(j) & 0xffffffffL))
+          j -= 1
         }
+      } else
+        while (i < n) { heap.offer(cs(i), base + idxs(i)); i += 1 }
       n
     }
 
@@ -406,9 +371,7 @@ object QueryEngine {
     private val DenseMask = DenseTag - 1
     private val MaxTaggedLists = 1 << 16
 
-    private def scoreDense(nl: Int, base: Long, heap: QueryHeap,
-                           required: Int = 0,
-                           masked: Boolean = false): Int = {
+    private def scoreDense(nl: Int, base: Long, heap: QueryHeap, required: Int): Int = {
       require(nl <= MaxTaggedLists,
         s"tagged scorer supports <= $MaxTaggedLists lists, got $nl")
       if (gCols.length < nl) gCols = new Array[DenseCol](nl)
@@ -423,10 +386,10 @@ object QueryEngine {
       var cand = 0
       var d = 0
       // Fused column-sum selection for the common shapes (2-3 term
-      // unfiltered disjunctive queries — the batched-serving hot loop):
+      // disjunctive queries — the batched-serving hot loop):
       // no scores-array fill, no scatter, just nl sequential reads per
       // slot. Identical per-doc values (same summands, integer adds).
-      if (allCols && required == 0 && !masked && (nl == 2 || nl == 3)) {
+      if (allCols && required == 0 && (nl == 2 || nl == 3)) {
         // Offers run in ascending d, so the tight θ floor applies: with a
         // full heap strictly below this bucket the acceptance test is ONE
         // predictable compare per slot — and whole chunks whose per-term
@@ -569,11 +532,8 @@ object QueryEngine {
         li += 1
       }
       if (first) java.util.Arrays.fill(scores, 0L)
-      // four scan variants so the pre-filter loops stay byte-identical
-      // (the dense scan is the hottest loop of the engine; a loop-variant
-      // mask check must not tax unfiltered batches)
       if (required == 0) {
-        if (!masked && heap.tightFloorFor(base)) {
+        if (heap.tightFloorFor(base)) {
           var th = heap.kth
           while (d < width) {
             val v = scores(d)
@@ -584,51 +544,37 @@ object QueryEngine {
             }
             d += 1
           }
-        } else if (!masked) {
-          while (d < width) {
-            val v = scores(d)
-            if (v != 0L) { cand += 1; heap.offer(v & DenseMask, base + d) }
-            d += 1
-          }
         } else {
           while (d < width) {
             val v = scores(d)
-            if (v != 0L && allowed(d)) { cand += 1; heap.offer(v & DenseMask, base + d) }
+            if (v != 0L) { cand += 1; heap.offer(v & DenseMask, base + d) }
             d += 1
           }
         }
       } else {
         // conjunctive: the tag count IS the per-doc matched-list count
         val want = required.toLong << 42
-        if (!masked) {
-          while (d < width) {
-            val v = scores(d)
-            if (v != 0L && (v & ~DenseMask) == want) {
-              cand += 1; heap.offer(v & DenseMask, base + d)
-            }
-            d += 1
+        while (d < width) {
+          val v = scores(d)
+          if (v != 0L && (v & ~DenseMask) == want) {
+            cand += 1; heap.offer(v & DenseMask, base + d)
           }
-        } else {
-          while (d < width) {
-            val v = scores(d)
-            if (v != 0L && (v & ~DenseMask) == want && allowed(d)) {
-              cand += 1; heap.offer(v & DenseMask, base + d)
-            }
-            d += 1
-          }
+          d += 1
         }
       }
       cand
     }
 
-    /** Sparse scatter with the dense path's tag trick, for conjunctive
-      * queries below the dense threshold: only docs whose matched-list
-      * count equals `required` reach the heap. */
-    private def scoreSparseConj(nl: Int, base: Long, heap: QueryHeap,
-                                required: Int,
-                                masked: Boolean = false): Int = {
-      require(nl <= MaxTaggedLists,
+    /** Sparse stamped scatter (cost ∝ touched docs, not width). A
+      * conjunctive call (`required > 0`) adds the dense path's
+      * [[DenseTag]] per posting, so only docs whose matched-list count
+      * equals `required` reach the heap; a disjunctive call adds no tag,
+      * so every touched doc passes the same select (tag count 0 =
+      * `required`). */
+    private def scoreSparse(nl: Int, base: Long, heap: QueryHeap, required: Int): Int = {
+      if (required > 0) require(nl <= MaxTaggedLists,
         s"tagged scorer supports <= $MaxTaggedLists lists, got $nl")
+      val tag = if (required > 0) DenseTag else 0L
       curStamp += 1
       var nTouched = 0
       var li = 0
@@ -640,66 +586,20 @@ object QueryEngine {
         while (i < n) {
           val ix = idxs(i)
           if (stamp(ix) != curStamp) {
-            stamp(ix) = curStamp; scores(ix) = cs(i) + DenseTag
+            stamp(ix) = curStamp; scores(ix) = cs(i) + tag
             touched(nTouched) = ix; nTouched += 1
-          } else scores(ix) += cs(i) + DenseTag
+          } else scores(ix) += cs(i) + tag
           i += 1
         }
         li += 1
       }
       val want = required.toLong << 42
       var j = 0
-      if (!masked) {
-        while (j < nTouched) {
-          val ix = touched(j)
-          val v = scores(ix)
-          if ((v & ~DenseMask) == want) heap.offer(v & DenseMask, base + ix)
-          j += 1
-        }
-      } else {
-        while (j < nTouched) {
-          val ix = touched(j)
-          val v = scores(ix)
-          if ((v & ~DenseMask) == want && allowed(ix))
-            heap.offer(v & DenseMask, base + ix)
-          j += 1
-        }
-      }
-      nTouched
-    }
-
-    private def scoreSparse(nl: Int, base: Long, heap: QueryHeap,
-                            masked: Boolean = false): Int = {
-      curStamp += 1
-      var nTouched = 0
-      var li = 0
-      while (li < nl) {
-        val idxs = gIdx(li)
-        val cs = gCs(li)
-        var i = 0
-        val n = idxs.length
-        while (i < n) {
-          val ix = idxs(i)
-          if (stamp(ix) != curStamp) {
-            stamp(ix) = curStamp; scores(ix) = cs(i); touched(nTouched) = ix; nTouched += 1
-          } else scores(ix) += cs(i)
-          i += 1
-        }
-        li += 1
-      }
-      var j = 0
-      if (!masked) {
-        while (j < nTouched) {
-          val ix = touched(j)
-          heap.offer(scores(ix), base + ix)
-          j += 1
-        }
-      } else {
-        while (j < nTouched) {
-          val ix = touched(j)
-          if (allowed(ix)) heap.offer(scores(ix), base + ix)
-          j += 1
-        }
+      while (j < nTouched) {
+        val ix = touched(j)
+        val v = scores(ix)
+        if ((v & ~DenseMask) == want) heap.offer(v & DenseMask, base + ix)
+        j += 1
       }
       nTouched
     }
@@ -1003,7 +903,10 @@ object QueryEngine {
     val qSeen = new Array[Int](p.qids.length)
     val qHere = new Array[Int](p.qids.length)
     var stamp = 0
-    val masked = p.filterActive
+    // Attribute filter: the offsets a bucket admits carry its mark (one
+    // stamp-cleared width-sized array for all of this task's buckets)
+    val admit = if (p.filterActive) new Array[Int](w) else null
+    var mark = 0
     var decodeNs = 0L; var contribNs = 0L; var scoreNs = 0L
     // ASCENDING bucket order: results are order-independent (the merged
     // top-k set is unique under the frozen total order), but ascending
@@ -1017,13 +920,13 @@ object QueryEngine {
       var j = i
       while (j < nPairs && (pairs(j) >> 32).toInt == bucket) j += 1
       val base = bucket.toLong * w
-      // Attribute filter: fold this bucket's requested filter lists into
-      // the scorer's stamp-cleared allowed-offset mask — OR across the
-      // predicate's values. A filtered plan with NO filter row here means
-      // no doc of this bucket matches the predicate: skip the bucket.
-      var anyAllowed = !masked
-      if (masked) {
-        taat.beginMask()
+      // Attribute filter: mark the docs of this bucket's requested filter
+      // lists — OR across the predicate's values. A filtered plan with NO
+      // filter row here means no doc of this bucket matches the
+      // predicate: skip the bucket.
+      var anyAdmitted = admit == null
+      if (admit != null) {
+        mark += 1
         var x = i
         while (x < j) {
           val fe = entry(x)
@@ -1031,18 +934,19 @@ object QueryEngine {
             val (ds, _, _) = Codec.decodeBlock(b)
             var d = 0
             while (d < ds.length) {
-              taat.allow((ds(d) - base).toInt)
+              admit((ds(d) - base).toInt) = mark
               d += 1
             }
-            anyAllowed ||= ds.length > 0
+            anyAdmitted ||= ds.length > 0
           })
           x += 1
         }
       }
-      if (anyAllowed) {
-        // decode each term's postings ONCE; precompute micro-contribs (and
-        // the term's max contrib = its block-max bound) ONCE, shared by
-        // every query using the term
+      if (anyAdmitted) {
+        // decode each term's admitted postings ONCE; precompute micro-
+        // contribs (and the term's max contrib = its block-max bound)
+        // ONCE, shared by every query using the term. A list the filter
+        // empties is absent (null): under AND it excludes the bucket.
         var bucketBlocks = 0L
         var nHere = 0
         stamp += 1
@@ -1066,18 +970,25 @@ object QueryEngine {
                 val t1 = if (prof) System.nanoTime() else 0L
                 var d = 0
                 while (d < ds.length) {
-                  idxs(oi) = (ds(d) - base).toInt
-                  val c = Bm25.contribMicro(idf, tfs(d).toLong, dls(d).toLong, p.avgdl)
-                  cs(oi) = c
-                  if (c > mx) mx = c
-                  oi += 1; d += 1
+                  val ix = (ds(d) - base).toInt
+                  if (admit == null || admit(ix) == mark) {
+                    val c = Bm25.contribMicro(idf, tfs(d).toLong, dls(d).toLong, p.avgdl)
+                    idxs(oi) = ix; cs(oi) = c
+                    if (c > mx) mx = c
+                    oi += 1
+                  }
+                  d += 1
                 }
                 if (prof) { decodeNs += t1 - t0; contribNs += System.nanoTime() - t1 }
               }
             }
-            bIdx(s) = idxs; bCs(s) = cs; maxC(s) = mx
-            p.termQueries(s).foreach { q =>
-              if (qSeen(q) != stamp) { qSeen(q) = stamp; qHere(nHere) = q; nHere += 1 }
+            if (oi > 0) {
+              bIdx(s) = if (oi < n) java.util.Arrays.copyOf(idxs, oi) else idxs
+              bCs(s) = if (oi < n) java.util.Arrays.copyOf(cs, oi) else cs
+              maxC(s) = mx
+              p.termQueries(s).foreach { q =>
+                if (qSeen(q) != stamp) { qSeen(q) = stamp; qHere(nHere) = q; nHere += 1 }
+              }
             }
           }
           x += 1
@@ -1102,7 +1013,7 @@ object QueryEngine {
           } else {
             val t0 = if (prof) System.nanoTime() else 0L
             val req = if (p.conjunctive) slots.length else 0
-            val nTouched = taat.score(slots, base, heap, req, masked)
+            val nTouched = taat.score(slots, base, heap, req)
             effort.foreach { a =>
               scoreNs += System.nanoTime() - t0
               a.wandCalls.add(1L); a.docsScored.add(nTouched.toLong)
@@ -1263,7 +1174,7 @@ object QueryEngine {
     // identically false) — it must not degrade to "no filter", which is
     // what empty filterTerms would silently mean downstream. An empty
     // RANGE (lo > hi) needs no special case: it selects zero virtual
-    // lists, so every bucket folds an empty mask and admits nothing.
+    // lists, so no bucket has a filter row and every bucket is skipped.
     def noHits = HitsRelation.toDF(spark, TopK.emptyBlock)
     if (filter.exists(_._2.isEmpty)) return noHits
     val sidecar = filter.map(_._1).orElse(rangeFilter.map(_._1)).map { a =>

@@ -183,9 +183,9 @@ object SparkEntry {
     }),
     // --- attribute-filtered retrieval: the same serving lifecycle plus
     // an attr sidecar (virtual posting lists per (attr=value, bucket),
-    // Attrs.scala) and a lang IN ('es','de') predicate masked per bucket
-    // in the TAAT scorer. BM25 stats stay corpus-global; the DuckDB
-    // mirror applies the same predicate to the same corpus ---------------
+    // Attrs.scala) and a lang IN ('es','de') predicate that narrows each
+    // bucket's term lists as they decode. BM25 stats stay corpus-global;
+    // the DuckDB mirror applies the same predicate to the same corpus ---
     "q_topk_filtered" -> ((s, dir) => {
       val root = scratchDir("filter-idx-")
       val termDir = s"$root/term"

@@ -122,20 +122,22 @@ object Pq {
             (qid, vid, TopK.sortableBits(-d)) // distance ASC = -d DESC
         }
       }, k * rerankFactor)
-    rerankExact(spark.createDataset(pool.ranked((q, _, v, _) => (q, v)))
-        .toDF("query_vec_id", "vec_id"), emb,
-      spark.createDataset(queries.map(q => (q._1, q._2)).toSeq).toDF("query_vec_id", "qe"), k)
+    // the pool and the query vectors are both on the driver: join them here
+    val qv = queries.map(q => q._1 -> q._2).toMap
+    rerankExact(spark.createDataset(pool.ranked((q, _, v, _) => (q, v, qv(q))))
+      .toDF("query_vec_id", "vec_id", "qe"), emb, k)
   }
 
-  /** The exact rerank's pairs: the O(nq·k·rf) candidate pool joined back
-    * to raw vectors, scored with the canonical fold ([[l2Col]] — the
-    * DuckDB-parity order). Both joins BROADCAST the tiny candidate/query
-    * side, so the corpus is one column-pruned hash-probe scan — never
+  /** The exact rerank's pairs: the O(nq·k·rf) candidate pool
+    * (query_vec_id, vec_id, qe), each candidate beside its query's vector,
+    * joined back to raw vectors and scored with the canonical fold
+    * ([[l2Col]] — the DuckDB-parity order). The one join BROADCASTS the
+    * tiny pool, so the corpus is one column-pruned hash-probe scan — never
     * shuffled. */
-  def rerankPairs(cands: DataFrame, emb: DataFrame, q: DataFrame): DataFrame = {
-    import cands.sparkSession.implicits._
+  def rerankPairs(pool: DataFrame, emb: DataFrame): DataFrame = {
+    import pool.sparkSession.implicits._
     emb.select($"vec_id", $"embedding")
-      .join(broadcast(cands.join(broadcast(q), Seq("query_vec_id"))), Seq("vec_id"))
+      .join(broadcast(pool), Seq("vec_id"))
       .select($"query_vec_id", $"vec_id", l2Col($"qe", $"embedding").as("l2"))
   }
 
@@ -143,8 +145,8 @@ object Pq {
     * [[rerankPairs]] under (L2 ASC, vec_id ASC), through the one top-k
     * merge ([[Ann.topkFromPairs]]): a local relation (query_vec_id, rank,
     * vec_id, l2_micro) in (query_vec_id, rank) order. */
-  def rerankExact(cands: DataFrame, emb: DataFrame, q: DataFrame, k: Int): DataFrame =
-    Ann.topkFromPairs(rerankPairs(cands, emb, q), k, ascending = true)
+  def rerankExact(pool: DataFrame, emb: DataFrame, k: Int): DataFrame =
+    Ann.topkFromPairs(rerankPairs(pool, emb), k, ascending = true)
 
   /** The lossless verification pipeline (ks = n, zero Lloyd iterations):
     * codewords ARE the subvectors, so ADC lookups sum the same per-

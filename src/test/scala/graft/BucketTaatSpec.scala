@@ -19,12 +19,11 @@ class BucketTaatSpec extends AnyFunSuite {
     * then score the query's slots. */
   private def scoreBucket(taat: QueryEngine.BucketTaat, queryTerms: Seq[String],
                           lists: Map[String, (Array[Int], Array[Long])], base: Long,
-                          heap: TopK.QueryHeap, required: Int = 0,
-                          masked: Boolean = false): Int = {
+                          heap: TopK.QueryHeap, required: Int = 0): Int = {
     val terms = (lists.keys ++ queryTerms).toSeq.distinct
     taat.beginBucket(terms.map(lists.get(_).map(_._1).orNull).toArray,
       terms.map(lists.get(_).map(_._2).orNull).toArray)
-    taat.score(queryTerms.map(terms.indexOf(_)).toArray, base, heap, required, masked)
+    taat.score(queryTerms.map(terms.indexOf(_)).toArray, base, heap, required)
   }
 
   /** One random scenario: `nBuckets` buckets of `width` docs, a global
@@ -183,28 +182,6 @@ class BucketTaatSpec extends AnyFunSuite {
     assert(heap.toCands == (0 until 4).map(d => TopK.Cand(d.toLong, 0L)))
   }
 
-  test("stamp mask: beginMask invalidates the previous bucket's allows") {
-    val width = 4
-    val taat = new QueryEngine.BucketTaat(width, k = 4)
-    val t = "t"
-    val lists = Map(t -> (Array(0, 1, 2, 3), Array(4L, 3L, 2L, 1L)))
-    // bucket 0: only offsets 0 and 2 allowed
-    val h0 = new TopK.QueryHeap(4)
-    taat.beginMask(); taat.allow(0); taat.allow(2)
-    scoreBucket(taat, Seq(t), lists, 0L, h0, masked = true)
-    assert(h0.toCands == Seq(TopK.Cand(0, 4), TopK.Cand(2, 2)))
-    // bucket 1 reuses the SAME scorer: a fresh mask allowing only offset 1
-    // must not leak bucket 0's allows (the reused array is stamp-cleared)
-    val h1 = new TopK.QueryHeap(4)
-    taat.beginMask(); taat.allow(1)
-    scoreBucket(taat, Seq(t), lists, 4L, h1, masked = true)
-    assert(h1.toCands == Seq(TopK.Cand(5, 3)))
-    // and masked=false ignores the mask entirely
-    val h2 = new TopK.QueryHeap(4)
-    scoreBucket(taat, Seq(t), lists, 8L, h2)
-    assert(h2.toCands.map(_.doc_id) == Seq(8L, 9L, 10L, 11L))
-  }
-
   test("slot-keyed caches: two terms sharing one idxs array keep their own contributions") {
     // The dense-column and sorted-list caches are keyed by term slot. Here
     // slots 0 and 1 of every bucket share ONE idxs array instance with
@@ -288,32 +265,40 @@ class BucketTaatSpec extends AnyFunSuite {
   }
 
   /** Exhaustive reference: decode every posting, sum micros per doc, take
-    * the frozen-order top-k. */
+    * the frozen-order top-k of the `admitted` docs; `conj` keeps only docs
+    * in every list. */
   private def naiveTopk(lists: Map[String, (Double, Seq[PostingRow])],
-                        avgdl: Double, k: Int): Seq[TopK.Cand] = {
-    val acc = scala.collection.mutable.LongMap.empty[Long]
+                        avgdl: Double, k: Int, admitted: Long => Boolean = _ => true,
+                        conj: Boolean = false): Seq[TopK.Cand] = {
+    val acc = scala.collection.mutable.LongMap.empty[(Long, Int)]
     lists.foreach { case (_, (idf, rows)) =>
       rows.foreach(row => Codec.decodeAll(row).foreach { p =>
-        acc(p.doc_id) = acc.getOrElse(p.doc_id, 0L) +
-          Bm25.contribMicro(idf, p.tf, p.dl, avgdl)
+        val (s, n) = acc.getOrElse(p.doc_id, (0L, 0))
+        acc(p.doc_id) = (s + Bm25.contribMicro(idf, p.tf, p.dl, avgdl), n + 1)
       })
     }
-    acc.toSeq.sortBy { case (d, s) => (-s, d) }.take(k)
+    acc.toSeq.collect { case (d, (s, n)) if admitted(d) && (!conj || n == lists.size) => (d, s) }
+      .sortBy { case (d, s) => (-s, d) }.take(k)
       .map { case (d, s) => TopK.Cand(d, s) }
   }
 
   /** One query through the serving path: re-bucket every row at `width`,
     * spread the buckets over `nParts` partitions, score each partition
-    * with the runDocPartitioned body, merge the blocks with its merge. */
+    * with the runDocPartitioned body, merge the blocks with its merge.
+    * `filterRows` (already bucketed at `width`) ride beside the postings,
+    * and `filterTerms` are the ones the plan requests. */
   private def scored(qid: Int, lists: Map[String, (Double, Seq[PostingRow])],
                      avgdl: Double, k: Int, width: Int, nParts: Int,
-                     rnd: Random): Seq[TopK.Cand] = {
+                     rnd: Random, filterRows: Seq[PostingRow] = Nil,
+                     filterTerms: Seq[String] = Nil,
+                     conj: Boolean = false): Seq[TopK.Cand] = {
     val terms = lists.keys.toArray
     val plan = QueryEngine.Plan(k, avgdl, terms, idf = terms.map(lists(_)._1),
       qids = Array(qid), queryTerms = Array(terms.indices.toArray),
-      termQueries = terms.map(_ => Array(0)), bucketWidth = width.toLong)
+      termQueries = terms.map(_ => Array(0)), bucketWidth = width.toLong,
+      conjunctive = conj, filterTerms = filterTerms)
     val rows = lists.values.flatMap(_._2)
-      .flatMap(QueryEngine.rebucketRow(_, width.toLong, blockSize = 8)).toSeq
+      .flatMap(QueryEngine.rebucketRow(_, width.toLong, blockSize = 8)).toSeq ++ filterRows
     val top = rows.groupBy(_.bucket % nParts).values
       .map(part => QueryEngine.scorePartition(plan,
         QueryEngine.ServingPart(rnd.shuffle(part).iterator), None))
@@ -348,6 +333,56 @@ class BucketTaatSpec extends AnyFunSuite {
         assert(got == naive, s"trial $trial k=$k width=$width parts=$nParts qTerms=$qTerms")
       }
     }
+  }
+
+  /** Virtual filter lists of attr `lang` at serving `width`: one row per
+    * (value, bucket) holding that value's docs, as [[Attrs.attrPostings]]
+    * writes them. */
+  private def filterRows(values: Map[Long, String], width: Int): Seq[PostingRow] =
+    values.groupBy { case (d, v) => (v, (d / width).toInt) }.toSeq.map { case ((v, b), ds) =>
+      val ids = ds.keys.toArray.sorted
+      val ones = Array.fill(ids.length)(1)
+      PostingRow(0, Attrs.filterTerm("lang", v), b, ids.length.toLong, 0L, ids(0),
+        Codec.encodeBlocks(ids, ones, ones, blockSize = 8))
+    }
+
+  test("filtered rebucket + partition scorer == naive top-k of admitted docs, OR and AND") {
+    // The filter narrows each bucket's term lists before scoring: a random
+    // admitted set (share 0-1, so some buckets admit none) split over two
+    // requested values, every other doc under an unrequested one; widths
+    // 1-64 put several buckets in one part, sharing one reused mark array.
+    val rnd = new Random(2024)
+    val vocab = ('a' to 'z').map(_.toString)
+    var nonEmpty = 0
+    for (trial <- 1 to 200) {
+      val nDocs = 20 + rnd.nextInt(180)
+      val corpus = (0L until nDocs.toLong).map { d =>
+        val len = 1 + rnd.nextInt(30)
+        d -> Seq.fill(len)(vocab(math.min(rnd.nextInt(26), rnd.nextInt(26))))
+      }.toMap
+      val qTerms = rnd.shuffle(vocab).take(1 + rnd.nextInt(5))
+      val (lists, avgdl) = buildLists(corpus, qTerms, nDocs.toLong,
+        bucketWidth = 16, headDf = 30)
+      val share = rnd.nextDouble()
+      val values = (0L until nDocs.toLong).map { d =>
+        d -> (if (rnd.nextDouble() >= share) "other" else if (rnd.nextBoolean()) "x" else "y")
+      }.toMap
+      val admitted = (d: Long) => values(d) != "other"
+      val k = 1 + rnd.nextInt(15)
+      val width = 1 + rnd.nextInt(64)
+      val nParts = 1 + rnd.nextInt(3)
+      if (lists.nonEmpty) {
+        nonEmpty += 1
+        Seq(false, true).foreach { conj =>
+          val got = scored(trial, lists, avgdl, k, width, nParts, new Random(trial),
+            filterRows(values, width), Seq("x", "y").map(Attrs.filterTerm("lang", _)), conj)
+          val naive = naiveTopk(lists, avgdl, k, admitted, conj)
+          assert(got == naive, s"trial $trial conj=$conj k=$k width=$width " +
+            s"parts=$nParts share=$share qTerms=$qTerms")
+        }
+      }
+    }
+    assert(nonEmpty > 150, s"only $nonEmpty trials had an indexed query term")
   }
 
   test("exhausted/empty cases: no rows and absent terms score nothing") {

@@ -5,10 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Attribute-filtered retrieval ([[Attrs]] virtual posting lists masked in
-  * the TAAT scorer): every serving shape must equal the exact
-  * global-stats-semi-join oracle [[Oracle.topkFiltered]], and the filter
-  * must compose with conjunctive (AND) semantics. */
+/** Attribute-filtered retrieval ([[Attrs]] virtual posting lists narrow
+  * each bucket's term lists as they decode): every serving shape must
+  * equal the exact global-stats-semi-join oracle [[Oracle.topkFiltered]],
+  * and the filter must compose with conjunctive (AND) semantics. */
 class FilteredTopkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.01"
@@ -107,7 +107,8 @@ class FilteredTopkSpec extends AnyFunSuite {
   }
 
   test("single-value and empty-value filters behave") {
-    // majority value: exercises the dense scan's masked variant
+    // majority value: the narrowed lists stay long, so multi-term queries
+    // take the dense scan (fused path, chunk skip, TA walk)
     val en = rows(QueryEngine.runOnIndex(spark, s"$root/serve",
       filter = Some((attr, Seq("en")))))
     assert(en == rows(Oracle.topkFiltered(spark, docs, attr, Seq("en"))))
