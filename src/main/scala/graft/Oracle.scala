@@ -98,7 +98,7 @@ object Oracle {
   }
 
   /** Same result via [[TopK.topk]], the engine's one top-k merge (per-
-    * task bounded heaps, one `treeAggregate`; the treeReduce-style scale
+    * task bounded heaps merged in the same job; the treeReduce-style scale
     * path, SURVEY.md §2.6 T2), as one [[HitsRelation]] in (query_id,
     * rank) order. */
   def topkViaHeap(spark: SparkSession, docs: DataFrame, k: Int = QuerySet.K): DataFrame = {

@@ -149,8 +149,9 @@ object PlanAudit {
     val handle = QueryEngine.openIndex(spark, serveDir)
     val hits = QueryEngine.runOnHandle(spark, handle, batch)
     sb ++= s"## 1000-query batch over the cached serving layout (RDD lineage of its one stage)\n\n```\n"
+    // call sites without line numbers, so edits elsewhere leave it be
     sb ++= QueryEngine.scoredBlocks(handle.served.get, QueryEngine.plan(cs, Map.empty, Nil))
-      .toDebugString
+      .toDebugString.replaceAll("""(\.scala):\d+""", "$1")
     sb ++= "\n```\n\n"
     sb ++= s"## The cached batch's result (executed plan: one leaf over the merged block)\n\n```\n"
     sb ++= hits.queryExecution.executedPlan.treeString
@@ -185,7 +186,7 @@ object PlanAudit {
     // 6. composed IVF∘PQ index: probed codes read (partition pruning) and
     //    the exact rerank's pairs (the candidate pool, each candidate
     //    beside its query vector, broadcast once — corpus never shuffled);
-    //    their top-k is TopK.topk's per-task heaps and one treeAggregate,
+    //    their top-k is TopK.topk's per-task heaps merged in one runJob,
     //    outside any SQL plan
     val pqDir = "target/plan-audit-ivfpq"
     clear(pqDir)

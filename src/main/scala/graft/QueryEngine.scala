@@ -30,7 +30,7 @@ import graft.TopK.QueryHeap
   *  batches pick a posting source, restrict it once to the batch's terms
   *  and filter lists, re-bucket it into docId ranges if it is
   *  term-partitioned, and group it per task into the same parts. The
-  *  tasks' per-query top-k blocks merge in one `treeAggregate`; the nq·k
+  *  tasks' per-query top-k blocks merge in the same job; the nq·k
   *  hits come back in (query_id, rank) order as one [[HitsRelation]] leaf
   *  over the merged block, so collecting them runs no further job.
   *
@@ -823,7 +823,7 @@ object QueryEngine {
     * work; the shuffle spreads the buckets across the cluster and moves
     * only the pruned, compressed lists. */
   def servingParts(rows: Dataset[PostingRow]): RDD[ServingPart] =
-    rows.repartition(col("bucket")).rdd.mapPartitions(it => Iterator.single(ServingPart(it)))
+    rows.repartition(col("bucket")).rdd.mapPartitions(new GroupPart)
 
   /** The engine's one scorer, the last step of every batch: score bucket-
     * grouped parts — the handle's cached serving layout, or an uncached
@@ -833,7 +833,7 @@ object QueryEngine {
     * shared-contribution [[BucketTaat]] scorer, with its block-max bucket
     * skip, chunk-max skip and TA walk, fills the task's per-query heaps;
     * the task emits them as one [[TopK.Block]], and the blocks merge in
-    * [[TopK.mergeAll]]'s one `treeAggregate`. Rank-identity: per-bucket
+    * [[TopK.mergeAll]]'s one `runJob`. Rank-identity: per-bucket
     * doc sets are disjoint, and top-k of a disjoint union = top-k of
     * per-part top-k's under the frozen total order, whatever the merge
     * tree.
@@ -849,11 +849,19 @@ object QueryEngine {
   }
 
   /** The batch's scoring stage: one [[scorePartition]] block per part.
-    * The plan rides in the task closure, which Spark ships once per
+    * The plan rides in the task function, which Spark ships once per
     * stage as the stage's task binary. */
   def scoredBlocks(parts: RDD[ServingPart], plan: Plan,
                    effort: Option[EffortAccs] = None): RDD[TopK.Block] =
-    parts.map(scorePartition(plan, _, effort))
+    parts.map(new ScorePart(plan, effort))
+
+  private final class GroupPart extends (Iterator[PostingRow] => Iterator[ServingPart]) with Serializable {
+    def apply(it: Iterator[PostingRow]): Iterator[ServingPart] = Iterator.single(ServingPart(it))
+  }
+  private final class ScorePart(plan: Plan, effort: Option[EffortAccs])
+      extends (ServingPart => TopK.Block) with Serializable {
+    def apply(part: ServingPart): TopK.Block = scorePartition(plan, part, effort)
+  }
 
   /** The per-partition body of [[runDocPartitioned]]: score every query
     * of `p` over one grouped part and return the part's top-k block: one

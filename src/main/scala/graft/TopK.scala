@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.util.LongAccumulator
 
@@ -8,7 +9,7 @@ import org.apache.spark.util.LongAccumulator
   * (`src/index_ivf.cpp:220-234`, SURVEY.md §2.6 T2) — and the one top-k
   * merge of every ranked result: each task fills one bounded
   * [[QueryHeap]] per query, emits them as one [[Block]], and one
-  * `treeAggregate` merges the blocks ([[mergeAll]]). The batched BM25
+  * `runJob` merges the blocks ([[mergeAll]]). The batched BM25
   * scorer fills its heaps itself; every other ranked result (the heap
   * oracle, the ANN and PQ paths, the exact rerank) hands its
   * `(qid, id, score)` rows to [[topk]]. Per-query state is O(k)
@@ -131,8 +132,8 @@ object TopK {
       java.util.Arrays.copyOf(docs, o), java.util.Arrays.copyOf(scores, o))
   }
 
-  /** `treeAggregate` depth for merging `nTasks` blocks: 1 (the driver
-    * merges every block) up to a fan-in of 64, else ⌈log₆₄ nTasks⌉. */
+  /** Merge levels for `nTasks` blocks: 1 (the driver merges every block)
+    * up to a fan-in of 64, else ⌈log₆₄ nTasks⌉. */
   def mergeDepth(nTasks: Int): Int = {
     var depth = 1
     var reach = 64L
@@ -140,18 +141,43 @@ object TopK {
     depth
   }
 
-  /** Merge per-task blocks in one `treeAggregate` of depth
-    * [[mergeDepth]] — one job: the driver merges the blocks as they
-    * arrive up to a fan-in of 64 tasks, executors add levels above it.
-    * `nanos`, when given, adds each merge's time. */
-  def mergeAll(blocks: RDD[Block], k: Int, nanos: Option[LongAccumulator] = None): Block = {
-    val m = (a: Block, b: Block) => {
+  private final class Fold(k: Int, nanos: Option[LongAccumulator])
+      extends ((TaskContext, Iterator[Block]) => Block) with Serializable {
+    def step(a: Block, b: Block): Block = {
       val t0 = System.nanoTime()
-      val r = merge(a, b, k)
-      nanos.foreach(_.add(System.nanoTime() - t0))
-      r
+      try merge(a, b, k) finally nanos.foreach(_.add(System.nanoTime() - t0))
     }
-    blocks.treeAggregate(emptyBlock)(m, m, mergeDepth(blocks.getNumPartitions))
+    def apply(ctx: TaskContext, it: Iterator[Block]): Block = it.foldLeft(emptyBlock)(step)
+  }
+  private final class FoldLevel(f: Fold) extends (Iterator[Block] => Iterator[Block]) with Serializable {
+    def apply(it: Iterator[Block]): Iterator[Block] = Iterator.single(f(TaskContext.get(), it))
+  }
+
+  /** Merge per-task blocks in one job of [[mergeDepth]] levels, timing each
+    * merge into `nanos`: a level above the first folds each task's blocks
+    * and shuffles them into ⌈n/64⌉ partitions; the driver merges each last-
+    * level task's block as it arrives. These task functions and QueryEngine's
+    * are named classes: Spark parses a lambda's enclosing class file and
+    * Java-serializes it, but passes a class instance through; on a cached
+    * 1 000-query batch that was 36 % of the driver's samples (≈ 10 of 44 ms). */
+  def mergeAll(blocks: RDD[Block], k: Int, nanos: Option[LongAccumulator] = None): Block = {
+    val fold = new Fold(k, nanos)
+    val last = (1 until mergeDepth(blocks.getNumPartitions)).foldLeft(blocks)((rdd, _) =>
+      rdd.mapPartitions(new FoldLevel(fold)).coalesce((rdd.getNumPartitions + 63) / 64, shuffle = true))
+    var acc = emptyBlock
+    blocks.sparkContext.runJob(last, fold, last.partitions.indices,
+      (_: Int, b: Block) => acc = fold.step(acc, b))
+    acc
+  }
+
+  private final class Heaps(k: Int)
+      extends (Iterator[(Long, Long, Long)] => Iterator[Block]) with Serializable {
+    def apply(it: Iterator[(Long, Long, Long)]): Iterator[Block] = {
+      val heaps = new scala.collection.mutable.LongMap[QueryHeap]
+      it.foreach { case (q, id, s) => heaps.getOrElseUpdate(q, new QueryHeap(k)).offer(s, id) }
+      val qids = heaps.keys.toArray.sorted
+      Iterator.single(block(qids, qids.map(heaps)))
+    }
   }
 
   /** The top-k per qid of `(qid, id, score)` rows under (score DESC,
@@ -161,12 +187,7 @@ object TopK {
     * [[sortableBits]]. One job, O(k) state per qid per task; the result
     * is on the driver. */
   def topk(rows: RDD[(Long, Long, Long)], k: Int): Block =
-    mergeAll(rows.mapPartitions { it =>
-      val heaps = new scala.collection.mutable.LongMap[QueryHeap]
-      it.foreach { case (q, id, s) => heaps.getOrElseUpdate(q, new QueryHeap(k)).offer(s, id) }
-      val qids = heaps.keys.toArray.sorted
-      Iterator.single(block(qids, qids.map(heaps)))
-    }, k)
+    mergeAll(rows.mapPartitions(new Heaps(k)), k)
 
   /** Order-preserving bijection Double ↔ Long (the classic IEEE-754 sign
     * trick): signed-long comparison of the encoding == double comparison,

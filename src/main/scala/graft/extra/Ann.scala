@@ -65,7 +65,7 @@ object Ann {
   /** (query_vec_id, vec_id, score) candidate pairs → the top-k per query
     * under (score DESC, vec_id ASC), or (score ASC, vec_id ASC) when
     * `ascending` (a distance), through [[graft.TopK.topk]]: per-task
-    * bounded heaps, one `treeAggregate`, no shuffle. The double score
+    * bounded heaps merged in the same job, no shuffle. The double score
     * rides the Long-keyed heap as its order-preserving IEEE-754 encoding
     * (negated when ascending). Returns the nq·k rows as a local relation
     * (query_vec_id, rank, vec_id, <score>_micro) in (query_vec_id, rank)

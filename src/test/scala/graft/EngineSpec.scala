@@ -275,6 +275,67 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  /** The messages logger `name` emits at DEBUG while `body` runs; the
+    * logger's level and appenders are restored afterwards. */
+  private def debugMessages(name: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val ctx = LoggerContext.getContext(false)
+    val config = ctx.getConfiguration
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("debug-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = { seen.add(e.getMessage.getFormattedMessage); () }
+    }
+    capture.start()
+    // null when the logger inherits its configuration from a parent
+    val own = config.getLoggers.get(name)
+    val lc = Option(own).getOrElse {
+      val c = new LoggerConfig(name, Level.DEBUG, false)
+      config.addLogger(name, c)
+      c
+    }
+    val levelBefore = lc.getLevel
+    lc.setLevel(Level.DEBUG)
+    lc.addAppender(capture, Level.DEBUG, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      lc.removeAppender(capture.getName)
+      if (own == null) config.removeLogger(name) else own.setLevel(levelBefore)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("a warm cached batch gives Spark no closure to clean") {
+    val sc = spark.sparkContext
+    val docs = Stats.readDocuments(spark, "/root/testdata/sf0.001")
+    val root = java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
+    val dir = java.nio.file.Files.createTempDirectory(root, "clean").toAbsolutePath.toString
+    // Spark logs one of these for every lambda it parses and checks
+    def cleaned(body: => Unit): Int =
+      debugMessages("org.apache.spark.util.ClosureCleaner")(body)
+        .count(_.startsWith("Cleaning indylambda closure"))
+    try {
+      IndexBuild.writeIndex(spark, docs, dir, SparkEntry.testConfig.copy(docPartitioned = true))
+      val h = QueryEngine.openIndex(spark, dir)
+      val batch = Bench.queryBatch(50)
+      // warm-up: fills the serving cache and memoizes the batch's terms
+      QueryEngine.runOnHandle(spark, h, batch).collect()
+      assert(cleaned(QueryEngine.runOnHandle(spark, h, batch).collect()) == 0)
+      // control: the capture sees a lambda's cleaning
+      assert(cleaned(sc.parallelize(1 to 3).map(_ + 1).count()) >= 1)
+      h.close()
+    } finally {
+      org.apache.hadoop.fs.FileSystem.get(sc.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(dir), true)
+      ()
+    }
+  }
+
   /** Mixed ASCII/multibyte corpus: pure-ASCII docs with repeated terms
     * (doc-distinct df must not double-count), multibyte docs for the
     * String-kernel fallback — some whose first multibyte letter follows

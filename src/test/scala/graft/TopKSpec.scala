@@ -143,6 +143,54 @@ class TopKSpec extends AnyFunSuite {
     })
   }
 
+  /** (k, blocks of `nParts` partitions): one partition holds 1–2 blocks,
+    * more hold 0–2 each, so some are empty. Doc ids are disjoint across
+    * all blocks. */
+  private def partsGen(nParts: Int): Gen[(Int, Seq[Seq[Block]])] = for {
+    k <- Gen.choose(1, 12)
+    perPart <- Gen.listOfN(nParts, Gen.choose(if (nParts == 1) 1 else 0, 2))
+    maps <- Gen.listOfN(perPart.sum, Gen.mapOf(Gen.zip(Gen.choose(0L, 7L),
+      Gen.nonEmptyListOf(candGen))))
+  } yield {
+    val blocks = maps.zipWithIndex.map { case (m, bi) =>
+      toBlock(m.map { case (q, cs) =>
+        q -> sortAll(cs.map(c => c.copy(doc_id = c.doc_id * maps.length + bi))
+          .distinctBy(_.doc_id)).take(k)
+      })
+    }
+    val ends = perPart.scanLeft(0)(_ + _)
+    (k, perPart.indices.map(p => blocks.slice(ends(p), ends(p + 1))))
+  }
+
+  test("mergeAll over 0, 1, 8 and 130 partitions == sequential merge fold, in one job (property, Spark)") {
+    import org.apache.spark.TestBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = TestSpark.spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    def arrays(b: Block) = (b.qids.toSeq, b.off.toSeq, b.docs.toSeq, b.scores.toSeq)
+    sc.addSparkListener(counter)
+    // 130 partitions are past the driver's fan-in of 64: one shuffled
+    // merge level runs first
+    try Seq(0, 1, 8, 130).foreach { n =>
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10),
+        Prop.forAll(partsGen(n)) { case (k, parts) =>
+          val rdd =
+            if (parts.isEmpty) sc.emptyRDD[Block]
+            else sc.parallelize(parts, parts.length).flatMap(identity)
+          val want = parts.flatten.foldLeft(emptyBlock)(merge(_, _, k))
+          TestBus.drain(sc)
+          jobs.set(0)
+          val got = mergeAll(rdd, k)
+          TestBus.drain(sc)
+          rdd.getNumPartitions == parts.length && jobs.get == 1 && arrays(got) == arrays(want)
+        })
+      assert(res.passed, s"$n partitions: ${res.status}")
+    } finally sc.removeSparkListener(counter)
+  }
+
   test("sortableBits: order-preserving bijection Double <-> Long (property)") {
     val doubles: Gen[Double] = Gen.oneOf(
       Gen.choose(-1.0, 1.0),                        // cosine range
